@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
@@ -12,47 +12,88 @@ import org.apache.spark.sql.SparkSession
   * order so per-query numbers are comparable across rounds.
   */
 object Bench {
+
+  /** The timed outcome of one bench run: `times` holds the per-query
+    * seconds of every query that ran cleanly, in run order; `failed` maps
+    * each query that threw to its message. A failed query is timed
+    * nowhere. */
+  private[graft] final case class Timed(times: Seq[(String, Double)], failed: Map[String, String])
+
+  /** Runs every query in two full passes and keeps its min.
+    *
+    * Two PASSES rather than back-to-back min-of-2: pass 1 absorbs
+    * codegen/JIT one-time costs, and because a query's two runs are minutes
+    * apart, a transient host-noise window (observed: sporadic ~60s
+    * slowdowns) can't land on both runs of the same query — min() filters
+    * it. Host-noise guard: a sustained noisy window on a shared host can
+    * cover the same region of both passes (observed r3/r4: one query at
+    * 22 s in min-of-2 that runs in ~1 s alone), so any query whose min-of-2
+    * is still a big outlier vs the median gets one targeted third run.
+    *
+    * A query that throws (non-fatally) in any run lands in `failed` with
+    * its message and drops out of everything after: later passes, the
+    * median, the retry and `times`.
+    */
+  private[graft] def timeAll(queries: Seq[(String, () => Unit)],
+                             log: String => Unit = Console.err.println): Timed = {
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val bench0 = System.nanoTime()
+    def runOne(name: String, run: () => Unit, tag: String): Option[Double] = {
+      val t0 = System.nanoTime()
+      try {
+        run()
+        val dt = (System.nanoTime() - t0) / 1e9
+        // Progress with the wall offset into the bench: lets a slow query be
+        // correlated with a time-localized host-noise window instead of
+        // being misread as a real regression.
+        log(f"[bench] $tag $name ${dt}%.3f s @t=${(t0 - bench0) / 1e9}%.1f")
+        Some(dt)
+      } catch {
+        case NonFatal(e) =>
+          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+          failed.getOrElseUpdate(name, msg)
+          log(s"[bench] $tag $name FAILED: $msg")
+          None
+      }
+    }
+    def pass(tag: String, qs: Seq[(String, () => Unit)]): Map[String, Double] =
+      qs.flatMap { case (name, run) => runOne(name, run, tag).map(name -> _) }.toMap
+    val p1 = pass("pass1", queries)
+    val p2 = pass("pass2", queries.filter { case (name, _) => p1.contains(name) })
+    val min2 = p2.map { case (name, t) => name -> math.min(p1(name), t) }
+    val med = {
+      val v = min2.values.toSeq.sorted
+      if (v.isEmpty) 0.0 else v(v.size / 2)
+    }
+    val times = queries.flatMap { case (name, run) =>
+      min2.get(name).flatMap { m =>
+        if (med > 0 && m > math.max(8 * med, 5.0)) runOne(name, run, "retry").map(math.min(m, _))
+        else Some(m)
+      }.map(name -> _)
+    }
+    Timed(times, failed.toMap)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // The registry is ~125 queries x ~3 generated classes per plan; the
-      // default 100-entry codegen class cache evicts between the two bench
-      // passes, so every pass re-pays janino compile (the slowest single
-      // class costs ~1.4 s — observed as a phantom x_gopher_quality
-      // "regression" once the registry outgrew the cache). A long-lived
-      // session serving a fixed workload should size the cache to hold it.
+    val spark = GraftSession.builder("graft-bench")
+      // The one override on the GraftSession defaults. The registry is ~125
+      // queries x ~3 generated classes per plan; the default 100-entry
+      // codegen class cache evicts between the two bench passes, so every
+      // pass re-pays janino compile (the slowest single class costs ~1.4 s —
+      // observed as a phantom x_gopher_quality "regression" once the registry
+      // outgrew the cache). A long-lived session serving a fixed workload
+      // should size the cache to hold it.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Every unpartitioned window left in the registry runs over a frame
-    // bounded by something other than corpus size (value-cardinality
-    // histograms, Heaps-law vocabularies, shuffle-partition counts, the
-    // harness-only f2 ntile) — audited per site. WindowExec warns on all of
-    // them identically, ~40 lines per bench pass, which buries the one
-    // warning that would matter if a genuinely corpus-sized window ever
-    // appeared in a PLAN test. Silence the logger in the measurement mains
-    // only; library users still get the warning.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    GraftSession.quietWindowWarnings()
 
     try SparkEntry.entry(spark).count()
-    catch { case _: Throwable => () } // warmup only; failures surface below
+    catch { case NonFatal(_) => () } // warmup only; failures surface below
 
     // Time against the noop sink, not count(): count() lets Spark drop sorts
     // and unreferenced projections, undercounting the real sink cost.
-    // Two full PASSES over all queries, per-query min: pass 1 absorbs
-    // codegen/JIT one-time costs, and because a query's two runs are minutes
-    // apart, a transient host-noise window (observed: sporadic ~60s
-    // slowdowns) can't land on both runs of the same query — min() filters
-    // it. Back-to-back min-of-2 would not.
     // Optional args: query-name substrings to bench a subset locally (the
     // driver passes none → full run).
     val all    = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -69,7 +110,7 @@ object Bench {
           finally src.close()
         val f = cpu.trim.split("\\s+")
         if (f.length > 8) f(8).toLong else -1L
-      } catch { case _: Throwable => -1L }
+      } catch { case NonFatal(_) => -1L }
     // Pre-run IDLE steal probe (r16 verdict #1): with GRAFT_STEAL_PROBE_SECS
     // set, sleep that long BEFORE any work and record the steal delta over
     // the idle window inside the artifact — a machine-checkable "the host
@@ -85,37 +126,11 @@ object Bench {
         p
       } else -1L
     val steal0 = stealJiffies()
-    val bench0 = System.nanoTime()
-    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-               tag: String): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Progress to stderr with the wall offset into the bench: lets a slow
-      // query be correlated with a time-localized host-noise window instead
-      // of being misread as a real regression.
-      Console.err.println(f"[bench] $tag $name ${dt}%.3f s @t=${(t0 - bench0) / 1e9}%.1f")
-      dt
-    }
-    def pass(tag: String): Map[String, Double] =
-      sorted.map { case (name, fn) => name -> runOne(name, fn, tag) }.toMap
-    val p1 = pass("pass1")
-    val p2 = pass("pass2")
-    val min2 = sorted.map { case (name, _) => name -> math.min(p1(name), p2(name)) }.toMap
-    // Host-noise guard: a sustained noisy window on a shared host can cover
-    // the same region of both passes (observed r3/r4: one query at 22 s in
-    // min-of-2 that runs in ~1 s alone). Any query whose min-of-2 is still a
-    // big outlier vs the pass median gets one targeted third run.
-    val med = {
-      val v = min2.values.toSeq.sorted
-      if (v.isEmpty) 0.0 else v(v.size / 2)
-    }
-    val results = sorted.map { case (name, fn) =>
-      val m = min2(name)
-      name -> (if (med > 0 && m > math.max(8 * med, 5.0)) math.min(m, runOne(name, fn, "retry")) else m)
-    }
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val timed = timeAll(sorted.map { case (name, fn) =>
+      name -> (() => fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+    })
+    val results = timed.times
+    val total = results.map(_._2).sum
     // Locale.ROOT: a comma-decimal default locale would render 1,234 and
     // break the launcher's JSON tail-parse — the exact failure the compact
     // stdout line exists to prevent.
@@ -127,17 +142,17 @@ object Bench {
     // JSON line from that tail — a full 118-query map (~5 KB) pushes its own
     // opening brace out of the window and the round's numbers are lost
     // (observed r03–r08: parsed=null). So stdout carries a COMPACT line —
-    // total, count, and the slowest 20 queries — guaranteed to fit, while the
-    // complete per-query map goes to BENCH_LOCAL.json (committed).
+    // total, counts, and the slowest 20 queries — guaranteed to fit, while the
+    // complete per-query map and the failure messages go to BENCH_LOCAL.json.
     // "sink" names the measurement methodology so cross-round totals are only
     // compared like-for-like (r1 used count(), which undercounted projections).
     val slowest = results.sortBy(-_._2).take(20)
     val stealD  = { val s1 = stealJiffies(); if (steal0 < 0 || s1 < 0) -1L else s1 - steal0 }
-    val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","sink":"noop-min-of-2-passes-outlier-retry","n_queries":${results.size},"steal_jiffies":$stealD,"queries":${fmt(slowest)},"detail":"BENCH_LOCAL.json","sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","sink":"noop-min-of-2-passes-outlier-retry","n_queries":${results.size},"n_failed":${timed.failed.size},"steal_jiffies":$stealD,"queries":${fmt(slowest)},"detail":"BENCH_LOCAL.json","sf":"$sfDir"}"""
     val probeField =
       if (probeSecs > 0) s""","steal_probe_jiffies":$probeJ,"steal_probe_secs":$probeSecs"""
       else ""
-    val full = s"""{"metric":"total","value":${num(total)},"unit":"sec","sink":"noop-min-of-2-passes-outlier-retry","steal_jiffies":$stealD$probeField,"queries":${fmt(results)},"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${num(total)},"unit":"sec","sink":"noop-min-of-2-passes-outlier-retry","steal_jiffies":$stealD$probeField,"queries":${fmt(results)},"failed":${Verify.jsonObject(timed.failed.toSeq.sortBy(_._1))},"sf":"$sfDir"}"""
     println(line)
     // Full per-query artifact (also a backup in case stdout is decorated).
     // Subset runs (local iteration with name args) go to a scratch file so
@@ -151,7 +166,7 @@ object Bench {
       if (args.isEmpty) "BENCH_LOCAL.json" else "BENCH_SUBSET.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (full + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.ReferenceWorkloads
@@ -22,6 +22,9 @@ import graft.operators.ReferenceWorkloads
   *    (strict batch-100 parity, hundreds of micro-batches) and BATCH (the
   *    engine-native single pass);
   *  - metric matches the report: total input records / total wall time.
+  *
+  * Overrides on the GraftSession defaults: `local[3]` and 3 shuffle
+  * partitions, the fairness config above.
   *
   * One-off artifact generator (not part of the per-round Bench):
   * `sbt "runMain graft.BenchBaseline"` → BASELINE_COMPARE.md.
@@ -58,11 +61,9 @@ object BenchBaseline {
       org.apache.spark.sql.functions.col("value"), ",").as("f"))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("graft-baseline")
       .master("local[3]")
       .config("spark.sql.shuffle.partitions", "3")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

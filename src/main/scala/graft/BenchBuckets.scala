@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.AsOfJoin
 
@@ -20,23 +20,19 @@ import graft.operators.AsOfJoin
   * exchange-free.
   *
   * Usage: runMain graft.BenchBuckets <sfDir> <warehouseDir>
+  *
+  * Overrides on the GraftSession defaults: the warehouse dir, and
+  * `bucketedTableScan.outputOrdering` (below).
   */
 object BenchBuckets {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, warehouse) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder("graft-bench-buckets")
       .config("spark.sql.warehouse.dir", warehouse)
       // Off by default since 3.0 (planning-time file listing); with one file
       // per bucket it lets the scan advertise its (key, time) sort so
       // EnsureRequirements elides the SortExecs too, not just the exchanges.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -49,7 +45,7 @@ object BenchBuckets {
     // land in exactly one task => one file per bucket (repartition and
     // bucketBy share Murmur3, so task == bucket) => the scan's outputOrdering
     // advertises the per-bucket sort and SortExec is elided too.
-    val nBuckets = cpus.toInt
+    val nBuckets = GraftSession.cores.toInt
     // In-memory catalog forgets tables across JVMs but the warehouse keeps
     // the files — clear the physical dirs or saveAsTable refuses.
     for (t <- Seq("ev_b", "od_b")) {

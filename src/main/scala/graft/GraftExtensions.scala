@@ -61,9 +61,9 @@ object ApproxPercentileRule extends Rule[LogicalPlan] {
   * expressions as SQL functions so `spark.sql("SELECT rolling_hash(text) …")`
   * works, in addition to the Column API in [[graft.functions.NativeFns]].
   *
-  * Enable with `.config("spark.sql.extensions", "graft.GraftExtensions")` or
-  * `.withExtensions(new GraftExtensions)` (GraftSession does this by
-  * default).
+  * [[GraftSession.builder]] installs it on every session graft builds; an
+  * outside session enables it with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -22,12 +22,6 @@ object DedupOps {
   def shingles(text: Column, n: Int = 3): Column =
     NativeFns.word_shingles(text, n)
 
-  /** MinHash signature of length k over the shingle set: element i is
-    * min over shingles of xxhash64(shingle, i). Deterministic, seed-indexed.
-    */
-  def minhashSignature(shingleCol: Column, k: Int = 64): Column =
-    NativeFns.minhash_sig(shingleCol, k)
-
   /** Exact Jaccard similarity between two array columns (double; both arrays
     * assumed distinct). */
   def jaccard(a: Column, b: Column): Column = {

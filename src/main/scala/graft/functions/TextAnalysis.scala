@@ -27,13 +27,6 @@ object TextAnalysis {
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[.,;:!?'\"()-]", ""))
 
-  /** Stopword hits: number of DISTINCT words of `list` present in the text
-    * (array_intersect dedups on both Spark and DuckDB, keeping the oracle
-    * exact).
-    */
-  def stopwordHits(text: Column, list: Seq[String]): Column =
-    size(array_intersect(array_distinct(tokens(text)), lit(list.toArray)))
-
   // Tiny per-language stopword lists for the n-gram/stopword language-ID
   // heuristic. Ordered: ties resolve by this precedence.
   val langStopwords: Seq[(String, Seq[String])] = Seq(
@@ -53,21 +46,6 @@ object TextAnalysis {
     * one hash probe per distinct token.
     */
   def langId(text: Column): Column = NativeFns.lang_id(text, langStopwords)
-
-  /** Non-distinct stopword occurrence count (density numerator): how many
-    * tokens are in `list`, counting repeats.
-    */
-  def stopwordOccurrences(text: Column, list: Seq[String]): Column =
-    size(filter(tokens(text), w => w.isInCollection(list)))
-
-  /** Characters-per-token: total non-space length over token count (exactly
-    * the sum of token lengths, since empties carry no characters).
-    */
-  def avgTokenLen(text: Column): Column = {
-    val cnt = tokenCount(text)
-    length(regexp_replace(text, " ", "")).cast("double") /
-      when(cnt === 0, lit(null)).otherwise(cnt.cast("double"))
-  }
 
   /** 64-bit SimHash over whitespace tokens: bit b of the fingerprint is the
     * sign of Σ_tokens (±1 by bit b of xxhash64(token)). Near-duplicate texts

@@ -102,7 +102,7 @@ object AsOfJoin {
   import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
   import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
   import org.apache.spark.sql.graftbridge.ColumnBridge
-  import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
+  import graft.plans.AsOfJoinPlan
 
   /** As-of join via the custom whole-operator plan path
     * ([[graft.plans.AsOfJoinPlan]] → [[graft.plans.AsOfJoinExec]]): for each
@@ -145,10 +145,6 @@ object AsOfJoin {
       direction: String = "backward"
   ): DataFrame = {
     val spark = left.sparkSession
-    // Idempotently ensure the strategy is live even on sessions built
-    // without GraftExtensions (e.g. the driver's Verify/Bench mains).
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val lp = ColumnBridge.analyzed(left)
     val rp0 = ColumnBridge.analyzed(right)
     // A shared-lineage right side would alias the left's attribute ids and

@@ -194,9 +194,7 @@ case class AsOfJoinExec(
 
 /** Planner strategy turning [[AsOfJoinPlan]] into [[AsOfJoinExec]].
   * Registered via `SparkSessionExtensions.injectPlannerStrategy` (see
-  * [[graft.GraftExtensions]]) and, belt-and-braces, appended to
-  * `spark.experimental.extraStrategies` by [[graft.operators.AsOfJoin.native]]
-  * so plain sessions (the driver's Verify/Bench mains) plan it too.
+  * [[graft.GraftExtensions]]), which every [[graft.GraftSession]] installs.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

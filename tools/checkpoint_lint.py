@@ -1,5 +1,7 @@
 #!/usr/bin/env python3
-"""Lineage-truncation lint (round-16 verdict watch item #3).
+"""Funnel lint: lineage truncation and session construction.
+
+Rule 1 — lineage truncation (round-16 verdict watch item #3).
 
 `localCheckpoint` puts truncated lineage on EXECUTOR-LOCAL blocks: losing
 an executor that holds them fails the job instead of recomputing — a trade
@@ -16,9 +18,17 @@ Layout.scala may call `.localCheckpoint(` or `.checkpoint(` directly — a
 direct call would be invisible to the config switch and to the SCALE.md
 audit.
 
+Rule 2 — one session factory. `GraftSession.builder` is the only place
+that builds a session, so the tests, the benchmark and every main run the
+same extensions and config. No main-source file other than
+GraftSession.scala may call `SparkSession.builder` (a hand-rolled session
+silently drops GraftExtensions and the planner thresholds), and no file may
+assign `experimental.extraStrategies` (the per-call patch that only such a
+session needs).
+
 Usage: python3 tools/checkpoint_lint.py [src_root]
        python3 tools/checkpoint_lint.py --selftest
-Exit 1 on any direct call outside the wrapper file.
+Exit 1 on any violation of either rule.
 """
 import os
 import re
@@ -33,22 +43,44 @@ DIRECT = re.compile(r"\.(localCheckpoint|checkpoint)\s*\(")
 EXCLUDE_LINE = re.compile(r"checkpointLocation|setCheckpointDir")
 
 
-def scan(root: str = "src/main/scala"):
-    bad = []
+FACTORY = "graft/GraftSession.scala"
+# Whole-file patterns: `SparkSession\n  .builder()` splits across lines.
+SESSION_BUILDER = re.compile(r"\bSparkSession\s*\.\s*builder\b")
+STRATEGY_ASSIGN = re.compile(r"\bextraStrategies\s*(?:\+\+|:\+|\+)?=(?!=)")
+
+
+def scala_files(root: str):
     for dirpath, _, files in os.walk(root):
         for f in sorted(files):
-            if not f.endswith(".scala"):
+            if f.endswith(".scala"):
+                yield os.path.join(dirpath, f)
+
+
+def scan_sessions(root: str = "src/main/scala"):
+    bad = []
+    for p in scala_files(root):
+        text = open(p, encoding="utf-8").read()
+        hits = list(STRATEGY_ASSIGN.finditer(text))
+        if not p.replace(os.sep, "/").endswith(FACTORY):
+            hits += SESSION_BUILDER.finditer(text)
+        for m in sorted(hits, key=lambda m: m.start()):
+            i = text.count("\n", 0, m.start()) + 1
+            bad.append(f"{p}:{i}: {m.group(0).split()[0]}")
+    return bad
+
+
+def scan(root: str = "src/main/scala"):
+    bad = []
+    for p in scala_files(root):
+        if os.path.normpath(p) == os.path.normpath(
+                os.path.join(root, "..", "..", "..", WRAPPER)) or p.endswith(
+                "functions/Layout.scala"):
+            continue
+        for i, line in enumerate(open(p, encoding="utf-8"), 1):
+            if EXCLUDE_LINE.search(line):
                 continue
-            p = os.path.join(dirpath, f)
-            if os.path.normpath(p) == os.path.normpath(
-                    os.path.join(root, "..", "..", "..", WRAPPER)) or p.endswith(
-                    "functions/Layout.scala"):
-                continue
-            for i, line in enumerate(open(p, encoding="utf-8"), 1):
-                if EXCLUDE_LINE.search(line):
-                    continue
-                if DIRECT.search(line):
-                    bad.append(f"{p}:{i}: {line.strip()}")
+            if DIRECT.search(line):
+                bad.append(f"{p}:{i}: {line.strip()}")
     return bad
 
 
@@ -72,6 +104,28 @@ def selftest():
             f.write("object P2 { def x(df: DataFrame) = df.checkpoint(true) }\n")
         bad = scan(td)
         assert len(bad) == 2, f"selftest: direct checkpoint() not caught: {bad}"
+        # rule 2: the factory may build a session; nothing else may, and
+        # nothing may patch extraStrategies
+        g = os.path.join(td, "graft")
+        with open(os.path.join(g, "GraftSession.scala"), "w") as f:
+            f.write("object GraftSession { def builder() = SparkSession\n"
+                    "  .builder()\n  .withExtensions(new GraftExtensions) }\n")
+        assert scan_sessions(td) == [], \
+            f"selftest: the factory's own builder flagged: {scan_sessions(td)}"
+        with open(os.path.join(g, "Main.scala"), "w") as f:
+            f.write("object Main { val s = GraftSession.builder().getOrCreate()\n"
+                    "  val t = SparkSession\n    .builder()\n"
+                    "    .getOrCreate() }\n")
+        bad = scan_sessions(td)
+        assert len(bad) == 1 and "Main.scala:2" in bad[0], \
+            f"selftest: planted SparkSession.builder not caught: {bad}"
+        with open(os.path.join(d, "Patch.scala"), "w") as f:
+            f.write("object Patch { def f(s: SparkSession) =\n"
+                    "  s.experimental.extraStrategies = "
+                    "s.experimental.extraStrategies :+ S }\n")
+        bad = scan_sessions(td)
+        assert len(bad) == 2 and any("Patch.scala:2" in b for b in bad), \
+            f"selftest: planted extraStrategies assignment not caught: {bad}"
     print("checkpoint_lint selftest: OK (planted sites caught)")
     return 0
 
@@ -88,9 +142,18 @@ def main():
             print("  " + b)
         print("Route them through Layout.LineageOps.truncateLineage and add "
               "a row to SCALE.md's lineage-truncation audit.")
+    sessions = scan_sessions(root)
+    if sessions:
+        print(f"checkpoint_lint: {len(sessions)} session built or patched "
+              f"outside GraftSession:")
+        for b in sessions:
+            print("  " + b)
+        print("Build from GraftSession.builder and chain the overrides the "
+              "main needs.")
+    if bad or sessions:
         return 1
     print("checkpoint_lint: clean (all truncation goes through "
-          "Layout.truncateLineage)")
+          "Layout.truncateLineage; all sessions through GraftSession)")
     return 0
 
 

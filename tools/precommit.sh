@@ -94,19 +94,21 @@ if [ -f EXPLAIN.md ]; then
   }
 fi
 
-# Lineage-truncation lint (r16 verdict watch item #3): all checkpointing
-# must go through Layout.truncateLineage (config-switchable to reliable
-# checkpoint()); direct localCheckpoint/checkpoint calls dodge the SCALE.md
-# site audit and the cluster-mode switch.
+# Funnel lint. (1) Lineage truncation (r16 verdict watch item #3): all
+# checkpointing must go through Layout.truncateLineage (config-switchable to
+# reliable checkpoint()); direct localCheckpoint/checkpoint calls dodge the
+# SCALE.md site audit and the cluster-mode switch. (2) One session factory:
+# only GraftSession may call SparkSession.builder, and nothing may patch
+# experimental.extraStrategies.
 python3 tools/checkpoint_lint.py --selftest >/dev/null || {
-  echo "pre-commit: checkpoint_lint SELFTEST failed — the planted direct"
-  echo "call no longer fails; fix tools/checkpoint_lint.py."
+  echo "pre-commit: checkpoint_lint SELFTEST failed — a planted violation"
+  echo "no longer fails; fix tools/checkpoint_lint.py."
   exit 1
 }
 python3 tools/checkpoint_lint.py || {
-  echo "pre-commit: checkpoint lint FAILED — a main-source file calls"
-  echo ".localCheckpoint/.checkpoint directly. Use Layout.truncateLineage"
-  echo "and add the site to SCALE.md's lineage-truncation audit."
+  echo "pre-commit: checkpoint lint FAILED — see the sites listed above:"
+  echo "route checkpointing through Layout.truncateLineage (and SCALE.md's"
+  echo "audit), and sessions through GraftSession.builder."
   exit 1
 }
 exit 0
