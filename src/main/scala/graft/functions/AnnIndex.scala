@@ -22,6 +22,8 @@ import graft.functions.Layout.LineageOps
   *                   PQ codebooks over cell RESIDUALS
   *   - `codes`     — (id BIGINT, cell BIGINT, codes ARRAY<BIGINT>): the
   *                   encoded corpus, m code labels per vector
+  * Every write verb is one [[Storage.commit]]; its manifest holds the
+  * physical codes-table row count.
   *
   * All model numbers are the micro-quantized BIGINTs of
   * [[ClusterOps.kMeansModel]], so persistence is exact: longs round-trip
@@ -38,38 +40,6 @@ object AnnIndex {
   private def centroidsPath(p: String) = s"$p/centroids"
   private def codebooksPath(p: String) = s"$p/codebooks"
   private def codesPath(p: String)     = s"$p/codes"
-  private def manifestPath(p: String)  = s"$p/manifest"
-
-  /** Commit the build transaction: the manifest is written LAST (and
-    * dropped FIRST by builders/appenders), so its presence certifies every
-    * artifact table is complete — the probe-side torn-index guard.
-    *
-    * `nCodes` is supplied by the caller (an [[org.apache.spark.sql
-    * .Observation]] riding the codes write, or the prior manifest when the
-    * codes table is untouched) instead of a full re-count of the codes
-    * artifact — the certificate is the manifest's PRESENCE; the count is
-    * metadata, and the observed write-side count equals the written rows by
-    * definition (a failed write never reaches this call). Guide §1.2: the
-    * re-count was one extra job per lifecycle verb.
-    */
-  private def commit(spark: SparkSession, indexPath: String, nCodes: Long): Unit = {
-    import spark.implicits._
-    Storage.replace(Seq(nCodes).toDF("n_codes"), manifestPath(indexPath))
-  }
-
-  private def observedCount(df: DataFrame): (DataFrame, () => Long) = {
-    val obs = new org.apache.spark.sql.Observation()
-    (df.observe(obs, count(lit(1)).as("n")),
-      () => obs.get("n").asInstanceOf[Long])
-  }
-
-  private def manifestCodes(spark: SparkSession, indexPath: String): Long =
-    Storage.get(spark, manifestPath(indexPath)).head().getAs[Long]("n_codes")
-
-  private def requireCommitted(indexPath: String): Unit =
-    require(Storage.exists(manifestPath(indexPath)),
-      s"index at $indexPath has no commit manifest — torn or missing build; rebuild it")
-
   private def qv(c: Column): Column = transform(c, x => floor(x.cast("double") * lit(1e6)))
 
   /** Encode vectors against a FROZEN model: coarse cell by integer argmin-L2²,
@@ -115,47 +85,47 @@ object AnnIndex {
     val spark = corpus.sparkSession
     import spark.implicits._
     val dsub = dim / m
-    Storage.drop(manifestPath(indexPath)) // invalidate before touching tables
-    Storage.drop(s"$indexPath/tombstones") // rebuild resets delete state
+    Storage.commit(indexPath) {
+      Storage.clearTombstones(indexPath) // rebuild resets delete state
+      val coarse    = ClusterOps.kMeansModel(corpus, idCol, vecCol, nCells, iters)
+      val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
+      // localCheckpoint: the fused sub-model training rescans this frame
+      // (iters+1 actions) — the ivfPqTopK lineage discipline.
+      val withRes = corpus
+        .select(col(idCol).cast("long").as("__id"), qv(col(vecCol)).as("__qv"))
+        .withColumn("cell",
+          NativeFns.nearest_centroid_l2(col("__qv"), coarse.map(_._1), coarse.map(_._2))
+            .getField("cluster"))
+        .withColumn("__rv", zip_with(col("__qv"), element_at(coarseMap, col("cell")),
+          (a, b) => a - b))
+        .truncateLineage()
+      // All m sub-codebooks in one job per iteration (bit-identical per sub to
+      // the old per-sub kMeansModelQuantized calls — see its doc) instead of
+      // m·(iters+1) separate actions over the same frame.
+      val subModels = ClusterOps.kMeansSubModelsQuantized(
+        withRes.select(col("__id"), col("__rv")), m, dsub, ksub, iters)
+      val codeCols = subModels.zipWithIndex.map { case (mod, s) =>
+        NativeFns.nearest_centroid_l2(
+          slice(col("__rv"), s * dsub + 1, dsub), mod.map(_._1), mod.map(_._2))
+          .getField("cluster")
+      }
+      val codes = withRes.select(col("__id").as("id"), col("cell"), array(codeCols: _*).as("codes"))
 
-    val coarse    = ClusterOps.kMeansModel(corpus, idCol, vecCol, nCells, iters)
-    val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
-    // localCheckpoint: the fused sub-model training rescans this frame
-    // (iters+1 actions) — the ivfPqTopK lineage discipline.
-    val withRes = corpus
-      .select(col(idCol).cast("long").as("__id"), qv(col(vecCol)).as("__qv"))
-      .withColumn("cell",
-        NativeFns.nearest_centroid_l2(col("__qv"), coarse.map(_._1), coarse.map(_._2))
-          .getField("cluster"))
-      .withColumn("__rv", zip_with(col("__qv"), element_at(coarseMap, col("cell")),
-        (a, b) => a - b))
-      .truncateLineage()
-    // All m sub-codebooks in one job per iteration (bit-identical per sub to
-    // the old per-sub kMeansModelQuantized calls — see its doc) instead of
-    // m·(iters+1) separate actions over the same frame.
-    val subModels = ClusterOps.kMeansSubModelsQuantized(
-      withRes.select(col("__id"), col("__rv")), m, dsub, ksub, iters)
-    val codeCols = subModels.zipWithIndex.map { case (mod, s) =>
-      NativeFns.nearest_centroid_l2(
-        slice(col("__rv"), s * dsub + 1, dsub), mod.map(_._1), mod.map(_._2))
-        .getField("cluster")
+      Storage.replace(
+        Seq((dim, nCells, m, ksub, iters)).toDF("dim", "n_cells", "m", "ksub", "iters"),
+        metaPath(indexPath))
+      Storage.replace(
+        coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cell", "cv"),
+        centroidsPath(indexPath))
+      Storage.replace(
+        subModels.zipWithIndex.flatMap { case (mod, s) =>
+          mod.map { case (code, cv) => (s, code, cv.toSeq) }
+        }.toDF("sub", "code", "cv"),
+        codebooksPath(indexPath))
+      val (codesObs, nCodes) = Storage.observedCount(codes)
+      Storage.replace(codesObs, codesPath(indexPath))
+      nCodes()
     }
-    val codes = withRes.select(col("__id").as("id"), col("cell"), array(codeCols: _*).as("codes"))
-
-    Storage.replace(
-      Seq((dim, nCells, m, ksub, iters)).toDF("dim", "n_cells", "m", "ksub", "iters"),
-      metaPath(indexPath))
-    Storage.replace(
-      coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cell", "cv"),
-      centroidsPath(indexPath))
-    Storage.replace(
-      subModels.zipWithIndex.flatMap { case (mod, s) =>
-        mod.map { case (code, cv) => (s, code, cv.toSeq) }
-      }.toDF("sub", "code", "cv"),
-      codebooksPath(indexPath))
-    val (codesObs, nCodes) = observedCount(codes)
-    Storage.replace(codesObs, codesPath(indexPath))
-    commit(spark, indexPath, nCodes())
   }
 
   private def readMeta(spark: SparkSession, indexPath: String): IvfPqMeta = {
@@ -180,6 +150,26 @@ object AnnIndex {
     (coarse, subModels)
   }
 
+  /** Tombstone-delete vectors from a persisted index: ADC scores carry no
+    * corpus statistics, so deletion is PURE candidate filtering — the
+    * tombstone set anti-joins the codes read inside [[probeIvfPq]], making
+    * probe-after-delete trivially equal to rebuild-without-deleted (spec-
+    * pinned). One [[Storage.commit]], like append.
+    */
+  def deleteVecs(spark: SparkSession, indexPath: String, vecIds: DataFrame): Unit = {
+    val nCodes = Storage.committedRows(indexPath) // the codes table is untouched
+    Storage.commit(indexPath) {
+      Storage.tombstone(indexPath, vecIds, "id")
+      nCodes
+    }
+  }
+
+  private def liveCodes(spark: SparkSession, indexPath: String): DataFrame = {
+    val codes = Storage.get(spark, codesPath(indexPath))
+    Storage.tombstones(spark, indexPath)
+      .fold(codes)(tomb => codes.join(broadcast(tomb), Seq("id"), "left_anti"))
+  }
+
   /** Probe a PERSISTED index: rank each query's nearest `nProbe` cells
     * against the saved centroids, reconstruct only those cells' code rows
     * from the saved codebooks, ADC-score, keep top-k. Reads NOTHING but the
@@ -187,44 +177,12 @@ object AnnIndex {
     * nProbe/nCells of the codes table, which is the inverted-list economics
     * that make 100 TB serving viable.
     */
-  /** Tombstone-delete vectors from a persisted index: ADC scores carry no
-    * corpus statistics, so deletion is PURE candidate filtering — the
-    * tombstone set anti-joins the codes read inside [[probeIvfPq]], making
-    * probe-after-delete trivially equal to rebuild-without-deleted (spec-
-    * pinned). Same invalidate → extend → re-commit transaction as append.
-    */
-  def deleteVecs(spark: SparkSession, indexPath: String, vecIds: DataFrame): Unit = {
-    import spark.implicits._
-    requireCommitted(indexPath)
-    // tombstoning never touches the codes table, so the manifest count is
-    // carried over from the prior manifest (1-row read) instead of a full
-    // codes re-count job.
-    val nCodes = manifestCodes(spark, indexPath)
-    Storage.drop(manifestPath(indexPath))
-    val ids = vecIds.select(col(vecIds.columns.head).cast("long").as("id"))
-      .distinct().truncateLineage()
-    val prior =
-      if (Storage.exists(s"$indexPath/tombstones"))
-        Storage.get(spark, s"$indexPath/tombstones")
-      else Seq.empty[Long].toDF("id")
-    Storage.replace(prior.union(ids).distinct().truncateLineage(),
-      s"$indexPath/tombstones")
-    commit(spark, indexPath, nCodes)
-  }
-
-  private def liveCodes(spark: SparkSession, indexPath: String): DataFrame = {
-    val codes = Storage.get(spark, codesPath(indexPath))
-    if (Storage.exists(s"$indexPath/tombstones"))
-      codes.join(broadcast(Storage.get(spark, s"$indexPath/tombstones")), Seq("id"), "left_anti")
-    else codes
-  }
-
   def probeIvfPq(
       spark: SparkSession, indexPath: String, queries: DataFrame,
       idCol: String, vecCol: String, nProbe: Int, k: Int
   ): DataFrame = {
     import spark.implicits._
-    requireCommitted(indexPath)
+    Storage.requireCommitted(indexPath)
     val meta                = readMeta(spark, indexPath)
     val (coarse, subModels) = readModels(spark, indexPath, meta)
     val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
@@ -274,7 +232,7 @@ object AnnIndex {
       idCol: String, vecCol: String, tsCol: String, nProbe: Int, k: Int,
       watermark: String = "10 minutes", windowLen: String = "1 hour"
   ): DataFrame = {
-    requireCommitted(indexPath)
+    Storage.requireCommitted(indexPath)
     val meta                = readMeta(spark, indexPath)
     val (coarse, subModels) = readModels(spark, indexPath, meta)
     val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
@@ -322,38 +280,32 @@ object AnnIndex {
     * rows and clear the tombstone set — deletion is pure candidate filtering
     * (ADC carries no corpus statistics), so compaction is ONE anti-join
     * rewrite of the codes table under the [[graft.sources.Storage.rewrite]]
-    * rename-aside swap; model tables are untouched. Runs as the usual
-    * invalidate → rewrite → re-commit transaction (crash mid-compaction
-    * leaves a manifest-less index that probes refuse). After compaction
+    * rename-aside swap; model tables are untouched. Runs as one
+    * [[Storage.commit]] (crash mid-compaction leaves a manifest-less index
+    * that probes refuse). After compaction
     * probes pay no anti-join and previously deleted ids may be re-appended.
     *
-    * Returns false when there is nothing to compact or the tombstone
-    * fraction of the codes table is below `minFraction` (the rewrite is a
-    * full codes pass — gate it on accumulated delete volume).
+    * Returns false when [[Storage.compactable]]'s gate finds nothing to
+    * compact or the tombstones below `minFraction` of the committed codes
+    * rows (the rewrite is a full codes pass — gate it on delete volume).
     */
-  def compactIvfPq(spark: SparkSession, indexPath: String, minFraction: Double = 0.0): Boolean = {
-    requireCommitted(indexPath)
-    if (!Storage.exists(s"$indexPath/tombstones")) return false
-    val tomb   = Storage.get(spark, s"$indexPath/tombstones").truncateLineage()
-    val nTomb  = tomb.count()
-    // gate denominator from the manifest's 1-row count, not a full codes
-    // scan: build/append commit the OBSERVED written-row count and delete
-    // leaves codes untouched, so manifest n_codes == physical codes rows by
-    // construction (the r17 observed-count discipline applied to the gate).
-    val nCodes = manifestCodes(spark, indexPath)
-    if (nTomb == 0L || (nCodes > 0L && nTomb.toDouble / nCodes.toDouble < minFraction)) return false
-    Storage.drop(manifestPath(indexPath))
-    val (liveObs, nLive) = observedCount(
-      // no broadcast hint: tombstones accumulate until exactly this moment,
-      // so a long-deferred compaction may hold far more than a broadcastable
-      // side — let the planner size the join (r14 advice, same class as the
-      // probeIvfPqStream codes broadcast removed in r13).
-      Storage.get(spark, codesPath(indexPath)).join(tomb, Seq("id"), "left_anti"))
-    Storage.rewrite(liveObs, codesPath(indexPath))
-    Storage.drop(s"$indexPath/tombstones")
-    commit(spark, indexPath, nLive())
-    true
-  }
+  def compactIvfPq(spark: SparkSession, indexPath: String, minFraction: Double = 0.0): Boolean =
+    Storage.compactable(spark, indexPath, minFraction) match {
+      case None => false
+      case Some(tomb) =>
+        Storage.commit(indexPath) {
+          val (liveObs, nLive) = Storage.observedCount(
+            // no broadcast hint: tombstones accumulate until exactly this
+            // moment, so a long-deferred compaction may hold far more than a
+            // broadcastable side — let the planner size the join (r14 advice,
+            // same class as the probeIvfPqStream codes broadcast removed in r13).
+            Storage.get(spark, codesPath(indexPath)).join(tomb, Seq("id"), "left_anti"))
+          Storage.rewrite(liveObs, codesPath(indexPath))
+          Storage.clearTombstones(indexPath)
+          nLive()
+        }
+        true
+    }
 
   /** Incremental maintenance: encode `newVecs` against the FROZEN persisted
     * codebooks (no retrain — the FAISS `add` contract) and append their code
@@ -367,30 +319,22 @@ object AnnIndex {
       spark: SparkSession, indexPath: String, newVecs: DataFrame,
       idCol: String, vecCol: String
   ): DataFrame = {
-    requireCommitted(indexPath)
+    val nOld = Storage.committedRows(indexPath)
     // codes rows are unique by id; a tombstoned id still has its old code
     // row physically present, so re-appending it would either stay invisible
-    // (anti-joined forever) or duplicate — refuse; compact first.
-    if (Storage.exists(s"$indexPath/tombstones")) {
-      val clash = Storage.get(spark, s"$indexPath/tombstones")
-        .join(newVecs.select(col(idCol).cast("long").as("id")), Seq("id"), "left_semi")
-        .count()
-      require(clash == 0L,
-        s"$clash appended vector id(s) are tombstoned in $indexPath — compact " +
-          "the index before re-adding a deleted vector")
-    }
+    // (anti-joined forever) or duplicate
+    Storage.requireNotTombstoned(indexPath, newVecs, idCol, "id")
     val meta                = readMeta(spark, indexPath)
     val (coarse, subModels) = readModels(spark, indexPath, meta)
     val appended = encode(newVecs, idCol, vecCol, meta, coarse, subModels)
-    // append is its own transaction: invalidate, extend codes, re-commit —
-    // a crash mid-append leaves a manifest-less index that probes refuse.
-    // The new total = prior manifest count + the appended rows observed on
-    // the write itself; no post-append codes re-count job.
-    val nOld = manifestCodes(spark, indexPath)
-    Storage.drop(manifestPath(indexPath))
-    val (appObs, nApp) = observedCount(appended)
-    Storage.append(appObs, codesPath(indexPath))
-    commit(spark, indexPath, nOld + nApp())
+    // append is its own transaction: a crash mid-append leaves a
+    // manifest-less index that probes refuse. The new total = prior
+    // committed count + the appended rows observed on the write itself.
+    Storage.commit(indexPath) {
+      val (appObs, nApp) = Storage.observedCount(appended)
+      Storage.append(appObs, codesPath(indexPath))
+      nOld + nApp()
+    }
     appended
   }
 }

@@ -22,9 +22,9 @@ import graft.sources.Storage
   *                opaque blob, so probes AND the DuckDB oracle replay the
   *                merge in SQL.
   *   `meta`     — one row (k).
-  *   `manifest` — commit marker, written LAST / dropped FIRST: probes and
-  *                appends refuse a torn store (the [[TextIndex]]/[[AnnIndex]]
-  *                transaction discipline).
+  * Every write verb is one [[Storage.commit]] (the [[TextIndex]]/[[AnnIndex]]
+  * transaction), its manifest holding the segments-table row count: probes
+  * and appends refuse a torn store.
   *
   * Scale: the store is (segments × k) rows — model-sized against the data
   * (256 longs stand for a segment of any row count). A probe reads only the
@@ -34,8 +34,6 @@ import graft.sources.Storage
 object SketchStore {
 
   val M: Long = KmvSketch.M // 2^61 - 1, the hash universe
-
-  private def manifest(path: String) = s"$path/manifest"
 
   /** Bottom-k distinct hashes per segment. Salted two-phase rank (the
     * x_inverted_index window-skew doctrine): a seg-only window would cap
@@ -68,28 +66,25 @@ object SketchStore {
 
   /** Build the store from (seg, hv) rows — hv must be [[graft.functions
     * .NativeFns.hash61]] output (the registry's fixed Carter–Wegman hash).
-    * Replaces any prior store; manifest written last.
+    * Replaces any prior store in one commit.
     */
-  def build(rows: DataFrame, k: Int, path: String): Unit = {
-    val spark = rows.sparkSession
-    Storage.drop(manifest(path))
-    Storage.replace(segmentSketches(rows, k), s"$path/segments")
-    spark.range(1).select(lit(k.toLong).as("k"))
+  def build(rows: DataFrame, k: Int, path: String): Unit = Storage.commit(path) {
+    val (sketches, n) = Storage.observedCount(segmentSketches(rows, k))
+    Storage.replace(sketches, s"$path/segments")
+    rows.sparkSession.range(1).select(lit(k.toLong).as("k"))
       .write.mode("overwrite").parquet(s"$path/meta")
-    spark.range(1).select(lit("committed").as("state"))
-      .write.mode("overwrite").parquet(manifest(path))
+    n()
   }
 
   /** Append NEW segments' sketches — O(delta) work, the old segments are
     * never re-read. Segments are append-once: re-sketching a present
     * segment is refused (its rows are already final under the build's
     * bottom-k; a changed segment means a rebuild, the [[TextIndex]]
-    * re-add-refusal discipline). Manifest dropped first, rewritten last.
+    * re-add-refusal discipline). One commit.
     */
   def appendSegments(rows: DataFrame, path: String): Unit = {
     val spark = rows.sparkSession
-    require(Storage.exists(manifest(path)),
-      "torn or absent sketch store: refusing to append")
+    val nOld  = Storage.committedRows(path)
     val k = spark.read.parquet(s"$path/meta").head().getAs[Long]("k").toInt
     // Two delta passes, kept deliberately (r18 A/B): the dup check's
     // distinct-seg scan short-circuits through CollectLimit and shuffles
@@ -104,10 +99,11 @@ object SketchStore {
       .join(existing, Seq("seg"), "left_semi").limit(1).count()
     require(dup == 0L,
       "segment already present: segments are append-once (rebuild to refresh)")
-    Storage.drop(manifest(path))
-    Storage.append(segmentSketches(rows, k), s"$path/segments")
-    spark.range(1).select(lit("committed").as("state"))
-      .write.mode("overwrite").parquet(manifest(path))
+    Storage.commit(path) {
+      val (sketches, n) = Storage.observedCount(segmentSketches(rows, k))
+      Storage.append(sketches, s"$path/segments")
+      nOld + n()
+    }
   }
 
   /** Distinct-count estimate over the segment range [lo, hi], from sketch
@@ -118,8 +114,7 @@ object SketchStore {
     * Returns one row (seg_lo, seg_hi, k, filled, kth_min, kmv_estimate).
     */
   def probeRange(spark: SparkSession, path: String, lo: Long, hi: Long): DataFrame = {
-    require(Storage.exists(manifest(path)),
-      "torn or absent sketch store: refusing to probe")
+    Storage.requireCommitted(path)
     val k = spark.read.parquet(s"$path/meta").head().getAs[Long]("k")
     val merged = spark.read.parquet(s"$path/segments")
       .filter(col("seg").between(lo, hi))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Layout.LineageOps
 
@@ -11,9 +11,11 @@ import graft.functions.Layout.LineageOps
   * level data skipping, the 100 TB serving shape), and
   * [[probeBm25]] scores strictly FROM THE PERSISTED TABLES — no corpus scan,
   * no re-tokenization, model scalars (n_docs, avgdl) read from the one-row
-  * corpus table written at build time so every probe — and the DuckDB oracle
-  * replaying it over `read_parquet` of the same artifacts — sees bit-equal
-  * global statistics.
+  * corpus table of LIVE totals (maintained by every write verb) so every
+  * probe — and the DuckDB oracle replaying it over `read_parquet` of the
+  * same artifacts — sees bit-equal global statistics. Every write verb is
+  * one [[graft.sources.Storage.commit]] transaction; its manifest holds the
+  * physical docs-table row count.
   *
   * Scale: a probe touches |terms| posting BUCKETS + a doc-length join
   * keyed on doc_id; df/corpus stats are broadcast-sized. Appending a
@@ -24,7 +26,11 @@ object TextIndex {
 
   import graft.sources.Storage
 
-  private def manifestPath(p: String) = s"$p/manifest"
+  /** Okapi BM25 saturation and length-normalization constants (the TREC-3
+    * values [[QualityLM.bm25TopK]] defaults to).
+    */
+  private val K1 = 1.2
+  private val B  = 0.75
 
   /** Postings are hive-partitioned by `bucket = xxhash64(tok) mod 64`, NOT
     * by raw token: per-token directories are only viable on a closed
@@ -55,18 +61,45 @@ object TextIndex {
   private def readPostings(spark: SparkSession, indexPath: String): DataFrame =
     spark.read.parquet(s"$indexPath/postings")
 
-  /** Tokenize once, write postings/docs/stats/corpus; commit-manifest last
-    * (dropped first), so probes refuse a torn build — the same transaction
-    * discipline as [[AnnIndex]].
+  /** Quantized per-(doc, term) BM25 contribution over the `df`, `tf` and `dl`
+    * columns and the corpus scalars (`nDocs` as a double).
     */
-  def build(docs: DataFrame, idCol: String, textCol: String, indexPath: String): Unit = {
-    val spark = docs.sparkSession
+  private def bm25Sq(nDocs: Column, avgdl: Column): Column = floor(
+    log((nDocs - col("df").cast("double") + 0.5) /
+          (col("df").cast("double") + 0.5) + 1.0) *
+      (col("tf").cast("double") * (K1 + 1.0)) /
+      (col("tf").cast("double") + lit(K1) *
+        (lit(1.0 - B) + lit(B) * col("dl").cast("double") / avgdl)) *
+      1e6 + 0.5
+  ).cast("long")
+
+  /** The one corpus-row writer: exact integer totals, and avgdl from the same
+    * sum/count division on every path, 0.0 for an empty corpus (never NaN).
+    */
+  private def writeCorpus(
+      spark: SparkSession, indexPath: String, nDocs: Long, totalDl: Long): Unit = {
     import spark.implicits._
-    Storage.drop(manifestPath(indexPath))
-    // a rebuild resets delete state — stale tombstones/live stats from a
-    // prior generation would corrupt the fresh index's corrections
-    Storage.drop(s"$indexPath/tombstones")
-    Storage.drop(s"$indexPath/live_corpus")
+    Storage.replace(
+      Seq((nDocs, totalDl, if (nDocs == 0L) 0.0 else totalDl.toDouble / nDocs.toDouble))
+        .toDF("n_docs", "total_dl", "avgdl"),
+      s"$indexPath/corpus")
+  }
+
+  private def readCorpus(spark: SparkSession, indexPath: String): (Long, Long) = {
+    val r = spark.read.parquet(s"$indexPath/corpus").select(col("n_docs"), col("total_dl")).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** Tokenize once, write postings/docs/stats/corpus in one commit, so
+    * probes refuse a torn build — the same transaction as [[AnnIndex]].
+    */
+  def build(
+      docs: DataFrame, idCol: String, textCol: String, indexPath: String
+  ): Unit = Storage.commit(indexPath) {
+    val spark = docs.sparkSession
+    // a rebuild resets delete state — stale tombstones from a prior
+    // generation would corrupt the fresh index's corrections
+    Storage.clearTombstones(indexPath)
     val tok = docs.select(col(idCol).as("doc_id"),
       explode(TextAnalysis.tokens(col(textCol))).as("tok"))
     val postings = tok.groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
@@ -93,8 +126,8 @@ object TextIndex {
     val post = readPostings(spark, indexPath)
     // corpus totals ride the docs write as an Observation (exact integer
     // count/sum merged from the write's own tasks) — the corpus row and the
-    // manifest count then derive driver-side with zero extra scans, where
-    // the old path re-read the docs table twice (corpus agg + manifest
+    // committed row count then come from these totals with zero extra scans,
+    // where the old path re-read the docs table twice (corpus agg + manifest
     // count). Same values by definition: the observed aggregates run over
     // exactly the rows the write persists.
     val obs = new org.apache.spark.sql.Observation()
@@ -105,15 +138,8 @@ object TextIndex {
     val totalDl = obs.get("total_dl").asInstanceOf[Long]
     post.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$indexPath/stats")
-    // corpus stats carry the exact integer totals so the append path can
-    // re-derive the identical avgdl double (same sum/count division).
-    // nDocs == 0 guard (r17 advice): an empty corpus would otherwise write
-    // avgdl = NaN where the pre-r17 aggregate path produced a well-defined
-    // 0-docs row — keep the artifact shape stable for empty builds.
-    Seq((nDocs, totalDl, if (nDocs == 0L) 0.0 else totalDl.toDouble / nDocs.toDouble))
-      .toDF("n_docs", "total_dl", "avgdl")
-      .write.mode("overwrite").parquet(s"$indexPath/corpus")
-    Storage.replace(Seq(nDocs).toDF("n_docs"), manifestPath(indexPath))
+    writeCorpus(spark, indexPath, nDocs, totalDl)
+    nDocs
   }
 
   /** Delete documents from the persisted index by TOMBSTONE — the lakehouse
@@ -125,89 +151,20 @@ object TextIndex {
     * for the PROBED terms only, so corrected scores are bit-equal to a
     * rebuild without the deleted docs (pinned in TextIndexSpec): df, n_docs
     * and total_dl subtract exactly, and avgdl re-derives from the same
-    * integer division the build path uses. Compaction (physically dropping
-    * tombstoned postings and clearing the tombstone table) is the
-    * Storage.merge discipline, applied when the tombstone fraction warrants
-    * a rewrite.
+    * integer division the build path uses. [[compact]] physically drops
+    * the tombstoned rows once the tombstone fraction warrants a rewrite.
     */
   def deleteDocs(spark: SparkSession, indexPath: String, docIds: DataFrame): Unit = {
-    import spark.implicits._
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
-    Storage.drop(manifestPath(indexPath))
-    // ids is consumed exactly once (the `fresh` anti-join below, which is
-    // itself checkpointed before the tombstone overwrite) — checkpointing it
-    // too was one pure-overhead materialization job per delete.
-    val ids = docIds.select(col(docIds.columns.head).cast("long").as("doc_id"))
-      .distinct()
-    val prior =
-      if (Storage.exists(s"$indexPath/tombstones"))
-        spark.read.parquet(s"$indexPath/tombstones")
-      else Seq.empty[Long].toDF("doc_id")
-    // O(delta): only ids not already tombstoned subtract from the totals
-    val fresh  = ids.join(prior, Seq("doc_id"), "left_anti").truncateLineage()
-    val merged = prior.union(fresh).truncateLineage()
-    Storage.replace(merged, s"$indexPath/tombstones")
-    val dead = spark.read.parquet(s"$indexPath/docs")
-      .join(broadcast(fresh), Seq("doc_id"), "left_semi")
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("t")).head()
-    val prev = spark.read.parquet(
-      if (Storage.exists(s"$indexPath/live_corpus")) s"$indexPath/live_corpus"
-      else s"$indexPath/corpus")
-      .select(col("n_docs"), col("total_dl")).head()
-    val n = prev.getAs[Long]("n_docs") - dead.getAs[Long]("n")
-    val t = prev.getAs[Long]("total_dl") - dead.getAs[Long]("t")
-    Storage.replace(
-      Seq((n, t, t.toDouble / n.toDouble)).toDF("n_docs", "total_dl", "avgdl"),
-      s"$indexPath/live_corpus")
-    Storage.replace(Seq(n).toDF("n_docs"), manifestPath(indexPath))
-  }
-
-  /** Tombstone-aware BM25 probe: live postings/doc-lengths via anti-join on
-    * the broadcast tombstone set, per-term df corrected by the tombstoned
-    * posting counts of the probed terms, corpus scalars from the
-    * `live_corpus` row maintained at delete time.
-    */
-  def probeBm25Live(
-      spark: SparkSession, indexPath: String, terms: Seq[String],
-      topK: Int = 20, k1: Double = 1.2, b: Double = 0.75
-  ): DataFrame = {
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
-    require(Storage.exists(s"$indexPath/tombstones"),
-      s"no tombstones at $indexPath — use probeBm25 for an undeleted index")
-    val tomb = spark.read.parquet(s"$indexPath/tombstones")
-    val postAll = readPostings(spark, indexPath)
-      .filter(bucketPred(terms)) // static bucket-directory pruning
-      .filter(col("tok").isin(terms: _*))
-    val postings = postAll.join(broadcast(tomb), Seq("doc_id"), "left_anti")
-    // per-term live df = stored df − tombstoned postings of that term
-    val dfCorr = postAll
-      .join(broadcast(tomb), Seq("doc_id"), "left_semi")
-      .groupBy(col("tok")).agg(count(lit(1)).as("df_dead"))
-    val stats = spark.read.parquet(s"$indexPath/stats")
-      .filter(col("tok").isin(terms: _*))
-      .join(dfCorr, Seq("tok"), "left_outer")
-      .select(col("tok"), (col("df") - coalesce(col("df_dead"), lit(0L))).as("df"))
-    val docs   = spark.read.parquet(s"$indexPath/docs")
-    val corpus = spark.read.parquet(s"$indexPath/live_corpus")
-    val sq = floor(
-      log((col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
-            (col("df").cast("double") + 0.5) + 1.0) *
-        (col("tf").cast("double") * (k1 + 1.0)) /
-        (col("tf").cast("double") + lit(k1) *
-          (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))) *
-        1e6 + 0.5
-    ).cast("long")
-    postings
-      .join(broadcast(stats), "tok")
-      .join(docs, "doc_id")
-      .crossJoin(broadcast(corpus))
-      .select(col("doc_id"), sq.as("sq"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("sq")).as("score"))
-      .orderBy(desc("score"), col("doc_id"))
-      .limit(topK)
+    val nPhysical = Storage.committedRows(indexPath) // the docs table is untouched
+    Storage.commit(indexPath) {
+      val fresh = Storage.tombstone(indexPath, docIds, "doc_id")
+      val dead = spark.read.parquet(s"$indexPath/docs")
+        .join(broadcast(fresh), Seq("doc_id"), "left_semi")
+        .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("t")).head()
+      val (n, t) = readCorpus(spark, indexPath)
+      writeCorpus(spark, indexPath, n - dead.getLong(0), t - dead.getLong(1))
+      nPhysical
+    }
   }
 
   /** Batched MULTI-query probe — the offline-serving shape (score thousands
@@ -219,26 +176,17 @@ object TextIndex {
     * loop.
     */
   def probeBm25Many(
-      spark: SparkSession, indexPath: String, queries: DataFrame,
-      topK: Int = 10, k1: Double = 1.2, b: Double = 0.75
+      spark: SparkSession, indexPath: String, queries: DataFrame, topK: Int = 10
   ): DataFrame = {
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
-    require(!Storage.exists(s"$indexPath/tombstones"),
+    Storage.requireCommitted(indexPath)
+    require(!Storage.hasTombstones(indexPath),
       s"text index at $indexPath has tombstoned docs — compact it, or probe " +
-        "single queries via probeBm25Live")
+        "single queries via probeBm25")
     val postings = readPostings(spark, indexPath)
     val stats    = spark.read.parquet(s"$indexPath/stats")
     val docs     = spark.read.parquet(s"$indexPath/docs")
     val corpus   = spark.read.parquet(s"$indexPath/corpus")
-    val sq = floor(
-      log((col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
-            (col("df").cast("double") + 0.5) + 1.0) *
-        (col("tf").cast("double") * (k1 + 1.0)) /
-        (col("tf").cast("double") + lit(k1) *
-          (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))) *
-        1e6 + 0.5
-    ).cast("long")
+    val sq       = bm25Sq(col("n_docs").cast("double"), col("avgdl"))
     val scored = postings
       .join(broadcast(queries.select(col("query_id"), col("tok"))), "tok")
       .join(broadcast(stats), "tok")
@@ -274,25 +222,14 @@ object TextIndex {
     */
   def probeBm25Stream(
       spark: SparkSession, indexPath: String, queryStream: DataFrame,
-      qidCol: String, tokCol: String, tsCol: String,
-      topK: Int = 10, k1: Double = 1.2, b: Double = 0.75,
+      qidCol: String, tokCol: String, tsCol: String, topK: Int = 10,
       watermark: String = "10 minutes", windowLen: String = "1 hour"
   ): DataFrame = {
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
-    require(!Storage.exists(s"$indexPath/tombstones"),
+    Storage.requireCommitted(indexPath)
+    require(!Storage.hasTombstones(indexPath),
       s"text index at $indexPath has tombstoned docs — compact it before streaming probes")
     val corpus = spark.read.parquet(s"$indexPath/corpus").head()
-    val nDocs  = corpus.getAs[Long]("n_docs").toDouble
-    val avgdl  = corpus.getAs[Double]("avgdl")
-    val sq = floor(
-      log((lit(nDocs) - col("df").cast("double") + 0.5) /
-            (col("df").cast("double") + 0.5) + 1.0) *
-        (col("tf").cast("double") * (k1 + 1.0)) /
-        (col("tf").cast("double") + lit(k1) *
-          (lit(1.0 - b) + lit(b) * col("dl").cast("double") / avgdl)) *
-        1e6 + 0.5
-    ).cast("long")
+    val sq = bm25Sq(lit(corpus.getAs[Long]("n_docs").toDouble), lit(corpus.getAs[Double]("avgdl")))
     val static = readPostings(spark, indexPath)
       .join(broadcast(spark.read.parquet(s"$indexPath/stats")), "tok")
       .join(spark.read.parquet(s"$indexPath/docs"), "doc_id")
@@ -328,173 +265,131 @@ object TextIndex {
     * integer sum/count division as the build path, so append-then-probe is
     * bit-equal to rebuild-then-probe (pinned in TextIndexSpec). Cost is
     * O(delta + vocabulary), never a corpus re-tokenize. Runs as its own
-    * invalidate → extend → re-commit transaction.
+    * [[graft.sources.Storage.commit]].
     */
   def append(docs: DataFrame, idCol: String, textCol: String, indexPath: String): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
+    val nOld  = Storage.committedRows(indexPath)
     // re-adding a tombstoned id would resurrect its OLD postings (still
-    // physically present) alongside the new ones — refuse; compact first.
-    if (Storage.exists(s"$indexPath/tombstones")) {
-      val clash = spark.read.parquet(s"$indexPath/tombstones")
-        .join(docs.select(col(idCol).cast("long").as("doc_id")), Seq("doc_id"), "left_semi")
-        .count()
-      require(clash == 0L,
-        s"$clash appended doc id(s) are tombstoned in $indexPath — compact the " +
-          "index before re-adding a deleted document")
+    // physically present) alongside the new ones
+    Storage.requireNotTombstoned(indexPath, docs, idCol, "doc_id")
+    Storage.commit(indexPath) {
+      val tok = docs.select(col(idCol).as("doc_id"),
+        explode(TextAnalysis.tokens(col(textCol))).as("tok"))
+      val newPost = tok.groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
+        .truncateLineage()
+      newPost.withColumn("bucket", bucketExpr(col("tok")))
+        .repartition(PostingBuckets, col("bucket")) // one delta file per bucket
+        .write.mode("append").partitionBy("bucket").parquet(s"$indexPath/postings")
+      // delta totals ride the docs append as an Observation — drops the
+      // separate newDl.agg job the old path ran (same exact integers: the
+      // observed count/sum cover exactly the appended rows).
+      val dObs = new org.apache.spark.sql.Observation()
+      val newDl = newPost.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+        .truncateLineage()
+      newDl.observe(dObs, count(lit(1)).as("n"), sum(col("dl")).as("t"))
+        .write.mode("append").parquet(s"$indexPath/docs")
+      // vocab-sized merge; checkpoint before overwriting the table it read
+      val mergedStats = spark.read.parquet(s"$indexPath/stats")
+        .select(col("tok"), col("df").as("df_old"))
+        .join(newPost.groupBy(col("tok")).agg(count(lit(1)).as("df_new")), Seq("tok"), "full_outer")
+        .select(col("tok"),
+          (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
+        .truncateLineage()
+      Storage.replace(mergedStats, s"$indexPath/stats")
+      val deltaN = dObs.get("n").asInstanceOf[Long]
+      val (n, t) = readCorpus(spark, indexPath)
+      writeCorpus(spark, indexPath, n + deltaN, t + dObs.get("t").asInstanceOf[Long])
+      nOld + deltaN
     }
-    Storage.drop(manifestPath(indexPath))
-    val tok = docs.select(col(idCol).as("doc_id"),
-      explode(TextAnalysis.tokens(col(textCol))).as("tok"))
-    val newPost = tok.groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
-      .truncateLineage()
-    newPost.withColumn("bucket", bucketExpr(col("tok")))
-      .repartition(PostingBuckets, col("bucket")) // one delta file per bucket
-      .write.mode("append").partitionBy("bucket").parquet(s"$indexPath/postings")
-    // delta totals ride the docs append as an Observation — drops the
-    // separate newDl.agg job the old path ran (same exact integers: the
-    // observed count/sum cover exactly the appended rows).
-    val dObs = new org.apache.spark.sql.Observation()
-    val newDl = newPost.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      .truncateLineage()
-    newDl.observe(dObs, count(lit(1)).as("n"), sum(col("dl")).as("t"))
-      .write.mode("append").parquet(s"$indexPath/docs")
-    // vocab-sized merge; checkpoint before overwriting the table it read
-    val mergedStats = spark.read.parquet(s"$indexPath/stats")
-      .select(col("tok"), col("df").as("df_old"))
-      .join(newPost.groupBy(col("tok")).agg(count(lit(1)).as("df_new")), Seq("tok"), "full_outer")
-      .select(col("tok"),
-        (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
-      .truncateLineage()
-    Storage.replace(mergedStats, s"$indexPath/stats")
-    val old = spark.read.parquet(s"$indexPath/corpus")
-      .select(col("n_docs"), col("total_dl")).head()
-    val deltaN  = dObs.get("n").asInstanceOf[Long]
-    val deltaT  = dObs.get("t").asInstanceOf[Long]
-    val nDocs   = old.getAs[Long]("n_docs") + deltaN
-    val totalDl = old.getAs[Long]("total_dl") + deltaT
-    Storage.replace(
-      Seq((nDocs, totalDl, totalDl.toDouble / nDocs.toDouble))
-        .toDF("n_docs", "total_dl", "avgdl"),
-      s"$indexPath/corpus")
-    // a deleted-then-appended index also tracks LIVE totals — without this
-    // the delta would be invisible to probeBm25Live (stale n_docs/avgdl)
-    if (Storage.exists(s"$indexPath/live_corpus")) {
-      val live = spark.read.parquet(s"$indexPath/live_corpus")
-        .select(col("n_docs"), col("total_dl")).head()
-      val ln = live.getAs[Long]("n_docs") + deltaN
-      val lt = live.getAs[Long]("total_dl") + deltaT
-      Storage.replace(
-        Seq((ln, lt, lt.toDouble / ln.toDouble)).toDF("n_docs", "total_dl", "avgdl"),
-        s"$indexPath/live_corpus")
-    }
-    Storage.replace(Seq(nDocs).toDF("n_docs"), manifestPath(indexPath))
   }
 
   /** COMPACT a tombstoned index: physically drop every deleted doc's
     * postings and doc-length rows, recompute the vocab-sized df table from
-    * the surviving postings, promote the live corpus totals to the corpus
-    * table, and clear the tombstone + live-correction state — after which
-    * every probe pays zero anti-join/correction cost and deleted ids may be
-    * re-appended. The [[graft.sources.Storage.merge]] rename-aside swap
-    * rewrites each table, and the whole compaction runs as the usual
-    * invalidate → rewrite → re-commit transaction, so a crash mid-compaction
-    * leaves a manifest-less index that probes refuse rather than a torn mix
-    * of compacted and stale tables.
+    * the surviving postings, and clear the tombstone table (the corpus row
+    * already holds the live totals) — after which every probe pays zero
+    * anti-join/correction cost and deleted ids may be re-appended. The
+    * [[graft.sources.Storage.rewrite]] rename-aside swap rewrites each table,
+    * and the whole compaction is one [[graft.sources.Storage.commit]], so a
+    * crash mid-compaction leaves a manifest-less index that probes refuse
+    * rather than a torn mix of compacted and stale tables.
     *
-    * Returns false (no work) when there are no tombstones or their fraction
-    * of the indexed corpus is below `minFraction` — the "compact when the
-    * tombstone fraction warrants a rewrite" gate: the rewrite is a full pass
-    * over the postings, amortized across every subsequent probe.
+    * Returns false (no work) when [[graft.sources.Storage.compactable]]'s
+    * gate says the tombstones are absent or below `minFraction` of the
+    * committed docs: the rewrite is a full pass over the postings, amortized
+    * across every subsequent probe.
     *
     * Scale: postings rewrite is one partition-parallel anti-join scan
     * (broadcast tombstones), df recompute is the same partial→final count
-    * the build runs, corpus promotion is one row. TextIndexSpec pins
+    * the build runs, over that same anti-joined scan. TextIndexSpec pins
     * compact-then-probe == rebuild-without-deleted bit-exact.
     */
-  def compact(spark: SparkSession, indexPath: String, minFraction: Double = 0.0): Boolean = {
-    import spark.implicits._
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
-    if (!Storage.exists(s"$indexPath/tombstones")) return false
-    val tomb  = spark.read.parquet(s"$indexPath/tombstones").truncateLineage()
-    val nTomb = tomb.count()
-    // gate denominator from the corpus row, not a full docs count: build
-    // writes the OBSERVED docs count, append adds its observed delta, and
-    // delete never touches the docs table — so corpus.n_docs == physical
-    // docs rows by construction (1-row read replaces a full-table job).
-    val nDocs = spark.read.parquet(s"$indexPath/corpus").head().getAs[Long]("n_docs")
-    if (nTomb == 0L || (nDocs > 0L && nTomb.toDouble / nDocs.toDouble < minFraction)) return false
-    Storage.drop(manifestPath(indexPath))
-    // no broadcast hints: compaction is where the FULL accumulated
-    // tombstone set is joined — a long-deferred compaction can exceed the
-    // broadcast limit; the planner auto-broadcasts when it fits (r14 advice).
-    // NOTE on file fan-out: the rewrite inherits the postings SCAN's task
-    // count, which the split packer keeps near the (already bucket-
-    // clustered) input's file count — so the output stays ~one file per
-    // bucket without an explicit exchange. An added
-    // repartition(PostingBuckets, bucket) was A/B'd here and measured ~1.4 s
-    // SLOWER at quiet steal (extra exchange + 64 forced writer waves for a
-    // layout the scan already provides); on a cluster where the tombstoned
-    // scan fans out to many tasks, reintroduce the clustering.
-    Storage.rewrite(
-      readPostings(spark, indexPath).join(tomb, Seq("doc_id"), "left_anti"),
-      s"$indexPath/postings", partitionCols = Seq("bucket"))
-    Storage.rewrite(
-      spark.read.parquet(s"$indexPath/docs").join(tomb, Seq("doc_id"), "left_anti"),
-      s"$indexPath/docs")
-    Storage.rewrite(
-      readPostings(spark, indexPath).groupBy(col("tok")).agg(count(lit(1)).as("df")),
-      s"$indexPath/stats")
-    // live_corpus already holds the exact post-delete integer totals (and
-    // the same sum/count avgdl division as build) — promote it to corpus
-    Storage.rewrite(spark.read.parquet(s"$indexPath/live_corpus"), s"$indexPath/corpus")
-    Storage.drop(s"$indexPath/live_corpus")
-    Storage.drop(s"$indexPath/tombstones")
-    // the promoted corpus row's n_docs IS the surviving doc count (delete
-    // time subtracted exact integers; spec-pinned == rebuild) — a 1-row
-    // artifact read replaces the old full docs re-count job.
-    val n = spark.read.parquet(s"$indexPath/corpus").head().getAs[Long]("n_docs")
-    Storage.replace(Seq(n).toDF("n_docs"), manifestPath(indexPath))
-    true
-  }
+  def compact(spark: SparkSession, indexPath: String, minFraction: Double = 0.0): Boolean =
+    Storage.compactable(spark, indexPath, minFraction) match {
+      case None => false
+      case Some(tomb) =>
+        Storage.commit(indexPath) {
+          // no broadcast hints: compaction is where the FULL accumulated
+          // tombstone set is joined — a long-deferred compaction can exceed the
+          // broadcast limit; the planner auto-broadcasts when it fits (r14 advice).
+          // NOTE on file fan-out: the rewrite inherits the postings SCAN's task
+          // count, which the split packer keeps near the (already bucket-
+          // clustered) input's file count — so the output stays ~one file per
+          // bucket without an explicit exchange. An added
+          // repartition(PostingBuckets, bucket) was A/B'd here and measured ~1.4 s
+          // SLOWER at quiet steal (extra exchange + 64 forced writer waves for a
+          // layout the scan already provides); on a cluster where the tombstoned
+          // scan fans out to many tasks, reintroduce the clustering.
+          val survivors = readPostings(spark, indexPath).join(tomb, Seq("doc_id"), "left_anti")
+          // df from the survivors BEFORE the postings swap: once every doc
+          // is deleted, the rewritten postings dir holds no file to read a
+          // schema back from
+          Storage.rewrite(
+            survivors.groupBy(col("tok")).agg(count(lit(1)).as("df")), s"$indexPath/stats")
+          Storage.rewrite(survivors, s"$indexPath/postings", partitionCols = Seq("bucket"))
+          val (liveDocs, nLive) = Storage.observedCount(
+            spark.read.parquet(s"$indexPath/docs").join(tomb, Seq("doc_id"), "left_anti"))
+          Storage.rewrite(liveDocs, s"$indexPath/docs")
+          Storage.clearTombstones(indexPath)
+          nLive()
+        }
+        true
+    }
 
   /** Okapi BM25 top-k over the saved index (same TREC-3 formulation and
     * 1e-6 per-(doc,term) quantization as [[QualityLM.bm25TopK]] — the spec
-    * pins probe == direct-corpus ranking row-for-row).
+    * pins probe == direct-corpus ranking row-for-row). On a tombstoned index
+    * the live postings come from an anti-join on the broadcast tombstone set
+    * and each probed term's df drops by its tombstoned postings, so scores
+    * stay bit-equal to a rebuild without the deleted docs.
     */
   def probeBm25(
-      spark: SparkSession, indexPath: String, terms: Seq[String],
-      topK: Int = 20, k1: Double = 1.2, b: Double = 0.75
+      spark: SparkSession, indexPath: String, terms: Seq[String], topK: Int = 20
   ): DataFrame = {
-    require(Storage.exists(manifestPath(indexPath)),
-      s"text index at $indexPath has no commit manifest — torn or missing build; rebuild it")
-    // a tombstoned index must not serve deleted docs or stale df/avgdl —
-    // dispatch to the tombstone-aware probe, which is bit-equal to a rebuild
-    if (Storage.exists(s"$indexPath/tombstones"))
-      return probeBm25Live(spark, indexPath, terms, topK, k1, b)
-    val postings = readPostings(spark, indexPath)
+    Storage.requireCommitted(indexPath)
+    val postAll = readPostings(spark, indexPath)
       .filter(bucketPred(terms)) // static bucket-directory pruning
       .filter(col("tok").isin(terms: _*))
-    val stats = spark.read.parquet(s"$indexPath/stats")
+    val statsAll = spark.read.parquet(s"$indexPath/stats")
       .filter(col("tok").isin(terms: _*))
+    val (postings, stats) = Storage.tombstones(spark, indexPath) match {
+      case None => (postAll, statsAll)
+      case Some(tomb) =>
+        // per-term live df = stored df − tombstoned postings of that term
+        val dfCorr = postAll
+          .join(broadcast(tomb), Seq("doc_id"), "left_semi")
+          .groupBy(col("tok")).agg(count(lit(1)).as("df_dead"))
+        (postAll.join(broadcast(tomb), Seq("doc_id"), "left_anti"),
+          statsAll.join(dfCorr, Seq("tok"), "left_outer")
+            .select(col("tok"), (col("df") - coalesce(col("df_dead"), lit(0L))).as("df")))
+    }
     val docs   = spark.read.parquet(s"$indexPath/docs")
     val corpus = spark.read.parquet(s"$indexPath/corpus")
-    val sq = floor(
-      log((col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
-            (col("df").cast("double") + 0.5) + 1.0) *
-        (col("tf").cast("double") * (k1 + 1.0)) /
-        (col("tf").cast("double") + lit(k1) *
-          (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))) *
-        1e6 + 0.5
-    ).cast("long")
     postings
       .join(broadcast(stats), "tok")
       .join(docs, "doc_id")
       .crossJoin(broadcast(corpus)) // one model row
-      .select(col("doc_id"), sq.as("sq"))
+      .select(col("doc_id"), bm25Sq(col("n_docs").cast("double"), col("avgdl")).as("sq"))
       .groupBy(col("doc_id"))
       .agg(sum(col("sq")).as("score"))
       .orderBy(desc("score"), col("doc_id"))

@@ -424,12 +424,12 @@ object Serving {
 
   /** Tombstone DELETE on the persisted index ([[TextIndex.deleteDocs]]) —
     * the lakehouse delete pattern applied to serving: no posting rewritten,
-    * a tombstone set + exact integer corrections to the live corpus totals
-    * (O(delta) at delete time), and a tombstone-aware probe whose df /
-    * n_docs / avgdl corrections make it bit-equal to a rebuild without the
-    * deleted docs (TextIndexSpec pins the equality). Completes the serving
-    * lifecycle: build → append → delete → probe, every step oracled over
-    * the artifacts.
+    * a tombstone set + exact integer corrections to the corpus row, which
+    * always holds the live totals (O(delta) at delete time), and a probe
+    * whose anti-join and per-term df correction, with those totals, make it
+    * bit-equal to a rebuild without the deleted docs (TextIndexSpec pins the
+    * equality). Completes the serving lifecycle: build → append → delete →
+    * probe, every step oracled over the artifacts.
     */
   val searchIndexDelete = Q(
     "x_search_index_delete",
@@ -438,7 +438,7 @@ object Serving {
       TextIndex.build(docs, "doc_id", "text", TextDelIdx)
       TextIndex.deleteDocs(s, TextDelIdx,
         docs.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
-      TextIndex.probeBm25Live(s, TextDelIdx, Seq("hash", "join", "stream"), topK = 20)
+      TextIndex.probeBm25(s, TextDelIdx, Seq("hash", "join", "stream"), topK = 20)
     },
     Some(s"""WITH tomb AS (
               SELECT doc_id FROM read_parquet('$TextDelIdx/tombstones/*.parquet')),
@@ -458,7 +458,7 @@ object Serving {
               LEFT JOIN dfc ON dfc.tok = s.tok
               WHERE s.tok IN ('hash', 'join', 'stream')),
             d AS (SELECT doc_id, dl FROM read_parquet('$TextDelIdx/docs/*.parquet')),
-            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextDelIdx/live_corpus/*.parquet')),
+            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextDelIdx/corpus/*.parquet')),
             sq AS (
               SELECT p.doc_id,
                 CAST(floor(
@@ -543,19 +543,19 @@ object Serving {
   /** COMPACTION of a tombstoned text index ([[TextIndex.compact]]) — the
     * verb that closes the delete story: tombstoned postings/doc rows are
     * physically dropped under the rename-aside swap, df recomputed from the
-    * survivors, live totals promoted to the corpus table, delete state
-    * cleared — all inside the invalidate → rewrite → re-commit transaction,
-    * so a torn mid-compaction index is refused by probes rather than served.
+    * survivors, delete state cleared (the corpus row already holds the live
+    * totals) — all inside one [[graft.sources.Storage.commit]], so a torn
+    * mid-compaction index is refused by probes rather than served.
     * The probe after compaction is the PLAIN probe (no anti-join, no df
     * correction — the per-probe delete tax is gone), and the oracle replays
     * it over `read_parquet` of the COMPACTED artifacts: any posting that
-    * survived when it should not have, or a corpus total that failed to
-    * promote, breaks the hash. TextIndexSpec pins compact == rebuild-
+    * survived when it should not have, or a corpus total that drifted from
+    * the live docs, breaks the hash. TextIndexSpec pins compact == rebuild-
     * without-deleted bit-exact and compact == pre-compaction live probe.
     *
     * Scale: ONE partition-parallel anti-join pass over the postings
     * (broadcast tombstones) amortized across every subsequent probe — the
-    * Storage.merge economics applied to the serving layer.
+    * Storage.rewrite economics applied to the serving layer.
     */
   val searchIndexCompact = Q(
     "x_search_index_compact",
@@ -593,12 +593,13 @@ object Serving {
   /** COMPACTION of a tombstoned IVF-PQ index ([[AnnIndex.compactIvfPq]]):
     * deletion is pure candidate filtering, so compaction is ONE anti-join
     * rewrite of the codes table (model tables untouched) under the
-    * rename-aside swap + manifest transaction. The probe after compaction
-    * runs with NO tombstone state; the oracle replays cell ranking, codebook
-    * reconstruction and ADC top-k over the COMPACTED codes — a code row that
-    * outlived its tombstone resurfaces as a hash break. AnnIndexSpec pins
-    * compact == pre-compaction live probe score-for-score and that
-    * compaction re-opens append for previously deleted ids.
+    * rename-aside swap, in one [[graft.sources.Storage.commit]]. The probe
+    * after compaction runs with NO tombstone state; the oracle replays cell
+    * ranking, codebook reconstruction and ADC top-k over the COMPACTED
+    * codes — a code row that outlived its tombstone resurfaces as a hash
+    * break. AnnIndexSpec pins compact == pre-compaction live probe
+    * score-for-score and that compaction re-opens append for previously
+    * deleted ids.
     */
   val annIndexCompact = Q(
     "x_ann_index_compact",
@@ -832,7 +833,7 @@ object Serving {
     * sketches land without re-reading old ones (KMV merges by re-taking the
     * bottom-k of a union, so per-segment persistence composes); segments
     * are append-once (re-sketching a present segment refused — the index
-    * families' re-add discipline), manifest dropped first / rewritten last.
+    * families' re-add discipline), all in one [[graft.sources.Storage.commit]].
     * The full-range probe after the append spans old AND new segments from
     * the one segments table; SketchStoreSpec pins append == rebuild
     * bit-exact on the artifact rows.

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Layout.LineageOps
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -42,40 +43,24 @@ object Storage {
 
   def exists(path: String): Boolean = Files.exists(Paths.get(path))
 
-  /** Remove an artifact table (recursive). Build-transaction use: a
-    * multi-table index build DROPS its commit manifest before touching any
-    * table and re-writes it LAST ([[graft.functions.AnnIndex.buildIvfPq]],
-    * [[graft.functions.TextIndex.build]]) — so a probe that requires the
-    * manifest refuses a torn index (crash between table writes) instead of
-    * serving mixed state.
-    */
+  /** Remove an artifact table or file (recursive). */
   def drop(path: String): Unit = deleteRecursively(Paths.get(path))
 
   /** `merge hydfsf` — compact append chunks into few files
-    * (`mergeFile`, `core_process_utils.go:2040-2146`). Crash-safe swap: the
-    * old data is renamed aside (never deleted first), the merged dir moved
-    * in, then the sidecar dropped — a crash at any step leaves a complete
-    * copy of the data in either the target or the `.__merge_old` sidecar.
-    * The target path is absent only between the two renames (no
-    * delete-before-replace window). `numFiles` bounds output parallelism
-    * like the coordinator's single merged base file.
+    * (`mergeFile`, `core_process_utils.go:2040-2146`) through [[rewrite]]'s
+    * crash-safe swap. `numFiles` bounds output parallelism like the
+    * coordinator's single merged base file.
     */
-  def merge(spark: SparkSession, path: String, numFiles: Int = 1): Unit = {
-    val tmp = path.stripSuffix("/") + ".__merge_tmp"
-    spark.read.parquet(path).coalesce(numFiles).write.mode("overwrite").parquet(tmp)
-    val target = Paths.get(path)
-    val old    = Paths.get(path.stripSuffix("/") + ".__merge_old")
-    deleteRecursively(old)
-    Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), target, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
-  }
+  def merge(spark: SparkSession, path: String, numFiles: Int = 1): Unit =
+    rewrite(get(spark, path).coalesce(numFiles), path)
 
-  /** [[merge]]'s crash-safe swap for a TRANSFORMED table: write `df` (which
-    * may read from `path` itself — the write lands in a sidecar, so the read
-    * is never clobbered mid-scan) to `path.__merge_tmp`, then swap it in via
-    * the same rename-aside discipline. The compaction primitive of the
-    * index-serving layer: tombstone-filtered rewrites of postings/codes.
+  /** Crash-safe table swap: write `df` (which may read from `path` itself —
+    * the write lands in a sidecar, so the read is never clobbered mid-scan)
+    * to `path.__merge_tmp`, rename the old data aside (never deleted first),
+    * move the new dir in, then drop the sidecar — a crash at any step leaves
+    * a complete copy of the data in either the target or the `.__merge_old`
+    * sidecar. The compaction primitive of the index-serving layer:
+    * tombstone-filtered rewrites of postings/codes.
     */
   def rewrite(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Unit = {
     val tmp = path.stripSuffix("/") + ".__merge_tmp"
@@ -88,6 +73,99 @@ object Storage {
     Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(Paths.get(tmp), target, StandardCopyOption.ATOMIC_MOVE)
     deleteRecursively(old)
+  }
+
+  // ---- Commit core of the persisted serving stores ([[graft.functions
+  // .TextIndex]], [[graft.functions.AnnIndex]], [[graft.functions
+  // .SketchStore]]). A store is a directory of parquet tables plus
+  // `manifest`, a one-line file holding the store's committed physical row
+  // count. Every write verb runs inside [[commit]], which drops the manifest
+  // before the verb's first table write and moves the new one into place
+  // after its last: a crash mid-verb leaves a store that every verb refuses,
+  // never one that serves a mix of old and new tables. Deletes are
+  // tombstones (`tombstones`, one key column) that probes anti-join until a
+  // compaction rewrites them away.
+
+  private def manifest(store: String) = Paths.get(store, "manifest")
+  private def tombstonesPath(store: String) = s"$store/tombstones"
+
+  /** Refuse a store without a commit manifest: torn by a failed verb, or never built. */
+  def requireCommitted(store: String): Unit =
+    require(Files.isRegularFile(manifest(store)),
+      s"store at $store has no commit manifest — torn or missing build; rebuild it")
+
+  /** The physical row count the last commit recorded — a file read, no Spark job. */
+  def committedRows(store: String): Long = {
+    requireCommitted(store)
+    Files.readString(manifest(store)).trim.toLong
+  }
+
+  /** Run one write verb as a transaction: drop the manifest, run `body`, and
+    * commit the physical row count it returns — written to a temporary name
+    * and moved into place atomically, so a reader sees either no manifest or
+    * a whole one.
+    */
+  def commit(store: String)(body: => Long): Unit = {
+    deleteRecursively(manifest(store))
+    val rows = body
+    val tmp  = Paths.get(store, ".manifest.tmp")
+    Files.createDirectories(tmp.getParent)
+    Files.writeString(tmp, s"$rows\n")
+    Files.move(tmp, manifest(store), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** A write's row count, observed on the write itself instead of a re-count job. */
+  def observedCount(df: DataFrame): (DataFrame, () => Long) = {
+    val obs = new org.apache.spark.sql.Observation()
+    (df.observe(obs, count(lit(1)).as("n")), () => obs.get("n").asInstanceOf[Long])
+  }
+
+  def hasTombstones(store: String): Boolean = exists(tombstonesPath(store))
+
+  def tombstones(spark: SparkSession, store: String): Option[DataFrame] =
+    if (hasTombstones(store)) Some(get(spark, tombstonesPath(store))) else None
+
+  /** A rebuild or compaction resets delete state. */
+  def clearTombstones(store: String): Unit = drop(tombstonesPath(store))
+
+  /** Add the ids in the first column of `ids` to the tombstone table under
+    * `key`. Returns the ids that were not tombstoned before, pinned, so a
+    * store's corrections subtract each deleted row exactly once (O(delta)).
+    */
+  def tombstone(store: String, ids: DataFrame, key: String): DataFrame = {
+    val spark = ids.sparkSession
+    import spark.implicits._
+    val prior = tombstones(spark, store).getOrElse(Seq.empty[Long].toDF(key))
+    // `ids` is consumed once, by this anti-join — pinning it too would be
+    // one more materialization job per delete
+    val fresh = ids.select(col(ids.columns.head).cast("long").as(key)).distinct()
+      .join(prior, Seq(key), "left_anti").truncateLineage()
+    replace(prior.union(fresh).truncateLineage(), tombstonesPath(store))
+    fresh
+  }
+
+  /** Refuse an append that re-adds a tombstoned id: its old rows are still
+    * physically present, so it would be shadowed or duplicated — compact first.
+    */
+  def requireNotTombstoned(store: String, rows: DataFrame, idCol: String, key: String): Unit =
+    tombstones(rows.sparkSession, store).foreach { tomb =>
+      val clash = tomb.join(rows.select(col(idCol).cast("long").as(key)), Seq(key), "left_semi")
+        .count()
+      require(clash == 0L, s"$clash appended id(s) are tombstoned in $store — compact " +
+        "the store before re-adding a deleted id")
+    }
+
+  /** The compact gate: the pinned tombstone table when there is one and it
+    * holds at least `minFraction` of the committed rows, else None — the
+    * rewrite is a full pass, worth it only once enough deletes accumulate.
+    * The denominator is [[committedRows]], not a full-table count.
+    */
+  def compactable(spark: SparkSession, store: String, minFraction: Double): Option[DataFrame] = {
+    val rows = committedRows(store)
+    tombstones(spark, store).map(_.truncateLineage()).filter { tomb =>
+      val n = tomb.count()
+      n > 0L && (rows == 0L || n.toDouble / rows.toDouble >= minFraction)
+    }
   }
 
   /** Snapshot retention + crash-debris sweep — the VACUUM of the

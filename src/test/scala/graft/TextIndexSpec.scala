@@ -62,7 +62,7 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.build(docs, "doc_id", "text", delIdx)
     TextIndex.deleteDocs(spark, delIdx,
       docs.filter(col("doc_id") % 3 === 0).select(col("doc_id")))
-    val viaTomb = TextIndex.probeBm25Live(spark, delIdx, terms, topK = 20)
+    val viaTomb = TextIndex.probeBm25(spark, delIdx, terms, topK = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val rebuiltIdx = "/tmp/graft_index/text_spec_del_rb"
     TextIndex.build(docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", rebuiltIdx)
@@ -73,7 +73,7 @@ class TextIndexSpec extends AnyFunSuite {
     // a second, overlapping delete stays exact (delta-only subtraction path)
     TextIndex.deleteDocs(spark, delIdx,
       docs.filter(col("doc_id") % 3 === 0 || col("doc_id") % 7 === 0).select(col("doc_id")))
-    val viaTomb2 = TextIndex.probeBm25Live(spark, delIdx, terms, topK = 20)
+    val viaTomb2 = TextIndex.probeBm25(spark, delIdx, terms, topK = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val rebuilt2 = "/tmp/graft_index/text_spec_del_rb2"
     TextIndex.build(docs.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 7 =!= 0),
@@ -92,7 +92,7 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.deleteDocs(spark, daIdx,
       docs.filter(col("doc_id") % 6 === 0).select(col("doc_id")))
     TextIndex.append(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", daIdx)
-    val viaLive = TextIndex.probeBm25Live(spark, daIdx, terms, topK = 20)
+    val viaLive = TextIndex.probeBm25(spark, daIdx, terms, topK = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val rbIdx = "/tmp/graft_index/text_spec_del_app_rb"
     TextIndex.build(docs.filter(col("doc_id") % 6 =!= 0), "doc_id", "text", rbIdx)
@@ -101,11 +101,6 @@ class TextIndexSpec extends AnyFunSuite {
     assert(viaLive == viaRebuild,
       "append after delete must fold the delta into the LIVE corpus stats " +
         "(stale n_docs/avgdl breaks bit-equality with a rebuild)")
-    // plain probeBm25 on a tombstoned index dispatches to the live path
-    val viaDispatch = TextIndex.probeBm25(spark, daIdx, terms, topK = 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(viaDispatch == viaRebuild,
-      "probeBm25 on a tombstoned index must serve tombstone-corrected scores")
     // multi-query probe has no live path — it must refuse, not serve stale
     val eMany = intercept[IllegalArgumentException] {
       TextIndex.probeBm25Many(spark, daIdx,
@@ -118,7 +113,7 @@ class TextIndexSpec extends AnyFunSuite {
     }
     assert(eReadd.getMessage.contains("tombstoned"))
     // the refused append must not have torn the index
-    assert(TextIndex.probeBm25Live(spark, daIdx, terms, topK = 20).count() > 0)
+    assert(TextIndex.probeBm25(spark, daIdx, terms, topK = 20).count() > 0)
   }
 
   test("compaction drops tombstoned state physically and equals a rebuild") {
@@ -134,8 +129,11 @@ class TextIndexSpec extends AnyFunSuite {
     assert(!TextIndex.compact(spark, cIdx, minFraction = 0.9))
     assert(Storage.exists(s"$cIdx/tombstones"), "gated compact must not touch state")
     assert(TextIndex.compact(spark, cIdx))
-    assert(!Storage.exists(s"$cIdx/tombstones") && !Storage.exists(s"$cIdx/live_corpus"),
-      "compaction must clear all delete state")
+    assert(!Storage.exists(s"$cIdx/tombstones"), "compaction must clear all delete state")
+    val live = docs.filter(col("doc_id") % 4 =!= 0).count()
+    assert(Storage.committedRows(cIdx) == live &&
+      spark.read.parquet(s"$cIdx/corpus").head().getAs[Long]("n_docs") == live,
+      "after compaction the committed docs rows and the corpus row both count the live docs")
     val viaCompact = TextIndex.probeBm25(spark, cIdx, terms, topK = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val rbIdx = "/tmp/graft_index/text_spec_cmp_rb"
@@ -154,6 +152,30 @@ class TextIndexSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(viaReadd == viaFull,
       "delete -> compact -> re-append must equal the full corpus index")
+  }
+
+  test("delete-all then compact leaves a 0-doc corpus row, not NaN; re-append equals a rebuild") {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.Storage
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    val eIdx = "/tmp/graft_index/text_spec_empty"
+    TextIndex.build(docs, "doc_id", "text", eIdx)
+    TextIndex.deleteDocs(spark, eIdx, docs.select(col("doc_id")))
+    assert(TextIndex.compact(spark, eIdx))
+    val corpus = spark.read.parquet(s"$eIdx/corpus").head()
+    assert(corpus.getAs[Long]("n_docs") == 0L && corpus.getAs[Long]("total_dl") == 0L &&
+      corpus.getAs[Double]("avgdl") == 0.0,
+      s"an emptied index must write avgdl 0.0, not 0/0: $corpus")
+    assert(Storage.committedRows(eIdx) == 0L)
+    TextIndex.append(docs, "doc_id", "text", eIdx)
+    val viaReadd = TextIndex.probeBm25(spark, eIdx, terms, topK = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val rbIdx = "/tmp/graft_index/text_spec_empty_rb"
+    TextIndex.build(docs, "doc_id", "text", rbIdx)
+    val viaRebuild = TextIndex.probeBm25(spark, rbIdx, terms, topK = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(viaReadd.nonEmpty && viaReadd == viaRebuild,
+      "re-appending every doc into an emptied index must equal a rebuild")
   }
 
   test("a torn index (missing commit manifest) is refused, not served") {

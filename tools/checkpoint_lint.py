@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Funnel lint: lineage truncation and session construction.
+"""Funnel lint: lineage truncation, session construction and store commits.
 
 Rule 1 — lineage truncation (round-16 verdict watch item #3).
 
@@ -26,9 +26,17 @@ silently drops GraftExtensions and the planner thresholds), and no file may
 assign `experimental.extraStrategies` (the per-call patch that only such a
 session needs).
 
+Rule 3 — one commit core. The persisted serving stores (TextIndex,
+AnnIndex, SketchStore) commit through `Storage.commit`, which alone knows
+where a store's manifest lives and what it holds. No main-source file other
+than sources/Storage.scala may build a `.../manifest` path; a store that
+wrote its own would be back to a private manifest schema. Exempt by name:
+queries/Governance.scala, whose write-audit-publish and vacuum stores keep a
+separate `snap=N` parquet manifest that their oracles read.
+
 Usage: python3 tools/checkpoint_lint.py [src_root]
        python3 tools/checkpoint_lint.py --selftest
-Exit 1 on any violation of either rule.
+Exit 1 on any violation of any rule.
 """
 import os
 import re
@@ -49,6 +57,13 @@ SESSION_BUILDER = re.compile(r"\bSparkSession\s*\.\s*builder\b")
 STRATEGY_ASSIGN = re.compile(r"\bextraStrategies\s*(?:\+\+|:\+|\+)?=(?!=)")
 
 
+MANIFEST_OWNERS = ("graft/sources/Storage.scala", "graft/queries/Governance.scala")
+# A manifest path in code: `s"$p/manifest"`, `".../manifest/..."` or a
+# `"manifest"` path segment. Comment lines are skipped, so prose may name it.
+MANIFEST_PATH = re.compile(r"""/manifest\b|["']manifest["']""")
+COMMENT_LINE = re.compile(r"^\s*(//|/\*|\*)")
+
+
 def scala_files(root: str):
     for dirpath, _, files in os.walk(root):
         for f in sorted(files):
@@ -66,6 +81,17 @@ def scan_sessions(root: str = "src/main/scala"):
         for m in sorted(hits, key=lambda m: m.start()):
             i = text.count("\n", 0, m.start()) + 1
             bad.append(f"{p}:{i}: {m.group(0).split()[0]}")
+    return bad
+
+
+def scan_manifests(root: str = "src/main/scala"):
+    bad = []
+    for p in scala_files(root):
+        if p.replace(os.sep, "/").endswith(MANIFEST_OWNERS):
+            continue
+        for i, line in enumerate(open(p, encoding="utf-8"), 1):
+            if not COMMENT_LINE.match(line) and MANIFEST_PATH.search(line):
+                bad.append(f"{p}:{i}: {line.strip()}")
     return bad
 
 
@@ -126,6 +152,25 @@ def selftest():
         bad = scan_sessions(td)
         assert len(bad) == 2 and any("Patch.scala:2" in b for b in bad), \
             f"selftest: planted extraStrategies assignment not caught: {bad}"
+        # rule 3: only Storage (and the exempt Governance) build manifest paths
+        src = os.path.join(g, "sources")
+        os.makedirs(src)
+        with open(os.path.join(src, "Storage.scala"), "w") as f:
+            f.write("object Storage { def m(s: String) = Paths.get(s, \"manifest\") }\n")
+        with open(os.path.join(d, "Governance.scala"), "w") as f:
+            f.write("object Governance { val m = s\"$base/manifest\" }\n")
+        with open(os.path.join(d, "LegalStore.scala"), "w") as f:
+            f.write("/** Commits through Storage.commit; its `manifest` is\n"
+                    "  * Storage's `path/manifest` file. */\n"
+                    "object LegalStore { def b(p: String) = Storage.commit(p)(0L) }\n")
+        assert scan_manifests(td) == [], \
+            f"selftest: legal manifest mentions flagged: {scan_manifests(td)}"
+        with open(os.path.join(d, "OwnManifest.scala"), "w") as f:
+            f.write("object OwnManifest {\n"
+                    "  private def manifest(p: String) = s\"$p/manifest\" }\n")
+        bad = scan_manifests(td)
+        assert len(bad) == 1 and "OwnManifest.scala:2" in bad[0], \
+            f"selftest: planted store-local manifest path not caught: {bad}"
     print("checkpoint_lint selftest: OK (planted sites caught)")
     return 0
 
@@ -150,10 +195,19 @@ def main():
             print("  " + b)
         print("Build from GraftSession.builder and chain the overrides the "
               "main needs.")
-    if bad or sessions:
+    manifests = scan_manifests(root)
+    if manifests:
+        print(f"checkpoint_lint: {len(manifests)} manifest path(s) built "
+              f"outside Storage:")
+        for b in manifests:
+            print("  " + b)
+        print("Commit through Storage.commit/requireCommitted/committedRows "
+              "instead of a store-local manifest.")
+    if bad or sessions or manifests:
         return 1
     print("checkpoint_lint: clean (all truncation goes through "
-          "Layout.truncateLineage; all sessions through GraftSession)")
+          "Layout.truncateLineage; all sessions through GraftSession; all "
+          "manifests through Storage)")
     return 0
 
 
