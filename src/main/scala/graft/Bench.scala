@@ -76,16 +76,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.builder("graft-bench")
-      // The one override on the GraftSession defaults. The registry is ~125
-      // queries x ~3 generated classes per plan; the default 100-entry
-      // codegen class cache evicts between the two bench passes, so every
-      // pass re-pays janino compile (the slowest single class costs ~1.4 s —
-      // observed as a phantom x_gopher_quality "regression" once the registry
-      // outgrew the cache). A long-lived session serving a fixed workload
-      // should size the cache to hold it.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.quietWindowWarnings()
 

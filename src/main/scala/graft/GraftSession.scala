@@ -16,6 +16,15 @@ import org.apache.spark.sql.SparkSession
   * partition coalescing) is what keeps the same code viable from 60k rows to
   * 100 TB; shuffle partitions default to the core count locally and would be
   * raised (or left to AQE) on a cluster.
+  *
+  * The codegen class cache holds 2000 entries, not Spark's 100: a warm
+  * session serving a fixed query mix should re-pay no Janino compile for a
+  * plan it has already run, and one rotation of the benchmark's twelve ops
+  * alone makes more than 100 distinct classes, so at 100 entries each op
+  * evicts the next one's classes (~16 compiles an op). Spark keys that
+  * cache by the session's classloader as well as the code, so a session
+  * made with `newSession()` misses every entry its parent compiled; a query
+  * that needs its own confs takes a memoized child from [[child]] instead.
   */
 object GraftSession {
 
@@ -38,6 +47,27 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+
+  private val children =
+    new java.util.WeakHashMap[SparkSession, Map[Map[String, String], SparkSession]]()
+
+  /** The child session of `parent` with `confs` set: shared context, its
+    * own conf, so no other query's plan changes. Made once per parent and
+    * conf set and reused after that, so its generated classes stay cached
+    * across calls (a fresh child per call would recompile all of them).
+    * The memo holds the parent weakly, so it does not outlive its session.
+    */
+  def child(parent: SparkSession, confs: Map[String, String]): SparkSession =
+    children.synchronized {
+      val known = Option(children.get(parent)).getOrElse(Map.empty)
+      known.getOrElse(confs, {
+        val s = parent.newSession()
+        confs.foreach { case (k, v) => s.conf.set(k, v) }
+        children.put(parent, known + (confs -> s))
+        s
+      })
+    }
 
   /** Get-or-create a session with graft defaults. */
   def get(appName: String = "graft"): SparkSession = {

@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import graft.functions.Layout.LineageOps
 
 /** Persisted inverted-index serving — the text-side build-once/probe-many
@@ -58,8 +59,26 @@ object TextIndex {
   private def bucketPred(terms: Seq[String]) =
     col("bucket").isin(terms.map(t => bucketExpr(lit(t))): _*)
 
+  /** The postings table. A zero-row partitioned write (a build over no
+    * documents, a compact of an index whose documents were all deleted)
+    * leaves no file to infer a schema from, so an empty `postings/` reads as
+    * zero rows of the schema inference gives a non-empty one: `tok`,
+    * `doc_id` (typed as `docId`), `tf` and the int partition column
+    * `bucket`. A non-empty directory is read by inference, as before.
+    */
+  private def readPostings(spark: SparkSession, indexPath: String, docId: => DataType): DataFrame =
+    try spark.read.parquet(s"$indexPath/postings")
+    catch {
+      case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+        spark.read.schema(new StructType().add("tok", StringType).add("doc_id", docId)
+          .add("tf", LongType).add("bucket", IntegerType)).parquet(s"$indexPath/postings")
+    }
+
+  /** [[readPostings]] of a committed index, whose `docs` table always holds
+    * a file, so an empty index takes its `doc_id` type from there.
+    */
   private def readPostings(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(s"$indexPath/postings")
+    readPostings(spark, indexPath, spark.read.parquet(s"$indexPath/docs").schema("doc_id").dataType)
 
   /** Quantized per-(doc, term) BM25 contribution over the `df`, `tf` and `dl`
     * columns and the corpus scalars (`nDocs` as a double).
@@ -123,7 +142,7 @@ object TextIndex {
     postings.withColumn("bucket", bucketExpr(col("tok")))
       .repartition(PostingBuckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexPath/postings")
-    val post = readPostings(spark, indexPath)
+    val post = readPostings(spark, indexPath, tok.schema("doc_id").dataType)
     // corpus totals ride the docs write as an Observation (exact integer
     // count/sum merged from the write's own tasks) — the corpus row and the
     // committed row count then come from these totals with zero extra scans,

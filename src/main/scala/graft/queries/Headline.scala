@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.{AsOfJoin, Funnel}
 
 /** Headline analytical queries — the extension surface SURVEY §2.5 marks as
@@ -1136,8 +1136,11 @@ object Headline {
     * too-big-to-broadcast dim (with broadcast available the filter is moot —
     * same scenario doctrine as [[h32]]); the application-side size threshold
     * (default 10 GB — cluster-sized) is lowered in a CHILD session
-    * (`newSession`: shared context, isolated conf, so no other registry
-    * query's plan changes), and planning is forced while those confs hold.
+    * ([[graft.GraftSession.child]]: shared context, isolated conf, so no
+    * other registry query's plan changes), and planning is forced while
+    * those confs hold. The child is memoized per parent session: Spark keys
+    * its codegen cache by session classloader, so a fresh child per run
+    * would recompile every generated class of this plan (~20) each time.
     * The Bloom filter is a may-contain superset, semantically invisible —
     * the oracle is the PLAIN join + aggregate, exactly what the hash checks.
     * PlanSpec pins `bloom_filter_might_contain` on the fact side.
@@ -1145,15 +1148,15 @@ object Headline {
   val h34 = Q(
     "h34_runtime_bloom_join",
     (s, d) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
       // Stats-less parquet relations estimate large: raise the creation-side
       // cap so the FILTERED dim qualifies at test scale (at real scale CBO
       // stats make the default 10 MB gate meaningful), and take broadcast off
       // the table the way the modeled scenario (dim >> driver memory) would.
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "1GB")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val s2 = GraftSession.child(s, Map(
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "1GB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
       val fact = Tables.lineitem(s2, d)
         .select(col("l_orderkey"), col("l_returnflag"),
           (dec(col("l_extendedprice")) * dec(lit(1) - col("l_discount"))).as("rev"))

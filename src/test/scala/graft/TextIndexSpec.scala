@@ -178,6 +178,36 @@ class TextIndexSpec extends AnyFunSuite {
       "re-appending every doc into an emptied index must equal a rebuild")
   }
 
+  test("a build over an empty frame commits an empty index; its probe returns 0 rows") {
+    import org.apache.spark.sql.functions.lit
+    import graft.sources.Storage
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    val eIdx = "/tmp/graft_index/text_spec_empty_build"
+    TextIndex.build(docs.filter(lit(false)), "doc_id", "text", eIdx)
+    assert(Storage.committedRows(eIdx) == 0L)
+    assert(TextIndex.probeBm25(spark, eIdx, terms, topK = 20).count() == 0L)
+    // the empty postings read keeps the docs' id type: appending into the
+    // empty index serves what a build over the same docs serves
+    TextIndex.append(docs, "doc_id", "text", eIdx)
+    val viaAppend = TextIndex.probeBm25(spark, eIdx, terms, topK = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val rbIdx = "/tmp/graft_index/text_spec_empty_build_rb"
+    TextIndex.build(docs, "doc_id", "text", rbIdx)
+    val viaRebuild = TextIndex.probeBm25(spark, rbIdx, terms, topK = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(viaAppend.nonEmpty && viaAppend == viaRebuild)
+  }
+
+  test("a probe of an index compacted after deleting every doc returns 0 rows") {
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    val eIdx = "/tmp/graft_index/text_spec_empty_probe"
+    TextIndex.build(docs, "doc_id", "text", eIdx)
+    TextIndex.deleteDocs(spark, eIdx, docs.select(col("doc_id")))
+    assert(TextIndex.compact(spark, eIdx))
+    assert(TextIndex.probeBm25(spark, eIdx, terms, topK = 20).count() == 0L)
+  }
+
   test("a torn index (missing commit manifest) is refused, not served") {
     graft.sources.Storage.drop(s"$idx/manifest")
     val e = intercept[IllegalArgumentException] {

@@ -22,8 +22,11 @@ Rule 2 — one session factory. `GraftSession.builder` is the only place
 that builds a session, so the tests, the benchmark and every main run the
 same extensions and config. No main-source file other than
 GraftSession.scala may call `SparkSession.builder` (a hand-rolled session
-silently drops GraftExtensions and the planner thresholds), and no file may
-assign `experimental.extraStrategies` (the per-call patch that only such a
+silently drops GraftExtensions and the planner thresholds) or
+`.newSession(` (Spark keys its codegen cache by session classloader, so a
+child session made per call recompiles every class its plan generates;
+`GraftSession.child` memoizes one per parent), and no file may assign
+`experimental.extraStrategies` (the per-call patch that only such a
 session needs).
 
 Rule 3 — one commit core. The persisted serving stores (TextIndex,
@@ -54,6 +57,7 @@ EXCLUDE_LINE = re.compile(r"checkpointLocation|setCheckpointDir")
 FACTORY = "graft/GraftSession.scala"
 # Whole-file patterns: `SparkSession\n  .builder()` splits across lines.
 SESSION_BUILDER = re.compile(r"\bSparkSession\s*\.\s*builder\b")
+CHILD_SESSION = re.compile(r"\.\s*newSession\s*\(")
 STRATEGY_ASSIGN = re.compile(r"\bextraStrategies\s*(?:\+\+|:\+|\+)?=(?!=)")
 
 
@@ -78,9 +82,10 @@ def scan_sessions(root: str = "src/main/scala"):
         hits = list(STRATEGY_ASSIGN.finditer(text))
         if not p.replace(os.sep, "/").endswith(FACTORY):
             hits += SESSION_BUILDER.finditer(text)
+            hits += CHILD_SESSION.finditer(text)
         for m in sorted(hits, key=lambda m: m.start()):
             i = text.count("\n", 0, m.start()) + 1
-            bad.append(f"{p}:{i}: {m.group(0).split()[0]}")
+            bad.append(f"{p}:{i}: {m.group(0).split()[0].strip('.(')}")
     return bad
 
 
@@ -135,7 +140,8 @@ def selftest():
         g = os.path.join(td, "graft")
         with open(os.path.join(g, "GraftSession.scala"), "w") as f:
             f.write("object GraftSession { def builder() = SparkSession\n"
-                    "  .builder()\n  .withExtensions(new GraftExtensions) }\n")
+                    "  .builder()\n  .withExtensions(new GraftExtensions)\n"
+                    "  def child(p: SparkSession) = p.newSession() }\n")
         assert scan_sessions(td) == [], \
             f"selftest: the factory's own builder flagged: {scan_sessions(td)}"
         with open(os.path.join(g, "Main.scala"), "w") as f:
@@ -152,6 +158,13 @@ def selftest():
         bad = scan_sessions(td)
         assert len(bad) == 2 and any("Patch.scala:2" in b for b in bad), \
             f"selftest: planted extraStrategies assignment not caught: {bad}"
+        with open(os.path.join(d, "Child.scala"), "w") as f:
+            f.write("/** prose naming newSession() is fine */\n"
+                    "object Child { def q(s: SparkSession) = {\n"
+                    "  val s2 = s\n    .newSession()\n  s2 } }\n")
+        bad = scan_sessions(td)
+        assert len(bad) == 3 and any("Child.scala:4" in b for b in bad), \
+            f"selftest: planted per-call newSession not caught: {bad}"
         # rule 3: only Storage (and the exempt Governance) build manifest paths
         src = os.path.join(g, "sources")
         os.makedirs(src)
@@ -194,7 +207,7 @@ def main():
         for b in sessions:
             print("  " + b)
         print("Build from GraftSession.builder and chain the overrides the "
-              "main needs.")
+              "main needs; take a child session from GraftSession.child.")
     manifests = scan_manifests(root)
     if manifests:
         print(f"checkpoint_lint: {len(manifests)} manifest path(s) built "

@@ -98,9 +98,10 @@ fi
 # checkpointing must go through Layout.truncateLineage (config-switchable to
 # reliable checkpoint()); direct localCheckpoint/checkpoint calls dodge the
 # SCALE.md site audit and the cluster-mode switch. (2) One session factory:
-# only GraftSession may call SparkSession.builder, and nothing may patch
-# experimental.extraStrategies. (3) One commit core: only Storage (and the
-# exempt Governance snapshot stores) may build a store's manifest path.
+# only GraftSession may call SparkSession.builder or .newSession(, and
+# nothing may patch experimental.extraStrategies. (3) One commit core: only
+# Storage (and the exempt Governance snapshot stores) may build a store's
+# manifest path.
 python3 tools/checkpoint_lint.py --selftest >/dev/null || {
   echo "pre-commit: checkpoint_lint SELFTEST failed — a planted violation"
   echo "no longer fails; fix tools/checkpoint_lint.py."
@@ -109,8 +110,10 @@ python3 tools/checkpoint_lint.py --selftest >/dev/null || {
 python3 tools/checkpoint_lint.py || {
   echo "pre-commit: checkpoint lint FAILED — see the sites listed above:"
   echo "route checkpointing through Layout.truncateLineage (and SCALE.md's"
-  echo "audit), sessions through GraftSession.builder, and store commits"
-  echo "through Storage.commit (rule 3: no manifest path outside Storage)."
+  echo "audit), sessions through GraftSession.builder, child sessions"
+  echo "through GraftSession.child (rule 2: no .newSession( outside"
+  echo "GraftSession), and store commits through Storage.commit (rule 3: no"
+  echo "manifest path outside Storage)."
   exit 1
 }
 exit 0
