@@ -7,13 +7,16 @@ import org.apache.spark.sql.expressions.Window
 import graft.sources.Storage
 import graft.functions.Layout.LineageOps
 
-/** Persisted IVF-PQ index — the build-once / probe-many serving shape that
-  * [[AnnSearch.ivfPqTopK]]'s train-in-query form cannot be at corpus scale:
-  * against 100 TB of embeddings the coarse k-means + m sub-codebook
-  * trainings run ONCE in an index-build job, the encoded corpus (m bytes of
-  * codes per vector instead of dim floats) persists as parquet, and every
-  * query-time probe reads only the model tables (k·dim longs — broadcast
-  * scale) plus the probed cells' code rows.
+/** Persisted IVF-PQ index — the build-once / probe-many serving shape, and
+  * the ONE IVF-PQ pipeline of graft: train, encode, reconstruct, cell
+  * ranking and ADC scoring live here, and the in-query searches
+  * ([[AnnSearch.ivfPqTopK]], and [[AnnSearch.pqTopK]] as its one-zero-cell
+  * case) call the same code without persisting. Against 100 TB of
+  * embeddings the coarse k-means + sub-codebook training run ONCE in an
+  * index-build job, the encoded corpus (m codes per vector instead of dim
+  * floats) persists as parquet, and every query-time probe reads only the
+  * model tables (k·dim longs — broadcast scale) plus the probed cells'
+  * code rows.
   *
   * Artifact layout under `indexPath` (all via the [[Storage]] facade):
   *   - `meta`      — one row: (dim, n_cells, m, ksub, iters)
@@ -34,91 +37,163 @@ import graft.functions.Layout.LineageOps
   */
 object AnnIndex {
 
-  final case class IvfPqMeta(dim: Int, nCells: Int, m: Int, ksub: Int, iters: Int)
+  final case class IvfPqMeta(dim: Int, nCells: Int, m: Int, ksub: Int, iters: Int) {
+    require(m > 0 && dim % m == 0, s"m must divide dim, got dim=$dim m=$m")
+  }
+
+  /** A trained model: coarse cells, and per subvector a codebook over the
+    * `dsub`-wide slice of the cell residuals; both cid-ascending.
+    */
+  private[functions] final case class IvfPqModel(
+      dsub: Int, coarse: Array[(Long, Array[Long])], subs: Seq[Array[(Long, Array[Long])]])
 
   private def metaPath(p: String)      = s"$p/meta"
   private def centroidsPath(p: String) = s"$p/centroids"
   private def codebooksPath(p: String) = s"$p/codebooks"
   private def codesPath(p: String)     = s"$p/codes"
-  private def qv(c: Column): Column = transform(c, x => floor(x.cast("double") * lit(1e6)))
+  private def asMap(model: Array[(Long, Array[Long])]): Column =
+    typedlit(model.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
 
-  /** Encode vectors against a FROZEN model: coarse cell by integer argmin-L2²,
-    * then each residual slice's nearest sub-codebook entry. One map-side
-    * projection — the shared kernel of [[buildIvfPq]] (over the training
-    * corpus) and [[appendIvfPq]] (over new rows, no retrain).
+  /** (id, cell, __rv): each vector's nearest coarse cell by integer
+    * argmin-L2² and its residual from that cell's centroid (long
+    * subtraction, so the model stays in exact arithmetic). One map-side
+    * projection; the `zip_with` runs once per vector, never inside the
+    * |queries|×|candidates| loop.
     */
-  private def encode(
-      vecs: DataFrame, idCol: String, vecCol: String,
-      meta: IvfPqMeta,
-      coarse: Array[(Long, Array[Long])],
-      subModels: Seq[Array[(Long, Array[Long])]]
-  ): DataFrame = {
-    val dsub      = meta.dim / meta.m
-    val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
-    val withRes = vecs
-      .select(col(idCol).cast("long").as("id"), qv(col(vecCol)).as("__qv"))
+  private def residuals(
+      vecs: DataFrame, idCol: String, vecCol: String, coarse: Array[(Long, Array[Long])]
+  ): DataFrame =
+    vecs
+      .select(col(idCol).cast("long").as("id"), ClusterOps.quantize(col(vecCol)).as("__qv"))
       .withColumn("cell",
         NativeFns.nearest_centroid_l2(col("__qv"), coarse.map(_._1), coarse.map(_._2))
           .getField("cluster"))
-      .withColumn("__rv", zip_with(col("__qv"), element_at(coarseMap, col("cell")),
-        (a, b) => a - b))
-    val codeCols = subModels.zipWithIndex.map { case (mod, s) =>
+      .select(col("id"), col("cell"),
+        zip_with(col("__qv"), element_at(asMap(coarse), col("cell")), (a, b) => a - b).as("__rv"))
+
+  /** Encode residual rows against a FROZEN model: each residual slice's
+    * nearest sub-codebook entry → (id, cell, codes). One map-side
+    * projection — the shared kernel of [[train]] (over the training corpus)
+    * and [[appendIvfPq]] (over new rows, no retrain).
+    */
+  private def encode(res: DataFrame, model: IvfPqModel): DataFrame = {
+    val codeCols = model.subs.zipWithIndex.map { case (mod, s) =>
       NativeFns.nearest_centroid_l2(
-        slice(col("__rv"), s * dsub + 1, dsub), mod.map(_._1), mod.map(_._2))
+        slice(col("__rv"), s * model.dsub + 1, model.dsub), mod.map(_._1), mod.map(_._2))
         .getField("cluster")
     }
-    withRes.select(col("id"), col("cell"), array(codeCols: _*).as("codes"))
+    res.select(col("id"), col("cell"), array(codeCols: _*).as("codes"))
+  }
+
+  /** Train the residual sub-codebooks of `corpus` under a given coarse
+    * model — all m in one job per iteration
+    * ([[ClusterOps.kMeansSubModelsQuantized]]) — and encode the corpus with
+    * them. Returns the model and the (id, cell, codes) frame.
+    */
+  private def train(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      meta: IvfPqMeta, coarse: Array[(Long, Array[Long])]
+  ): (IvfPqModel, DataFrame) = {
+    val dsub = meta.dim / meta.m
+    // localCheckpoint: the fused sub-model training rescans this frame
+    // (iters+1 actions) and the encode reads it once more — without
+    // truncation the coarse assignment and residual pass would re-run each
+    // time (the lineage discipline GraphOps applies per round).
+    val res = residuals(corpus, idCol, vecCol, coarse).truncateLineage()
+    val subs = ClusterOps.kMeansSubModelsQuantized(
+      res.select(col("id").as("__id"), col("__rv")), meta.m, dsub, meta.ksub, meta.iters)
+    val model = IvfPqModel(dsub, coarse, subs)
+    (model, encode(res, model))
+  }
+
+  /** (neighbor_id, cell, __recon): each code row reconstructed as its cell
+    * centroid plus its sub-codewords (literal map lookups from the model).
+    */
+  private def reconstruct(codes: DataFrame, model: IvfPqModel): DataFrame = {
+    val words = concat(model.subs.zipWithIndex.map { case (mod, s) =>
+      element_at(asMap(mod), element_at(col("codes"), s + 1))
+    }: _*)
+    codes.select(col("id").as("neighbor_id"), col("cell"),
+      zip_with(element_at(asMap(model.coarse), col("cell")), words, (a, b) => a + b).as("__recon"))
+  }
+
+  /** Each row of `q` (keyed by `query_id`) once per its `nProbe` nearest
+    * cells of `coarse`, with a `cell` column: integer L2² of the
+    * micro-quantized `qvCol` in the `l2_dist2` kernel, ties by
+    * (dist, cell). The query side is broadcast-small, so this is a cross
+    * join against the k-row model frame plus a per-query rank.
+    */
+  private[functions] def nearestCells(
+      q: DataFrame, qvCol: String, coarse: Array[(Long, Array[Long])], nProbe: Int
+  ): DataFrame = {
+    val cells = q.sparkSession
+      .createDataFrame(coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) })
+      .toDF("cell", "__cv")
+    val w = Window.partitionBy(col("query_id")).orderBy(col("__cd"), col("cell"))
+    q.crossJoin(broadcast(cells))
+      .withColumn("__cd", NativeFns.l2_dist2(col(qvCol), col("__cv")))
+      .withColumn("__pr", row_number().over(w))
+      .filter(col("__pr") <= nProbe)
+      .drop("__cv", "__cd", "__pr")
+  }
+
+  /** ADC top-k: rank each query's nearest `nProbe` cells, reconstruct only
+    * those cells' code rows, score squared-L2 against the query in the
+    * `l2_dist2` kernel, keep rank ≤ k on (adc_dist2, neighbor_id).
+    * Self-matches excluded.
+    */
+  private def score(
+      codes: DataFrame, model: IvfPqModel, queries: DataFrame,
+      idCol: String, vecCol: String, nProbe: Int, k: Int
+  ): DataFrame = {
+    val q = queries.select(col(idCol).cast("long").as("query_id"),
+      ClusterOps.quantize(col(vecCol)).as("__qqv"))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("adc_dist2"), col("neighbor_id"))
+    reconstruct(codes, model)
+      .join(broadcast(nearestCells(q, "__qqv", model.coarse, nProbe)), Seq("cell"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        NativeFns.l2_dist2(col("__recon"), col("__qqv")).as("adc_dist2"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+  }
+
+  /** The in-query form: train on `corpus` under `coarse`, encode it and
+    * score `queries` without persisting — the steps of [[buildIvfPq]] then
+    * [[probeIvfPq]], so a probe of a persisted index equals it row for row.
+    */
+  private[functions] def topK(
+      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      meta: IvfPqMeta, coarse: Array[(Long, Array[Long])], nProbe: Int, k: Int
+  ): DataFrame = {
+    val (model, codes) = train(corpus, idCol, vecCol, meta, coarse)
+    score(codes, model, queries, idCol, vecCol, nProbe, k)
   }
 
   /** Train coarse centroids + residual sub-codebooks on `corpus`, encode it,
     * and persist the four artifact tables under `indexPath` (replacing any
-    * prior index there). Exactly [[AnnSearch.ivfPqTopK]]'s training — same
-    * integer k-means, same residual slicing — so a probe of the persisted
-    * index reproduces the in-query form bit-for-bit.
+    * prior index there).
     */
   def buildIvfPq(
       corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, nCells: Int, m: Int, ksub: Int, iters: Int,
       indexPath: String
   ): Unit = {
-    require(m > 0 && dim % m == 0, s"m must divide dim, got dim=$dim m=$m")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val dsub = dim / m
+    val meta = IvfPqMeta(dim, nCells, m, ksub, iters)
     Storage.commit(indexPath) {
       Storage.clearTombstones(indexPath) // rebuild resets delete state
-      val coarse    = ClusterOps.kMeansModel(corpus, idCol, vecCol, nCells, iters)
-      val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
-      // localCheckpoint: the fused sub-model training rescans this frame
-      // (iters+1 actions) — the ivfPqTopK lineage discipline.
-      val withRes = corpus
-        .select(col(idCol).cast("long").as("__id"), qv(col(vecCol)).as("__qv"))
-        .withColumn("cell",
-          NativeFns.nearest_centroid_l2(col("__qv"), coarse.map(_._1), coarse.map(_._2))
-            .getField("cluster"))
-        .withColumn("__rv", zip_with(col("__qv"), element_at(coarseMap, col("cell")),
-          (a, b) => a - b))
-        .truncateLineage()
-      // All m sub-codebooks in one job per iteration (bit-identical per sub to
-      // the old per-sub kMeansModelQuantized calls — see its doc) instead of
-      // m·(iters+1) separate actions over the same frame.
-      val subModels = ClusterOps.kMeansSubModelsQuantized(
-        withRes.select(col("__id"), col("__rv")), m, dsub, ksub, iters)
-      val codeCols = subModels.zipWithIndex.map { case (mod, s) =>
-        NativeFns.nearest_centroid_l2(
-          slice(col("__rv"), s * dsub + 1, dsub), mod.map(_._1), mod.map(_._2))
-          .getField("cluster")
-      }
-      val codes = withRes.select(col("__id").as("id"), col("cell"), array(codeCols: _*).as("codes"))
-
+      val (model, codes) = train(corpus, idCol, vecCol, meta,
+        ClusterOps.kMeansModel(corpus, idCol, vecCol, nCells, iters))
       Storage.replace(
         Seq((dim, nCells, m, ksub, iters)).toDF("dim", "n_cells", "m", "ksub", "iters"),
         metaPath(indexPath))
       Storage.replace(
-        coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cell", "cv"),
+        model.coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cell", "cv"),
         centroidsPath(indexPath))
       Storage.replace(
-        subModels.zipWithIndex.flatMap { case (mod, s) =>
+        model.subs.zipWithIndex.flatMap { case (mod, s) =>
           mod.map { case (code, cv) => (s, code, cv.toSeq) }
         }.toDF("sub", "code", "cv"),
         codebooksPath(indexPath))
@@ -128,15 +203,10 @@ object AnnIndex {
     }
   }
 
-  private def readMeta(spark: SparkSession, indexPath: String): IvfPqMeta = {
+  private def readModel(spark: SparkSession, indexPath: String): IvfPqModel = {
     val r = Storage.get(spark, metaPath(indexPath)).head()
-    IvfPqMeta(r.getAs[Int]("dim"), r.getAs[Int]("n_cells"), r.getAs[Int]("m"),
+    val meta = IvfPqMeta(r.getAs[Int]("dim"), r.getAs[Int]("n_cells"), r.getAs[Int]("m"),
       r.getAs[Int]("ksub"), r.getAs[Int]("iters"))
-  }
-
-  private def readModels(
-      spark: SparkSession, indexPath: String, meta: IvfPqMeta
-  ): (Array[(Long, Array[Long])], Seq[Array[(Long, Array[Long])]]) = {
     val coarse = Storage.get(spark, centroidsPath(indexPath))
       .collect()
       .map(r => (r.getAs[Long]("cell"), r.getAs[Seq[Long]]("cv").toArray))
@@ -144,10 +214,10 @@ object AnnIndex {
     val cbRows = Storage.get(spark, codebooksPath(indexPath))
       .collect()
       .map(r => (r.getAs[Int]("sub"), r.getAs[Long]("code"), r.getAs[Seq[Long]]("cv").toArray))
-    val subModels = (0 until meta.m).map { s =>
+    val subs = (0 until meta.m).map { s =>
       cbRows.filter(_._1 == s).map(t => (t._2, t._3)).sortBy(_._1)
     }
-    (coarse, subModels)
+    IvfPqModel(meta.dim / meta.m, coarse, subs)
   }
 
   /** Tombstone-delete vectors from a persisted index: ADC scores carry no
@@ -181,39 +251,9 @@ object AnnIndex {
       spark: SparkSession, indexPath: String, queries: DataFrame,
       idCol: String, vecCol: String, nProbe: Int, k: Int
   ): DataFrame = {
-    import spark.implicits._
     Storage.requireCommitted(indexPath)
-    val meta                = readMeta(spark, indexPath)
-    val (coarse, subModels) = readModels(spark, indexPath, meta)
-    val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
-
-    val reconRes = concat(subModels.zipWithIndex.map { case (mod, s) =>
-      element_at(
-        typedlit(mod.map { case (code, cv) => code -> cv.toSeq }.toMap),
-        element_at(col("codes"), s + 1))
-    }: _*)
-    val index = liveCodes(spark, indexPath)
-      .select(col("id").as("neighbor_id"), col("cell"),
-        zip_with(element_at(coarseMap, col("cell")), reconRes, (a, b) => a + b).as("__recon"))
-
-    val q = queries.select(col(idCol).cast("long").as("query_id"), qv(col(vecCol)).as("__qqv"))
-    val cellsDf = coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cell", "__cv")
-    val pw = Window.partitionBy(col("query_id")).orderBy(col("__cd"), col("cell"))
-    val probes = q.crossJoin(broadcast(cellsDf))
-      .select(col("query_id"), col("__qqv"), col("cell"),
-        NativeFns.l2_dist2(col("__qqv"), col("__cv")).as("__cd"))
-      .withColumn("__pr", row_number().over(pw))
-      .filter(col("__pr") <= nProbe)
-      .select(col("query_id"), col("__qqv"), col("cell"))
-
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adc_dist2"), col("neighbor_id"))
-    index
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        NativeFns.l2_dist2(col("__recon"), col("__qqv")).as("adc_dist2"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    score(liveCodes(spark, indexPath), readModel(spark, indexPath), queries,
+      idCol, vecCol, nProbe, k)
   }
 
   /** STREAMING probe of the persisted index — the online-serving face of
@@ -233,33 +273,23 @@ object AnnIndex {
       watermark: String = "10 minutes", windowLen: String = "1 hour"
   ): DataFrame = {
     Storage.requireCommitted(indexPath)
-    val meta                = readMeta(spark, indexPath)
-    val (coarse, subModels) = readModels(spark, indexPath, meta)
-    val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
-    val reconRes = concat(subModels.zipWithIndex.map { case (mod, s) =>
-      element_at(
-        typedlit(mod.map { case (code, cv) => code -> cv.toSeq }.toMap),
-        element_at(col("codes"), s + 1))
-    }: _*)
+    val model = readModel(spark, indexPath)
     // NO broadcast hint on the codes side: a serving index is exactly the
     // table that outgrows the driver. The stream-static join shuffles (or
     // size-auto-broadcasts a genuinely small index) on `cell` — planner's
     // choice, never an unconditional full-index broadcast.
-    val index = liveCodes(spark, indexPath)
-      .select(col("id").as("neighbor_id"), col("cell"),
-        zip_with(element_at(coarseMap, col("cell")), reconRes, (a, b) => a + b).as("__recon"))
+    val index = reconstruct(liveCodes(spark, indexPath), model)
     // row-local nearest-nProbe cells: (dist2, cell) structs over the literal
     // centroid table, in-row sort, slice — the window-free routing
-    val cellArr = typedlit(coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) })
+    val cellArr = typedlit(model.coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) })
     val routed = queryStream
       .withWatermark(tsCol, watermark)
-      .select(col(idCol).cast("long").as("query_id"), qv(col(vecCol)).as("__qqv"), col(tsCol))
+      .select(col(idCol).cast("long").as("query_id"), ClusterOps.quantize(col(vecCol)).as("__qqv"),
+        col(tsCol))
       .withColumn("__cells",
         slice(
           array_sort(transform(cellArr, c =>
-            struct(
-              aggregate(zip_with(col("__qqv"), c.getField("_2"), (a, b) => (a - b) * (a - b)),
-                lit(0L), (acc, x) => acc + x).as("d2"),
+            struct(NativeFns.l2_dist2(col("__qqv"), c.getField("_2")).as("d2"),
               c.getField("_1").as("cell")))),
           1, nProbe))
       .select(col("query_id"), col("__qqv"), col(tsCol),
@@ -324,9 +354,8 @@ object AnnIndex {
     // row physically present, so re-appending it would either stay invisible
     // (anti-joined forever) or duplicate
     Storage.requireNotTombstoned(indexPath, newVecs, idCol, "id")
-    val meta                = readMeta(spark, indexPath)
-    val (coarse, subModels) = readModels(spark, indexPath, meta)
-    val appended = encode(newVecs, idCol, vecCol, meta, coarse, subModels)
+    val model    = readModel(spark, indexPath)
+    val appended = encode(residuals(newVecs, idCol, vecCol, model.coarse), model)
     // append is its own transaction: a crash mid-append leaves a
     // manifest-less index that probes refuse. The new total = prior
     // committed count + the appended rows observed on the write itself.

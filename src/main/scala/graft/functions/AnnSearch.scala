@@ -1,30 +1,34 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.Layout.LineageOps
 
-/** Approximate-nearest-neighbor search over an embedding column.
-  *
-  * Two paths:
-  *  - [[bruteForceTopK]]: exact baseline — broadcast the (small) query set,
-  *    score every corpus vector, per-query top-k via window rank. Linear in
-  *    corpus size with zero shuffle of the corpus (queries are broadcast and
-  *    the rank partitions by query id — the only shuffle is |corpus|×|queries|
-  *    score rows, keep k per query).
-  *  - [[lshTopK]]: scale path — sign-random-projection buckets on both sides;
-  *    only same-bucket candidates are scored. Hyperplanes are generated from a
-  *    fixed seed so results are deterministic.
+/** Nearest-neighbor search over an embedding column. Every search keeps a
+  * per-query top-k (a `rank` column, self-matches excluded); the query set
+  * broadcasts and the corpus never shuffles.
+  *  - Exact baselines: [[bruteForceTopK]] (cosine over every corpus vector),
+  *    [[hardNegatives]] (the same over different-label rows) and
+  *    [[int8TopK]] (over the [[quantizeInt8Vec]] index).
+  *  - [[lshTopK]]: sign-random-projection buckets on both sides; only
+  *    same-bucket candidates are scored ([[srpPlanes]] fixes the planes).
+  *  - [[ivfIntTopK]]: integer coarse cells; a query scores only its nearest
+  *    cells' vectors, by exact cosine.
+  *  - [[pqTopK]] and [[ivfPqTopK]]: compressed codes scored by asymmetric
+  *    distance — one pipeline, owned by [[AnnIndex]], which also persists it.
   */
 object AnnSearch {
 
-  /** Deterministic random hyperplanes: `nPlanes` × `dim`, seed-fixed. */
-  def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
-    val rng = new scala.util.Random(seed)
-    Seq.fill(nPlanes)(Seq.fill(dim)(rng.nextGaussian()))
-  }
-
+  /** Seed-fixed SRP hyperplanes: `tables` sets of `nPlanes` × `dim`
+    * Gaussian planes, set t drawn from seed 42 + t — the one plane source of
+    * the batch and streaming LSH searches, the embedding near-dup passes and
+    * the `x_ann_lsh` SQL replay, so all of them bucket alike.
+    */
+  def srpPlanes(tables: Int, nPlanes: Int, dim: Int): Array[Array[Array[Double]]] =
+    Array.tabulate(tables) { t =>
+      val rng = new scala.util.Random(42L + t)
+      Array.fill(nPlanes, dim)(rng.nextGaussian())
+    }
 
   /** Exact top-k neighbors for each query vector (cosine, descending; ties by
     * neighbor id). Self-matches excluded.
@@ -163,72 +167,6 @@ object AnnSearch {
       .filter(col("rank") <= k)
   }
 
-  /** Train IVF coarse centroids with Spark ML KMeans (cosine distance,
-    * seed-fixed). At 100 TB you train on a sample (`trainFraction`) — k-means
-    * cost is per-row×k×iters, and a 1% sample pins the same cell structure —
-    * then assign the full corpus with the cheap [[NativeFns.ivf_probes]]
-    * kernel. Returns the k×dim centroid matrix (small model state, like a
-    * broadcast dim table).
-    */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-
-  def trainCentroids(
-      corpus: DataFrame, vecCol: String, k: Int,
-      trainFraction: Double = 1.0, seed: Long = 42L,
-      cacheKey: Option[String] = None
-  ): Array[Array[Double]] = {
-    def compute(): Array[Array[Double]] = {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val sample = if (trainFraction < 1.0) corpus.sample(withReplacement = false, trainFraction, seed) else corpus
-      val feat   = sample.select(array_to_vector(col(vecCol)).as("features"))
-      val model = new KMeans()
-        .setK(k).setSeed(seed).setMaxIter(10)
-        .setDistanceMeasure("cosine")
-        .setFeaturesCol("features")
-        .fit(feat)
-      model.clusterCenters.map(_.toArray)
-    }
-    // An IVF index is trained once and queried many times; cacheKey (e.g.
-    // the corpus path) makes repeat queries against the same corpus reuse
-    // the centroids instead of re-running the k-means jobs per query.
-    cacheKey match {
-      case Some(key) => centroidCache.computeIfAbsent(s"$key|$vecCol|$k|$trainFraction|$seed", _ => compute())
-      case None      => compute()
-    }
-  }
-
-  /** IVF top-k — the second scale path next to [[lshTopK]]: corpus vectors
-    * are assigned to their nearest coarse centroid (one cell each); each
-    * query probes its `nProbe` nearest cells and scores only those cells'
-    * vectors. One broadcast join on cell id; scanned fraction ≈ nProbe/nCells
-    * of the corpus. Misses happen when a true neighbor lives in an unprobed
-    * cell — recall is gated against the brute-force baseline in AccuracySpec.
-    */
-  def ivfTopK(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nCells: Int = 16, nProbe: Int = 4,
-      trainFraction: Double = 1.0, seed: Long = 42L,
-      cacheKey: Option[String] = None
-  ): DataFrame = {
-    val centroids = trainCentroids(corpus, vecCol, nCells, trainFraction, seed, cacheKey)
-    val c = corpus.select(
-      col(idCol).as("neighbor_id"),
-      col(vecCol).as("c_vec"),
-      element_at(NativeFns.ivf_probes(col(vecCol), centroids, 1), 1).as("cell"))
-    val q = queries.select(
-      col(idCol).as("query_id"),
-      col(vecCol).as("q_vec"),
-      explode(NativeFns.ivf_probes(col(vecCol), centroids, nProbe)).as("cell"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), NativeFns.cosine_sim(col("q_vec"), col("c_vec")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
   /** LSH-bucketed top-k: candidates restricted to same SRP bucket in any of
     * `tables` independent hash tables. Misses are possible (that's the A in
     * ANN); recall grows with table count AND with `probes` — multi-probe
@@ -241,8 +179,7 @@ object AnnSearch {
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nPlanes: Int = 12, tables: Int = 4, dim: Int = 64, probes: Int = 1
   ): DataFrame = {
-    val allPlanes: Array[Array[Array[Double]]] =
-      (0 until tables).map(t => hyperplanes(nPlanes, dim, seed = 42L + t).map(_.toArray).toArray).toArray
+    val allPlanes = srpPlanes(tables, nPlanes, dim)
     def withBuckets(df: DataFrame, id: String, vec: String, nProbes: Int): DataFrame =
       df.select(
         col(idCol).as(id),
@@ -265,22 +202,19 @@ object AnnSearch {
 
   /** IVF top-k over the INTEGER-EXACT coarse quantizer
     * ([[ClusterOps.kMeansModel]]: micro-quantized vectors, exact-integer
-    * argmin-L2² assignment, floor-division centroid updates) instead of the
-    * float ML k-means of [[ivfTopK]] — same cell/probe plan shape, but every
-    * routing decision (training iterations, corpus cell assignment, query
-    * probe ranking) is BIGINT arithmetic with a deterministic (dist², cid)
-    * tie-break, so the ENTIRE pipeline — train → assign → probe → exact
-    * within-cell cosine → rank — replays row-level in ANSI SQL the way
-    * `x_ann_int8` replays quantize → score → rank. Cell routing from integer
-    * L2² on micro-quantized vectors picks the same cells as float L2 except
-    * within quantization slack — immaterial for a coarse quantizer whose own
-    * approximation (unprobed cells) dominates; recall is additionally gated
-    * against brute force in AccuracySpec.
+    * argmin-L2² assignment, floor-division centroid updates): corpus vectors
+    * are assigned to their nearest cell; each query probes its `nProbe`
+    * nearest cells ([[AnnIndex.nearestCells]]) and scores only those cells'
+    * vectors by exact cosine. Every routing decision is BIGINT arithmetic
+    * with a deterministic (dist², cid) tie-break, so the ENTIRE pipeline —
+    * train → assign → probe → exact within-cell cosine → rank — replays
+    * row-level in ANSI SQL. Misses happen when a true neighbor lives in an
+    * unprobed cell — recall is gated against brute force in AccuracySpec.
     *
-    * Scale shape is unchanged from [[ivfTopK]]: the model is k·dim driver
-    * state (trained once per `cacheKey`), corpus assignment is one map-side
-    * kernel projection, queries broadcast with their probe fan-out, and the
-    * per-query top-k is a WindowGroupLimit — the corpus never shuffles.
+    * Scale shape: the model is k·dim driver state (trained once per
+    * `cacheKey`), corpus assignment is one map-side kernel projection,
+    * queries broadcast with their probe fan-out, and the per-query top-k is
+    * a WindowGroupLimit — the corpus never shuffles.
     */
   def ivfIntTopK(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
@@ -293,30 +227,15 @@ object AnnSearch {
         intModelCache.computeIfAbsent(s"$key|$vecCol|$nCells|$iters", _ => train())
       case None => train()
     }
-    val cids = model.map(_._1)
-    val cvs  = model.map(_._2)
-    val qexp = (v: Column) => transform(v, x => floor(x.cast("double") * lit(1e6)))
     val c = corpus.select(
       col(idCol).as("neighbor_id"),
       col(vecCol).as("c_vec"),
-      NativeFns.nearest_centroid_l2(qexp(col(vecCol)), cids, cvs)
+      NativeFns.nearest_centroid_l2(ClusterOps.quantize(col(vecCol)), model.map(_._1), model.map(_._2))
         .getField("cluster").as("cell"))
-    // Query probes: the query set is broadcast-small, so the top-nProbe cells
-    // come from a plain cross join against the model frame (k rows) — the
-    // integer dist² here is the same arithmetic the corpus-side kernel runs.
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centDf = model.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cell", "cv")
-    val pw = Window.partitionBy(col("query_id")).orderBy(col("__d2"), col("cell"))
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"), qexp(col(vecCol)).as("__qv"))
-      .crossJoin(broadcast(centDf))
-      .withColumn("__d2", aggregate(
-        zip_with(col("__qv"), col("cv"), (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, x) => acc + x))
-      .withColumn("__rn", row_number().over(pw))
-      .filter(col("__rn") <= nProbe)
-      .select(col("query_id"), col("q_vec"), col("cell"))
+    val q = AnnIndex.nearestCells(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
+        ClusterOps.quantize(col(vecCol)).as("__qv")),
+      "__qv", model, nProbe)
     val rw = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
     c.join(broadcast(q), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -329,137 +248,35 @@ object AnnSearch {
   /** Product-quantization ANN (Jégou, Douze, Schmid, "Product Quantization
     * for Nearest Neighbor Search", TPAMI 2011) — the FAISS-style compressed
     * index, integer-exact end to end: the vector splits into `m` subvectors,
-    * each trained with the [[ClusterOps.kMeansModel]] integer k-means on its
-    * slice (quantization commutes with slicing, so sub-codebooks see exactly
-    * the sliced micro-quantized data); a corpus vector's code is its m
-    * nearest sub-centroid labels — ONE map-side projection of m kernel
-    * calls, no shuffle, compressing dim floats to m codes. Serving
-    * reconstructs the coded vector from the broadcast codebooks (a literal
-    * map lookup per sub) and scores squared-L2 against the query in the
-    * codegen'd `l2_dist2` kernel — asymmetric distance computation with the
-    * reconstruction materialized once per corpus row rather than a per-query
-    * distance table, which keeps every step deterministic integer math. The
-    * FULL train→encode→reconstruct→score→rank pipeline therefore replays in
-    * SQL (the third exactly-oracled ANN variant after brute force and int8).
+    * each with its own integer k-means codebook; a corpus vector's code is
+    * its m nearest sub-centroid labels, and serving reconstructs the coded
+    * vector and scores squared-L2 against the query (asymmetric distance).
+    * It is [[ivfPqTopK]] with ONE all-zero coarse cell probed by every
+    * query: the residual from a zero centroid is the vector itself, so the
+    * sub-codebooks train on the plain micro-quantized slices. The FULL
+    * train→encode→reconstruct→score→rank pipeline replays in SQL.
     */
   def pqTopK(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int, ksub: Int, iters: Int, k: Int
-  ): DataFrame = {
-    require(m > 0 && dim % m == 0, s"m must divide dim, got dim=$dim m=$m")
-    val dsub = dim / m
-    val models = (0 until m).map { s =>
-      ClusterOps.kMeansModel(
-        corpus.select(col(idCol), slice(col(vecCol), s * dsub + 1, dsub).as(vecCol)),
-        idCol, vecCol, ksub, iters)
-    }
-    def qv(c: Column) = transform(c, x => floor(x.cast("double") * lit(1e6)))
-    val codeCols = models.zipWithIndex.map { case (mod, s) =>
-      NativeFns.nearest_centroid_l2(
-        slice(col("__qv"), s * dsub + 1, dsub), mod.map(_._1), mod.map(_._2))
-        .getField("cluster").as(s"__c$s")
-    }
-    val coded = corpus
-      .select(col(idCol).cast("long").as("neighbor_id"), qv(col(vecCol)).as("__qv"))
-      .select(col("neighbor_id") +: codeCols: _*)
-    val recon = concat(models.zipWithIndex.map { case (mod, s) =>
-      element_at(
-        typedlit(mod.map { case (cid, cv) => cid -> cv.toSeq }.toMap),
-        col(s"__c$s"))
-    }: _*)
-    val q = queries.select(col(idCol).cast("long").as("query_id"), qv(col(vecCol)).as("__qqv"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adc_dist2"), col("neighbor_id"))
-    coded
-      .select(col("neighbor_id"), recon.as("__rv"))
-      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        NativeFns.l2_dist2(col("__rv"), col("__qqv")).as("adc_dist2"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+  ): DataFrame =
+    AnnIndex.topK(corpus, queries, idCol, vecCol, AnnIndex.IvfPqMeta(dim, 1, m, ksub, iters),
+      Array((0L, Array.fill(dim)(0L))), nProbe = 1, k)
 
   /** IVF-PQ — the full FAISS `IndexIVFPQ` composition (Jégou et al. TPAMI
     * 2011 §V), integer-exact: a coarse integer k-means partitions the
     * corpus into cells; each vector's RESIDUAL from its cell centroid is
-    * product-quantized with per-subvector codebooks (residuals are long
-    * subtractions, so the whole model stays in the same exact arithmetic);
-    * serving ranks a query's nearest `nProbe` cells and scores ONLY their
-    * members, each reconstructed as cell centroid + sub-codebook entries
-    * and scored by the `l2_dist2` kernel. The inverted-list pruning is what
-    * survives at corpus sizes where even PQ codes are too many to scan —
-    * work per query is the probed fraction, and every step (train, assign,
-    * residual, encode, probe, score, rank) replays in SQL, making this the
-    * fourth exactly-oracled ANN variant. The one interpreted HOF
-    * (`zip_with` for residual/reconstruction arithmetic) runs once per
-    * corpus row at index-build time, not in the |queries|×|candidates|
-    * loop — the quantizeInt8 precedent.
+    * product-quantized with per-subvector codebooks; serving ranks a query's
+    * nearest `nProbe` cells and scores ONLY their members, each
+    * reconstructed as cell centroid + sub-codebook entries. Work per query
+    * is the probed fraction, and every step (train, assign, residual,
+    * encode, probe, score, rank) replays in SQL. Train, encode and score
+    * are [[AnnIndex]]'s — the persisted index runs the same code.
     */
   def ivfPqTopK(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       dim: Int, nCells: Int, m: Int, ksub: Int, iters: Int, nProbe: Int, k: Int
-  ): DataFrame = {
-    require(m > 0 && dim % m == 0, s"m must divide dim, got dim=$dim m=$m")
-    val dsub = dim / m
-    def qv(c: Column) = transform(c, x => floor(x.cast("double") * lit(1e6)))
-
-    val coarse    = ClusterOps.kMeansModel(corpus, idCol, vecCol, nCells, iters)
-    val coarseMap = typedlit(coarse.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
-    val cellCol = NativeFns.nearest_centroid_l2(
-      col("__qv"), coarse.map(_._1), coarse.map(_._2)).getField("cluster")
-
-    // localCheckpoint: this frame embeds the nCells-way coarse assignment
-    // plus the residual zip_with over every corpus row, and is then scanned
-    // by each of the m sub-model trainings (iters+1 actions apiece) AND the
-    // index build — without truncation that whole coarse pass would re-run
-    // O(m·iters) times (the lineage discipline GraphOps applies per round).
-    val withRes = corpus
-      .select(col(idCol).cast("long").as("neighbor_id"), qv(col(vecCol)).as("__qv"))
-      .withColumn("cell", cellCol)
-      .withColumn("__rv", zip_with(col("__qv"), element_at(coarseMap, col("cell")),
-        (a, b) => a - b))
-      .truncateLineage()
-
-    val subModels = (0 until m).map { s =>
-      ClusterOps.kMeansModelQuantized(
-        withRes.select(col("neighbor_id").as("__id"),
-          slice(col("__rv"), s * dsub + 1, dsub).as("__qv")),
-        ksub, iters)
-    }
-    val codeCols = subModels.zipWithIndex.map { case (mod, s) =>
-      NativeFns.nearest_centroid_l2(
-        slice(col("__rv"), s * dsub + 1, dsub), mod.map(_._1), mod.map(_._2))
-        .getField("cluster").as(s"__c$s")
-    }
-    val reconRes = concat(subModels.zipWithIndex.map { case (mod, s) =>
-      element_at(
-        typedlit(mod.map { case (cid, cv) => cid -> cv.toSeq }.toMap),
-        col(s"__c$s"))
-    }: _*)
-    val index = withRes
-      .select(col("neighbor_id") +: col("cell") +: codeCols: _*)
-      .select(col("neighbor_id"), col("cell"),
-        zip_with(element_at(coarseMap, col("cell")), reconRes, (a, b) => a + b).as("__recon"))
-
-    // Query-side probing: rank the coarse cells per query, keep nProbe.
-    val q = queries.select(col(idCol).cast("long").as("query_id"), qv(col(vecCol)).as("__qqv"))
-    val cellsDf = corpus.sparkSession
-      .createDataFrame(coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) })
-      .toDF("cell", "__cv")
-    val pw = Window.partitionBy(col("query_id")).orderBy(col("__cd"), col("cell"))
-    val probes = q.crossJoin(broadcast(cellsDf))
-      .select(col("query_id"), col("__qqv"), col("cell"),
-        NativeFns.l2_dist2(col("__qqv"), col("__cv")).as("__cd"))
-      .withColumn("__pr", row_number().over(pw))
-      .filter(col("__pr") <= nProbe)
-      .select(col("query_id"), col("__qqv"), col("cell"))
-
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adc_dist2"), col("neighbor_id"))
-    index
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        NativeFns.l2_dist2(col("__recon"), col("__qqv")).as("adc_dist2"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+  ): DataFrame =
+    AnnIndex.topK(corpus, queries, idCol, vecCol, AnnIndex.IvfPqMeta(dim, nCells, m, ksub, iters),
+      ClusterOps.kMeansModel(corpus, idCol, vecCol, nCells, iters), nProbe, k)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Layout.LineageOps
@@ -238,8 +238,7 @@ object ClusterOps {
     kMeansModelQuantized(quantized(embs, idCol, vecCol), k, iters)
 
   /** The same training loop over a PRE-quantized `(__id, __qv array<long>)`
-    * frame — the entry point for callers whose vectors are already integer
-    * (e.g. the residuals of [[graft.functions.AnnSearch.ivfPqTopK]]).
+    * frame; [[kMeansSubModelsQuantized]] runs m of them at once.
     */
   private[graft] def kMeansModelQuantized(
       q: DataFrame,
@@ -285,23 +284,18 @@ object ClusterOps {
   }
 
   /** Train `m` INDEPENDENT sub-codebooks (one per dsub-wide slice of `__rv`)
-    * in ONE Spark job per iteration instead of m separate trainings — the
-    * IVF-PQ build's per-sub [[kMeansModelQuantized]] calls each cost
-    * (iters + 1) actions over the same residual frame, so m=4 codebooks paid
-    * 12 scans where 3 suffice (guide §1.2: remove redundant passes; the
-    * per-job scheduling overhead dominates at bench scale and the scan count
-    * dominates at 100 TB — both shrink m-fold).
+    * in ONE Spark job per iteration — the IVF-PQ trainer of [[AnnIndex]]:
+    * iters+1 scans of the residual frame instead of m·(iters+1).
     *
-    * Bit-identical to the per-sub trainings by construction:
+    * Equal to m per-slice [[kMeansModelQuantized]] trainings, model for
+    * model (ClusterOpsSpec pins it):
     *   - seeds are the k smallest `__id` rows, sliced per sub — slicing
-    *     commutes with the row pick, so each sub's seed equals
-    *     `q_s.orderBy(__id).limit(k)` of the old per-sub frame;
+    *     commutes with the row pick;
     *   - each iteration assigns every row's slice with the SAME
     *     [[NativeFns.nearest_centroid_l2]] kernel against that sub's model
-    *     only (subs never mix: the explode key rides every group), and the
-    *     (sub, cid) integer sums + floorDiv update are the exact arithmetic
-    *     of [[kMeansModelQuantized]]'s update;
-    *   - a cluster that loses all members drops out per sub, as before.
+    *     only (the sub key rides every group), and the (sub, cid) integer
+    *     sums + floorDiv update are [[kMeansModelQuantized]]'s arithmetic;
+    *   - a cluster that loses all members drops out per sub.
     */
   private[graft] def kMeansSubModelsQuantized(
       q: DataFrame,   // (__id BIGINT, __rv ARRAY<BIGINT>) — full residual rows
@@ -367,8 +361,12 @@ object ClusterOps {
       .select(col(idCol), col("__a.cluster").as("cluster"), col("__a.dist2").as("dist2"))
   }
 
+  /** Micro-quantization, `floor(x·1e6)` per element: the integer form every
+    * k-means, IVF and PQ decision in graft is made in.
+    */
+  private[functions] def quantize(v: Column): Column =
+    transform(v, x => floor(x.cast("double") * lit(1e6)))
+
   private def quantized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(
-      col(idCol).cast("long").as("__id"),
-      transform(col(vecCol), x => floor(x.cast("double") * lit(1e6))).as("__qv"))
+    df.select(col(idCol).cast("long").as("__id"), quantize(col(vecCol)).as("__qv"))
 }

@@ -570,8 +570,7 @@ object DedupOps {
       dim: Int = 64,
       maxBatchPerBucket: Int = 2000
   ): DataFrame = {
-    val planes: Array[Array[Array[Double]]] =
-      (0 until tables).map(t => AnnSearch.hyperplanes(nPlanes, dim, seed = 42L + t).map(_.toArray).toArray).toArray
+    val planes = AnnSearch.srpPlanes(tables, nPlanes, dim)
     def banded(df: DataFrame, outId: String): DataFrame =
       df.select(col(idCol).cast("long").as(outId),
         posexplode(NativeFns.srp_buckets(col(vecCol), planes)).as(Seq("band", "bucket")))
@@ -660,8 +659,7 @@ object DedupOps {
       dim: Int = 64,
       maxBucketSize: Int = 2000
   ): DataFrame = {
-    val planes: Array[Array[Array[Double]]] =
-      (0 until tables).map(t => AnnSearch.hyperplanes(nPlanes, dim, seed = 42L + t).map(_.toArray).toArray).toArray
+    val planes = AnnSearch.srpPlanes(tables, nPlanes, dim)
     val ids = embs.select(col(idCol).cast("long").as("__id"), col(vecCol).as("__vec"))
     // Vectors travel WITH their bucket rows and every bucket scores its own
     // pairs inside the codegen'd cosine_pairs kernel — candidate pairs are
@@ -700,9 +698,9 @@ object DedupOps {
     * the work is Σ|cluster|²/2 instead of n²/2, and cross-cluster near-dups
     * are the accepted approximation (the paper's recall/cost dial is k).
     *
-    * `centroids` is the k×dim matrix — small model state, exactly like
-    * [[AnnSearch]]'s IVF centroids (and [[AnnSearch.trainCentroids]] is the
-    * production way to fit it, on a sample). It broadcasts; assignment is a
+    * `centroids` is the k×dim matrix — small model state, like the IVF
+    * cells of [[AnnSearch.ivfIntTopK]] (and [[ClusterOps.kMeansModel]], on a
+    * sample, is the way to fit it). It broadcasts; assignment is a
     * map-side broadcast nested-loop over k rows + one row_number window.
     * Within-cluster scoring rides the same fused [[NativeFns.cosine_pairs]]
     * kernel as [[embeddingNearDups]] — vectors travel with their cluster

@@ -771,16 +771,10 @@ case class SrpBucketsExpr(child: Expression, planes: Array[Array[Array[Double]]]
   override protected def withNewChildInternal(c: Expression): SrpBucketsExpr = copy(child = c)
 }
 
-/** ivf_probes(array<float>) → array<int>: the `nProbe` nearest coarse
-  * centroids of a vector by cosine, most-similar first — the IVF cell
-  * assignment/probing kernel. Centroid matrix lives inside the node (same
-  * rationale as [[SrpBucketsExpr]]: a k×dim literal tree would dominate
-  * analysis time).
-  */
 /** nearest_centroid_l2(array<bigint>) → struct<cluster bigint, dist2 bigint>:
   * exact-integer argmin-L2² assignment of a micro-quantized vector against a
   * model-sized centroid table riding in as a reference object (the
-  * [[IvfProbesExpr]] pattern) — the Lloyd-iteration hot loop with NO join,
+  * [[SrpBucketsExpr]] pattern) — the Lloyd-iteration hot loop with NO join,
   * NO shuffle, and NO floating point, so the assignment is order-independent
   * and bit-identical on any engine. `cids`/`cents` must be parallel arrays
   * sorted cid-ascending: the scan uses strict `<`, so distance ties
@@ -821,64 +815,6 @@ case class NearestCentroidExpr(child: Expression, cids: Array[Long], cents: Arra
     nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
   override protected def withNewChildInternal(c: Expression): NearestCentroidExpr = copy(child = c)
-}
-
-case class IvfProbesExpr(child: Expression, centroids: Array[Array[Double]], nProbe: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeExprs.requireArrayOf(child, FloatType, "ivf_probes")
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  /** Public so generated code can call it. */
-  def compute(arr: ArrayData): ArrayData = {
-    val v = arr.toFloatArray()
-    var nv = 0.0
-    var i  = 0
-    while (i < v.length) { nv += v(i).toDouble * v(i).toDouble; i += 1 }
-    val normV = math.sqrt(nv)
-    val k     = centroids.length
-    val sims  = new Array[Double](k)
-    var c     = 0
-    while (c < k) {
-      val cen = centroids(c)
-      var dot = 0.0; var nc = 0.0
-      var j   = 0
-      val n   = math.min(v.length, cen.length)
-      while (j < n) { dot += v(j) * cen(j); j += 1 }
-      j = 0
-      while (j < cen.length) { nc += cen(j) * cen(j); j += 1 }
-      val den = normV * math.sqrt(nc)
-      sims(c) = if (den == 0.0) -1.0 else dot / den
-      c += 1
-    }
-    val p   = math.min(nProbe, k)
-    val out = new Array[Int](p)
-    val taken = new Array[Boolean](k)
-    var r = 0
-    while (r < p) {
-      var best = -1
-      var bestSim = Double.NegativeInfinity
-      var c2 = 0
-      while (c2 < k) {
-        // strict > with ascending index scan ⇒ deterministic tie-break on id
-        if (!taken(c2) && sims(c2) > bestSim) { best = c2; bestSim = sims(c2) }
-        c2 += 1
-      }
-      taken(best) = true
-      out(r) = best
-      r += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfExpr", this, classOf[IvfProbesExpr].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
-  override protected def withNewChildInternal(c: Expression): IvfProbesExpr = copy(child = c)
 }
 
 /** lang_id(string) → string: stopword-heuristic language ID in ONE pass over
@@ -1403,8 +1339,6 @@ object NativeFns {
     ColumnBridge.column(DeflateRatioExpr(ColumnBridge.expression(text)))
   def c4_line_clean(text: Column, minWords: Int = 3): Column =
     ColumnBridge.column(C4LineCleanExpr(ColumnBridge.expression(text), minWords))
-  def ivf_probes(vec: Column, centroids: Array[Array[Double]], nProbe: Int): Column =
-    ColumnBridge.column(IvfProbesExpr(ColumnBridge.expression(vec), centroids, nProbe))
   def srp_buckets(vec: Column, planes: Array[Array[Array[Double]]], probes: Int = 1): Column =
     ColumnBridge.column(SrpBucketsExpr(ColumnBridge.expression(vec), planes, probes))
   def word_shingles(text: Column, n: Int): Column =

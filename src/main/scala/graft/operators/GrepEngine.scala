@@ -133,16 +133,6 @@ object GrepEngine {
     if (out.columns.contains("__pos")) out.drop("__pos") else out
   }
 
-  /** `grep -c` mode: per-file match counts (the reference's per-machine
-    * counts, `core_process.go:292-344`).
-    */
-  def countPerFile(logs: DataFrame, stages: Seq[GrepStage]): DataFrame =
-    matchLines(logs, stages).groupBy(col("file")).agg(count(lit(1)).as("matches"))
-
-  /** Grand-total count (the reference's aggregated total). */
-  def countTotal(logs: DataFrame, stages: Seq[GrepStage]): DataFrame =
-    matchLines(logs, stages).agg(count(lit(1)).as("matches"))
-
   /** Command-line translator for the shell-grep surface:
     * `grep [-c] [-i] [-v] [-E] [-n] [-o] [-F] [-w] [-x] [-l] [-m n]
     * [-A n] [-B n] [-C n] PATTERN [| grep ...]`.
@@ -213,12 +203,6 @@ object GrepEngine {
         fixed = fx, wordMatch = wm, lineMatch = lm, maxCount = maxC)
     }
     GrepCmd(stages, countMode, lineNumbers, filesOnly)
-  }
-
-  /** Back-compat form of [[parseCmd]]: (stages, countMode). */
-  def parse(cmd: String): (Seq[GrepStage], Boolean) = {
-    val c = parseCmd(cmd)
-    (c.stages, c.countMode)
   }
 
   /** End-to-end: translate a grep command and run it over a logs table.

@@ -795,8 +795,7 @@ object Extensions {
     */
   private def lshOracleSql: String = {
     val values = (for {
-      t <- 0 until lshPlanesT
-      planes = graft.functions.AnnSearch.hyperplanes(lshPlanesP, 64, seed = 42L + t)
+      (planes, t) <- AnnSearch.srpPlanes(lshPlanesT, lshPlanesP, 64).zipWithIndex
       p <- 0 until lshPlanesP
     } yield s"($t, $p, [${planes(p).map(_.toString).mkString(", ")}])")
       .mkString(", ")
@@ -869,10 +868,8 @@ object Extensions {
     * oracle-able: the SQL replays quantize → 2 training iterations → corpus
     * cell assignment → per-query probe ranking (all BIGINT-exact, the
     * `x_kmeans` CTE chain) and exact cosine within probed cells (the
-    * `x_ann_bruteforce` pattern). The float ML-KMeans path
-    * ([[AnnSearch.ivfTopK]], sampled training — the 100 TB
-    * train-on-a-sample story) stays recall-gated in AccuracySpec alongside
-    * this variant.
+    * `x_ann_bruteforce` pattern). Recall against brute force is gated in
+    * AccuracySpec.
     */
   val annIvf = Q(
     "x_ann_ivf",
@@ -2962,8 +2959,8 @@ object Extensions {
   /** SemDeDup ([[DedupOps.semDedup]], Abbas et al. 2023): cluster-then-prune
     * semantic dedup over the embeddings table. Centroids here are the first
     * 8 vectors (a fixed seed assignment — deterministic on both engines;
-    * [[AnnSearch.trainCentroids]] is the production fit, and its KMeans
-    * output is exercised by `x_ann_ivf`'s recall gates). Threshold 0.4 sits
+    * [[graft.functions.ClusterOps.kMeansModel]], the coarse quantizer that
+    * `x_ann_ivf` trains, is the production fit). Threshold 0.4 sits
     * in this corpus's near-dup tail (59 global pairs at sf0.01) so the
     * dropped set is non-trivial. The oracle spells cosine out as the
     * explicit double dot/norm formula — same accumulation order as the

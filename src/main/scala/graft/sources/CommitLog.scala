@@ -101,7 +101,7 @@ object CommitLog {
       ch.force(true)
     } finally ch.close()
     // Index update: pre-append lines = nearest index point + bounded scan.
-    val preLines = linesUpTo(path, preSize)
+    val (preLines, _) = completePrefix(path, preSize)
     Files.writeString(Paths.get(path + ".idx"),
       s"${preLines + values.size} ${preSize + bytes.length}\n",
       StandardOpenOption.CREATE, StandardOpenOption.WRITE, StandardOpenOption.APPEND)
@@ -122,25 +122,27 @@ object CommitLog {
     } finally ch.close()
   }
 
-  /** `(completeLines, byteEnd)` of `path`'s newline-terminated prefix: the
-    * complete-line count AND the byte offset just past the last `\n`, so a
-    * replayer can TRUNCATE a torn tail instead of concatenating onto it.
-    * Same index-floor + bounded tail scan discipline as [[linesUpTo]]
-    * (index entries are complete-line boundaries by the producer protocol,
-    * so the floor is a safe scan start).
+  /** `(completeLines, byteEnd)` of the newline-terminated prefix of
+    * `path`'s first `uptoBytes` bytes: the complete-line count AND the byte
+    * offset just past the last `\n`, so a replayer can TRUNCATE a torn tail
+    * instead of concatenating onto it. Index floor plus a bounded 64 KiB
+    * tail scan (index entries are complete-line boundaries by the producer
+    * protocol, so the floor is a safe scan start); a final partial line
+    * contributes 0. `uptoBytes` past the end means the whole file; (0, 0)
+    * for a missing log.
     */
-  private[sources] def completePrefix(path: String): (Long, Long) = {
+  private[sources] def completePrefix(path: String, uptoBytes: Long): (Long, Long) = {
     val p = Paths.get(path)
     if (!Files.exists(p)) return (0L, 0L)
-    val size     = Files.size(p)
-    val (l0, b0) = indexFloor(path, size)
+    val upto     = math.min(uptoBytes, Files.size(p))
+    val (l0, b0) = indexFloor(path, upto)
     val ch = java.nio.channels.FileChannel.open(p, StandardOpenOption.READ)
     try {
       ch.position(b0)
       var n         = l0
       var lastEnd   = b0
       var pos       = b0
-      var remaining = size - b0
+      var remaining = upto - b0
       val buf = java.nio.ByteBuffer.allocate(64 * 1024)
       while (remaining > 0) {
         buf.clear()
@@ -186,36 +188,6 @@ object CommitLog {
     }
   }
 
-  /** Complete lines in `path`'s first `uptoBytes` bytes — index floor plus a
-    * bounded tail scan (newlines only; a final partial line contributes 0).
-    */
-  private def linesUpTo(path: String, uptoBytes: Long): Long = {
-    val (l0, b0) = indexFloor(path, uptoBytes)
-    val p = Paths.get(path)
-    if (!Files.exists(p) || uptoBytes <= b0) l0
-    else {
-      val ch = java.nio.channels.FileChannel.open(p, StandardOpenOption.READ)
-      try {
-        ch.position(b0)
-        var n = l0
-        var remaining = uptoBytes - b0
-        val buf = java.nio.ByteBuffer.allocate(64 * 1024)
-        while (remaining > 0) {
-          buf.clear()
-          if (remaining < buf.capacity()) buf.limit(remaining.toInt)
-          val read = ch.read(buf)
-          if (read <= 0) remaining = 0
-          else {
-            var i = 0
-            while (i < read) { if (buf.get(i) == '\n') n += 1; i += 1 }
-            remaining -= read
-          }
-        }
-        n
-      } finally ch.close()
-    }
-  }
-
   /** Reader entry point: `(offset long, value string)` micro-batch stream. */
   def readStream(spark: SparkSession, path: String, maxLinesPerTrigger: Option[Long] = None): DataFrame = {
     val r = spark.readStream.format(classOf[CommitLog].getName)
@@ -227,10 +199,20 @@ object CommitLog {
     * floor + bounded tail scan, so polling `latestOffset` stays cheap as the
     * log grows.
     */
-  private[sources] def completeLines(path: String): Long = {
-    val p = Paths.get(path)
-    if (!Files.exists(p)) 0L else linesUpTo(path, Files.size(p))
-  }
+  private[sources] def completeLines(path: String): Long = completePrefix(path, Long.MaxValue)._1
+
+  /** Contiguous `[start, end)` line splits of one file's planned range, so
+    * one fat batch fans out: at most 4, never below 256 lines a split, so
+    * trivial batches stay single-task.
+    */
+  private[sources] def splits(start: Long, end: Long): Seq[(Long, Long)] =
+    if (end <= start) Nil
+    else {
+      val n    = math.max(1L, math.min(4L, (end - start) / 256L)).toInt
+      val step = (end - start + n - 1) / n
+      (0 until n).map(i => (start + i * step, math.min(end, start + (i + 1) * step)))
+        .filter { case (a, b) => b > a }
+    }
 
   /** Sink entry point: exactly-once streaming write of a `value` string
     * column into the commit-log format (see [[CommitLogStreamingWrite]]).
@@ -312,7 +294,7 @@ object CommitLog {
       // that completeLines excludes; appending the gap onto those bytes
       // would merge the torn fragment and the replayed record into one
       // corrupted line. Truncate to the last complete-line boundary first.
-      val (_, completeBytes) = completePrefix(path)
+      val (_, completeBytes) = completePrefix(path, Long.MaxValue)
       val p = Paths.get(path)
       if (Files.exists(p) && Files.size(p) > completeBytes) {
         val ch = java.nio.channels.FileChannel.open(p, StandardOpenOption.WRITE)
@@ -466,19 +448,9 @@ private[sources] class CommitLogMicroBatchStream(path: String, maxPerTrigger: Op
   override def stop(): Unit = ()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[CommitLogOffset].line
-    val e = end.asInstanceOf[CommitLogOffset].line
-    if (e <= s) Array.empty
-    else {
-      // Contiguous splits so one fat batch fans out; never below 256
-      // lines/split so trivial batches stay single-task.
-      val splits = math.max(1L, math.min(4L, (e - s) / 256L)).toInt
-      val step = (e - s + splits - 1) / splits
-      (0 until splits).iterator
-        .map(i => CommitLogInputPartition(path, s + i * step, math.min(e, s + (i + 1) * step)))
-        .filter(p => p.end > p.start)
-        .toArray[InputPartition]
-    }
+    CommitLog.splits(start.asInstanceOf[CommitLogOffset].line, end.asInstanceOf[CommitLogOffset].line)
+      .map { case (a, b) => CommitLogInputPartition(path, a, b): InputPartition }
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = CommitLogReaderFactory
@@ -692,19 +664,8 @@ private[sources] class CommitLogTopicMicroBatchStream(dir: String, maxPerTrigger
     val s = start.asInstanceOf[CommitLogTopicOffset].lines
     val e = end.asInstanceOf[CommitLogTopicOffset].lines
     e.toSeq.sortBy(_._1).flatMap { case (f, endLine) =>
-      val startLine = s.getOrElse(f, 0L)
-      if (endLine <= startLine) Seq.empty
-      else {
-        // Same contiguous-split fan-out as the single log, per partition.
-        val n    = endLine - startLine
-        val splits = math.max(1L, math.min(4L, n / 256L)).toInt
-        val step   = (n + splits - 1) / splits
-        (0 until splits).iterator
-          .map(i => CommitLogTopicInputPartition(
-            s"$dir/$f", f, startLine + i * step, math.min(endLine, startLine + (i + 1) * step)))
-          .filter(p => p.end > p.start)
-          .toSeq
-      }
+      CommitLog.splits(s.getOrElse(f, 0L), endLine)
+        .map { case (a, b) => CommitLogTopicInputPartition(s"$dir/$f", f, a, b): InputPartition }
     }.toArray
   }
 

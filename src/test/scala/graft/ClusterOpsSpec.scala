@@ -187,6 +187,32 @@ class ClusterOpsSpec extends AnyFunSuite {
     assert(one.find(_._1 == 2L).get._3 === 0L, "singleton cluster centroid == its member")
   }
 
+  test("kMeansSubModelsQuantized: equals m per-slice kMeansModelQuantized trainings, emptied cluster included") {
+    import spark.implicits._
+    // m = 2 slices of dsub = 2. Seeds are ids 1..3; in slice 0 ids 1 and 2
+    // coincide, so every tie between them goes to cid 1 and cid 2 drops out.
+    val q = Seq(
+      1L -> Seq(0L, 0L, 0L, 0L),
+      2L -> Seq(0L, 0L, 100L, 100L),
+      3L -> Seq(50L, 50L, 5L, 5L),
+      4L -> Seq(1L, 1L, 95L, 90L),
+      5L -> Seq(52L, 49L, 3L, 7L),
+      6L -> Seq(100L, 100L, 50L, 50L),
+      7L -> Seq(2L, 3L, 48L, 52L),
+      8L -> Seq(99L, 97L, 101L, 99L)
+    ).toDF("__id", "__rv")
+    def rows(model: Array[(Long, Array[Long])]) = model.toSeq.map { case (c, v) => (c, v.toSeq) }
+    val fused = ClusterOps.kMeansSubModelsQuantized(q, m = 2, dsub = 2, k = 3, iters = 3)
+    assert(fused.length == 2)
+    (0 until 2).foreach { s =>
+      val perSlice = ClusterOps.kMeansModelQuantized(
+        q.select(col("__id"), slice(col("__rv"), s * 2 + 1, 2).as("__qv")), k = 3, iters = 3)
+      assert(rows(fused(s)) === rows(perSlice), s"sub $s")
+    }
+    assert(fused(0).map(_._1).toSeq === Seq(1L, 3L), "slice 0's cid 2 empties and drops out")
+    assert(fused(1).map(_._1).toSeq === Seq(1L, 2L, 3L))
+  }
+
   test("kMeans: assignment plan is a pure map-side projection — zero Exchange") {
     import spark.implicits._
     val vecs = Seq.tabulate(8)(i => ((i + 1).toLong, Array(i.toFloat, 1f)))

@@ -24,7 +24,7 @@ class GrepEngineSpec extends AnyFunSuite {
   test("per-file counts: pattern x10 per node") {
     val dir  = writeLogs(3)
     val logs = GrepEngine.logs(spark, dir)
-    val counts = GrepEngine.countPerFile(logs, Seq(GrepEngine.GrepStage("ERROR"))).collect()
+    val counts = GrepEngine.run(logs, "grep -c 'ERROR'").collect()
     assert(counts.length == 3)
     assert(counts.forall(_.getLong(1) == 10L))
   }
@@ -32,23 +32,21 @@ class GrepEngineSpec extends AnyFunSuite {
   test("total count: '200' x1000 per node") {
     val dir  = writeLogs(2)
     val logs = GrepEngine.logs(spark, dir)
-    val total = GrepEngine.countTotal(logs, Seq(GrepEngine.GrepStage("200"))).collect()(0).getLong(0)
+    val total = GrepEngine.run(logs, "grep -c '200'").collect().map(_.getLong(1)).sum
     assert(total == 2000L)
   }
 
   test("parser is quote-aware: alternation in quotes, dash-led quoted patterns") {
     import GrepEngine.GrepStage
     // '|' inside quotes is regex alternation, not a pipe stage boundary.
-    val (s1, _) = GrepEngine.parse("grep 'ERROR|WARNING'")
-    assert(s1 == Seq(GrepStage("ERROR|WARNING")))
+    assert(GrepEngine.parseCmd("grep 'ERROR|WARNING'").stages == Seq(GrepStage("ERROR|WARNING")))
     // A quoted pattern starting with '-' is a pattern, not a flag.
-    val (s2, _) = GrepEngine.parse("grep '-v'")
-    assert(s2 == Seq(GrepStage("-v")))
+    assert(GrepEngine.parseCmd("grep '-v'").stages == Seq(GrepStage("-v")))
     // Flags + quoted multi-word pattern + unquoted pipe stage.
-    val (s3, cm) = GrepEngine.parse("grep -c -i 'a b' | grep -v xyz")
-    assert(cm)
-    assert(s3 == Seq(GrepStage("a b", invert = false, ignoreCase = true),
-                     GrepStage("xyz", invert = true)))
+    val c3 = GrepEngine.parseCmd("grep -c -i 'a b' | grep -v xyz")
+    assert(c3.countMode)
+    assert(c3.stages == Seq(GrepStage("a b", invert = false, ignoreCase = true),
+                            GrepStage("xyz", invert = true)))
   }
 
   // Fixture layout per file (generateTestLog with the 3 patterns above):
