@@ -25,6 +25,13 @@ import org.apache.spark.sql.SparkSession
   * cache by the session's classloader as well as the code, so a session
   * made with `newSession()` misses every entry its parent compiled; a query
   * that needs its own confs takes a memoized child from [[child]] instead.
+  * The cache is keyed by the generated source, and by default that source
+  * names its class after the whole-stage codegen id, which adaptive
+  * execution hands out in the order concurrent stages finish: the same
+  * stage could come back as `...Stage9` on one run and `...Stage10` on the
+  * next and compile again (`x_bitmap_distinct` recompiled 10 classes on its
+  * second run). `useIdInClassName` off names every stage class alike, so
+  * equal stages share one entry; plans and their `*(n)` ids are unchanged.
   */
 object GraftSession {
 
@@ -48,6 +55,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   private val children =
     new java.util.WeakHashMap[SparkSession, Map[Map[String, String], SparkSession]]()

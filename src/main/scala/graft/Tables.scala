@@ -5,13 +5,17 @@ import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
-  * All reads go through `spark.read.parquet` so Catalyst's predicate pushdown
-  * and column pruning reach the scan — callers must NOT cache or collect here;
-  * the scan must stay lazy so a downstream `select`/`filter` prunes IO.
+  * All reads go through [[graft.sources.Storage.get]], a parquet scan whose
+  * schema is memoized per (session, path, file set — names, sizes and
+  * mtimes), so a table read again in a session starts no Spark job to
+  * re-read its footer, and a table rewritten at the same path is re-inferred.
+  * The scan stays lazy so Catalyst's predicate pushdown and column pruning
+  * reach it — callers must NOT cache or collect here; a downstream
+  * `select`/`filter` prunes IO.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Storage.get(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

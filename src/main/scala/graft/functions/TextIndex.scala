@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructType}
 import graft.functions.Layout.LineageOps
 
 /** Persisted inverted-index serving — the text-side build-once/probe-many
@@ -18,9 +18,15 @@ import graft.functions.Layout.LineageOps
   * one [[graft.sources.Storage.commit]] transaction; its manifest holds the
   * physical docs-table row count.
   *
-  * Scale: a probe touches |terms| posting BUCKETS + a doc-length join
-  * keyed on doc_id; df/corpus stats are broadcast-sized. Appending a
-  * document batch is the posting-delta merge proven by
+  * The four tables have fixed schemas ([[Schemas]]), declared on every
+  * read, so no verb or probe starts a Spark job to re-read a parquet
+  * footer; `doc_id` is stored as long whatever the input's integral id
+  * type. Tombstones are read through the memoized
+  * [[graft.sources.Storage.get]].
+  *
+  * Scale: a probe lists and touches only its |terms| posting BUCKETS, plus
+  * a doc-length join keyed on doc_id; df/corpus stats are broadcast-sized.
+  * Appending a document batch is the posting-delta merge proven by
   * `x_inverted_index_incremental`.
   */
 object TextIndex {
@@ -59,26 +65,40 @@ object TextIndex {
   private def bucketPred(terms: Seq[String]) =
     col("bucket").isin(terms.map(t => bucketExpr(lit(t))): _*)
 
-  /** The postings table. A zero-row partitioned write (a build over no
-    * documents, a compact of an index whose documents were all deleted)
-    * leaves no file to infer a schema from, so an empty `postings/` reads as
-    * zero rows of the schema inference gives a non-empty one: `tok`,
-    * `doc_id` (typed as `docId`), `tf` and the int partition column
-    * `bucket`. A non-empty directory is read by inference, as before.
+  /** The schema of each index table. `bucket` is the postings' int
+    * partition column. A declared schema also reads a zero-row partitioned
+    * write (a build over no documents, a compact after deleting every doc),
+    * which leaves no file to infer one from.
     */
-  private def readPostings(spark: SparkSession, indexPath: String, docId: => DataType): DataFrame =
-    try spark.read.parquet(s"$indexPath/postings")
-    catch {
-      case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-        spark.read.schema(new StructType().add("tok", StringType).add("doc_id", docId)
-          .add("tf", LongType).add("bucket", IntegerType)).parquet(s"$indexPath/postings")
-    }
+  val Schemas: Map[String, StructType] = Map(
+    "postings" -> new StructType().add("tok", StringType).add("doc_id", LongType)
+      .add("tf", LongType).add("bucket", IntegerType),
+    "docs"     -> new StructType().add("doc_id", LongType).add("dl", LongType),
+    "stats"    -> new StructType().add("tok", StringType).add("df", LongType),
+    "corpus"   -> new StructType().add("n_docs", LongType).add("total_dl", LongType)
+      .add("avgdl", DoubleType))
 
-  /** [[readPostings]] of a committed index, whose `docs` table always holds
-    * a file, so an empty index takes its `doc_id` type from there.
+  /** Index table `name` (a key of [[Schemas]]), read with its schema. */
+  private def table(spark: SparkSession, indexPath: String, name: String): DataFrame =
+    spark.read.schema(Schemas(name)).parquet(s"$indexPath/$name")
+
+  /** The postings of `terms` only. Their bucket ids come from [[bucketExpr]]
+    * over a local frame (constant-folded on the driver, no job), and only
+    * those `bucket=` directories are listed — all 64 would exceed Spark's
+    * parallel-listing threshold of 32 and cost a listing job. A bucket with
+    * no directory holds no posting and is skipped. `basePath` keeps
+    * `bucket` a partition column, so [[bucketPred]] still prunes
+    * statically.
     */
-  private def readPostings(spark: SparkSession, indexPath: String): DataFrame =
-    readPostings(spark, indexPath, spark.read.parquet(s"$indexPath/docs").schema("doc_id").dataType)
+  private def termPostings(spark: SparkSession, indexPath: String, terms: Seq[String]): DataFrame = {
+    import spark.implicits._
+    val base = s"$indexPath/postings"
+    val dirs = terms.toDF("tok").select(bucketExpr(col("tok"))).collect().map(_.getLong(0))
+      .distinct.sorted.map(b => s"$base/bucket=$b").filter(Storage.exists).toIndexedSeq
+    spark.read.schema(Schemas("postings")).option("basePath", base).parquet(dirs: _*)
+      .filter(bucketPred(terms)) // static bucket-directory pruning
+      .filter(col("tok").isin(terms: _*))
+  }
 
   /** Quantized per-(doc, term) BM25 contribution over the `df`, `tf` and `dl`
     * columns and the corpus scalars (`nDocs` as a double).
@@ -105,7 +125,7 @@ object TextIndex {
   }
 
   private def readCorpus(spark: SparkSession, indexPath: String): (Long, Long) = {
-    val r = spark.read.parquet(s"$indexPath/corpus").select(col("n_docs"), col("total_dl")).head()
+    val r = table(spark, indexPath, "corpus").select(col("n_docs"), col("total_dl")).head()
     (r.getLong(0), r.getLong(1))
   }
 
@@ -119,7 +139,7 @@ object TextIndex {
     // a rebuild resets delete state — stale tombstones from a prior
     // generation would corrupt the fresh index's corrections
     Storage.clearTombstones(indexPath)
-    val tok = docs.select(col(idCol).as("doc_id"),
+    val tok = docs.select(col(idCol).cast("long").as("doc_id"),
       explode(TextAnalysis.tokens(col(textCol))).as("tok"))
     val postings = tok.groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
     // Tokenize ONCE: docs/stats/corpus derive from the postings ARTIFACT
@@ -142,7 +162,7 @@ object TextIndex {
     postings.withColumn("bucket", bucketExpr(col("tok")))
       .repartition(PostingBuckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexPath/postings")
-    val post = readPostings(spark, indexPath, tok.schema("doc_id").dataType)
+    val post = table(spark, indexPath, "postings")
     // corpus totals ride the docs write as an Observation (exact integer
     // count/sum merged from the write's own tasks) — the corpus row and the
     // committed row count then come from these totals with zero extra scans,
@@ -177,7 +197,7 @@ object TextIndex {
     val nPhysical = Storage.committedRows(indexPath) // the docs table is untouched
     Storage.commit(indexPath) {
       val fresh = Storage.tombstone(indexPath, docIds, "doc_id")
-      val dead = spark.read.parquet(s"$indexPath/docs")
+      val dead = table(spark, indexPath, "docs")
         .join(broadcast(fresh), Seq("doc_id"), "left_semi")
         .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("t")).head()
       val (n, t) = readCorpus(spark, indexPath)
@@ -201,10 +221,10 @@ object TextIndex {
     require(!Storage.hasTombstones(indexPath),
       s"text index at $indexPath has tombstoned docs — compact it, or probe " +
         "single queries via probeBm25")
-    val postings = readPostings(spark, indexPath)
-    val stats    = spark.read.parquet(s"$indexPath/stats")
-    val docs     = spark.read.parquet(s"$indexPath/docs")
-    val corpus   = spark.read.parquet(s"$indexPath/corpus")
+    val postings = table(spark, indexPath, "postings")
+    val stats    = table(spark, indexPath, "stats")
+    val docs     = table(spark, indexPath, "docs")
+    val corpus   = table(spark, indexPath, "corpus")
     val sq       = bm25Sq(col("n_docs").cast("double"), col("avgdl"))
     val scored = postings
       .join(broadcast(queries.select(col("query_id"), col("tok"))), "tok")
@@ -247,11 +267,11 @@ object TextIndex {
     Storage.requireCommitted(indexPath)
     require(!Storage.hasTombstones(indexPath),
       s"text index at $indexPath has tombstoned docs — compact it before streaming probes")
-    val corpus = spark.read.parquet(s"$indexPath/corpus").head()
+    val corpus = table(spark, indexPath, "corpus").head()
     val sq = bm25Sq(lit(corpus.getAs[Long]("n_docs").toDouble), lit(corpus.getAs[Double]("avgdl")))
-    val static = readPostings(spark, indexPath)
-      .join(broadcast(spark.read.parquet(s"$indexPath/stats")), "tok")
-      .join(spark.read.parquet(s"$indexPath/docs"), "doc_id")
+    val static = table(spark, indexPath, "postings")
+      .join(broadcast(table(spark, indexPath, "stats")), "tok")
+      .join(table(spark, indexPath, "docs"), "doc_id")
       .select(col("tok"), col("doc_id"), sq.as("sq"))
     val routed = queryStream
       .withWatermark(tsCol, watermark)
@@ -293,7 +313,7 @@ object TextIndex {
     // physically present) alongside the new ones
     Storage.requireNotTombstoned(indexPath, docs, idCol, "doc_id")
     Storage.commit(indexPath) {
-      val tok = docs.select(col(idCol).as("doc_id"),
+      val tok = docs.select(col(idCol).cast("long").as("doc_id"),
         explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       val newPost = tok.groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
         .truncateLineage()
@@ -309,7 +329,7 @@ object TextIndex {
       newDl.observe(dObs, count(lit(1)).as("n"), sum(col("dl")).as("t"))
         .write.mode("append").parquet(s"$indexPath/docs")
       // vocab-sized merge; checkpoint before overwriting the table it read
-      val mergedStats = spark.read.parquet(s"$indexPath/stats")
+      val mergedStats = table(spark, indexPath, "stats")
         .select(col("tok"), col("df").as("df_old"))
         .join(newPost.groupBy(col("tok")).agg(count(lit(1)).as("df_new")), Seq("tok"), "full_outer")
         .select(col("tok"),
@@ -359,15 +379,14 @@ object TextIndex {
           // SLOWER at quiet steal (extra exchange + 64 forced writer waves for a
           // layout the scan already provides); on a cluster where the tombstoned
           // scan fans out to many tasks, reintroduce the clustering.
-          val survivors = readPostings(spark, indexPath).join(tomb, Seq("doc_id"), "left_anti")
-          // df from the survivors BEFORE the postings swap: once every doc
-          // is deleted, the rewritten postings dir holds no file to read a
-          // schema back from
+          val survivors = table(spark, indexPath, "postings").join(tomb, Seq("doc_id"), "left_anti")
+          // df from the survivors BEFORE the postings swap: `survivors`
+          // scans the files the swap deletes
           Storage.rewrite(
             survivors.groupBy(col("tok")).agg(count(lit(1)).as("df")), s"$indexPath/stats")
           Storage.rewrite(survivors, s"$indexPath/postings", partitionCols = Seq("bucket"))
           val (liveDocs, nLive) = Storage.observedCount(
-            spark.read.parquet(s"$indexPath/docs").join(tomb, Seq("doc_id"), "left_anti"))
+            table(spark, indexPath, "docs").join(tomb, Seq("doc_id"), "left_anti"))
           Storage.rewrite(liveDocs, s"$indexPath/docs")
           Storage.clearTombstones(indexPath)
           nLive()
@@ -386,11 +405,8 @@ object TextIndex {
       spark: SparkSession, indexPath: String, terms: Seq[String], topK: Int = 20
   ): DataFrame = {
     Storage.requireCommitted(indexPath)
-    val postAll = readPostings(spark, indexPath)
-      .filter(bucketPred(terms)) // static bucket-directory pruning
-      .filter(col("tok").isin(terms: _*))
-    val statsAll = spark.read.parquet(s"$indexPath/stats")
-      .filter(col("tok").isin(terms: _*))
+    val postAll  = termPostings(spark, indexPath, terms)
+    val statsAll = table(spark, indexPath, "stats").filter(col("tok").isin(terms: _*))
     val (postings, stats) = Storage.tombstones(spark, indexPath) match {
       case None => (postAll, statsAll)
       case Some(tomb) =>
@@ -402,8 +418,8 @@ object TextIndex {
           statsAll.join(dfCorr, Seq("tok"), "left_outer")
             .select(col("tok"), (col("df") - coalesce(col("df_dead"), lit(0L))).as("df")))
     }
-    val docs   = spark.read.parquet(s"$indexPath/docs")
-    val corpus = spark.read.parquet(s"$indexPath/corpus")
+    val docs   = table(spark, indexPath, "docs")
+    val corpus = table(spark, indexPath, "corpus")
     postings
       .join(broadcast(stats), "tok")
       .join(docs, "doc_id")

@@ -1,0 +1,52 @@
+package graft
+
+import org.apache.spark.JobCount
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.TextIndex
+import graft.sources.Storage
+
+/** A read of a table whose schema graft already knows starts no Spark job:
+  * `Tables.table` memoizes the schema per session, path and file set, and
+  * a `TextIndex` probe declares its tables' schemas and lists only its
+  * terms' posting buckets.
+  */
+class SchemaReadSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  private val dir = "/tmp/graft_schema_read"
+
+  private def jobs[T](body: => T): (T, Int) = JobCount(spark.sparkContext)(body)
+
+  test("a second Tables.table read in one session starts 0 jobs and returns the same schema") {
+    Storage.drop(dir)
+    Storage.replace(spark.range(10).select(col("id"), (col("id") * 2).as("v")), s"$dir/t.parquet")
+    val first = Tables.table(spark, dir, "t").schema
+    val (again, n) = jobs(Tables.table(spark, dir, "t").schema)
+    assert(n == 0)
+    assert(again == first && again.fieldNames.toSeq == Seq("id", "v"))
+  }
+
+  test("a table rewritten at the same path with other columns is read with its new schema") {
+    Storage.drop(dir)
+    Storage.replace(spark.range(10).select(col("id"), (col("id") * 2).as("v")), s"$dir/t.parquet")
+    Tables.table(spark, dir, "t").schema
+    Storage.replace(spark.range(5).select(col("id").cast("string").as("name")), s"$dir/t.parquet")
+    val next = Tables.table(spark, dir, "t")
+    assert(next.schema.fieldNames.toSeq == Seq("name"))
+    assert(next.collect().map(_.getString(0)).sorted.toSeq == (0 until 5).map(_.toString))
+    val (again, n) = jobs(Tables.table(spark, dir, "t").schema)
+    assert(n == 0)
+    assert(again == next.schema)
+  }
+
+  test("building a probeBm25 frame over a tombstoned index starts 0 jobs") {
+    val idx  = s"$dir/index"
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    TextIndex.build(docs, "doc_id", "text", idx)
+    TextIndex.deleteDocs(spark, idx, docs.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
+    // the delete rewrote the tombstone table, so the first read of it infers
+    // its schema once; after that only a rewrite re-infers it
+    TextIndex.probeBm25(spark, idx, Seq("hash"), topK = 5).collect()
+    assert(jobs(TextIndex.probeBm25(spark, idx, Seq("join", "stream", "window"), topK = 20))._2 == 0)
+  }
+}

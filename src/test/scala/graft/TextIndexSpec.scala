@@ -208,6 +208,49 @@ class TextIndexSpec extends AnyFunSuite {
     assert(TextIndex.probeBm25(spark, eIdx, terms, topK = 20).count() == 0L)
   }
 
+  test("a probe whose term's bucket has no posting directory equals the direct BM25 ranking") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val docs = Seq((1L, "alpha beta alpha"), (2L, "beta gamma"), (3L, "gamma delta alpha"),
+      (4L, "epsilon beta")).toDF("doc_id", "text")
+    val sIdx = "/tmp/graft_index/text_spec_sparse"
+    TextIndex.build(docs, "doc_id", "text", sIdx)
+    // five tokens fill at most five of the 64 buckets: take a word whose
+    // bucket directory does not exist
+    val absent = (0 until 200).map(i => s"w$i").toDF("tok")
+      .select(col("tok"), pmod(xxhash64(col("tok")), lit(TextIndex.PostingBuckets.toLong)))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+      .find { case (_, b) => !graft.sources.Storage.exists(s"$sIdx/postings/bucket=$b") }
+      .get._1
+    val ts = Seq("alpha", "gamma", absent)
+    val probe = TextIndex.probeBm25(spark, sIdx, ts, topK = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val direct = QualityLM.bm25TopK(docs, "doc_id", "text", ts, topK = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(probe.nonEmpty && probe == direct)
+    assert(TextIndex.probeBm25(spark, sIdx, Seq(absent), topK = 20).count() == 0L)
+  }
+
+  test("an index built from int doc ids probes equal to one built from long ids") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.LongType
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    val intIdx  = "/tmp/graft_index/text_spec_int_ids"
+    val longIdx = "/tmp/graft_index/text_spec_long_ids"
+    val half = col("doc_id") % 2 === 0
+    TextIndex.build(docs.filter(half).select(col("doc_id").cast("int"), col("text")),
+      "doc_id", "text", intIdx)
+    TextIndex.append(docs.filter(!half).select(col("doc_id").cast("int"), col("text")),
+      "doc_id", "text", intIdx)
+    TextIndex.build(docs, "doc_id", "text", longIdx)
+    val viaInt = TextIndex.probeBm25(spark, intIdx, terms, topK = 20)
+    assert(viaInt.schema("doc_id").dataType == LongType)
+    val rows = viaInt.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val viaLong = TextIndex.probeBm25(spark, longIdx, terms, topK = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(rows.nonEmpty && rows == viaLong)
+  }
+
   test("a torn index (missing commit manifest) is refused, not served") {
     graft.sources.Storage.drop(s"$idx/manifest")
     val e = intercept[IllegalArgumentException] {

@@ -37,6 +37,12 @@ wrote its own would be back to a private manifest schema. Exempt by name:
 queries/Governance.scala, whose write-audit-publish and vacuum stores keep a
 separate `snap=N` parquet manifest that their oracles read.
 
+Rule 4 — declared index schemas. A parquet read without a schema starts a
+Spark job to re-read a footer on every call. The text index knows its
+tables' schemas (`TextIndex.Schemas`), so in functions/TextIndex.scala
+every `.read` chain that reaches `.parquet(` must pass `.schema(` on the
+way; a table of unknown schema goes through the memoized `Storage.get`.
+
 Usage: python3 tools/checkpoint_lint.py [src_root]
        python3 tools/checkpoint_lint.py --selftest
 Exit 1 on any violation of any rule.
@@ -68,6 +74,13 @@ MANIFEST_PATH = re.compile(r"""/manifest\b|["']manifest["']""")
 COMMENT_LINE = re.compile(r"^\s*(//|/\*|\*)")
 
 
+SCHEMA_OWNER = "graft/functions/TextIndex.scala"
+# `.read`, then any calls but `.schema(...)`, then `.parquet(` — across lines.
+UNDECLARED_READ = re.compile(
+    r"\.\s*read\b((?:\s*\.\s*(?!schema\b)\w+\s*\((?:[^()]|\([^()]*\))*\))*)"
+    r"\s*\.\s*parquet\s*\(")
+
+
 def scala_files(root: str):
     for dirpath, _, files in os.walk(root):
         for f in sorted(files):
@@ -97,6 +110,20 @@ def scan_manifests(root: str = "src/main/scala"):
         for i, line in enumerate(open(p, encoding="utf-8"), 1):
             if not COMMENT_LINE.match(line) and MANIFEST_PATH.search(line):
                 bad.append(f"{p}:{i}: {line.strip()}")
+    return bad
+
+
+def scan_schema_reads(root: str = "src/main/scala"):
+    bad = []
+    for p in scala_files(root):
+        if not p.replace(os.sep, "/").endswith(SCHEMA_OWNER):
+            continue
+        # blank comment lines, keeping line numbers, so prose may name the call
+        text = "".join("\n" if COMMENT_LINE.match(l) else l
+                       for l in open(p, encoding="utf-8").readlines())
+        for m in UNDECLARED_READ.finditer(text):
+            i = text.count("\n", 0, m.start()) + 1
+            bad.append(f"{p}:{i}: {' '.join(m.group(0).split())}")
     return bad
 
 
@@ -184,6 +211,30 @@ def selftest():
         bad = scan_manifests(td)
         assert len(bad) == 1 and "OwnManifest.scala:2" in bad[0], \
             f"selftest: planted store-local manifest path not caught: {bad}"
+        # rule 4: TextIndex reads its tables with their declared schemas
+        fn = os.path.join(g, "functions")
+        os.makedirs(fn)
+        with open(os.path.join(fn, "TextIndex.scala"), "w") as f:
+            f.write("/** Never `spark.read.parquet(p)` here. */\n"
+                    "object TextIndex {\n"
+                    "  def t(s: SparkSession, p: String) = s.read.schema(Schemas(\"docs\"))"
+                    ".parquet(p)\n"
+                    "  def u(s: SparkSession, b: String, d: Seq[String]) =\n"
+                    "    s.read.schema(S).option(\"basePath\", b).parquet(d: _*)\n"
+                    "  // spark.read.parquet(path) in a comment is prose\n}\n")
+        with open(os.path.join(d, "Other.scala"), "w") as f:
+            f.write("object Other { def r(s: SparkSession) = s.read.parquet(\"x\") }\n")
+        assert scan_schema_reads(td) == [], \
+            f"selftest: declared-schema reads flagged: {scan_schema_reads(td)}"
+        with open(os.path.join(fn, "TextIndex.scala"), "a") as f:
+            f.write("object Planted {\n"
+                    "  def v(s: SparkSession, p: String) = s.read.parquet(s\"$p/stats\")\n"
+                    "  def w(s: SparkSession, b: String) = s.read\n"
+                    "    .option(\"basePath\", b)\n    .parquet(b) }\n")
+        bad = scan_schema_reads(td)
+        assert len(bad) == 2 and "TextIndex.scala:9" in bad[0] \
+            and "TextIndex.scala:10" in bad[1], \
+            f"selftest: planted schema-less TextIndex reads not caught: {bad}"
     print("checkpoint_lint selftest: OK (planted sites caught)")
     return 0
 
@@ -216,11 +267,19 @@ def main():
             print("  " + b)
         print("Commit through Storage.commit/requireCommitted/committedRows "
               "instead of a store-local manifest.")
-    if bad or sessions or manifests:
+    reads = scan_schema_reads(root)
+    if reads:
+        print(f"checkpoint_lint: {len(reads)} TextIndex parquet read(s) "
+              f"without a declared schema:")
+        for b in reads:
+            print("  " + b)
+        print("Read index tables with .schema(TextIndex.Schemas(name)), or a "
+              "table of unknown schema through Storage.get.")
+    if bad or sessions or manifests or reads:
         return 1
     print("checkpoint_lint: clean (all truncation goes through "
           "Layout.truncateLineage; all sessions through GraftSession; all "
-          "manifests through Storage)")
+          "manifests through Storage; all TextIndex reads declare a schema)")
     return 0
 
 

@@ -101,7 +101,8 @@ fi
 # only GraftSession may call SparkSession.builder or .newSession(, and
 # nothing may patch experimental.extraStrategies. (3) One commit core: only
 # Storage (and the exempt Governance snapshot stores) may build a store's
-# manifest path.
+# manifest path. (4) Declared index schemas: no `.read...parquet(` without
+# `.schema(` in functions/TextIndex.scala.
 python3 tools/checkpoint_lint.py --selftest >/dev/null || {
   echo "pre-commit: checkpoint_lint SELFTEST failed — a planted violation"
   echo "no longer fails; fix tools/checkpoint_lint.py."
@@ -112,8 +113,10 @@ python3 tools/checkpoint_lint.py || {
   echo "route checkpointing through Layout.truncateLineage (and SCALE.md's"
   echo "audit), sessions through GraftSession.builder, child sessions"
   echo "through GraftSession.child (rule 2: no .newSession( outside"
-  echo "GraftSession), and store commits through Storage.commit (rule 3: no"
-  echo "manifest path outside Storage)."
+  echo "GraftSession), store commits through Storage.commit (rule 3: no"
+  echo "manifest path outside Storage), and TextIndex reads through their"
+  echo "declared schemas (rule 4: no .read.parquet( without .schema( in"
+  echo "functions/TextIndex.scala)."
   exit 1
 }
 exit 0
