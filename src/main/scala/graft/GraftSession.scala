@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.sources.{NioLocalFileSystem, NioLocalFs}
 
 /** Session factory — the only place in graft that builds a session.
   *
@@ -32,6 +33,18 @@ import org.apache.spark.sql.SparkSession
   * next and compile again (`x_bitmap_distinct` recompiled 10 classes on its
   * second run). `useIdInClassName` off names every stage class alike, so
   * equal stages share one entry; plans and their `*(n)` ids are unchanged.
+  *
+  * `file:` paths go through graft's fork-free local file system
+  * ([[graft.sources.NioRawLocalFileSystem]]): `fs.file.impl` for the
+  * `FileSystem` API (parquet reads and writes, the foreachBatch sink) and
+  * `fs.AbstractFileSystem.file.impl` for `FileContext` (Spark's streaming
+  * checkpoint manager and state store). Without the native `libhadoop`,
+  * Hadoop's own forks `chmod`, `ls` or `readlink` for its metadata calls,
+  * ~27 ms per checkpoint file; graft's makes them through `java.nio`, reads
+  * a status's permission, owner and group only when asked, and defers to
+  * Hadoop for a sticky bit, a symlink's own status or a platform without
+  * the `unix` attribute view. The keys are set here and nowhere else, so
+  * the tests, the benchmark and every main share the file system.
   */
 object GraftSession {
 
@@ -56,6 +69,8 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   private val children =
     new java.util.WeakHashMap[SparkSession, Map[Map[String, String], SparkSession]]()

@@ -85,7 +85,7 @@ object SketchStore {
   def appendSegments(rows: DataFrame, path: String): Unit = {
     val spark = rows.sparkSession
     val nOld  = Storage.committedRows(path)
-    val k = spark.read.parquet(s"$path/meta").head().getAs[Long]("k").toInt
+    val k = Storage.get(spark, s"$path/meta").head().getAs[Long]("k").toInt
     // Two delta passes, kept deliberately (r18 A/B): the dup check's
     // distinct-seg scan short-circuits through CollectLimit and shuffles
     // only ~|segments| rows, and both single-pass replacements measured
@@ -94,7 +94,7 @@ object SketchStore {
     // double-materializes the sketch rows, which costs more than the cheap
     // check pass saves). On a cluster where the delta scan dominates, the
     // staging variant is the right trade; see OPTIMIZATION_r18.md.
-    val existing = spark.read.parquet(s"$path/segments").select(col("seg")).distinct()
+    val existing = Storage.get(spark, s"$path/segments").select(col("seg")).distinct()
     val dup = rows.select(col("seg")).distinct()
       .join(existing, Seq("seg"), "left_semi").limit(1).count()
     require(dup == 0L,
@@ -115,8 +115,8 @@ object SketchStore {
     */
   def probeRange(spark: SparkSession, path: String, lo: Long, hi: Long): DataFrame = {
     Storage.requireCommitted(path)
-    val k = spark.read.parquet(s"$path/meta").head().getAs[Long]("k")
-    val merged = spark.read.parquet(s"$path/segments")
+    val k = Storage.get(spark, s"$path/meta").head().getAs[Long]("k")
+    val merged = Storage.get(spark, s"$path/segments")
       .filter(col("seg").between(lo, hi))
       .select(col("hv")).distinct()
       .orderBy(col("hv")).limit(k.toInt)

@@ -78,6 +78,8 @@ object Governance {
       li.filter(col("l_orderkey") % 2 === 1)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"), col("l_quantity"), col("l_discount"))
         .write.mode("overwrite").parquet(s"$SchemaBase/schema_v2")
+      // inferred on purpose: the footer-level schema merge is what this
+      // query checks against DuckDB's union_by_name
       s.read.option("mergeSchema", "true")
         .parquet(s"$SchemaBase/schema_v1", s"$SchemaBase/schema_v2")
         .groupBy(col("l_returnflag"))
@@ -430,10 +432,11 @@ object Governance {
       // and opens. The explicit count uses the session's shuffle-partition
       // knob (the parameterised scale setting, not a literal): without it
       // AQE would coalesce this small exchange to one writer task.
-      Tables.lineitem(s, d)
+      val monthly = Tables.lineitem(s, d)
         .select(col("l_orderkey"),
           expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("price_cents"),
           date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"))
+      monthly
         .repartition(
           // tolerate a non-numeric session value (AQE's "auto") — fall back
           // to defaultParallelism rather than NumberFormatException
@@ -442,7 +445,9 @@ object Governance {
           col("ship_month"))
         .write.mode("overwrite").partitionBy("ship_month")
         .parquet(s"$SchemaBase/fact_by_month")
-      val fact = s.read.parquet(s"$SchemaBase/fact_by_month")
+      // the written frame's schema (partition column last, as partitionBy
+      // lays it out): no footer job, and ship_month stays a string
+      val fact = s.read.schema(monthly.schema).parquet(s"$SchemaBase/fact_by_month")
       val dim = Tables.orders(s, d)
         .filter(col("o_orderpriority") === "1-URGENT" &&
           year(col("o_orderdate")) === 1995)
@@ -594,7 +599,7 @@ object Governance {
       val stObs = new org.apache.spark.sql.Observation()
       staged.observe(stObs, count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(s"$wap/staged")
-      val st = s.read.parquet(s"$wap/staged")
+      val st = s.read.schema(staged.schema).parquet(s"$wap/staged")
       // One aggregation serves both audit faces: the duplicate KEYS feed the
       // quarantine anti-join, and n_dup_quarantined is the sum of the dup
       // groups' counts (identical to the old semi-join re-count of staged —
@@ -613,7 +618,7 @@ object Governance {
       s.range(1).select(lit("published").as("state"))
         .write.mode("overwrite").parquet(s"$wap/published/manifest")
       require(Storage.exists(s"$wap/published/manifest"), "torn publish")
-      val published = s.read.parquet(s"$wap/published/data")
+      val published = s.read.schema(staged.schema).parquet(s"$wap/published/data")
       val nStaged   = stObs.get("n").asInstanceOf[Long]
       val nDup      = dup.agg(coalesce(sum(col("c")), lit(0L)).as("n")).head().getLong(0)
       val nOrphan   = st.join(orderKeys, st("l_orderkey") === orderKeys("o_orderkey"), "left_anti").count()
@@ -705,10 +710,10 @@ object Governance {
     (s, d) => {
       val base = s"$SchemaBase/vac"
       Storage.drop(base)
+      val rows = Tables.lineitem(s, d)
+        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
       (1 to 4).foreach { v =>
-        Tables.lineitem(s, d)
-          .filter(col("l_orderkey") % 4 < v)
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
+        rows.filter(col("l_orderkey") % 4 < v)
           .write.mode("overwrite").parquet(s"$base/snap=$v")
         // manifest LAST: the flip is what makes snapshot v live
         s.range(1).select(lit(v.toLong).as("live"))
@@ -727,7 +732,8 @@ object Governance {
         .map(_.stripPrefix("snap=").toLong).sorted
       // count each retained snapshot once; the live snapshot is always
       // retained, so its count is reused instead of re-scanned.
-      val rowsBySnap = retained.map(v => v -> s.read.parquet(s"$base/snap=$v").count()).toMap
+      val rowsBySnap =
+        retained.map(v => v -> s.read.schema(rows.schema).parquet(s"$base/snap=$v").count()).toMap
       val nRowsLive = rowsBySnap(live)
       val nRowsRetained = rowsBySnap.values.sum
       val nStray = Storage.ls(base).count(n => n.contains("__"))
@@ -786,7 +792,7 @@ object Governance {
         .withColumn("fmt", lit("csv"))
       val fromJson = s.read.schema(schema).json(s"$base/jsonl")
         .withColumn("fmt", lit("jsonl"))
-      val fromPq = s.read.parquet(s"$base/parquet").withColumn("fmt", lit("parquet"))
+      val fromPq = s.read.schema(schema).parquet(s"$base/parquet").withColumn("fmt", lit("parquet"))
       fromCsv.unionByName(fromJson).unionByName(fromPq)
         .groupBy(col("fmt"), col("lang"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),

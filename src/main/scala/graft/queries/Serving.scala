@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{AnnIndex, TextAnalysis, TextIndex}
+import graft.sources.Storage
 
 /** Round-12 family: index SERVING — the build-once/probe-many and
   * incremental-maintenance shapes that turn the in-query ANN/search
@@ -282,10 +283,12 @@ object Serving {
     "x_bpe_vocab_serve",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      graft.functions.BpeTrain
+      val merges = graft.functions.BpeTrain
         .mergesDf(s, graft.functions.BpeTrain.train(docs, "text", 8))
-        .write.mode("overwrite").parquet(BpeIdx)
-      val persisted = s.read.parquet(BpeIdx).orderBy("round").collect()
+      merges.write.mode("overwrite").parquet(BpeIdx)
+      // the written frame's schema: the table is rewritten on every call,
+      // so a memoized inference would miss every time
+      val persisted = s.read.schema(merges.schema).parquet(BpeIdx).orderBy("round").collect()
         .map(r => (r.getAs[String]("lsym"), r.getAs[String]("rsym"))).toSeq
       docs.select(
         col("doc_id"),
@@ -847,7 +850,7 @@ object Serving {
       val est = graft.functions.SketchStore.probeRange(s, KmvStoreApp, 0L, 999999L)
       val exact = Tables.lineitem(s, d)
         .agg(count_distinct(col("l_partkey")).as("exact_keys"))
-      val nSegs = s.read.parquet(s"$KmvStoreApp/segments")
+      val nSegs = Storage.get(s, s"$KmvStoreApp/segments")
         .agg(count_distinct(col("seg")).as("n_segments"))
       est.crossJoin(exact).crossJoin(nSegs) // 1×1×1
     },

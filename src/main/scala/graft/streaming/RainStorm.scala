@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The RainStorm engine (MP4) re-expressed as Structured Streaming.
   *
@@ -95,10 +96,18 @@ object RainStorm {
 
   /** F7 `quantify` over the streamed dest: final count per key = last (=max)
     * emitted running count (`QuantifyHydfsFile`, `core_process_utils.go:
-    * 164-236` merges buffers and counts unique records).
+    * 164-236` merges buffers and counts unique records). The dest holds what
+    * [[wordCount]] writes, so its schema is declared ([[DestSchema]]; the
+    * `batch_id` partition column still comes from the directory names), and
+    * reading it starts no footer job.
     */
   def quantify(spark: SparkSession, destDir: String): DataFrame =
-    spark.read.parquet(destDir).groupBy(col("word")).agg(max(col("cnt")).as("cnt"))
+    spark.read.schema(DestSchema).parquet(destDir)
+      .groupBy(col("word")).agg(max(col("cnt")).as("cnt"))
+
+  /** The rows [[wordCount]] writes to its dest. */
+  val DestSchema: StructType = StructType(Seq(
+    StructField("word", StringType), StructField("cnt", LongType)))
 
   /** Typed stateful count-by-key with running emission via
     * `mapGroupsWithState` — the direct analog of the reference's stateful

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.JobCount
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.TextIndex
+import graft.functions.{SketchStore, TextIndex}
 import graft.sources.Storage
+import graft.streaming.RainStorm
 
 /** A read of a table whose schema graft already knows starts no Spark job:
   * `Tables.table` memoizes the schema per session, path and file set, and
@@ -48,5 +49,25 @@ class SchemaReadSpec extends AnyFunSuite {
     // its schema once; after that only a rewrite re-infers it
     TextIndex.probeBm25(spark, idx, Seq("hash"), topK = 5).collect()
     assert(jobs(TextIndex.probeBm25(spark, idx, Seq("join", "stream", "window"), topK = 20))._2 == 0)
+  }
+
+  test("a second SketchStore probe of an unchanged store starts only its k read") {
+    val store = s"$dir/kmv"
+    SketchStore.build(spark.range(2000).select((col("id") % 4).as("seg"), col("id").as("hv")), k = 64, store)
+    SketchStore.probeRange(spark, store, 0, 3)
+    val (frame, n) = jobs(SketchStore.probeRange(spark, store, 0, 3))
+    assert(n == 1) // meta's one-row head(); both tables' schemas come from the memo
+    assert(frame.head().getAs[Long]("filled") == 64L)
+  }
+
+  test("building a RainStorm.quantify frame starts 0 jobs") {
+    import spark.implicits._
+    val dest = s"$dir/dest"
+    Storage.drop(dest)
+    Seq(("a", 1L), ("b", 2L)).toDF("word", "cnt").write.parquet(s"$dest/batch_id=0")
+    Seq(("a", 3L)).toDF("word", "cnt").write.parquet(s"$dest/batch_id=1")
+    val (frame, n) = jobs(RainStorm.quantify(spark, dest))
+    assert(n == 0)
+    assert(frame.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == Map("a" -> 3L, "b" -> 2L))
   }
 }

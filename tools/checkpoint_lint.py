@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Funnel lint: lineage truncation, session construction and store commits.
+"""Funnel lint: lineage truncation, sessions, store commits, reads, processes.
 
 Rule 1 — lineage truncation (round-16 verdict watch item #3).
 
@@ -39,9 +39,20 @@ separate `snap=N` parquet manifest that their oracles read.
 
 Rule 4 — declared index schemas. A parquet read without a schema starts a
 Spark job to re-read a footer on every call. The text index knows its
-tables' schemas (`TextIndex.Schemas`), so in functions/TextIndex.scala
-every `.read` chain that reaches `.parquet(` must pass `.schema(` on the
-way; a table of unknown schema goes through the memoized `Storage.get`.
+tables' schemas (`TextIndex.Schemas`), and the sketch store reads through
+the memoized `Storage.get`, so in functions/TextIndex.scala and
+functions/SketchStore.scala every `.read` chain that reaches `.parquet(`
+must pass `.schema(` on the way; a table of unknown schema goes through
+`Storage.get`.
+
+Rule 5 — no forked processes. A child process costs milliseconds (the
+fork, plus Hadoop's stderr reader thread), which is what Hadoop's local
+file system without libhadoop paid per metadata call before graft's
+fork-free `NioLocalFileSystem` replaced it. No main-source file may start a
+process (`ProcessBuilder`, `scala.sys.process`, `Runtime.getRuntime.exec`),
+and only GraftSession.scala may set `fs.file.impl` or
+`fs.AbstractFileSystem.file.impl`, so every session gets that file system
+and no main swaps it back. Comment lines are skipped.
 
 Usage: python3 tools/checkpoint_lint.py [src_root]
        python3 tools/checkpoint_lint.py --selftest
@@ -74,11 +85,16 @@ MANIFEST_PATH = re.compile(r"""/manifest\b|["']manifest["']""")
 COMMENT_LINE = re.compile(r"^\s*(//|/\*|\*)")
 
 
-SCHEMA_OWNER = "graft/functions/TextIndex.scala"
+SCHEMA_OWNERS = ("graft/functions/TextIndex.scala", "graft/functions/SketchStore.scala")
 # `.read`, then any calls but `.schema(...)`, then `.parquet(` — across lines.
 UNDECLARED_READ = re.compile(
     r"\.\s*read\b((?:\s*\.\s*(?!schema\b)\w+\s*\((?:[^()]|\([^()]*\))*\))*)"
     r"\s*\.\s*parquet\s*\(")
+
+
+PROCESS_START = re.compile(
+    r"\bProcessBuilder\b|\bsys\s*\.\s*process\b|\bRuntime\s*\.\s*getRuntime\b[\s().]*exec\b")
+FS_IMPL_KEY = re.compile(r"\bfs\.(?:AbstractFileSystem\.)?file\.impl\b")
 
 
 def scala_files(root: str):
@@ -116,7 +132,7 @@ def scan_manifests(root: str = "src/main/scala"):
 def scan_schema_reads(root: str = "src/main/scala"):
     bad = []
     for p in scala_files(root):
-        if not p.replace(os.sep, "/").endswith(SCHEMA_OWNER):
+        if not p.replace(os.sep, "/").endswith(SCHEMA_OWNERS):
             continue
         # blank comment lines, keeping line numbers, so prose may name the call
         text = "".join("\n" if COMMENT_LINE.match(l) else l
@@ -124,6 +140,18 @@ def scan_schema_reads(root: str = "src/main/scala"):
         for m in UNDECLARED_READ.finditer(text):
             i = text.count("\n", 0, m.start()) + 1
             bad.append(f"{p}:{i}: {' '.join(m.group(0).split())}")
+    return bad
+
+
+def scan_processes(root: str = "src/main/scala"):
+    bad = []
+    for p in scala_files(root):
+        factory = p.replace(os.sep, "/").endswith(FACTORY)
+        for i, line in enumerate(open(p, encoding="utf-8"), 1):
+            if COMMENT_LINE.match(line):
+                continue
+            if PROCESS_START.search(line) or (not factory and FS_IMPL_KEY.search(line)):
+                bad.append(f"{p}:{i}: {line.strip()}")
     return bad
 
 
@@ -235,6 +263,35 @@ def selftest():
         assert len(bad) == 2 and "TextIndex.scala:9" in bad[0] \
             and "TextIndex.scala:10" in bad[1], \
             f"selftest: planted schema-less TextIndex reads not caught: {bad}"
+        with open(os.path.join(fn, "SketchStore.scala"), "w") as f:
+            f.write("object SketchStore {\n"
+                    "  def m(s: SparkSession, p: String) = Storage.get(s, s\"$p/meta\")\n"
+                    "  def k(s: SparkSession, p: String) = s.read.parquet(s\"$p/meta\") }\n")
+        bad = scan_schema_reads(td)
+        assert len(bad) == 3 and any("SketchStore.scala:3" in b for b in bad), \
+            f"selftest: planted schema-less SketchStore read not caught: {bad}"
+        # rule 5: no process starts; only the factory names the fs impl keys
+        assert scan_processes(td) == [], \
+            f"selftest: clean tree flagged by rule 5: {scan_processes(td)}"
+        with open(os.path.join(g, "GraftSession.scala"), "a") as f:
+            f.write("object Fs { val k = \"spark.hadoop.fs.file.impl\" }\n")
+        with open(os.path.join(d, "Forks.scala"), "w") as f:
+            f.write("/** Never use ProcessBuilder or sys.process here. */\n"
+                    "object Forks { def ls(d: String) = new ProcessBuilder(\"ls\", d).start() }\n")
+        with open(os.path.join(d, "Swap.scala"), "w") as f:
+            f.write("// prose naming fs.AbstractFileSystem.file.impl is fine\n"
+                    "object Swap { def f(c: Configuration) =\n"
+                    "  c.set(\"fs.AbstractFileSystem.file.impl\", \"x\") }\n")
+        bad = scan_processes(td)
+        assert len(bad) == 2 and any("Forks.scala:2" in b for b in bad) \
+            and any("Swap.scala:3" in b for b in bad), \
+            f"selftest: planted process start / fs impl override not caught: {bad}"
+        for stmt in ("import scala.sys.process._", "Runtime.getRuntime().exec(\"ls\")",
+                     "Runtime.getRuntime.exec(Array(\"ls\"))"):
+            with open(os.path.join(d, "Forks.scala"), "w") as f:
+                f.write(f"object Forks {{ {stmt} }}\n")
+            assert any("Forks.scala:1" in b for b in scan_processes(td)), \
+                f"selftest: planted `{stmt}` not caught"
     print("checkpoint_lint selftest: OK (planted sites caught)")
     return 0
 
@@ -269,17 +326,27 @@ def main():
               "instead of a store-local manifest.")
     reads = scan_schema_reads(root)
     if reads:
-        print(f"checkpoint_lint: {len(reads)} TextIndex parquet read(s) "
+        print(f"checkpoint_lint: {len(reads)} TextIndex or SketchStore parquet read(s) "
               f"without a declared schema:")
         for b in reads:
             print("  " + b)
         print("Read index tables with .schema(TextIndex.Schemas(name)), or a "
               "table of unknown schema through Storage.get.")
-    if bad or sessions or manifests or reads:
+    procs = scan_processes(root)
+    if procs:
+        print(f"checkpoint_lint: {len(procs)} process start(s) or file-system "
+              f"override(s):")
+        for b in procs:
+            print("  " + b)
+        print("Do the work in-process (java.nio for file metadata), and leave "
+              "fs.file.impl / fs.AbstractFileSystem.file.impl to GraftSession.")
+    if bad or sessions or manifests or reads or procs:
         return 1
     print("checkpoint_lint: clean (all truncation goes through "
           "Layout.truncateLineage; all sessions through GraftSession; all "
-          "manifests through Storage; all TextIndex reads declare a schema)")
+          "manifests through Storage; no schema-less parquet read in TextIndex "
+          "or SketchStore; no process starts; only GraftSession sets the "
+          "file-system impl)")
     return 0
 
 

@@ -102,7 +102,10 @@ fi
 # nothing may patch experimental.extraStrategies. (3) One commit core: only
 # Storage (and the exempt Governance snapshot stores) may build a store's
 # manifest path. (4) Declared index schemas: no `.read...parquet(` without
-# `.schema(` in functions/TextIndex.scala.
+# `.schema(` in functions/TextIndex.scala or functions/SketchStore.scala.
+# (5) No forked processes: no ProcessBuilder, scala.sys.process or
+# Runtime.getRuntime.exec in main sources, and only GraftSession may set
+# fs.file.impl / fs.AbstractFileSystem.file.impl.
 python3 tools/checkpoint_lint.py --selftest >/dev/null || {
   echo "pre-commit: checkpoint_lint SELFTEST failed — a planted violation"
   echo "no longer fails; fix tools/checkpoint_lint.py."
@@ -114,9 +117,12 @@ python3 tools/checkpoint_lint.py || {
   echo "audit), sessions through GraftSession.builder, child sessions"
   echo "through GraftSession.child (rule 2: no .newSession( outside"
   echo "GraftSession), store commits through Storage.commit (rule 3: no"
-  echo "manifest path outside Storage), and TextIndex reads through their"
-  echo "declared schemas (rule 4: no .read.parquet( without .schema( in"
-  echo "functions/TextIndex.scala)."
+  echo "manifest path outside Storage), TextIndex and SketchStore reads"
+  echo "through declared schemas or Storage.get (rule 4: no .read.parquet("
+  echo "without .schema( in functions/TextIndex.scala or SketchStore.scala),"
+  echo "and file metadata in-process (rule 5: no ProcessBuilder, sys.process"
+  echo "or Runtime.exec in main sources; only GraftSession sets fs.file.impl"
+  echo "or fs.AbstractFileSystem.file.impl)."
   exit 1
 }
 exit 0
