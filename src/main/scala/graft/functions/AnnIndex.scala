@@ -343,17 +343,16 @@ object AnnIndex {
     * oracle) can verify the encode row-level against the saved model tables.
     * Cost is one map-side projection over the NEW rows only — the existing
     * index is untouched, which is the whole point at 100 TB: ingest appends,
-    * periodic rebuilds re-center drifted codebooks.
+    * periodic rebuilds re-center drifted codebooks. An id already in the
+    * codes table, live or tombstoned, is refused ([[Storage.requireNewIds]]).
     */
   def appendIvfPq(
       spark: SparkSession, indexPath: String, newVecs: DataFrame,
       idCol: String, vecCol: String
   ): DataFrame = {
     val nOld = Storage.committedRows(indexPath)
-    // codes rows are unique by id; a tombstoned id still has its old code
-    // row physically present, so re-appending it would either stay invisible
-    // (anti-joined forever) or duplicate
-    Storage.requireNotTombstoned(indexPath, newVecs, idCol, "id")
+    Storage.requireNewIds(
+      indexPath, Storage.get(spark, codesPath(indexPath)), "id", newVecs, idCol)
     val model    = readModel(spark, indexPath)
     val appended = encode(residuals(newVecs, idCol, vecCol, model.coarse), model)
     // append is its own transaction: a crash mid-append leaves a

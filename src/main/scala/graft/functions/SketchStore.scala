@@ -79,8 +79,9 @@ object SketchStore {
   /** Append NEW segments' sketches — O(delta) work, the old segments are
     * never re-read. Segments are append-once: re-sketching a present
     * segment is refused (its rows are already final under the build's
-    * bottom-k; a changed segment means a rebuild, the [[TextIndex]]
-    * re-add-refusal discipline). One commit.
+    * bottom-k; a changed segment means a rebuild) by
+    * [[Storage.requireNewIds]], the guard of every store's append. One
+    * commit.
     */
   def appendSegments(rows: DataFrame, path: String): Unit = {
     val spark = rows.sparkSession
@@ -94,11 +95,7 @@ object SketchStore {
     // double-materializes the sketch rows, which costs more than the cheap
     // check pass saves). On a cluster where the delta scan dominates, the
     // staging variant is the right trade; see OPTIMIZATION_r18.md.
-    val existing = Storage.get(spark, s"$path/segments").select(col("seg")).distinct()
-    val dup = rows.select(col("seg")).distinct()
-      .join(existing, Seq("seg"), "left_semi").limit(1).count()
-    require(dup == 0L,
-      "segment already present: segments are append-once (rebuild to refresh)")
+    Storage.requireNewIds(path, Storage.get(spark, s"$path/segments"), "seg", rows, "seg")
     Storage.commit(path) {
       val (sketches, n) = Storage.observedCount(segmentSketches(rows, k))
       Storage.append(sketches, s"$path/segments")

@@ -9,14 +9,19 @@ import graft.functions.Layout.LineageOps
   * twin of [[AnnIndex]] (r11 verdict's serving discipline): [[build]] writes
   * the four index tables as parquet (postings hive-partitioned by TOKEN HASH
   * BUCKET so a probe prunes to its terms' bucket directories — directory-
-  * level data skipping, the 100 TB serving shape), and
-  * [[probeBm25]] scores strictly FROM THE PERSISTED TABLES — no corpus scan,
-  * no re-tokenization, model scalars (n_docs, avgdl) read from the one-row
-  * corpus table of LIVE totals (maintained by every write verb) so every
-  * probe — and the DuckDB oracle replaying it over `read_parquet` of the
-  * same artifacts — sees bit-equal global statistics. Every write verb is
-  * one [[graft.sources.Storage.commit]] transaction; its manifest holds the
+  * level data skipping, the 100 TB serving shape), and every probe scores
+  * strictly FROM THE PERSISTED TABLES — no corpus scan, no re-tokenization,
+  * model scalars (n_docs, avgdl) read from the one-row corpus table of LIVE
+  * totals (maintained by every write verb) so every probe — and the DuckDB
+  * oracle replaying it over `read_parquet` of the same artifacts — sees
+  * bit-equal global statistics. Every write verb is one
+  * [[graft.sources.Storage.commit]] transaction; its manifest holds the
   * physical docs-table row count.
+  *
+  * The three probes ([[probeBm25]], [[probeBm25Many]], [[probeBm25Stream]])
+  * share one scoring path, [[scoredPostings]]: the live (tok, doc_id, sq)
+  * rows of their terms, tombstone-corrected, so each serves a tombstoned
+  * index as a rebuild without the deleted docs would.
   *
   * The four tables have fixed schemas ([[Schemas]]), declared on every
   * read, so no verb or probe starts a Spark job to re-read a parquet
@@ -24,9 +29,10 @@ import graft.functions.Layout.LineageOps
   * type. Tombstones are read through the memoized
   * [[graft.sources.Storage.get]].
   *
-  * Scale: a probe lists and touches only its |terms| posting BUCKETS, plus
-  * a doc-length join keyed on doc_id; df/corpus stats are broadcast-sized.
-  * Appending a document batch is the posting-delta merge proven by
+  * Scale: a batch probe lists and touches only its |terms| posting BUCKETS,
+  * plus a doc-length join keyed on doc_id; df/corpus stats are
+  * broadcast-sized. The stream probe, whose terms arrive later, reads every
+  * bucket. Appending a document batch is the posting-delta merge proven by
   * `x_inverted_index_incremental`.
   */
 object TextIndex {
@@ -101,16 +107,73 @@ object TextIndex {
   }
 
   /** Quantized per-(doc, term) BM25 contribution over the `df`, `tf` and `dl`
-    * columns and the corpus scalars (`nDocs` as a double).
+    * columns and the corpus row's `n_docs` and `avgdl`.
     */
-  private def bm25Sq(nDocs: Column, avgdl: Column): Column = floor(
-    log((nDocs - col("df").cast("double") + 0.5) /
+  private def bm25Sq: Column = floor(
+    log((col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
           (col("df").cast("double") + 0.5) + 1.0) *
       (col("tf").cast("double") * (K1 + 1.0)) /
       (col("tf").cast("double") + lit(K1) *
-        (lit(1.0 - B) + lit(B) * col("dl").cast("double") / avgdl)) *
+        (lit(1.0 - B) + lit(B) * col("dl").cast("double") / col("avgdl"))) *
       1e6 + 0.5
   ).cast("long")
+
+  /** The one scoring path of every probe: `(tok, doc_id, sq)`, each live
+    * posting of `terms` (of every term when None) with its quantized BM25
+    * contribution. Known terms list only their posting buckets
+    * ([[termPostings]]). On a tombstoned index the live postings come from
+    * an anti-join on the broadcast tombstone set and each term's df drops
+    * by its tombstoned postings, so scores stay bit-equal to a rebuild
+    * without the deleted docs. The tombstones are those in place when the
+    * frame is built.
+    */
+  private def scoredPostings(
+      spark: SparkSession, indexPath: String, terms: Option[Seq[String]]): DataFrame = {
+    Storage.requireCommitted(indexPath)
+    val postAll  = terms.fold(table(spark, indexPath, "postings"))(termPostings(spark, indexPath, _))
+    val stats0   = table(spark, indexPath, "stats")
+    val statsAll = terms.fold(stats0)(ts => stats0.filter(col("tok").isin(ts: _*)))
+    val (postings, stats) = Storage.tombstones(spark, indexPath) match {
+      case None => (postAll, statsAll)
+      case Some(tomb) =>
+        // per-term live df = stored df − tombstoned postings of that term
+        val dfCorr = postAll
+          .join(broadcast(tomb), Seq("doc_id"), "left_semi")
+          .groupBy(col("tok")).agg(count(lit(1)).as("df_dead"))
+        (postAll.join(broadcast(tomb), Seq("doc_id"), "left_anti"),
+          statsAll.join(dfCorr, Seq("tok"), "left_outer")
+            .select(col("tok"), (col("df") - coalesce(col("df_dead"), lit(0L))).as("df")))
+    }
+    postings
+      .join(broadcast(stats), "tok")
+      .join(table(spark, indexPath, "docs"), "doc_id")
+      .crossJoin(broadcast(table(spark, indexPath, "corpus"))) // one model row
+      .select(col("tok"), col("doc_id"), bm25Sq.as("sq"))
+  }
+
+  /** The one postings writer of [[build]] and [[append]] (a `delta`):
+    * tokenize `docs`, count each (tok, doc_id) pair and write the rows to
+    * their token-hash bucket directories. Repartitioning into exactly
+    * PostingBuckets partitions gives each bucket one writer task and one
+    * file: unclustered, the write emits (tasks × buckets) files, 2 048 at 32
+    * tasks (guide §6 small-files); without the count, AQE coalesces a tiny
+    * exchange to one serial writer. Returns the rows, pinned for a delta,
+    * whose docs and stats deltas derive from them.
+    */
+  private def writePostings(
+      docs: DataFrame, idCol: String, textCol: String, indexPath: String, delta: Boolean
+  ): DataFrame = {
+    val grouped = docs
+      .select(col(idCol).cast("long").as("doc_id"),
+        explode(TextAnalysis.tokens(col(textCol))).as("tok"))
+      .groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
+    val postings = if (delta) grouped.truncateLineage() else grouped
+    postings.withColumn("bucket", bucketExpr(col("tok")))
+      .repartition(PostingBuckets, col("bucket"))
+      .write.mode(if (delta) "append" else "overwrite").partitionBy("bucket")
+      .parquet(s"$indexPath/postings")
+    postings
+  }
 
   /** The one corpus-row writer: exact integer totals, and avgdl from the same
     * sum/count division on every path, 0.0 for an empty corpus (never NaN).
@@ -139,9 +202,6 @@ object TextIndex {
     // a rebuild resets delete state — stale tombstones from a prior
     // generation would corrupt the fresh index's corrections
     Storage.clearTombstones(indexPath)
-    val tok = docs.select(col(idCol).cast("long").as("doc_id"),
-      explode(TextAnalysis.tokens(col(textCol))).as("tok"))
-    val postings = tok.groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
     // Tokenize ONCE: docs/stats/corpus derive from the postings ARTIFACT
     // (read-your-writes), not from the tokenization lineage — the old build
     // re-ran the explode+groupBy for each derived table (4 corpus-text
@@ -149,19 +209,7 @@ object TextIndex {
     // the derivations through the written parquet truncates lineage via the
     // artifact itself — no checkpoint, cluster-safe, and the derived tables
     // are byte-identical (same aggregation over the same rows).
-    // repartition(bucket) first: the dynamic-partition write otherwise emits
-    // (write tasks × touched buckets) files — 2 048 at 32 tasks × 64 buckets
-    // — where clustering by bucket bounds it near the bucket count (guide §6
-    // small-files), which every later postings scan (probes AND the DuckDB
-    // oracle's read_parquet) pays for.
-    // Explicit PostingBuckets partition count (a layout constant, not a core
-    // count): repartition(col) alone is AQE-coalescible and a tiny exchange
-    // collapses to one writer task, serializing the encode; with the count
-    // pinned, each bucket gets its own writer — parallel encode, exactly
-    // ≤ PostingBuckets files.
-    postings.withColumn("bucket", bucketExpr(col("tok")))
-      .repartition(PostingBuckets, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexPath/postings")
+    writePostings(docs, idCol, textCol, indexPath, delta = false)
     val post = table(spark, indexPath, "postings")
     // corpus totals ride the docs write as an Observation (exact integer
     // count/sum merged from the write's own tasks) — the corpus row and the
@@ -207,34 +255,23 @@ object TextIndex {
   }
 
   /** Batched MULTI-query probe — the offline-serving shape (score thousands
-    * of queries in one pass): `queries` is a (query_id, tok) frame; its
-    * term set broadcasts onto the postings scan (partition pruning via the
-    * dynamic-pruning filter the broadcast join plants), per-(query, doc)
-    * scores sum each query's matched terms, top-k ranks per query. One pass
-    * over the matched postings whatever the query count — never a probe
-    * loop.
+    * of queries in one pass): `queries` is a (query_id, tok) frame. Its
+    * distinct terms are collected on the driver (no job for a local frame),
+    * so the scan lists and reads only their posting buckets, as
+    * [[probeBm25]]'s does; the queries then broadcast-join the scored
+    * postings, per-(query, doc) scores sum each query's matched terms, and
+    * top-k ranks per query. One pass over the matched postings whatever the
+    * query count — never a probe loop.
     */
   def probeBm25Many(
       spark: SparkSession, indexPath: String, queries: DataFrame, topK: Int = 10
   ): DataFrame = {
-    Storage.requireCommitted(indexPath)
-    require(!Storage.hasTombstones(indexPath),
-      s"text index at $indexPath has tombstoned docs — compact it, or probe " +
-        "single queries via probeBm25")
-    val postings = table(spark, indexPath, "postings")
-    val stats    = table(spark, indexPath, "stats")
-    val docs     = table(spark, indexPath, "docs")
-    val corpus   = table(spark, indexPath, "corpus")
-    val sq       = bm25Sq(col("n_docs").cast("double"), col("avgdl"))
-    val scored = postings
-      .join(broadcast(queries.select(col("query_id"), col("tok"))), "tok")
-      .join(broadcast(stats), "tok")
-      .join(docs, "doc_id")
-      .crossJoin(broadcast(corpus))
-      .select(col("query_id"), col("doc_id"), sq.as("sq"))
+    val qs    = queries.select(col("query_id"), col("tok"))
+    val terms = qs.select(col("tok")).collect().map(_.getString(0)).distinct.toSeq
+    scoredPostings(spark, indexPath, Some(terms))
+      .join(broadcast(qs), "tok")
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("sq")).as("score"))
-    scored
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("query_id")).orderBy(desc("score"), col("doc_id"))))
@@ -244,35 +281,23 @@ object TextIndex {
 
   /** STREAMING BM25 probe — the online-serving face of [[probeBm25Many]]
     * (parity with [[AnnIndex.probeIvfPqStream]]): a stream of
-    * (query_id, tok, ts) rows is answered against the persisted postings.
-    * The per-(doc, term) quantized BM25 contribution `sq` is QUERY-
-    * INDEPENDENT, so the static side precomputes one (tok, doc_id, sq)
-    * frame from the artifact tables (corpus scalars read once, driver-side);
-    * each micro-batch's terms stream-static join it on `tok` — when the
-    * planner broadcasts the per-batch term set, dynamic partition pruning
-    * skips the unmatched posting directories, the same data-skipping the
-    * batch probe gets from `isin`. A watermarked event-time window then
-    * collects each query's matched (doc, tok, sq) set — `collect_set`, so a
-    * term replayed within the window never double-counts — and an in-row
-    * dedup-sum-rank keeps the top-k (score desc, doc_id asc — the batch tie
-    * rule). Closed windows equal [[probeBm25Many]] for the same query set
-    * (TextIndexSpec pins it across a multi-batch replay). State per
-    * in-flight query is its matched candidate set, bounded by the watermark.
+    * (query_id, tok, ts) rows stream-static joins the scored postings of
+    * every term (`sq` is query-independent; the terms are not known up
+    * front, so every bucket is read), with the tombstones in place when the
+    * query starts. A watermarked event-time window collects each query's
+    * matched (doc, tok, sq) set — `collect_set`, so a term replayed within
+    * the window never double-counts — and an in-row dedup-sum-rank keeps the
+    * top-k (score desc, doc_id asc — the batch tie rule). Closed windows
+    * equal [[probeBm25Many]] for the same query set (TextIndexSpec pins it
+    * on a fresh and on a tombstoned index). State per in-flight query is its
+    * matched candidate set, bounded by the watermark.
     */
   def probeBm25Stream(
       spark: SparkSession, indexPath: String, queryStream: DataFrame,
       qidCol: String, tokCol: String, tsCol: String, topK: Int = 10,
       watermark: String = "10 minutes", windowLen: String = "1 hour"
   ): DataFrame = {
-    Storage.requireCommitted(indexPath)
-    require(!Storage.hasTombstones(indexPath),
-      s"text index at $indexPath has tombstoned docs — compact it before streaming probes")
-    val corpus = table(spark, indexPath, "corpus").head()
-    val sq = bm25Sq(lit(corpus.getAs[Long]("n_docs").toDouble), lit(corpus.getAs[Double]("avgdl")))
-    val static = table(spark, indexPath, "postings")
-      .join(broadcast(table(spark, indexPath, "stats")), "tok")
-      .join(table(spark, indexPath, "docs"), "doc_id")
-      .select(col("tok"), col("doc_id"), sq.as("sq"))
+    val static = scoredPostings(spark, indexPath, None)
     val routed = queryStream
       .withWatermark(tsCol, watermark)
       .select(col(qidCol).cast("long").as("query_id"), col(tokCol).as("tok"), col(tsCol))
@@ -304,22 +329,15 @@ object TextIndex {
     * integer sum/count division as the build path, so append-then-probe is
     * bit-equal to rebuild-then-probe (pinned in TextIndexSpec). Cost is
     * O(delta + vocabulary), never a corpus re-tokenize. Runs as its own
-    * [[graft.sources.Storage.commit]].
+    * [[graft.sources.Storage.commit]]. An id already in the docs table, live
+    * or tombstoned, is refused ([[graft.sources.Storage.requireNewIds]]).
     */
   def append(docs: DataFrame, idCol: String, textCol: String, indexPath: String): Unit = {
     val spark = docs.sparkSession
     val nOld  = Storage.committedRows(indexPath)
-    // re-adding a tombstoned id would resurrect its OLD postings (still
-    // physically present) alongside the new ones
-    Storage.requireNotTombstoned(indexPath, docs, idCol, "doc_id")
+    Storage.requireNewIds(indexPath, table(spark, indexPath, "docs"), "doc_id", docs, idCol)
     Storage.commit(indexPath) {
-      val tok = docs.select(col(idCol).cast("long").as("doc_id"),
-        explode(TextAnalysis.tokens(col(textCol))).as("tok"))
-      val newPost = tok.groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
-        .truncateLineage()
-      newPost.withColumn("bucket", bucketExpr(col("tok")))
-        .repartition(PostingBuckets, col("bucket")) // one delta file per bucket
-        .write.mode("append").partitionBy("bucket").parquet(s"$indexPath/postings")
+      val newPost = writePostings(docs, idCol, textCol, indexPath, delta = true)
       // delta totals ride the docs append as an Observation — drops the
       // separate newDl.agg job the old path ran (same exact integers: the
       // observed count/sum cover exactly the appended rows).
@@ -396,38 +414,15 @@ object TextIndex {
 
   /** Okapi BM25 top-k over the saved index (same TREC-3 formulation and
     * 1e-6 per-(doc,term) quantization as [[QualityLM.bm25TopK]] — the spec
-    * pins probe == direct-corpus ranking row-for-row). On a tombstoned index
-    * the live postings come from an anti-join on the broadcast tombstone set
-    * and each probed term's df drops by its tombstoned postings, so scores
-    * stay bit-equal to a rebuild without the deleted docs.
+    * pins probe == direct-corpus ranking row-for-row), tombstone-corrected
+    * through [[scoredPostings]].
     */
   def probeBm25(
       spark: SparkSession, indexPath: String, terms: Seq[String], topK: Int = 20
-  ): DataFrame = {
-    Storage.requireCommitted(indexPath)
-    val postAll  = termPostings(spark, indexPath, terms)
-    val statsAll = table(spark, indexPath, "stats").filter(col("tok").isin(terms: _*))
-    val (postings, stats) = Storage.tombstones(spark, indexPath) match {
-      case None => (postAll, statsAll)
-      case Some(tomb) =>
-        // per-term live df = stored df − tombstoned postings of that term
-        val dfCorr = postAll
-          .join(broadcast(tomb), Seq("doc_id"), "left_semi")
-          .groupBy(col("tok")).agg(count(lit(1)).as("df_dead"))
-        (postAll.join(broadcast(tomb), Seq("doc_id"), "left_anti"),
-          statsAll.join(dfCorr, Seq("tok"), "left_outer")
-            .select(col("tok"), (col("df") - coalesce(col("df_dead"), lit(0L))).as("df")))
-    }
-    val docs   = table(spark, indexPath, "docs")
-    val corpus = table(spark, indexPath, "corpus")
-    postings
-      .join(broadcast(stats), "tok")
-      .join(docs, "doc_id")
-      .crossJoin(broadcast(corpus)) // one model row
-      .select(col("doc_id"), bm25Sq(col("n_docs").cast("double"), col("avgdl")).as("sq"))
+  ): DataFrame =
+    scoredPostings(spark, indexPath, Some(terms))
       .groupBy(col("doc_id"))
       .agg(sum(col("sq")).as("score"))
       .orderBy(desc("score"), col("doc_id"))
       .limit(topK)
-  }
 }

@@ -374,10 +374,11 @@ object Serving {
   /** Batched multi-query BM25 serving ([[TextIndex.probeBm25Many]]): three
     * query term-sets scored in ONE pass over the matched postings — the
     * offline-scoring shape (a query table of thousands rides the same
-    * plan). The query terms broadcast onto the postings scan; per-(query,
-    * doc) partial sums and a per-query top-k window finish it. Oracle
-    * replays the same join/score/rank from a VALUES query table over the
-    * persisted artifacts.
+    * plan). The query terms, collected on the driver, prune the postings
+    * scan to their bucket directories; the query table broadcast-joins the
+    * scored postings, and per-(query, doc) partial sums and a per-query
+    * top-k window finish it. Oracle replays the same join/score/rank from a
+    * VALUES query table over the persisted artifacts.
     */
   val searchIndexMultiprobe = Q(
     "x_search_index_multiprobe",

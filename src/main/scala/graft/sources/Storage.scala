@@ -169,10 +169,8 @@ object Storage {
     (df.observe(obs, count(lit(1)).as("n")), () => obs.get("n").asInstanceOf[Long])
   }
 
-  def hasTombstones(store: String): Boolean = exists(tombstonesPath(store))
-
   def tombstones(spark: SparkSession, store: String): Option[DataFrame] =
-    if (hasTombstones(store)) Some(get(spark, tombstonesPath(store))) else None
+    if (exists(tombstonesPath(store))) Some(get(spark, tombstonesPath(store))) else None
 
   /** A rebuild or compaction resets delete state. */
   def clearTombstones(store: String): Unit = drop(tombstonesPath(store))
@@ -193,16 +191,19 @@ object Storage {
     fresh
   }
 
-  /** Refuse an append that re-adds a tombstoned id: its old rows are still
-    * physically present, so it would be shadowed or duplicated — compact first.
+  /** Refuse an append of an id already in the store's physical id table:
+    * `present`'s `key` column (docs.doc_id, codes.id, segments.seg). A live
+    * id would get a second row, counted twice; a tombstoned one keeps its
+    * old rows until a compaction, so it would come back beside them. One
+    * check covers both. The semi-join stops at its first match.
     */
-  def requireNotTombstoned(store: String, rows: DataFrame, idCol: String, key: String): Unit =
-    tombstones(rows.sparkSession, store).foreach { tomb =>
-      val clash = tomb.join(rows.select(col(idCol).cast("long").as(key)), Seq(key), "left_semi")
-        .count()
-      require(clash == 0L, s"$clash appended id(s) are tombstoned in $store — compact " +
-        "the store before re-adding a deleted id")
-    }
+  def requireNewIds(
+      store: String, present: DataFrame, key: String, rows: DataFrame, idCol: String): Unit = {
+    val clash = rows.select(col(idCol).cast("long").as(key)).distinct()
+      .join(present.select(col(key)).distinct(), Seq(key), "left_semi").limit(1).count()
+    require(clash == 0L, s"an appended $key is already present in $store, live or " +
+      "tombstoned: ids are append-once — compact the store before re-adding a deleted id")
+  }
 
   /** The compact gate: the pinned tombstone table when there is one and it
     * holds at least `minFraction` of the committed rows, else None — the

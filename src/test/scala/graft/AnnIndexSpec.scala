@@ -59,10 +59,34 @@ class AnnIndexSpec extends AnyFunSuite {
     // The model tables are frozen — no retrain on append.
     assert(Storage.get(spark, s"$path/centroids").collect().toSet == centBefore)
     assert(Storage.get(spark, s"$path/codebooks").collect().toSet == cbBefore)
-    // Encode is deterministic: re-encoding the same vectors yields the same rows.
-    val again = AnnIndex.appendIvfPq(spark, path, nu, "vec_id", "embedding")
+    // Encode is deterministic: the same vectors appended to a second index
+    // built the same way encode to the same rows.
+    val twin = freshPath("append_twin")
+    AnnIndex.buildIvfPq(base, "vec_id", "embedding",
+      dim = 64, nCells = 8, m = 4, ksub = 8, iters = 2, indexPath = twin)
+    val again = AnnIndex.appendIvfPq(spark, twin, nu, "vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
     assert(again == appended)
+  }
+
+  test("re-appending a live vector id is refused; the index still probes its pre-append answer") {
+    val path = freshPath("live_readd")
+    AnnIndex.buildIvfPq(embs, "vec_id", "embedding",
+      dim = 64, nCells = 8, m = 4, ksub = 8, iters = 2, indexPath = path)
+    def probe() = AnnIndex.probeIvfPq(spark, path, embs.filter(col("vec_id") < 4),
+      "vec_id", "embedding", nProbe = 8, k = 10)
+      .select("query_id", "neighbor_id", "rank", "adc_dist2")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
+    val before = probe()
+    assert(before.nonEmpty)
+    // a second code row would return the neighbour twice
+    val e = intercept[IllegalArgumentException] {
+      AnnIndex.appendIvfPq(spark, path, embs.filter(col("vec_id") === before.head._2),
+        "vec_id", "embedding")
+    }
+    assert(e.getMessage.contains("already present"))
+    assert(probe() == before)
+    assert(Storage.committedRows(path) == embs.count())
   }
 
   test("appended vectors are probe-visible; rebuild replaces rather than accumulates") {

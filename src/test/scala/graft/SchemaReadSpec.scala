@@ -10,7 +10,8 @@ import graft.streaming.RainStorm
 /** A read of a table whose schema graft already knows starts no Spark job:
   * `Tables.table` memoizes the schema per session, path and file set, and
   * a `TextIndex` probe declares its tables' schemas and lists only its
-  * terms' posting buckets.
+  * terms' posting buckets, whose terms a batched probe collects from a
+  * local query frame without a job.
   */
 class SchemaReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -49,6 +50,18 @@ class SchemaReadSpec extends AnyFunSuite {
     // its schema once; after that only a rewrite re-infers it
     TextIndex.probeBm25(spark, idx, Seq("hash"), topK = 5).collect()
     assert(jobs(TextIndex.probeBm25(spark, idx, Seq("join", "stream", "window"), topK = 20))._2 == 0)
+  }
+
+  test("building a probeBm25Many frame from a local query frame starts 0 jobs") {
+    import spark.implicits._
+    val idx  = s"$dir/index_many"
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    TextIndex.build(docs, "doc_id", "text", idx)
+    TextIndex.deleteDocs(spark, idx, docs.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
+    // the first read of the rewritten tombstone table infers its schema once
+    TextIndex.probeBm25(spark, idx, Seq("hash"), topK = 5).collect()
+    val queries = Seq((1L, "hash"), (1L, "join"), (2L, "stream")).toDF("query_id", "tok")
+    assert(jobs(TextIndex.probeBm25Many(spark, idx, queries, topK = 10))._2 == 0)
   }
 
   test("a second SketchStore probe of an unchanged store starts only its k read") {

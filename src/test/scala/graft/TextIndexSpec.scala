@@ -101,12 +101,14 @@ class TextIndexSpec extends AnyFunSuite {
     assert(viaLive == viaRebuild,
       "append after delete must fold the delta into the LIVE corpus stats " +
         "(stale n_docs/avgdl breaks bit-equality with a rebuild)")
-    // multi-query probe has no live path — it must refuse, not serve stale
-    val eMany = intercept[IllegalArgumentException] {
-      TextIndex.probeBm25Many(spark, daIdx,
-        { import spark.implicits._; Seq((1L, "hash")).toDF("query_id", "tok") })
-    }
-    assert(eMany.getMessage.contains("tombstoned"))
+    // the batched probe scores the same live state
+    val queries = { import spark.implicits._
+      Seq((1L, "hash"), (1L, "join"), (2L, "stream")).toDF("query_id", "tok") }
+    def many(p: String) = TextIndex.probeBm25Many(spark, p, queries, topK = 10).collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"), r.getAs[Long]("score"))).toSet
+    val manyLive = many(daIdx)
+    assert(manyLive.nonEmpty && manyLive == many(rbIdx),
+      "a batched probe of a tombstoned index must equal one of a rebuild without the deleted docs")
     // re-adding a tombstoned id would resurrect its old postings — refused
     val eReadd = intercept[IllegalArgumentException] {
       TextIndex.append(docs.filter(col("doc_id") % 6 === 0).limit(1), "doc_id", "text", daIdx)
@@ -114,6 +116,25 @@ class TextIndexSpec extends AnyFunSuite {
     assert(eReadd.getMessage.contains("tombstoned"))
     // the refused append must not have torn the index
     assert(TextIndex.probeBm25(spark, daIdx, terms, topK = 20).count() > 0)
+  }
+
+  test("re-appending a live doc id is refused; the index still serves its pre-append answer") {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.Storage
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    val lIdx = "/tmp/graft_index/text_spec_live_readd"
+    TextIndex.build(docs, "doc_id", "text", lIdx)
+    def probe() = TextIndex.probeBm25(spark, lIdx, terms, topK = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val before = probe()
+    assert(before.nonEmpty)
+    // a second docs row and second postings would double the top doc's score
+    val e = intercept[IllegalArgumentException] {
+      TextIndex.append(docs.filter(col("doc_id") === before.head._1), "doc_id", "text", lIdx)
+    }
+    assert(e.getMessage.contains("already present"))
+    assert(probe() == before)
+    assert(Storage.committedRows(lIdx) == docs.count())
   }
 
   test("compaction drops tombstoned state physically and equals a rebuild") {
@@ -262,13 +283,17 @@ class TextIndexSpec extends AnyFunSuite {
     assert(TextIndex.probeBm25(spark, idx, terms, topK = 20).count() > 0)
   }
 
-  test("streaming BM25 probe equals the batched multi-query probe on the closed window") {
+  /** Replays a fixed query set through [[TextIndex.probeBm25Stream]] over
+    * `sIdx` in two micro-batches, closes the window, and returns the
+    * streamed and the [[TextIndex.probeBm25Many]] (query_id, doc_id, score)
+    * rows.
+    */
+  private def streamAndBatch(
+      sIdx: String, sink: String): (Set[(Long, Long, Long)], Set[(Long, Long, Long)]) = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val sIdx = "/tmp/graft_index/text_spec_stream"
-    TextIndex.build(Tables.documents(spark, TestSpark.sf0001), "doc_id", "text", sIdx)
     val ts = java.sql.Timestamp.valueOf("2026-01-01 12:00:00")
     val queryRows = Seq(
       (1L, "hash"), (1L, "join"),
@@ -281,7 +306,7 @@ class TextIndexSpec extends AnyFunSuite {
     val out = TextIndex.probeBm25Stream(spark, sIdx,
       in.toDF.toDF("query_id", "tok", "ts"), "query_id", "tok", "ts", topK = 10)
     val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("bm25_stream").start()
+      .queryName(sink).start()
     try {
       val (h, t) = queryRows.splitAt(4) // multi-batch replay
       in.addData(h.map { case (id, tok) => (id, tok, ts) }: _*)
@@ -294,7 +319,7 @@ class TextIndexSpec extends AnyFunSuite {
     } finally q.stop()
 
     val streamed = spark.sql(
-      """SELECT query_id, t.doc_id, t.score FROM bm25_stream
+      s"""SELECT query_id, t.doc_id, t.score FROM $sink
          LATERAL VIEW explode(topk) AS t WHERE query_id < 999000""")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
@@ -303,8 +328,27 @@ class TextIndexSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"), r.getAs[Long]("score")))
       .toSet
+    (streamed, batch)
+  }
 
+  test("streaming BM25 probe equals the batched multi-query probe on the closed window") {
+    val sIdx = "/tmp/graft_index/text_spec_stream"
+    TextIndex.build(Tables.documents(spark, TestSpark.sf0001), "doc_id", "text", sIdx)
+    val (streamed, batch) = streamAndBatch(sIdx, "bm25_stream")
     assert(streamed.nonEmpty)
+    assert(streamed === batch,
+      s"stream-only ${streamed -- batch}\nbatch-only ${batch -- streamed}")
+  }
+
+  test("streaming BM25 probe of a tombstoned index equals the batched probe on the closed window") {
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    val sIdx = "/tmp/graft_index/text_spec_stream_tomb"
+    TextIndex.build(docs, "doc_id", "text", sIdx)
+    TextIndex.deleteDocs(spark, sIdx, docs.filter(col("doc_id") % 3 === 0).select(col("doc_id")))
+    val (streamed, batch) = streamAndBatch(sIdx, "bm25_stream_tomb")
+    assert(streamed.nonEmpty && streamed.forall(_._2 % 3 != 0),
+      "a tombstoned doc must never be served")
     assert(streamed === batch,
       s"stream-only ${streamed -- batch}\nbatch-only ${batch -- streamed}")
   }
@@ -328,6 +372,36 @@ class TextIndexSpec extends AnyFunSuite {
     assert("PushedFilters: \\[.*In\\(tok".r.findFirstIn(postingsScan).isDefined
         || postingsScan.contains("tok#"),
       s"tok IN filter must reach the postings files; plan:\n$postingsScan")
+  }
+
+  test("multi-query probe plan lists and prunes only the queried tokens' hash buckets") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val qTerms = Seq("hash", "join", "stream", "filter", "window")
+    val many = TextIndex.probeBm25Many(spark, idx,
+      qTerms.zipWithIndex.map { case (t, i) => (i.toLong % 2, t) }.toDF("query_id", "tok"))
+    val plan = many.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    val postingsScan = plan.split("\\n\\n").find(b =>
+      b.contains("Scan parquet") && b.contains("/postings"))
+      .orElse(Some(plan)).get
+    val pf = "PartitionFilters: \\[bucket#\\d+L? IN \\(([-0-9,]+)\\)".r
+      .findFirstMatchIn(postingsScan)
+    assert(pf.isDefined,
+      s"postings scan must carry a folded bucket partition filter; plan:\n$plan")
+    assert(pf.get.group(1).split(",").forall(s => s.trim.matches("-?\\d+")),
+      s"bucket filter must be folded literals; got ${pf.get.group(1)}")
+    // the scan lists exactly the queried terms' existing bucket directories
+    val listed = many.queryExecution.optimizedPlan.collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location.rootPaths.map(_.toString) }.flatten
+      .filter(_.contains("/postings")).map(_.split("/").last).toSet
+    val wanted = qTerms.toDF("tok")
+      .select(pmod(xxhash64(col("tok")), lit(TextIndex.PostingBuckets.toLong)))
+      .collect().map(r => s"bucket=${r.getLong(0)}").toSet
+      .filter(b => graft.sources.Storage.exists(s"$idx/postings/$b"))
+    assert(listed.nonEmpty && listed == wanted,
+      s"postings scan must list only the queried buckets $wanted; listed $listed")
   }
 
   test("compaction under a RUNNING streaming probe: loud failure or a consistent snapshot, never torn") {

@@ -39,11 +39,12 @@ separate `snap=N` parquet manifest that their oracles read.
 
 Rule 4 — declared index schemas. A parquet read without a schema starts a
 Spark job to re-read a footer on every call. The text index knows its
-tables' schemas (`TextIndex.Schemas`), and the sketch store reads through
-the memoized `Storage.get`, so in functions/TextIndex.scala and
-functions/SketchStore.scala every `.read` chain that reaches `.parquet(`
-must pass `.schema(` on the way; a table of unknown schema goes through
-`Storage.get`.
+tables' schemas (`TextIndex.Schemas`), and the sketch store, the IVF-PQ
+index and the serving queries read through the memoized `Storage.get`, so
+in functions/TextIndex.scala, functions/SketchStore.scala,
+functions/AnnIndex.scala and queries/Serving.scala every `.read` chain that
+reaches `.parquet(` must pass `.schema(` on the way; a table of unknown
+schema goes through `Storage.get`.
 
 Rule 5 — no forked processes. A child process costs milliseconds (the
 fork, plus Hadoop's stderr reader thread), which is what Hadoop's local
@@ -85,7 +86,8 @@ MANIFEST_PATH = re.compile(r"""/manifest\b|["']manifest["']""")
 COMMENT_LINE = re.compile(r"^\s*(//|/\*|\*)")
 
 
-SCHEMA_OWNERS = ("graft/functions/TextIndex.scala", "graft/functions/SketchStore.scala")
+SCHEMA_OWNERS = ("graft/functions/TextIndex.scala", "graft/functions/SketchStore.scala",
+                 "graft/functions/AnnIndex.scala", "graft/queries/Serving.scala")
 # `.read`, then any calls but `.schema(...)`, then `.parquet(` — across lines.
 UNDECLARED_READ = re.compile(
     r"\.\s*read\b((?:\s*\.\s*(?!schema\b)\w+\s*\((?:[^()]|\([^()]*\))*\))*)"
@@ -270,6 +272,18 @@ def selftest():
         bad = scan_schema_reads(td)
         assert len(bad) == 3 and any("SketchStore.scala:3" in b for b in bad), \
             f"selftest: planted schema-less SketchStore read not caught: {bad}"
+        with open(os.path.join(fn, "AnnIndex.scala"), "w") as f:
+            f.write("object AnnIndex {\n"
+                    "  def c(s: SparkSession, p: String) = Storage.get(s, s\"$p/codes\")\n"
+                    "  def m(s: SparkSession, p: String) = s.read.parquet(s\"$p/meta\") }\n")
+        with open(os.path.join(d, "Serving.scala"), "w") as f:
+            f.write("object Serving {\n"
+                    "  def b(s: SparkSession, m: DataFrame) = s.read.schema(m.schema).parquet(B)\n"
+                    "  def r(s: SparkSession) = s.read.option(\"x\", \"y\").parquet(B) }\n")
+        bad = scan_schema_reads(td)
+        assert len(bad) == 5 and any("AnnIndex.scala:3" in b for b in bad) \
+            and any("Serving.scala:3" in b for b in bad), \
+            f"selftest: planted schema-less AnnIndex / Serving reads not caught: {bad}"
         # rule 5: no process starts; only the factory names the fs impl keys
         assert scan_processes(td) == [], \
             f"selftest: clean tree flagged by rule 5: {scan_processes(td)}"
@@ -326,8 +340,8 @@ def main():
               "instead of a store-local manifest.")
     reads = scan_schema_reads(root)
     if reads:
-        print(f"checkpoint_lint: {len(reads)} TextIndex or SketchStore parquet read(s) "
-              f"without a declared schema:")
+        print(f"checkpoint_lint: {len(reads)} TextIndex, SketchStore, AnnIndex or "
+              f"Serving parquet read(s) without a declared schema:")
         for b in reads:
             print("  " + b)
         print("Read index tables with .schema(TextIndex.Schemas(name)), or a "
@@ -344,8 +358,8 @@ def main():
         return 1
     print("checkpoint_lint: clean (all truncation goes through "
           "Layout.truncateLineage; all sessions through GraftSession; all "
-          "manifests through Storage; no schema-less parquet read in TextIndex "
-          "or SketchStore; no process starts; only GraftSession sets the "
+          "manifests through Storage; no schema-less parquet read in TextIndex, "
+          "SketchStore, AnnIndex or Serving; no process starts; only GraftSession sets the "
           "file-system impl)")
     return 0
 

@@ -102,7 +102,8 @@ fi
 # nothing may patch experimental.extraStrategies. (3) One commit core: only
 # Storage (and the exempt Governance snapshot stores) may build a store's
 # manifest path. (4) Declared index schemas: no `.read...parquet(` without
-# `.schema(` in functions/TextIndex.scala or functions/SketchStore.scala.
+# `.schema(` in functions/TextIndex.scala, functions/SketchStore.scala,
+# functions/AnnIndex.scala or queries/Serving.scala.
 # (5) No forked processes: no ProcessBuilder, scala.sys.process or
 # Runtime.getRuntime.exec in main sources, and only GraftSession may set
 # fs.file.impl / fs.AbstractFileSystem.file.impl.
@@ -117,9 +118,11 @@ python3 tools/checkpoint_lint.py || {
   echo "audit), sessions through GraftSession.builder, child sessions"
   echo "through GraftSession.child (rule 2: no .newSession( outside"
   echo "GraftSession), store commits through Storage.commit (rule 3: no"
-  echo "manifest path outside Storage), TextIndex and SketchStore reads"
-  echo "through declared schemas or Storage.get (rule 4: no .read.parquet("
-  echo "without .schema( in functions/TextIndex.scala or SketchStore.scala),"
+  echo "manifest path outside Storage), TextIndex, SketchStore, AnnIndex"
+  echo "and Serving reads through declared schemas or Storage.get (rule 4:"
+  echo "no .read.parquet( without .schema( in functions/TextIndex.scala,"
+  echo "functions/SketchStore.scala, functions/AnnIndex.scala or"
+  echo "queries/Serving.scala),"
   echo "and file metadata in-process (rule 5: no ProcessBuilder, sys.process"
   echo "or Runtime.exec in main sources; only GraftSession sets fs.file.impl"
   echo "or fs.AbstractFileSystem.file.impl)."
