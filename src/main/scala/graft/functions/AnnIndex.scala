@@ -3,8 +3,10 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructType}
 
 import graft.sources.Storage
+import graft.sources.Storage.Version
 import graft.functions.Layout.LineageOps
 
 /** Persisted IVF-PQ index — the build-once / probe-many serving shape, and
@@ -18,15 +20,13 @@ import graft.functions.Layout.LineageOps
   * model tables (k·dim longs — broadcast scale) plus the probed cells'
   * code rows.
   *
-  * Artifact layout under `indexPath` (all via the [[Storage]] facade):
-  *   - `meta`      — one row: (dim, n_cells, m, ksub, iters)
-  *   - `centroids` — (cell BIGINT, cv ARRAY<BIGINT>): coarse cell centroids
-  *   - `codebooks` — (sub INT, code BIGINT, cv ARRAY<BIGINT>): per-subvector
-  *                   PQ codebooks over cell RESIDUALS
-  *   - `codes`     — (id BIGINT, cell BIGINT, codes ARRAY<BIGINT>): the
-  *                   encoded corpus, m code labels per vector
-  * Every write verb is one [[Storage.commit]]; its manifest holds the
-  * physical codes-table row count.
+  * Artifact tables under `indexPath`, read with their [[Schemas]]: `meta`
+  * (one row: dim, n_cells, m, ksub, iters), `centroids` (coarse cells),
+  * `codebooks` (per-subvector PQ codebooks over cell RESIDUALS) and `codes`
+  * (the encoded corpus, m code labels per vector; one directory per build,
+  * append or compact). Every write verb adds the next version's
+  * directories and ends in one [[Storage.commit]], whose pointer holds the
+  * physical codes row count.
   *
   * All model numbers are the micro-quantized BIGINTs of
   * [[ClusterOps.kMeansModel]], so persistence is exact: longs round-trip
@@ -47,10 +47,21 @@ object AnnIndex {
   private[functions] final case class IvfPqModel(
       dsub: Int, coarse: Array[(Long, Array[Long])], subs: Seq[Array[(Long, Array[Long])]])
 
-  private def metaPath(p: String)      = s"$p/meta"
-  private def centroidsPath(p: String) = s"$p/centroids"
-  private def codebooksPath(p: String) = s"$p/codebooks"
-  private def codesPath(p: String)     = s"$p/codes"
+  private val LongArray = ArrayType(LongType)
+
+  /** The schema of each index table. */
+  val Schemas: Map[String, StructType] = Map(
+    "meta"      -> new StructType().add("dim", IntegerType).add("n_cells", IntegerType)
+      .add("m", IntegerType).add("ksub", IntegerType).add("iters", IntegerType),
+    "centroids" -> new StructType().add("cell", LongType).add("cv", LongArray),
+    "codebooks" -> new StructType().add("sub", IntegerType).add("code", LongType)
+      .add("cv", LongArray),
+    "codes"     -> new StructType().add("id", LongType).add("cell", LongType)
+      .add("codes", LongArray))
+
+  private def table(spark: SparkSession, v: Version, name: String): DataFrame =
+    v.read(spark, name, Schemas(name))
+
   private def asMap(model: Array[(Long, Array[Long])]): Column =
     typedlit(model.map { case (cid, cv) => cid -> cv.toSeq }.toMap)
 
@@ -182,36 +193,30 @@ object AnnIndex {
     val spark = corpus.sparkSession
     import spark.implicits._
     val meta = IvfPqMeta(dim, nCells, m, ksub, iters)
-    Storage.commit(indexPath) {
-      Storage.clearTombstones(indexPath) // rebuild resets delete state
-      val (model, codes) = train(corpus, idCol, vecCol, meta,
-        ClusterOps.kMeansModel(corpus, idCol, vecCol, nCells, iters))
-      Storage.replace(
-        Seq((dim, nCells, m, ksub, iters)).toDF("dim", "n_cells", "m", "ksub", "iters"),
-        metaPath(indexPath))
-      Storage.replace(
-        model.coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cell", "cv"),
-        centroidsPath(indexPath))
-      Storage.replace(
-        model.subs.zipWithIndex.flatMap { case (mod, s) =>
-          mod.map { case (code, cv) => (s, code, cv.toSeq) }
-        }.toDF("sub", "code", "cv"),
-        codebooksPath(indexPath))
-      val (codesObs, nCodes) = Storage.observedCount(codes)
-      Storage.replace(codesObs, codesPath(indexPath))
-      nCodes()
-    }
+    val v    = Storage.head(indexPath)
+    val (model, codes) = train(corpus, idCol, vecCol, meta,
+      ClusterOps.kMeansModel(corpus, idCol, vecCol, nCells, iters))
+    v.write(Seq((dim, nCells, m, ksub, iters)).toDF("dim", "n_cells", "m", "ksub", "iters"), "meta")
+    v.write(model.coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cell", "cv"),
+      "centroids")
+    v.write(model.subs.zipWithIndex.flatMap { case (mod, s) =>
+      mod.map { case (code, cv) => (s, code, cv.toSeq) }
+    }.toDF("sub", "code", "cv"), "codebooks")
+    val (codesObs, nCodes) = Storage.observedCount(codes)
+    v.write(codesObs, "codes")
+    // a rebuild drops the prior version's tombstones with the rest of it
+    Storage.commit(v.rebuilt(nCodes(), "meta", "centroids", "codebooks", "codes"))
   }
 
-  private def readModel(spark: SparkSession, indexPath: String): IvfPqModel = {
-    val r = Storage.get(spark, metaPath(indexPath)).head()
+  private def readModel(spark: SparkSession, v: Version): IvfPqModel = {
+    val r = table(spark, v, "meta").head()
     val meta = IvfPqMeta(r.getAs[Int]("dim"), r.getAs[Int]("n_cells"), r.getAs[Int]("m"),
       r.getAs[Int]("ksub"), r.getAs[Int]("iters"))
-    val coarse = Storage.get(spark, centroidsPath(indexPath))
+    val coarse = table(spark, v, "centroids")
       .collect()
       .map(r => (r.getAs[Long]("cell"), r.getAs[Seq[Long]]("cv").toArray))
       .sortBy(_._1)
-    val cbRows = Storage.get(spark, codebooksPath(indexPath))
+    val cbRows = table(spark, v, "codebooks")
       .collect()
       .map(r => (r.getAs[Int]("sub"), r.getAs[Long]("code"), r.getAs[Seq[Long]]("cv").toArray))
     val subs = (0 until meta.m).map { s =>
@@ -227,16 +232,15 @@ object AnnIndex {
     * pinned). One [[Storage.commit]], like append.
     */
   def deleteVecs(spark: SparkSession, indexPath: String, vecIds: DataFrame): Unit = {
-    val nCodes = Storage.committedRows(indexPath) // the codes table is untouched
-    Storage.commit(indexPath) {
-      Storage.tombstone(indexPath, vecIds, "id")
-      nCodes
-    }
+    val v = Storage.committed(indexPath)
+    Storage.tombstone(v, vecIds, "id")
+    // the codes table is untouched, so the physical row count is too
+    Storage.commit(v.next(v.rows, added = Seq("tombstones")))
   }
 
-  private def liveCodes(spark: SparkSession, indexPath: String): DataFrame = {
-    val codes = Storage.get(spark, codesPath(indexPath))
-    Storage.tombstones(spark, indexPath)
+  private def liveCodes(spark: SparkSession, v: Version): DataFrame = {
+    val codes = table(spark, v, "codes")
+    Storage.tombstones(spark, v, "id")
       .fold(codes)(tomb => codes.join(broadcast(tomb), Seq("id"), "left_anti"))
   }
 
@@ -251,9 +255,8 @@ object AnnIndex {
       spark: SparkSession, indexPath: String, queries: DataFrame,
       idCol: String, vecCol: String, nProbe: Int, k: Int
   ): DataFrame = {
-    Storage.requireCommitted(indexPath)
-    score(liveCodes(spark, indexPath), readModel(spark, indexPath), queries,
-      idCol, vecCol, nProbe, k)
+    val v = Storage.committed(indexPath)
+    score(liveCodes(spark, v), readModel(spark, v), queries, idCol, vecCol, nProbe, k)
   }
 
   /** STREAMING probe of the persisted index — the online-serving face of
@@ -272,13 +275,13 @@ object AnnIndex {
       idCol: String, vecCol: String, tsCol: String, nProbe: Int, k: Int,
       watermark: String = "10 minutes", windowLen: String = "1 hour"
   ): DataFrame = {
-    Storage.requireCommitted(indexPath)
-    val model = readModel(spark, indexPath)
+    val v     = Storage.committed(indexPath)
+    val model = readModel(spark, v)
     // NO broadcast hint on the codes side: a serving index is exactly the
     // table that outgrows the driver. The stream-static join shuffles (or
     // size-auto-broadcasts a genuinely small index) on `cell` — planner's
     // choice, never an unconditional full-index broadcast.
-    val index = reconstruct(liveCodes(spark, indexPath), model)
+    val index = reconstruct(liveCodes(spark, v), model)
     // row-local nearest-nProbe cells: (dist2, cell) structs over the literal
     // centroid table, in-row sort, slice — the window-free routing
     val cellArr = typedlit(model.coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) })
@@ -306,63 +309,58 @@ object AnnIndex {
         slice(array_sort(col("cands")), 1, k).as("topk"))
   }
 
-  /** COMPACT a tombstoned index: physically drop the deleted vectors' code
-    * rows and clear the tombstone set — deletion is pure candidate filtering
-    * (ADC carries no corpus statistics), so compaction is ONE anti-join
-    * rewrite of the codes table under the [[graft.sources.Storage.rewrite]]
-    * rename-aside swap; model tables are untouched. Runs as one
-    * [[Storage.commit]] (crash mid-compaction leaves a manifest-less index
-    * that probes refuse). After compaction
-    * probes pay no anti-join and previously deleted ids may be re-appended.
+  /** COMPACT a tombstoned index: write the live code rows once, as one
+    * merged codes directory, and commit a version without tombstones —
+    * deletion is pure candidate filtering (ADC carries no corpus
+    * statistics), so compaction is ONE anti-join pass over the codes; the
+    * model tables are untouched. Until the commit the tombstoned version
+    * keeps serving. After compaction probes pay no anti-join and previously
+    * deleted ids may be re-appended.
     *
     * Returns false when [[Storage.compactable]]'s gate finds nothing to
     * compact or the tombstones below `minFraction` of the committed codes
     * rows (the rewrite is a full codes pass — gate it on delete volume).
     */
-  def compactIvfPq(spark: SparkSession, indexPath: String, minFraction: Double = 0.0): Boolean =
-    Storage.compactable(spark, indexPath, minFraction) match {
+  def compactIvfPq(spark: SparkSession, indexPath: String, minFraction: Double = 0.0): Boolean = {
+    val v = Storage.committed(indexPath)
+    Storage.compactable(spark, v, "id", minFraction) match {
       case None => false
       case Some(tomb) =>
-        Storage.commit(indexPath) {
-          val (liveObs, nLive) = Storage.observedCount(
-            // no broadcast hint: tombstones accumulate until exactly this
-            // moment, so a long-deferred compaction may hold far more than a
-            // broadcastable side — let the planner size the join (r14 advice,
-            // same class as the probeIvfPqStream codes broadcast removed in r13).
-            Storage.get(spark, codesPath(indexPath)).join(tomb, Seq("id"), "left_anti"))
-          Storage.rewrite(liveObs, codesPath(indexPath))
-          Storage.clearTombstones(indexPath)
-          nLive()
-        }
+        val (liveObs, nLive) = Storage.observedCount(
+          // no broadcast hint: tombstones accumulate until exactly this
+          // moment, so a long-deferred compaction may hold far more than a
+          // broadcastable side — let the planner size the join (r14 advice,
+          // same class as the probeIvfPqStream codes broadcast removed in r13).
+          table(spark, v, "codes").join(tomb, Seq("id"), "left_anti"))
+        v.write(liveObs, "codes")
+        Storage.commit(v.next(nLive(), replaced = Seq("codes"), dropped = Seq("tombstones")))
         true
     }
+  }
 
   /** Incremental maintenance: encode `newVecs` against the FROZEN persisted
-    * codebooks (no retrain — the FAISS `add` contract) and append their code
-    * rows to the codes table. Returns the appended rows so callers (and the
-    * oracle) can verify the encode row-level against the saved model tables.
-    * Cost is one map-side projection over the NEW rows only — the existing
-    * index is untouched, which is the whole point at 100 TB: ingest appends,
-    * periodic rebuilds re-center drifted codebooks. An id already in the
-    * codes table, live or tombstoned, is refused ([[Storage.requireNewIds]]).
+    * codebooks (no retrain — the FAISS `add` contract) and write their code
+    * rows as a new codes directory. Returns the appended rows so callers
+    * (and the oracle) can verify the encode row-level against the saved
+    * model tables. Cost is one map-side projection over the NEW rows only —
+    * the existing index is untouched, which is the whole point at 100 TB:
+    * ingest appends, periodic rebuilds re-center drifted codebooks. An id
+    * already in the codes table, live or tombstoned, is refused
+    * ([[Storage.requireNewIds]]).
     */
   def appendIvfPq(
       spark: SparkSession, indexPath: String, newVecs: DataFrame,
       idCol: String, vecCol: String
   ): DataFrame = {
-    val nOld = Storage.committedRows(indexPath)
-    Storage.requireNewIds(
-      indexPath, Storage.get(spark, codesPath(indexPath)), "id", newVecs, idCol)
-    val model    = readModel(spark, indexPath)
+    val v = Storage.committed(indexPath)
+    Storage.requireNewIds(indexPath, table(spark, v, "codes"), "id", newVecs, idCol)
+    val model    = readModel(spark, v)
     val appended = encode(residuals(newVecs, idCol, vecCol, model.coarse), model)
-    // append is its own transaction: a crash mid-append leaves a
-    // manifest-less index that probes refuse. The new total = prior
-    // committed count + the appended rows observed on the write itself.
-    Storage.commit(indexPath) {
-      val (appObs, nApp) = Storage.observedCount(appended)
-      Storage.append(appObs, codesPath(indexPath))
-      nOld + nApp()
-    }
+    // the new total = prior committed count + the appended rows observed
+    // on the write itself
+    val (appObs, nApp) = Storage.observedCount(appended)
+    v.write(appObs, "codes")
+    Storage.commit(v.next(v.rows + nApp(), added = Seq("codes")))
     appended
   }
 }

@@ -3,8 +3,10 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.sources.Storage
+import graft.sources.Storage.Version
 
 /** Persisted per-segment KMV (bottom-k) distinct-count sketch store — the
   * third persisted serving family beside the text index ([[TextIndex]]) and
@@ -16,15 +18,13 @@ import graft.sources.Storage
   * re-taking the bottom-k of a union (Bar-Yossef et al., RANDOM 2002), which
   * is what makes per-segment persistence sound.
   *
-  * Artifact layout (all parquet, [[Storage]] facade):
-  *   `segments` — (seg BIGINT, hv BIGINT): the ≤ k smallest distinct
-  *                [[KmvSketch]] hash values per segment. Plain rows, not an
-  *                opaque blob, so probes AND the DuckDB oracle replay the
-  *                merge in SQL.
-  *   `meta`     — one row (k).
-  * Every write verb is one [[Storage.commit]] (the [[TextIndex]]/[[AnnIndex]]
-  * transaction), its manifest holding the segments-table row count: probes
-  * and appends refuse a torn store.
+  * Artifact tables, read with their [[Schemas]]: `segments` (seg, hv), the
+  * ≤ k smallest distinct [[KmvSketch]] hash values per segment, one
+  * directory per build or append — plain rows, not an opaque blob, so
+  * probes AND the DuckDB oracle replay the merge in SQL — and `meta`, one
+  * row (k). Every write verb adds the next version's directories and ends
+  * in one [[Storage.commit]] (the [[TextIndex]]/[[AnnIndex]] transaction),
+  * whose pointer holds the segments row count.
   *
   * Scale: the store is (segments × k) rows — model-sized against the data
   * (256 longs stand for a segment of any row count). A probe reads only the
@@ -34,6 +34,20 @@ import graft.sources.Storage
 object SketchStore {
 
   val M: Long = KmvSketch.M // 2^61 - 1, the hash universe
+
+  val Schemas: Map[String, StructType] = Map(
+    "segments" -> new StructType().add("seg", LongType).add("hv", LongType),
+    "meta"     -> new StructType().add("k", LongType))
+
+  private def table(spark: SparkSession, v: Version, name: String): DataFrame =
+    v.read(spark, name, Schemas(name))
+
+  private def readK(spark: SparkSession, v: Version): Long =
+    table(spark, v, "meta").head().getLong(0)
+
+  /** The live segments table of the store at `path`. */
+  def segments(spark: SparkSession, path: String): DataFrame =
+    table(spark, Storage.committed(path), "segments")
 
   /** Bottom-k distinct hashes per segment. Salted two-phase rank (the
     * x_inverted_index window-skew doctrine): a seg-only window would cap
@@ -68,39 +82,37 @@ object SketchStore {
     * .NativeFns.hash61]] output (the registry's fixed Carter–Wegman hash).
     * Replaces any prior store in one commit.
     */
-  def build(rows: DataFrame, k: Int, path: String): Unit = Storage.commit(path) {
+  def build(rows: DataFrame, k: Int, path: String): Unit = {
+    val v = Storage.head(path)
     val (sketches, n) = Storage.observedCount(segmentSketches(rows, k))
-    Storage.replace(sketches, s"$path/segments")
-    rows.sparkSession.range(1).select(lit(k.toLong).as("k"))
-      .write.mode("overwrite").parquet(s"$path/meta")
-    n()
+    v.write(sketches, "segments")
+    v.write(rows.sparkSession.range(1).select(lit(k.toLong).as("k")), "meta")
+    Storage.commit(v.rebuilt(n(), "segments", "meta"))
   }
 
-  /** Append NEW segments' sketches — O(delta) work, the old segments are
-    * never re-read. Segments are append-once: re-sketching a present
-    * segment is refused (its rows are already final under the build's
-    * bottom-k; a changed segment means a rebuild) by
+  /** Append NEW segments' sketches as a new segments directory — O(delta)
+    * work, the old segments are never re-read. Segments are append-once:
+    * re-sketching a present segment is refused (its rows are already final
+    * under the build's bottom-k; a changed segment means a rebuild) by
     * [[Storage.requireNewIds]], the guard of every store's append. One
     * commit.
     */
   def appendSegments(rows: DataFrame, path: String): Unit = {
     val spark = rows.sparkSession
-    val nOld  = Storage.committedRows(path)
-    val k = Storage.get(spark, s"$path/meta").head().getAs[Long]("k").toInt
-    // Two delta passes, kept deliberately (r18 A/B): the dup check's
-    // distinct-seg scan short-circuits through CollectLimit and shuffles
-    // only ~|segments| rows, and both single-pass replacements measured
-    // SLOWER at sf0.1 quiet (parquet staging + adopt: 3.29 → 3.67 s;
-    // pin-the-sketch-frame + write-from-blocks: 3.29 → 4.0 s — the pin
-    // double-materializes the sketch rows, which costs more than the cheap
-    // check pass saves). On a cluster where the delta scan dominates, the
-    // staging variant is the right trade; see OPTIMIZATION_r18.md.
-    Storage.requireNewIds(path, Storage.get(spark, s"$path/segments"), "seg", rows, "seg")
-    Storage.commit(path) {
-      val (sketches, n) = Storage.observedCount(segmentSketches(rows, k))
-      Storage.append(sketches, s"$path/segments")
-      nOld + n()
-    }
+    val v     = Storage.committed(path)
+    val k     = readK(spark, v).toInt
+    // Two delta passes, kept deliberately (r18 A/B): the guard semi-joins the
+    // present segments against a broadcast of the delta rows' segs and stops
+    // at its first match, and both single-pass replacements measured SLOWER at
+    // sf0.1 quiet (parquet staging + adopt: 3.29 → 3.67 s; pin-the-sketch-
+    // frame + write-from-blocks: 3.29 → 4.0 s — the pin double-materializes
+    // the sketch rows, which costs more than the cheap check pass saves).
+    // On a cluster where the delta scan dominates, the staging variant is
+    // the right trade; see OPTIMIZATION_r18.md.
+    Storage.requireNewIds(path, table(spark, v, "segments"), "seg", rows, "seg")
+    val (sketches, n) = Storage.observedCount(segmentSketches(rows, k))
+    v.write(sketches, "segments")
+    Storage.commit(v.next(v.rows + n(), added = Seq("segments")))
   }
 
   /** Distinct-count estimate over the segment range [lo, hi], from sketch
@@ -111,9 +123,9 @@ object SketchStore {
     * Returns one row (seg_lo, seg_hi, k, filled, kth_min, kmv_estimate).
     */
   def probeRange(spark: SparkSession, path: String, lo: Long, hi: Long): DataFrame = {
-    Storage.requireCommitted(path)
-    val k = Storage.get(spark, s"$path/meta").head().getAs[Long]("k")
-    val merged = Storage.get(spark, s"$path/segments")
+    val v = Storage.committed(path)
+    val k = readK(spark, v)
+    val merged = table(spark, v, "segments")
       .filter(col("seg").between(lo, hi))
       .select(col("hv")).distinct()
       .orderBy(col("hv")).limit(k.toInt)

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructType}
-import graft.functions.Layout.LineageOps
 
 /** Persisted inverted-index serving — the text-side build-once/probe-many
   * twin of [[AnnIndex]] (r11 verdict's serving discipline): [[build]] writes
@@ -14,9 +13,9 @@ import graft.functions.Layout.LineageOps
   * model scalars (n_docs, avgdl) read from the one-row corpus table of LIVE
   * totals (maintained by every write verb) so every probe — and the DuckDB
   * oracle replaying it over `read_parquet` of the same artifacts — sees
-  * bit-equal global statistics. Every write verb is one
-  * [[graft.sources.Storage.commit]] transaction; its manifest holds the
-  * physical docs-table row count.
+  * bit-equal global statistics. Every write verb adds the next version's
+  * directories and ends in one [[graft.sources.Storage.commit]], whose
+  * pointer holds the physical docs-table row count.
   *
   * The three probes ([[probeBm25]], [[probeBm25Many]], [[probeBm25Stream]])
   * share one scoring path, [[scoredPostings]]: the live (tok, doc_id, sq)
@@ -26,8 +25,7 @@ import graft.functions.Layout.LineageOps
   * The four tables have fixed schemas ([[Schemas]]), declared on every
   * read, so no verb or probe starts a Spark job to re-read a parquet
   * footer; `doc_id` is stored as long whatever the input's integral id
-  * type. Tombstones are read through the memoized
-  * [[graft.sources.Storage.get]].
+  * type.
   *
   * Scale: a batch probe lists and touches only its |terms| posting BUCKETS,
   * plus a doc-length join keyed on doc_id; df/corpus stats are
@@ -38,6 +36,7 @@ import graft.functions.Layout.LineageOps
 object TextIndex {
 
   import graft.sources.Storage
+  import graft.sources.Storage.Version
 
   /** Okapi BM25 saturation and length-normalization constants (the TREC-3
     * values [[QualityLM.bm25TopK]] defaults to).
@@ -84,24 +83,31 @@ object TextIndex {
     "corpus"   -> new StructType().add("n_docs", LongType).add("total_dl", LongType)
       .add("avgdl", DoubleType))
 
-  /** Index table `name` (a key of [[Schemas]]), read with its schema. */
-  private def table(spark: SparkSession, indexPath: String, name: String): DataFrame =
-    spark.read.schema(Schemas(name)).parquet(s"$indexPath/$name")
+  /** One postings directory (its `bucket=` subdirectories), read with its schema. */
+  private def postingsAt(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(Schemas("postings")).parquet(dir)
+
+  /** Table `name` of version `v`; the postings as the union of their directories. */
+  private def table(spark: SparkSession, v: Version, name: String): DataFrame =
+    if (name == "postings") v.dirs(name).map(postingsAt(spark, _)).reduce(_ union _)
+    else v.read(spark, name, Schemas(name))
 
   /** The postings of `terms` only. Their bucket ids come from [[bucketExpr]]
     * over a local frame (constant-folded on the driver, no job), and only
-    * those `bucket=` directories are listed — all 64 would exceed Spark's
-    * parallel-listing threshold of 32 and cost a listing job. A bucket with
-    * no directory holds no posting and is skipped. `basePath` keeps
-    * `bucket` a partition column, so [[bucketPred]] still prunes
-    * statically.
+    * those `bucket=` directories of each postings directory are listed —
+    * all 64 would exceed Spark's parallel-listing threshold of 32 and cost
+    * a listing job. A bucket with no directory holds no posting and is
+    * skipped. `basePath` keeps `bucket` a partition column, so
+    * [[bucketPred]] still prunes statically.
     */
-  private def termPostings(spark: SparkSession, indexPath: String, terms: Seq[String]): DataFrame = {
+  private def termPostings(spark: SparkSession, v: Version, terms: Seq[String]): DataFrame = {
     import spark.implicits._
-    val base = s"$indexPath/postings"
-    val dirs = terms.toDF("tok").select(bucketExpr(col("tok"))).collect().map(_.getLong(0))
-      .distinct.sorted.map(b => s"$base/bucket=$b").filter(Storage.exists).toIndexedSeq
-    spark.read.schema(Schemas("postings")).option("basePath", base).parquet(dirs: _*)
+    val buckets = terms.toDF("tok").select(bucketExpr(col("tok"))).collect().map(_.getLong(0))
+      .distinct.sorted.toIndexedSeq
+    v.dirs("postings").map { dir =>
+      spark.read.schema(Schemas("postings")).option("basePath", dir)
+        .parquet(buckets.map(b => s"$dir/bucket=$b").filter(Storage.exists): _*)
+    }.reduce(_ union _)
       .filter(bucketPred(terms)) // static bucket-directory pruning
       .filter(col("tok").isin(terms: _*))
   }
@@ -124,16 +130,16 @@ object TextIndex {
     * ([[termPostings]]). On a tombstoned index the live postings come from
     * an anti-join on the broadcast tombstone set and each term's df drops
     * by its tombstoned postings, so scores stay bit-equal to a rebuild
-    * without the deleted docs. The tombstones are those in place when the
-    * frame is built.
+    * without the deleted docs. Every table comes from the version live when
+    * the frame is built.
     */
   private def scoredPostings(
       spark: SparkSession, indexPath: String, terms: Option[Seq[String]]): DataFrame = {
-    Storage.requireCommitted(indexPath)
-    val postAll  = terms.fold(table(spark, indexPath, "postings"))(termPostings(spark, indexPath, _))
-    val stats0   = table(spark, indexPath, "stats")
+    val v        = Storage.committed(indexPath)
+    val postAll  = terms.fold(table(spark, v, "postings"))(termPostings(spark, v, _))
+    val stats0   = table(spark, v, "stats")
     val statsAll = terms.fold(stats0)(ts => stats0.filter(col("tok").isin(ts: _*)))
-    val (postings, stats) = Storage.tombstones(spark, indexPath) match {
+    val (postings, stats) = Storage.tombstones(spark, v, "doc_id") match {
       case None => (postAll, statsAll)
       case Some(tomb) =>
         // per-term live df = stored df − tombstoned postings of that term
@@ -146,87 +152,67 @@ object TextIndex {
     }
     postings
       .join(broadcast(stats), "tok")
-      .join(table(spark, indexPath, "docs"), "doc_id")
-      .crossJoin(broadcast(table(spark, indexPath, "corpus"))) // one model row
+      .join(table(spark, v, "docs"), "doc_id")
+      .crossJoin(broadcast(table(spark, v, "corpus"))) // one model row
       .select(col("tok"), col("doc_id"), bm25Sq.as("sq"))
   }
 
-  /** The one postings writer of [[build]] and [[append]] (a `delta`):
-    * tokenize `docs`, count each (tok, doc_id) pair and write the rows to
-    * their token-hash bucket directories. Repartitioning into exactly
-    * PostingBuckets partitions gives each bucket one writer task and one
-    * file: unclustered, the write emits (tasks × buckets) files, 2 048 at 32
-    * tasks (guide §6 small-files); without the count, AQE coalesces a tiny
-    * exchange to one serial writer. Returns the rows, pinned for a delta,
-    * whose docs and stats deltas derive from them.
+  /** The one postings writer of [[build]] and [[append]]: tokenize `docs`,
+    * count each (tok, doc_id) pair and write the next version's postings
+    * directory, one `bucket=` directory per token-hash bucket.
+    * Repartitioning into exactly PostingBuckets partitions gives each bucket
+    * one writer task and one file: unclustered, the write emits (tasks ×
+    * buckets) files, 2 048 at 32 tasks (guide §6 small-files); without the
+    * count, AQE coalesces a tiny exchange to one serial writer. Returns the
+    * written directory, read back, so the docs and stats rows derive from
+    * the artifact: the text is tokenized once, with no checkpoint.
     */
-  private def writePostings(
-      docs: DataFrame, idCol: String, textCol: String, indexPath: String, delta: Boolean
-  ): DataFrame = {
-    val grouped = docs
+  private def writePostings(docs: DataFrame, idCol: String, textCol: String, v: Version): DataFrame = {
+    v.write(docs
       .select(col(idCol).cast("long").as("doc_id"),
         explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
-    val postings = if (delta) grouped.truncateLineage() else grouped
-    postings.withColumn("bucket", bucketExpr(col("tok")))
-      .repartition(PostingBuckets, col("bucket"))
-      .write.mode(if (delta) "append" else "overwrite").partitionBy("bucket")
-      .parquet(s"$indexPath/postings")
-    postings
+      .withColumn("bucket", bucketExpr(col("tok")))
+      .repartition(PostingBuckets, col("bucket")), "postings", "bucket")
+    postingsAt(docs.sparkSession, v.out("postings"))
+  }
+
+  /** Write `postings`' (doc_id, dl) rows as the next docs directory; returns
+    * their count and total length, observed on the write (no re-count job).
+    */
+  private def writeDocs(postings: DataFrame, v: Version): (Long, Long) = {
+    val obs = new org.apache.spark.sql.Observation()
+    v.write(postings.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+      .observe(obs, count(lit(1)).as("n"), sum(col("dl")).as("t")), "docs")
+    (obs.get("n").asInstanceOf[Long], obs.get("t").asInstanceOf[Long])
   }
 
   /** The one corpus-row writer: exact integer totals, and avgdl from the same
     * sum/count division on every path, 0.0 for an empty corpus (never NaN).
     */
-  private def writeCorpus(
-      spark: SparkSession, indexPath: String, nDocs: Long, totalDl: Long): Unit = {
+  private def writeCorpus(spark: SparkSession, v: Version, nDocs: Long, totalDl: Long): Unit = {
     import spark.implicits._
-    Storage.replace(
-      Seq((nDocs, totalDl, if (nDocs == 0L) 0.0 else totalDl.toDouble / nDocs.toDouble))
-        .toDF("n_docs", "total_dl", "avgdl"),
-      s"$indexPath/corpus")
+    v.write(Seq((nDocs, totalDl, if (nDocs == 0L) 0.0 else totalDl.toDouble / nDocs.toDouble))
+      .toDF("n_docs", "total_dl", "avgdl"), "corpus")
   }
 
-  private def readCorpus(spark: SparkSession, indexPath: String): (Long, Long) = {
-    val r = table(spark, indexPath, "corpus").select(col("n_docs"), col("total_dl")).head()
+  private def readCorpus(spark: SparkSession, v: Version): (Long, Long) = {
+    val r = table(spark, v, "corpus").select(col("n_docs"), col("total_dl")).head()
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Tokenize once, write postings/docs/stats/corpus in one commit, so
-    * probes refuse a torn build — the same transaction as [[AnnIndex]].
+  /** Tokenize once and write postings/docs/stats/corpus as one new version,
+    * the same transaction as [[AnnIndex]]; a rebuild drops the prior
+    * version's tombstones with the rest of it.
     */
-  def build(
-      docs: DataFrame, idCol: String, textCol: String, indexPath: String
-  ): Unit = Storage.commit(indexPath) {
+  def build(docs: DataFrame, idCol: String, textCol: String, indexPath: String): Unit = {
     val spark = docs.sparkSession
-    // a rebuild resets delete state — stale tombstones from a prior
-    // generation would corrupt the fresh index's corrections
-    Storage.clearTombstones(indexPath)
-    // Tokenize ONCE: docs/stats/corpus derive from the postings ARTIFACT
-    // (read-your-writes), not from the tokenization lineage — the old build
-    // re-ran the explode+groupBy for each derived table (4 corpus-text
-    // passes per build; guide §1.2's "remove unnecessary passes"). Routing
-    // the derivations through the written parquet truncates lineage via the
-    // artifact itself — no checkpoint, cluster-safe, and the derived tables
-    // are byte-identical (same aggregation over the same rows).
-    writePostings(docs, idCol, textCol, indexPath, delta = false)
-    val post = table(spark, indexPath, "postings")
-    // corpus totals ride the docs write as an Observation (exact integer
-    // count/sum merged from the write's own tasks) — the corpus row and the
-    // committed row count then come from these totals with zero extra scans,
-    // where the old path re-read the docs table twice (corpus agg + manifest
-    // count). Same values by definition: the observed aggregates run over
-    // exactly the rows the write persists.
-    val obs = new org.apache.spark.sql.Observation()
-    post.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      .observe(obs, count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
-      .write.mode("overwrite").parquet(s"$indexPath/docs")
-    val nDocs   = obs.get("n_docs").asInstanceOf[Long]
-    val totalDl = obs.get("total_dl").asInstanceOf[Long]
-    post.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$indexPath/stats")
-    writeCorpus(spark, indexPath, nDocs, totalDl)
-    nDocs
+    val v     = Storage.head(indexPath)
+    val post  = writePostings(docs, idCol, textCol, v)
+    val (nDocs, totalDl) = writeDocs(post, v)
+    v.write(post.groupBy(col("tok")).agg(count(lit(1)).as("df")), "stats")
+    writeCorpus(spark, v, nDocs, totalDl)
+    Storage.commit(v.rebuilt(nDocs, "postings", "docs", "stats", "corpus"))
   }
 
   /** Delete documents from the persisted index by TOMBSTONE — the lakehouse
@@ -242,16 +228,15 @@ object TextIndex {
     * the tombstoned rows once the tombstone fraction warrants a rewrite.
     */
   def deleteDocs(spark: SparkSession, indexPath: String, docIds: DataFrame): Unit = {
-    val nPhysical = Storage.committedRows(indexPath) // the docs table is untouched
-    Storage.commit(indexPath) {
-      val fresh = Storage.tombstone(indexPath, docIds, "doc_id")
-      val dead = table(spark, indexPath, "docs")
-        .join(broadcast(fresh), Seq("doc_id"), "left_semi")
-        .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("t")).head()
-      val (n, t) = readCorpus(spark, indexPath)
-      writeCorpus(spark, indexPath, n - dead.getLong(0), t - dead.getLong(1))
-      nPhysical
-    }
+    val v     = Storage.committed(indexPath)
+    val fresh = Storage.tombstone(v, docIds, "doc_id")
+    val dead = table(spark, v, "docs")
+      .join(broadcast(fresh), Seq("doc_id"), "left_semi")
+      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("t")).head()
+    val (n, t) = readCorpus(spark, v)
+    writeCorpus(spark, v, n - dead.getLong(0), t - dead.getLong(1))
+    // the docs table is untouched, so the physical row count is too
+    Storage.commit(v.next(v.rows, added = Seq("tombstones"), replaced = Seq("corpus")))
   }
 
   /** Batched MULTI-query probe — the offline-serving shape (score thousands
@@ -322,95 +307,80 @@ object TextIndex {
 
   /** Append a document batch into the persisted index — the posting-delta
     * merge at ARTIFACT level (the `x_inverted_index_incremental` math
-    * applied to the serving tables): new postings/doc-lengths append in
-    * place (bucket partitioning routes each delta row to its token-hash
-    * directory), per-token df merges old⊕delta on the vocab-sized stats
-    * frame, and corpus totals add exactly — avgdl re-derives from the SAME
-    * integer sum/count division as the build path, so append-then-probe is
-    * bit-equal to rebuild-then-probe (pinned in TextIndexSpec). Cost is
-    * O(delta + vocabulary), never a corpus re-tokenize. Runs as its own
-    * [[graft.sources.Storage.commit]]. An id already in the docs table, live
-    * or tombstoned, is refused ([[graft.sources.Storage.requireNewIds]]).
+    * applied to the serving tables): the batch's postings and doc lengths
+    * are a new directory of each (bucket partitioning routes each delta row
+    * to its token-hash directory), per-token df merges old⊕delta into a
+    * new vocab-sized stats directory, and corpus totals add exactly — avgdl
+    * re-derives from the SAME integer sum/count division as the build path,
+    * so append-then-probe is bit-equal to rebuild-then-probe (pinned in
+    * TextIndexSpec). Cost is O(delta + vocabulary), never a corpus
+    * re-tokenize. One [[graft.sources.Storage.commit]]. An id already in the
+    * docs table, live or tombstoned, is refused
+    * ([[graft.sources.Storage.requireNewIds]]).
     */
   def append(docs: DataFrame, idCol: String, textCol: String, indexPath: String): Unit = {
     val spark = docs.sparkSession
-    val nOld  = Storage.committedRows(indexPath)
-    Storage.requireNewIds(indexPath, table(spark, indexPath, "docs"), "doc_id", docs, idCol)
-    Storage.commit(indexPath) {
-      val newPost = writePostings(docs, idCol, textCol, indexPath, delta = true)
-      // delta totals ride the docs append as an Observation — drops the
-      // separate newDl.agg job the old path ran (same exact integers: the
-      // observed count/sum cover exactly the appended rows).
-      val dObs = new org.apache.spark.sql.Observation()
-      val newDl = newPost.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-        .truncateLineage()
-      newDl.observe(dObs, count(lit(1)).as("n"), sum(col("dl")).as("t"))
-        .write.mode("append").parquet(s"$indexPath/docs")
-      // vocab-sized merge; checkpoint before overwriting the table it read
-      val mergedStats = table(spark, indexPath, "stats")
-        .select(col("tok"), col("df").as("df_old"))
-        .join(newPost.groupBy(col("tok")).agg(count(lit(1)).as("df_new")), Seq("tok"), "full_outer")
-        .select(col("tok"),
-          (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
-        .truncateLineage()
-      Storage.replace(mergedStats, s"$indexPath/stats")
-      val deltaN = dObs.get("n").asInstanceOf[Long]
-      val (n, t) = readCorpus(spark, indexPath)
-      writeCorpus(spark, indexPath, n + deltaN, t + dObs.get("t").asInstanceOf[Long])
-      nOld + deltaN
-    }
+    val v     = Storage.committed(indexPath)
+    Storage.requireNewIds(indexPath, table(spark, v, "docs"), "doc_id", docs, idCol)
+    val newPost = writePostings(docs, idCol, textCol, v)
+    val (deltaN, deltaDl) = writeDocs(newPost, v)
+    // vocab-sized merge into a new stats directory (the live one it reads is
+    // never overwritten, so nothing needs pinning): each delta posting adds
+    // 1 to its token's df, summed with the old df in one exchange
+    v.write(table(spark, v, "stats")
+      .union(newPost.select(col("tok"), lit(1L).as("df")))
+      .groupBy(col("tok")).agg(sum(col("df")).as("df")), "stats")
+    val (n, t) = readCorpus(spark, v)
+    writeCorpus(spark, v, n + deltaN, t + deltaDl)
+    Storage.commit(v.next(v.rows + deltaN,
+      added = Seq("postings", "docs"), replaced = Seq("stats", "corpus")))
   }
 
-  /** COMPACT a tombstoned index: physically drop every deleted doc's
-    * postings and doc-length rows, recompute the vocab-sized df table from
-    * the surviving postings, and clear the tombstone table (the corpus row
-    * already holds the live totals) — after which every probe pays zero
-    * anti-join/correction cost and deleted ids may be re-appended. The
-    * [[graft.sources.Storage.rewrite]] rename-aside swap rewrites each table,
-    * and the whole compaction is one [[graft.sources.Storage.commit]], so a
-    * crash mid-compaction leaves a manifest-less index that probes refuse
-    * rather than a torn mix of compacted and stale tables.
+  /** COMPACT a tombstoned index: write the surviving postings and doc-length
+    * rows once, as one merged directory of each, derive the vocab-sized df
+    * table from the written postings (as [[build]] does), and commit a
+    * version without tombstones (the corpus row already holds the live
+    * totals) — after which every probe pays zero anti-join/correction cost
+    * and deleted ids may be re-appended. Until the commit the tombstoned
+    * version keeps serving.
     *
     * Returns false (no work) when [[graft.sources.Storage.compactable]]'s
     * gate says the tombstones are absent or below `minFraction` of the
     * committed docs: the rewrite is a full pass over the postings, amortized
     * across every subsequent probe.
     *
-    * Scale: postings rewrite is one partition-parallel anti-join scan
-    * (broadcast tombstones), df recompute is the same partial→final count
-    * the build runs, over that same anti-joined scan. TextIndexSpec pins
-    * compact-then-probe == rebuild-without-deleted bit-exact.
+    * Scale: one anti-join scan of the postings, then the build's df count
+    * over the written directory. TextIndexSpec pins compact-then-probe ==
+    * rebuild-without-deleted bit-exact.
     */
-  def compact(spark: SparkSession, indexPath: String, minFraction: Double = 0.0): Boolean =
-    Storage.compactable(spark, indexPath, minFraction) match {
+  def compact(spark: SparkSession, indexPath: String, minFraction: Double = 0.0): Boolean = {
+    val v = Storage.committed(indexPath)
+    Storage.compactable(spark, v, "doc_id", minFraction) match {
       case None => false
       case Some(tomb) =>
-        Storage.commit(indexPath) {
-          // no broadcast hints: compaction is where the FULL accumulated
-          // tombstone set is joined — a long-deferred compaction can exceed the
-          // broadcast limit; the planner auto-broadcasts when it fits (r14 advice).
-          // NOTE on file fan-out: the rewrite inherits the postings SCAN's task
-          // count, which the split packer keeps near the (already bucket-
-          // clustered) input's file count — so the output stays ~one file per
-          // bucket without an explicit exchange. An added
-          // repartition(PostingBuckets, bucket) was A/B'd here and measured ~1.4 s
-          // SLOWER at quiet steal (extra exchange + 64 forced writer waves for a
-          // layout the scan already provides); on a cluster where the tombstoned
-          // scan fans out to many tasks, reintroduce the clustering.
-          val survivors = table(spark, indexPath, "postings").join(tomb, Seq("doc_id"), "left_anti")
-          // df from the survivors BEFORE the postings swap: `survivors`
-          // scans the files the swap deletes
-          Storage.rewrite(
-            survivors.groupBy(col("tok")).agg(count(lit(1)).as("df")), s"$indexPath/stats")
-          Storage.rewrite(survivors, s"$indexPath/postings", partitionCols = Seq("bucket"))
-          val (liveDocs, nLive) = Storage.observedCount(
-            table(spark, indexPath, "docs").join(tomb, Seq("doc_id"), "left_anti"))
-          Storage.rewrite(liveDocs, s"$indexPath/docs")
-          Storage.clearTombstones(indexPath)
-          nLive()
-        }
+        // no broadcast hints: compaction is where the FULL accumulated
+        // tombstone set is joined — a long-deferred compaction can exceed the
+        // broadcast limit; the planner auto-broadcasts when it fits (r14 advice).
+        // NOTE on file fan-out: the write inherits the postings SCAN's task
+        // count, which the split packer keeps near the (already bucket-
+        // clustered) input's file count — so the output stays ~one file per
+        // bucket without an explicit exchange. An added
+        // repartition(PostingBuckets, bucket) was A/B'd here and measured ~1.4 s
+        // SLOWER at quiet steal (extra exchange + 64 forced writer waves for a
+        // layout the scan already provides); on a cluster where the tombstoned
+        // scan fans out to many tasks, reintroduce the clustering.
+        v.write(table(spark, v, "postings").join(tomb, Seq("doc_id"), "left_anti"),
+          "postings", "bucket")
+        v.write(postingsAt(spark, v.out("postings")).groupBy(col("tok"))
+          .agg(count(lit(1)).as("df")), "stats")
+        val (liveDocs, nLive) = Storage.observedCount(
+          table(spark, v, "docs").join(tomb, Seq("doc_id"), "left_anti"))
+        v.write(liveDocs, "docs")
+        Storage.commit(v.next(nLive(),
+          replaced = Seq("postings", "docs", "stats"), dropped = Seq("tombstones")))
         true
     }
+  }
 
   /** Okapi BM25 top-k over the saved index (same TREC-3 formulation and
     * 1e-6 per-(doc,term) quantization as [[QualityLM.bm25TopK]] — the spec

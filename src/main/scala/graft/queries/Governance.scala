@@ -572,10 +572,11 @@ object Governance {
   /** WRITE–AUDIT–PUBLISH — the staged-commit discipline (popularized by
     * Netflix's Iceberg WAP) that keeps a 100 TB table's consumers from ever
     * seeing unaudited data: stage the snapshot, run the audits against the
-    * STAGED files, quarantine violations, and only then publish — manifest
-    * written LAST (the serving-index transaction rule), so a crash mid-
-    * publish leaves the previous snapshot live, never a torn one. Audits
-    * here are the two genuinely-present defect classes: duplicate
+    * STAGED files, quarantine violations, and only then publish — a new
+    * version of the `published` store whose commit pointer moves LAST (the
+    * serving-index transaction, [[graft.sources.Storage.commit]]), so a
+    * crash mid-publish leaves the previous snapshot live, never a torn one.
+    * Audits here are the two genuinely-present defect classes: duplicate
     * (orderkey, linenumber) business keys (the synthetic lineitem contains
     * real ones) and orphaned foreign keys (lineitems with no parent order).
     * The output's `n_published` is read back FROM THE PUBLISHED ARTIFACT —
@@ -613,12 +614,12 @@ object Governance {
       val clean = st
         .join(dupKeys, Seq("l_orderkey", "l_linenumber"), "left_anti")
         .join(orderKeys, st("l_orderkey") === orderKeys("o_orderkey"), "left_semi")
-      clean.write.mode("overwrite").parquet(s"$wap/published/data")
-      // manifest LAST: readers treat its absence as "previous snapshot live"
-      s.range(1).select(lit("published").as("state"))
-        .write.mode("overwrite").parquet(s"$wap/published/manifest")
-      require(Storage.exists(s"$wap/published/manifest"), "torn publish")
-      val published = s.read.schema(staged.schema).parquet(s"$wap/published/data")
+      val pub = Storage.head(s"$wap/published")
+      val (cleanObs, nClean) = Storage.observedCount(clean)
+      pub.write(cleanObs, "data")
+      // the pointer LAST: until it moves, readers see the previous snapshot
+      Storage.commit(pub.rebuilt(nClean(), "data"))
+      val published = Storage.committed(s"$wap/published").read(s, "data", staged.schema)
       val nStaged   = stObs.get("n").asInstanceOf[Long]
       val nDup      = dup.agg(coalesce(sum(col("c")), lit(0L)).as("n")).head().getLong(0)
       val nOrphan   = st.join(orderKeys, st("l_orderkey") === orderKeys("o_orderkey"), "left_anti").count()
@@ -637,7 +638,7 @@ object Governance {
             SELECT (SELECT count(*) FROM st) AS n_staged,
               (SELECT count(*) FROM st JOIN dup USING (l_orderkey, l_linenumber)) AS n_dup_quarantined,
               (SELECT count(*) FROM orphan) AS n_orphan_quarantined,
-              (SELECT count(*) FROM read_parquet('$SchemaBase/wap/published/data/*.parquet')) AS n_published""")
+              (SELECT count(*) FROM read_parquet('$SchemaBase/wap/published/data/*/*.parquet')) AS n_published""")
   )
 
   /** In-flight pipeline observability via `Dataset.observe` (Catalyst's
@@ -687,22 +688,23 @@ object Governance {
 
   /** Snapshot retention (VACUUM) — the third leg of the table-maintenance
     * triad beside compaction (`x_compaction`/index `compact`) and
-    * write–audit–publish (`x_wap_publish`): four manifest-last publishes
-    * build a versioned store (`snap=1..4`, each a different cumulative
-    * lineitem slice), crash debris is planted (`.__merge_tmp`,
-    * `.__append_x`) and backdated past the grace window, then
-    * [[graft.sources.Storage.vacuum]] retains the 2-snapshot window ending
-    * at the live snapshot and sweeps the AGED debris (fresh staging dirs
-    * are presumed in-flight concurrent writers and survive — the r14
-    * single-writer-race fix).
-    * The oracle sees only the POST-vacuum filesystem: it re-derives the
-    * live snapshot from the manifest parquet, counts retained snapshots and
-    * rows via a hive-partitioned read of what survived, and proves the
-    * debris is gone via glob() — a leaky vacuum (live deleted, window
-    * wrong, debris left) hash-fails.
+    * write–audit–publish (`x_wap_publish`): four publishes build a versioned
+    * store (versions 1..4 of its `data` table, each a different cumulative
+    * lineitem slice, each live once its commit pointer moves), crash debris
+    * is planted (`.__merge_tmp`, `.__append_x`) and backdated past the grace
+    * window, then [[graft.sources.Storage.vacuum]] retains the 2-version
+    * window ending at the live version and sweeps the AGED debris (fresh
+    * staging dirs are presumed in-flight concurrent writers and survive —
+    * the r14 single-writer-race fix). The row counts come from the retained
+    * versions' pointers.
+    * The oracle sees only the POST-vacuum filesystem: it takes the live
+    * version as the highest data directory left, counts retained versions
+    * and rows from the directories' files, and proves the debris is gone via
+    * glob() — a leaky vacuum (live deleted, window wrong, debris left)
+    * hash-fails.
     *
-    * Scale: vacuum is metadata-only (one dir listing + one manifest row;
-    * deletes proportional to expired snapshots, zero data reads) — the
+    * Scale: vacuum is metadata-only (directory listings + pointer reads;
+    * deletes proportional to expired versions, zero data reads) — the
     * shape that keeps a 100 TB store's maintenance off the query path.
     */
   val vacuumRetention = Q(
@@ -713,11 +715,11 @@ object Governance {
       val rows = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
       (1 to 4).foreach { v =>
-        rows.filter(col("l_orderkey") % 4 < v)
-          .write.mode("overwrite").parquet(s"$base/snap=$v")
-        // manifest LAST: the flip is what makes snapshot v live
-        s.range(1).select(lit(v.toLong).as("live"))
-          .write.mode("overwrite").parquet(s"$base/manifest")
+        val at = Storage.head(base)
+        val (snap, n) = Storage.observedCount(rows.filter(col("l_orderkey") % 4 < v))
+        at.write(snap, "data")
+        // the pointer LAST: its move is what makes version v live
+        Storage.publish(at.rebuilt(n(), "data"))
       }
       // crash debris: a dead rename-aside sidecar and a dead staged append,
       // backdated past vacuum's grace window (fresh staging dirs are
@@ -727,36 +729,24 @@ object Governance {
       val aged = System.currentTimeMillis() - 3600 * 1000L
       Storage.setMtime(s"$base/x.__merge_tmp", aged)
       Storage.setMtime(s"$base/x.__append_dead", aged)
-      val (live, _, _) = Storage.vacuum(s, base, keepLast = 2)
-      val retained = Storage.ls(base).filter(_.startsWith("snap="))
-        .map(_.stripPrefix("snap=").toLong).sorted
-      // count each retained snapshot once; the live snapshot is always
-      // retained, so its count is reused instead of re-scanned.
-      val rowsBySnap =
-        retained.map(v => v -> s.read.schema(rows.schema).parquet(s"$base/snap=$v").count()).toMap
-      val nRowsLive = rowsBySnap(live)
-      val nRowsRetained = rowsBySnap.values.sum
+      val (live, _, _) = Storage.vacuum(base, keepLast = 2)
+      val retained = Storage.history(base)
       val nStray = Storage.ls(base).count(n => n.contains("__"))
       s.range(1).select(
         lit(live).as("live_snap"),
         lit(retained.size.toLong).as("n_snaps_retained"),
-        lit(nRowsLive).as("n_rows_live"),
-        lit(nRowsRetained).as("n_rows_retained"),
+        lit(retained.last.rows).as("n_rows_live"),
+        lit(retained.map(_.rows).sum).as("n_rows_retained"),
         lit(nStray.toLong).as("n_stray_dirs"))
     },
-    Some(s"""SELECT
-              (SELECT live FROM read_parquet('$SchemaBase/vac/manifest/*.parquet')) AS live_snap,
-              (SELECT count(DISTINCT snap)
-                 FROM read_parquet('$SchemaBase/vac/snap=*/*.parquet', hive_partitioning=true))
-                AS n_snaps_retained,
-              (SELECT count(*)
-                 FROM read_parquet('$SchemaBase/vac/snap=*/*.parquet', hive_partitioning=true)
-                 WHERE CAST(snap AS BIGINT) =
-                   (SELECT live FROM read_parquet('$SchemaBase/vac/manifest/*.parquet')))
-                AS n_rows_live,
-              (SELECT count(*)
-                 FROM read_parquet('$SchemaBase/vac/snap=*/*.parquet', hive_partitioning=true))
-                AS n_rows_retained,
+    Some(s"""WITH d AS (
+              SELECT CAST(regexp_extract(filename, '/vac/data/([0-9]+)/', 1) AS BIGINT) AS v
+              FROM read_parquet('$SchemaBase/vac/data/*/*.parquet', filename=true))
+            SELECT
+              (SELECT max(v) FROM d) AS live_snap,
+              (SELECT count(DISTINCT v) FROM d) AS n_snaps_retained,
+              (SELECT count(*) FROM d WHERE v = (SELECT max(v) FROM d)) AS n_rows_live,
+              (SELECT count(*) FROM d) AS n_rows_retained,
               (SELECT count(*) FROM glob('$SchemaBase/vac/*__*')) AS n_stray_dirs""")
   )
 

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{AnnIndex, TextAnalysis, TextIndex}
-import graft.sources.Storage
 
 /** Round-12 family: index SERVING — the build-once/probe-many and
   * incremental-maintenance shapes that turn the in-query ANN/search
@@ -49,11 +48,11 @@ object Serving {
         .orderBy("query_id", "rank")
     },
     Some(s"""WITH cent AS (
-              SELECT cell, cv FROM read_parquet('$ProbeIdx/centroids/*.parquet')),
+              SELECT cell, cv FROM read_parquet('$ProbeIdx/centroids/*/*.parquet')),
             cb AS (
-              SELECT sub, code, cv FROM read_parquet('$ProbeIdx/codebooks/*.parquet')),
+              SELECT sub, code, cv FROM read_parquet('$ProbeIdx/codebooks/*/*.parquet')),
             codes AS (
-              SELECT id, cell, codes FROM read_parquet('$ProbeIdx/codes/*.parquet')),
+              SELECT id, cell, codes FROM read_parquet('$ProbeIdx/codes/*/*.parquet')),
             q AS (
               SELECT vec_id, list_transform(embedding,
                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
@@ -113,9 +112,9 @@ object Serving {
         .orderBy("id", "sub")
     },
     Some(s"""WITH cent AS (
-              SELECT cell, cv FROM read_parquet('$AppendIdx/centroids/*.parquet')),
+              SELECT cell, cv FROM read_parquet('$AppendIdx/centroids/*/*.parquet')),
             cb AS (
-              SELECT sub, code, cv FROM read_parquet('$AppendIdx/codebooks/*.parquet')),
+              SELECT sub, code, cv FROM read_parquet('$AppendIdx/codebooks/*/*.parquet')),
             nv AS (
               SELECT vec_id AS id, list_transform(embedding,
                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
@@ -249,12 +248,12 @@ object Serving {
     },
     Some(s"""WITH posts AS (
               SELECT tok, doc_id, tf
-              FROM read_parquet('$TextIdx/postings/*/*.parquet', hive_partitioning=true)
+              FROM read_parquet('$TextIdx/postings/*/*/*.parquet', hive_partitioning=true)
               WHERE tok IN ('hash', 'join', 'stream')),
-            d AS (SELECT doc_id, dl FROM read_parquet('$TextIdx/docs/*.parquet')),
-            st AS (SELECT tok, df FROM read_parquet('$TextIdx/stats/*.parquet')
+            d AS (SELECT doc_id, dl FROM read_parquet('$TextIdx/docs/*/*.parquet')),
+            st AS (SELECT tok, df FROM read_parquet('$TextIdx/stats/*/*.parquet')
                    WHERE tok IN ('hash', 'join', 'stream')),
-            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextIdx/corpus/*.parquet')),
+            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextIdx/corpus/*/*.parquet')),
             sq AS (
               SELECT p.doc_id,
                 CAST(floor(
@@ -352,12 +351,12 @@ object Serving {
     },
     Some(s"""WITH posts AS (
               SELECT tok, doc_id, tf
-              FROM read_parquet('$TextAppIdx/postings/*/*.parquet', hive_partitioning=true)
+              FROM read_parquet('$TextAppIdx/postings/*/*/*.parquet', hive_partitioning=true)
               WHERE tok IN ('hash', 'join', 'stream')),
-            d AS (SELECT doc_id, dl FROM read_parquet('$TextAppIdx/docs/*.parquet')),
-            st AS (SELECT tok, df FROM read_parquet('$TextAppIdx/stats/*.parquet')
+            d AS (SELECT doc_id, dl FROM read_parquet('$TextAppIdx/docs/*/*.parquet')),
+            st AS (SELECT tok, df FROM read_parquet('$TextAppIdx/stats/*/*.parquet')
                    WHERE tok IN ('hash', 'join', 'stream')),
-            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextAppIdx/corpus/*.parquet')),
+            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextAppIdx/corpus/*/*.parquet')),
             sq AS (
               SELECT p.doc_id,
                 CAST(floor(
@@ -398,11 +397,11 @@ object Serving {
                      (3, 'hash'), (3, 'stream'), (3, 'window')),
             posts AS (
               SELECT tok, doc_id, tf
-              FROM read_parquet('$TextIdx/postings/*/*.parquet', hive_partitioning=true)
+              FROM read_parquet('$TextIdx/postings/*/*/*.parquet', hive_partitioning=true)
               WHERE tok IN (SELECT tok FROM qs)),
-            d AS (SELECT doc_id, dl FROM read_parquet('$TextIdx/docs/*.parquet')),
-            st AS (SELECT tok, df FROM read_parquet('$TextIdx/stats/*.parquet')),
-            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextIdx/corpus/*.parquet')),
+            d AS (SELECT doc_id, dl FROM read_parquet('$TextIdx/docs/*/*.parquet')),
+            st AS (SELECT tok, df FROM read_parquet('$TextIdx/stats/*/*.parquet')),
+            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextIdx/corpus/*/*.parquet')),
             sq AS (
               SELECT q.query_id, p.doc_id,
                 CAST(floor(
@@ -445,10 +444,10 @@ object Serving {
       TextIndex.probeBm25(s, TextDelIdx, Seq("hash", "join", "stream"), topK = 20)
     },
     Some(s"""WITH tomb AS (
-              SELECT doc_id FROM read_parquet('$TextDelIdx/tombstones/*.parquet')),
+              SELECT doc_id FROM read_parquet('$TextDelIdx/tombstones/*/*.parquet')),
             postsAll AS (
               SELECT tok, doc_id, tf
-              FROM read_parquet('$TextDelIdx/postings/*/*.parquet', hive_partitioning=true)
+              FROM read_parquet('$TextDelIdx/postings/*/*/*.parquet', hive_partitioning=true)
               WHERE tok IN ('hash', 'join', 'stream')),
             posts AS (
               SELECT p.* FROM postsAll p LEFT JOIN tomb t USING (doc_id)
@@ -458,11 +457,11 @@ object Serving {
               FROM postsAll p JOIN tomb t USING (doc_id) GROUP BY p.tok),
             st AS (
               SELECT s.tok, s.df - COALESCE(dfc.df_dead, 0) AS df
-              FROM read_parquet('$TextDelIdx/stats/*.parquet') s
+              FROM read_parquet('$TextDelIdx/stats/*/*.parquet') s
               LEFT JOIN dfc ON dfc.tok = s.tok
               WHERE s.tok IN ('hash', 'join', 'stream')),
-            d AS (SELECT doc_id, dl FROM read_parquet('$TextDelIdx/docs/*.parquet')),
-            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextDelIdx/corpus/*.parquet')),
+            d AS (SELECT doc_id, dl FROM read_parquet('$TextDelIdx/docs/*/*.parquet')),
+            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextDelIdx/corpus/*/*.parquet')),
             sq AS (
               SELECT p.doc_id,
                 CAST(floor(
@@ -499,13 +498,13 @@ object Serving {
         .orderBy("query_id", "rank")
     },
     Some(s"""WITH cent AS (
-              SELECT cell, cv FROM read_parquet('$DelIdx/centroids/*.parquet')),
+              SELECT cell, cv FROM read_parquet('$DelIdx/centroids/*/*.parquet')),
             cb AS (
-              SELECT sub, code, cv FROM read_parquet('$DelIdx/codebooks/*.parquet')),
-            tomb AS (SELECT id FROM read_parquet('$DelIdx/tombstones/*.parquet')),
+              SELECT sub, code, cv FROM read_parquet('$DelIdx/codebooks/*/*.parquet')),
+            tomb AS (SELECT id FROM read_parquet('$DelIdx/tombstones/*/*.parquet')),
             codes AS (
               SELECT c.id, c.cell, c.codes
-              FROM read_parquet('$DelIdx/codes/*.parquet') c
+              FROM read_parquet('$DelIdx/codes/*/*.parquet') c
               LEFT JOIN tomb t USING (id) WHERE t.id IS NULL),
             q AS (
               SELECT vec_id, list_transform(embedding,
@@ -545,11 +544,11 @@ object Serving {
   private val TextCmpIdx = "/tmp/graft_index/text_cmp"
 
   /** COMPACTION of a tombstoned text index ([[TextIndex.compact]]) — the
-    * verb that closes the delete story: tombstoned postings/doc rows are
-    * physically dropped under the rename-aside swap, df recomputed from the
-    * survivors, delete state cleared (the corpus row already holds the live
-    * totals) — all inside one [[graft.sources.Storage.commit]], so a torn
-    * mid-compaction index is refused by probes rather than served.
+    * verb that closes the delete story: the surviving postings/doc rows are
+    * written once as merged directories, df recomputed from the written
+    * postings, delete state cleared (the corpus row already holds the live
+    * totals) — all one new version under [[graft.sources.Storage.commit]],
+    * so a crash mid-compaction leaves the tombstoned version serving.
     * The probe after compaction is the PLAIN probe (no anti-join, no df
     * correction — the per-probe delete tax is gone), and the oracle replays
     * it over `read_parquet` of the COMPACTED artifacts: any posting that
@@ -559,7 +558,7 @@ object Serving {
     *
     * Scale: ONE partition-parallel anti-join pass over the postings
     * (broadcast tombstones) amortized across every subsequent probe — the
-    * Storage.rewrite economics applied to the serving layer.
+    * HyDFS `merge` economics applied to the serving layer.
     */
   val searchIndexCompact = Q(
     "x_search_index_compact",
@@ -573,12 +572,12 @@ object Serving {
     },
     Some(s"""WITH posts AS (
               SELECT tok, doc_id, tf
-              FROM read_parquet('$TextCmpIdx/postings/*/*.parquet', hive_partitioning=true)
+              FROM read_parquet('$TextCmpIdx/postings/*/*/*.parquet', hive_partitioning=true)
               WHERE tok IN ('hash', 'join', 'stream')),
-            d AS (SELECT doc_id, dl FROM read_parquet('$TextCmpIdx/docs/*.parquet')),
-            st AS (SELECT tok, df FROM read_parquet('$TextCmpIdx/stats/*.parquet')
+            d AS (SELECT doc_id, dl FROM read_parquet('$TextCmpIdx/docs/*/*.parquet')),
+            st AS (SELECT tok, df FROM read_parquet('$TextCmpIdx/stats/*/*.parquet')
                    WHERE tok IN ('hash', 'join', 'stream')),
-            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextCmpIdx/corpus/*.parquet')),
+            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextCmpIdx/corpus/*/*.parquet')),
             sq AS (
               SELECT p.doc_id,
                 CAST(floor(
@@ -596,8 +595,8 @@ object Serving {
 
   /** COMPACTION of a tombstoned IVF-PQ index ([[AnnIndex.compactIvfPq]]):
     * deletion is pure candidate filtering, so compaction is ONE anti-join
-    * rewrite of the codes table (model tables untouched) under the
-    * rename-aside swap, in one [[graft.sources.Storage.commit]]. The probe
+    * pass writing a merged codes directory (model tables untouched), in one
+    * [[graft.sources.Storage.commit]]. The probe
     * after compaction runs with NO tombstone state; the oracle replays cell
     * ranking, codebook reconstruction and ADC top-k over the COMPACTED
     * codes — a code row that outlived its tombstone resurfaces as a hash
@@ -620,11 +619,11 @@ object Serving {
         .orderBy("query_id", "rank")
     },
     Some(s"""WITH cent AS (
-              SELECT cell, cv FROM read_parquet('$CmpIdx/centroids/*.parquet')),
+              SELECT cell, cv FROM read_parquet('$CmpIdx/centroids/*/*.parquet')),
             cb AS (
-              SELECT sub, code, cv FROM read_parquet('$CmpIdx/codebooks/*.parquet')),
+              SELECT sub, code, cv FROM read_parquet('$CmpIdx/codebooks/*/*.parquet')),
             codes AS (
-              SELECT id, cell, codes FROM read_parquet('$CmpIdx/codes/*.parquet')),
+              SELECT id, cell, codes FROM read_parquet('$CmpIdx/codes/*/*.parquet')),
             q AS (
               SELECT vec_id, list_transform(embedding,
                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
@@ -702,11 +701,11 @@ object Serving {
         .orderBy("query_id")
     },
     Some(s"""WITH cent AS (
-              SELECT cell, cv FROM read_parquet('$RecallIdx/centroids/*.parquet')),
+              SELECT cell, cv FROM read_parquet('$RecallIdx/centroids/*/*.parquet')),
             cb AS (
-              SELECT sub, code, cv FROM read_parquet('$RecallIdx/codebooks/*.parquet')),
+              SELECT sub, code, cv FROM read_parquet('$RecallIdx/codebooks/*/*.parquet')),
             codes AS (
-              SELECT id, cell, codes FROM read_parquet('$RecallIdx/codes/*.parquet')),
+              SELECT id, cell, codes FROM read_parquet('$RecallIdx/codes/*/*.parquet')),
             q AS (
               SELECT vec_id, list_transform(embedding,
                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
@@ -805,7 +804,7 @@ object Serving {
     },
     Some("""WITH seg AS (
               SELECT seg, hv
-              FROM read_parquet('/tmp/graft_index/kmv_store/segments/*.parquet')),
+              FROM read_parquet('/tmp/graft_index/kmv_store/segments/*/*.parquet')),
             p1 AS (SELECT DISTINCT hv FROM seg WHERE seg BETWEEN 1 AND 3
                    ORDER BY hv LIMIT 256),
             s1 AS (SELECT max(hv) AS kth_min, count(*) AS filled FROM p1),
@@ -851,13 +850,13 @@ object Serving {
       val est = graft.functions.SketchStore.probeRange(s, KmvStoreApp, 0L, 999999L)
       val exact = Tables.lineitem(s, d)
         .agg(count_distinct(col("l_partkey")).as("exact_keys"))
-      val nSegs = Storage.get(s, s"$KmvStoreApp/segments")
+      val nSegs = graft.functions.SketchStore.segments(s, KmvStoreApp)
         .agg(count_distinct(col("seg")).as("n_segments"))
       est.crossJoin(exact).crossJoin(nSegs) // 1×1×1
     },
     Some("""WITH seg AS (
               SELECT seg, hv
-              FROM read_parquet('/tmp/graft_index/kmv_store_app/segments/*.parquet')),
+              FROM read_parquet('/tmp/graft_index/kmv_store_app/segments/*/*.parquet')),
             p AS (SELECT DISTINCT hv FROM seg ORDER BY hv LIMIT 256),
             sk AS (SELECT max(hv) AS kth_min, count(*) AS filled FROM p),
             e AS (SELECT count(DISTINCT l_partkey) AS exact_keys FROM lineitem),

@@ -2,8 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import graft.functions.Layout.LineageOps
+import org.apache.spark.sql.types.{LongType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
@@ -29,13 +28,6 @@ object Storage {
     */
   def append(df: DataFrame, path: String): Unit =
     df.write.mode("append").parquet(path)
-
-  /** Overwrite-create — the build-artifact face of [[create]]: an index
-    * rebuild REPLACES the prior artifact (single-writer, e.g. the IVF-PQ
-    * build job), where `create`'s create-once contract would reject it.
-    */
-  def replace(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
 
   /** `get hydfsf localf` — snapshot read with read-your-writes from the FS
     * (`getFile`, `core_process_utils.go:1962-2037`).
@@ -96,26 +88,18 @@ object Storage {
   def drop(path: String): Unit = deleteRecursively(Paths.get(path))
 
   /** `merge hydfsf` — compact append chunks into few files
-    * (`mergeFile`, `core_process_utils.go:2040-2146`) through [[rewrite]]'s
-    * crash-safe swap. `numFiles` bounds output parallelism like the
-    * coordinator's single merged base file.
+    * (`mergeFile`, `core_process_utils.go:2040-2146`); `numFiles` bounds
+    * output parallelism like the coordinator's single merged base file. A
+    * crash-safe swap: the merged copy is written to `path.__merge_tmp` (so
+    * the read of `path` is never clobbered mid-scan), the old data renamed
+    * aside (never deleted first), the new dir moved in, then the sidecar
+    * dropped — a crash at any step leaves a complete copy of the data in
+    * either the target or the `.__merge_old` sidecar.
     */
-  def merge(spark: SparkSession, path: String, numFiles: Int = 1): Unit =
-    rewrite(get(spark, path).coalesce(numFiles), path)
-
-  /** Crash-safe table swap: write `df` (which may read from `path` itself —
-    * the write lands in a sidecar, so the read is never clobbered mid-scan)
-    * to `path.__merge_tmp`, rename the old data aside (never deleted first),
-    * move the new dir in, then drop the sidecar — a crash at any step leaves
-    * a complete copy of the data in either the target or the `.__merge_old`
-    * sidecar. The compaction primitive of the index-serving layer:
-    * tombstone-filtered rewrites of postings/codes.
-    */
-  def rewrite(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Unit = {
+  def merge(spark: SparkSession, path: String, numFiles: Int = 1): Unit = {
     val tmp = path.stripSuffix("/") + ".__merge_tmp"
     deleteRecursively(Paths.get(tmp))
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(tmp)
+    get(spark, path).coalesce(numFiles).write.mode("overwrite").parquet(tmp)
     val target = Paths.get(path)
     val old    = Paths.get(path.stripSuffix("/") + ".__merge_old")
     deleteRecursively(old)
@@ -124,43 +108,101 @@ object Storage {
     deleteRecursively(old)
   }
 
-  // ---- Commit core of the persisted serving stores ([[graft.functions
-  // .TextIndex]], [[graft.functions.AnnIndex]], [[graft.functions
-  // .SketchStore]]). A store is a directory of parquet tables plus
-  // `manifest`, a one-line file holding the store's committed physical row
-  // count. Every write verb runs inside [[commit]], which drops the manifest
-  // before the verb's first table write and moves the new one into place
-  // after its last: a crash mid-verb leaves a store that every verb refuses,
-  // never one that serves a mix of old and new tables. Deletes are
-  // tombstones (`tombstones`, one key column) that probes anti-join until a
-  // compaction rewrites them away.
+  // ---- Commit core of the persisted stores (TextIndex, AnnIndex,
+  // SketchStore, Governance's published snapshots). A store's tables are
+  // version directories, `<table>/<v>`, each written by the verb that made
+  // version v; one commit pointer per version, `_commits/<v>`, holds the
+  // physical row count and each table's live directories, and the highest
+  // pointer is live. A verb only adds the next version's directories and
+  // moves its pointer into place last, so until then readers see the
+  // previous version whole and a crash at any step leaves the store
+  // serving. Deletes are tombstone directories that probes anti-join until
+  // a compaction writes the survivors as one merged directory.
 
-  private def manifest(store: String) = Paths.get(store, "manifest")
-  private def tombstonesPath(store: String) = s"$store/tombstones"
+  private val Pointers = "_commits"
 
-  /** Refuse a store without a commit manifest: torn by a failed verb, or never built. */
-  def requireCommitted(store: String): Unit =
-    require(Files.isRegularFile(manifest(store)),
-      s"store at $store has no commit manifest — torn or missing build; rebuild it")
+  private def pointer(store: String, n: Long) = Paths.get(store, Pointers, n.toString)
 
-  /** The physical row count the last commit recorded — a file read, no Spark job. */
-  def committedRows(store: String): Long = {
-    requireCommitted(store)
-    Files.readString(manifest(store)).trim.toLong
+  private def isVersion(name: String) = name.nonEmpty && name.forall(_.isDigit)
+
+  /** A store's version: number, physical id-table row count, and each
+    * table's live directories, named by the versions that wrote them.
+    */
+  final case class Version(store: String, n: Long, rows: Long, tables: Map[String, Seq[Long]]) {
+    def dirs(table: String): Seq[String] = tables.getOrElse(table, Nil).map(v => s"$store/$table/$v")
+
+    /** `table`'s live directories as one frame, read with its declared
+      * schema: no footer job, no entry in [[get]]'s memo. (Spark takes one
+      * partition root per read, so read a partitioned table per directory.)
+      */
+    def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(dirs(table): _*)
+
+    /** The directory the next version writes `table` to. */
+    def out(table: String): String = s"$store/$table/${n + 1}"
+
+    /** Write `df` to [[out]], replacing what an uncommitted attempt left there. */
+    def write(df: DataFrame, table: String, partitionCols: String*): Unit = {
+      val w = df.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(out(table))
+    }
+
+    /** The next version: `rows`, each `added` table with its new directory
+      * beside its live ones, each `replaced` table with its new directory
+      * alone, each `dropped` table gone.
+      */
+    def next(rows: Long, added: Seq[String] = Nil, replaced: Seq[String] = Nil,
+        dropped: Seq[String] = Nil): Version =
+      copy(n = n + 1, rows = rows, tables = tables -- dropped ++
+        added.map(t => t -> (tables.getOrElse(t, Nil) :+ (n + 1))) ++ replaced.map(_ -> Seq(n + 1)))
+
+    /** The next version as a rebuild: `tables`, each its new directory, and nothing else. */
+    def rebuilt(rows: Long, tables: String*): Version =
+      copy(tables = Map.empty).next(rows, replaced = tables)
   }
 
-  /** Run one write verb as a transaction: drop the manifest, run `body`, and
-    * commit the physical row count it returns — written to a temporary name
-    * and moved into place atomically, so a reader sees either no manifest or
-    * a whole one.
+  private def readVersion(store: String, n: Long): Version = {
+    val lines = Files.readAllLines(pointer(store, n)).asScala.toSeq.map(_.split(' ').toSeq)
+    Version(store, n, lines.head(1).toLong, lines.tail.map(l => l.head -> l.tail.map(_.toLong)).toMap)
+  }
+
+  private def pointers(store: String): Seq[Long] =
+    ls(s"$store/$Pointers").filter(isVersion).map(_.toLong)
+      .filter(n => Files.isRegularFile(pointer(store, n))).sorted
+
+  /** The committed versions still on disk, oldest first. */
+  def history(store: String): Seq[Version] = pointers(store).map(readVersion(store, _))
+
+  /** The live version (one listing, one file read), or an empty version 0
+    * when nothing was committed: what a build starts from.
     */
-  def commit(store: String)(body: => Long): Unit = {
-    deleteRecursively(manifest(store))
-    val rows = body
-    val tmp  = Paths.get(store, ".manifest.tmp")
+  def head(store: String): Version =
+    pointers(store).lastOption.fold(Version(store, 0L, 0L, Map.empty))(readVersion(store, _))
+
+  /** The live version; refuses a store that was never committed. */
+  def committed(store: String): Version = {
+    val v = head(store)
+    require(v.n > 0, s"store at $store has no committed version — build it first")
+    v
+  }
+
+  /** Make `v` the live version: its pointer is written under a temporary
+    * name and moved into place atomically, so a reader sees the previous
+    * version or this one, whole. Superseded versions stay on disk.
+    */
+  def publish(v: Version): Unit = {
+    val tmp = Paths.get(v.store, Pointers, ".pending")
     Files.createDirectories(tmp.getParent)
-    Files.writeString(tmp, s"$rows\n")
-    Files.move(tmp, manifest(store), StandardCopyOption.ATOMIC_MOVE)
+    Files.writeString(tmp, (s"rows ${v.rows}" +: v.tables.toSeq.sortBy(_._1).map { case (t, vs) =>
+      (t +: vs.map(_.toString)).mkString(" ")
+    }).mkString("", "\n", "\n"))
+    Files.move(tmp, pointer(v.store, v.n), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** [[publish]] `v`, then drop what it superseded: [[vacuum]] keeping one version. */
+  def commit(v: Version): Unit = {
+    publish(v)
+    vacuum(v.store, keepLast = 1)
   }
 
   /** A write's row count, observed on the write itself instead of a re-count job. */
@@ -169,98 +211,83 @@ object Storage {
     (df.observe(obs, count(lit(1)).as("n")), () => obs.get("n").asInstanceOf[Long])
   }
 
-  def tombstones(spark: SparkSession, store: String): Option[DataFrame] =
-    if (exists(tombstonesPath(store))) Some(get(spark, tombstonesPath(store))) else None
+  private def tombstoneSchema(key: String) = new StructType().add(key, LongType)
 
-  /** A rebuild or compaction resets delete state. */
-  def clearTombstones(store: String): Unit = drop(tombstonesPath(store))
+  /** `v`'s tombstones, one long `key` column; None when it has none. */
+  def tombstones(spark: SparkSession, v: Version, key: String): Option[DataFrame] =
+    if (v.tables.contains("tombstones")) Some(v.read(spark, "tombstones", tombstoneSchema(key)))
+    else None
 
-  /** Add the ids in the first column of `ids` to the tombstone table under
-    * `key`. Returns the ids that were not tombstoned before, pinned, so a
-    * store's corrections subtract each deleted row exactly once (O(delta)).
+  /** Write the ids in the first column of `ids` that `v` has not tombstoned
+    * yet as the next version's tombstone directory, and return them, read
+    * back from it, so a store's corrections subtract each deleted row
+    * exactly once (O(delta)). Commit with `added = Seq("tombstones")`.
     */
-  def tombstone(store: String, ids: DataFrame, key: String): DataFrame = {
+  def tombstone(v: Version, ids: DataFrame, key: String): DataFrame = {
     val spark = ids.sparkSession
-    import spark.implicits._
-    val prior = tombstones(spark, store).getOrElse(Seq.empty[Long].toDF(key))
-    // `ids` is consumed once, by this anti-join — pinning it too would be
-    // one more materialization job per delete
-    val fresh = ids.select(col(ids.columns.head).cast("long").as(key)).distinct()
-      .join(prior, Seq(key), "left_anti").truncateLineage()
-    replace(prior.union(fresh).truncateLineage(), tombstonesPath(store))
-    fresh
+    val asked = ids.select(col(ids.columns.head).cast("long").as(key)).distinct()
+    v.write(tombstones(spark, v, key).fold(asked)(asked.join(_, Seq(key), "left_anti")), "tombstones")
+    spark.read.schema(tombstoneSchema(key)).parquet(v.out("tombstones"))
   }
 
   /** Refuse an append of an id already in the store's physical id table:
     * `present`'s `key` column (docs.doc_id, codes.id, segments.seg). A live
     * id would get a second row, counted twice; a tombstoned one keeps its
     * old rows until a compaction, so it would come back beside them. One
-    * check covers both. The semi-join stops at its first match.
+    * check covers both: `present` semi-joins a broadcast of the new ids,
+    * and the limit stops it at its first match.
     */
   def requireNewIds(
       store: String, present: DataFrame, key: String, rows: DataFrame, idCol: String): Unit = {
-    val clash = rows.select(col(idCol).cast("long").as(key)).distinct()
-      .join(present.select(col(key)).distinct(), Seq(key), "left_semi").limit(1).count()
+    val clash = present.select(col(key))
+      .join(broadcast(rows.select(col(idCol).cast("long").as(key))), Seq(key), "left_semi")
+      .limit(1).count()
     require(clash == 0L, s"an appended $key is already present in $store, live or " +
       "tombstoned: ids are append-once — compact the store before re-adding a deleted id")
   }
 
-  /** The compact gate: the pinned tombstone table when there is one and it
-    * holds at least `minFraction` of the committed rows, else None — the
-    * rewrite is a full pass, worth it only once enough deletes accumulate.
-    * The denominator is [[committedRows]], not a full-table count.
+  /** The compact gate: `v`'s tombstones when they hold at least
+    * `minFraction` of its committed rows, else None — the rewrite is a full
+    * pass, worth it only once enough deletes accumulate.
     */
-  def compactable(spark: SparkSession, store: String, minFraction: Double): Option[DataFrame] = {
-    val rows = committedRows(store)
-    tombstones(spark, store).map(_.truncateLineage()).filter { tomb =>
+  def compactable(spark: SparkSession, v: Version, key: String, minFraction: Double): Option[DataFrame] =
+    tombstones(spark, v, key).filter { tomb =>
       val n = tomb.count()
-      n > 0L && (rows == 0L || n.toDouble / rows.toDouble >= minFraction)
+      n > 0L && (v.rows == 0L || n.toDouble / v.rows.toDouble >= minFraction)
     }
-  }
 
-  /** Snapshot retention + crash-debris sweep — the VACUUM of the
-    * versioned-snapshot layout (`path/snap=N/` parquet dirs, `path/manifest`
-    * holding the live N, manifest written LAST by publishers): physically
-    * removes snapshots older than the `keepLast`-sized window ending at the
-    * live snapshot, plus rename-aside / staged-append debris
-    * (`.__merge_tmp` / `.__merge_old` / `.__append_*`) left by crashed
-    * writers — but only entries OLDER than `debrisGraceMs` (default 10 min):
-    * a younger staging dir may belong to a concurrent in-flight
-    * rewrite/append whose atomic swap hasn't landed yet, and vacuum must
-    * never race a live writer. Safety contract: REFUSES a torn store
-    * (snapshots present but
-    * no manifest — a reader can't tell which is live, so neither can the
-    * vacuum); never touches the live snapshot; never touches snapshots
-    * NEWER than live (an in-flight publish owns them — its manifest flip
-    * hasn't happened yet). At 100 TB this is metadata-only work: one
-    * directory listing + one manifest row, deletes proportional to expired
-    * snapshots, zero data reads.
-    * Returns (liveSnap, removedSnaps, removedStray).
+  /** VACUUM of the commit layout: keeps the `keepLast` newest pointers and
+    * the directories they name; drops the older pointers and every other
+    * version directory numbered at most the live version (superseded, or
+    * left by a verb that died after its pointer moved). A directory numbered
+    * above it may be an in-flight verb's, so it goes, like rename-aside and
+    * staged-append debris (`.__merge_tmp` / `.__merge_old` / `.__append_*`),
+    * only once older than `debrisGraceMs`: vacuum never races a live
+    * writer. Refuses version directories without any pointer (nothing says
+    * which is live). Metadata-only: listings and pointer reads, zero data
+    * reads. Returns (live version or -1, versions expired, debris swept).
     */
-  def vacuum(spark: SparkSession, path: String, keepLast: Int,
-      debrisGraceMs: Long = 600000L): (Long, Long, Long) = {
-    require(keepLast >= 1, "vacuum must retain at least the live snapshot")
+  def vacuum(path: String, keepLast: Int, debrisGraceMs: Long = 600000L): (Long, Long, Long) = {
+    require(keepLast >= 1, "vacuum must retain at least the live version")
     val base = path.stripSuffix("/")
-    val entries = ls(path)
-    val snaps = entries.filter(_.startsWith("snap=")).map(_.stripPrefix("snap=").toLong)
-    val manifested = exists(s"$base/manifest")
-    require(snaps.isEmpty || manifested,
-      "torn store: snapshots present but no manifest names the live one — refusing to vacuum")
-    // Debris sweep is AGE-GATED: a `.__merge_tmp`/`.__append_*` entry younger
-    // than the grace period may be a CONCURRENT writer's in-flight staging
-    // dir, not crash debris — deleting it would break that writer's atomic
-    // swap mid-write. Only entries whose mtime predates the grace window are
-    // provably abandoned (a live stager renames within seconds).
-    val now = System.currentTimeMillis()
-    val stray = entries.filter(n =>
-        n.contains(".__merge_tmp") || n.contains(".__merge_old") || n.contains(".__append_"))
-      .filter(n => now - Files.getLastModifiedTime(Paths.get(s"$base/$n")).toMillis
-        >= debrisGraceMs)
+    val now  = System.currentTimeMillis()
+    def aged(p: String) = now - Files.getLastModifiedTime(Paths.get(p)).toMillis >= debrisGraceMs
+    val (debris, tables) = ls(base).filterNot(_ == Pointers).partition(_.contains(".__"))
+    val stray = debris.filter(n => aged(s"$base/$n"))
     stray.foreach(n => drop(s"$base/$n"))
-    if (!manifested) return (-1L, 0L, stray.size.toLong) // empty store: debris-only no-op
-    val live = spark.read.parquet(s"$base/manifest").head().getAs[Long]("live")
-    val expired = snaps.filter(v => v < live - keepLast + 1) // never live, never in-flight (> live)
-    expired.foreach(v => drop(s"$base/snap=$v"))
+    val dirs = tables.filter(t => Files.isDirectory(Paths.get(base, t)))
+      .flatMap(t => ls(s"$base/$t").filter(isVersion).map(v => (t, v.toLong)))
+    val all = history(base)
+    require(all.nonEmpty || dirs.isEmpty,
+      s"store at $base holds version directories but no commit pointer — refusing to vacuum")
+    if (all.isEmpty) return (-1L, 0L, stray.size.toLong)
+    val live = all.last.n
+    val (expired, kept) = all.splitAt(math.max(0, all.size - keepLast))
+    val named = kept.flatMap(_.tables.toSeq.flatMap { case (t, vs) => vs.map(t -> _) }).toSet
+    dirs.filter { case (t, v) => !named((t, v)) && (v <= live || aged(s"$base/$t/$v")) }
+      .foreach { case (t, v) => drop(s"$base/$t/$v") }
+    dirs.map(_._1).distinct.filter(t => ls(s"$base/$t").isEmpty).foreach(t => drop(s"$base/$t"))
+    expired.foreach(v => drop(pointer(base, v.n).toString))
     (live, expired.size.toLong, stray.size.toLong)
   }
 
@@ -281,7 +308,7 @@ object Storage {
     * (`core_process_stream_DS.go:1779-1815`).
     */
   def quantify(spark: SparkSession, path: String): Long =
-    spark.read.parquet(path).distinct().count()
+    get(spark, path).distinct().count()
 
   /** `multiappend file vm1,vm2,… localf1,localf2,…` — N writers append to the
     * same dataset concurrently (`core_process_hydfs.go:656-701` launches the
@@ -331,7 +358,7 @@ object Storage {
     * stores, bypassing the merged view.
     */
   def getFromReplica(spark: SparkSession, path: String, partFile: String): DataFrame =
-    spark.read.parquet(path.stripSuffix("/") + "/" + partFile)
+    get(spark, path.stripSuffix("/") + "/" + partFile)
 
   /** `listmemids` / `store` — the membership/placement diagnostic
     * (`core_process_hydfs.go:613-655`): which storage units hold the dataset

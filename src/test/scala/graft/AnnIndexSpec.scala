@@ -11,11 +11,12 @@ import graft.sources.Storage
 class AnnIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def freshPath(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"annidx_$tag")
-    java.nio.file.Files.delete(p) // Storage.create/replace want to mint the dir
-    p.toString
-  }
+  private def freshPath(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"annidx_$tag").toString
+
+  /** Table `name` of the index's live version. */
+  private def table(path: String, name: String) =
+    Storage.committed(path).read(spark, name, AnnIndex.Schemas(name))
 
   private def embs = Tables.embeddings(spark, TestSpark.sf0001)
 
@@ -42,11 +43,11 @@ class AnnIndexSpec extends AnyFunSuite {
     val nu   = embs.filter(col("vec_id") % 2 === 1)
     AnnIndex.buildIvfPq(base, "vec_id", "embedding",
       dim = 64, nCells = 8, m = 4, ksub = 8, iters = 2, indexPath = path)
-    def codeRows() = Storage.get(spark, s"$path/codes")
+    def codeRows() = table(path, "codes")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
     val before    = codeRows()
-    val centBefore = Storage.get(spark, s"$path/centroids").collect().toSet
-    val cbBefore   = Storage.get(spark, s"$path/codebooks").collect().toSet
+    val centBefore = table(path, "centroids").collect().toSet
+    val cbBefore   = table(path, "codebooks").collect().toSet
 
     val appended = AnnIndex.appendIvfPq(spark, path, nu, "vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
@@ -57,8 +58,8 @@ class AnnIndexSpec extends AnyFunSuite {
     assert((after -- appended) == before, "append must not rewrite existing code rows")
     assert(appended.map(_._1) == nu.select("vec_id").collect().map(_.getLong(0)).toSet)
     // The model tables are frozen — no retrain on append.
-    assert(Storage.get(spark, s"$path/centroids").collect().toSet == centBefore)
-    assert(Storage.get(spark, s"$path/codebooks").collect().toSet == cbBefore)
+    assert(table(path, "centroids").collect().toSet == centBefore)
+    assert(table(path, "codebooks").collect().toSet == cbBefore)
     // Encode is deterministic: the same vectors appended to a second index
     // built the same way encode to the same rows.
     val twin = freshPath("append_twin")
@@ -86,7 +87,7 @@ class AnnIndexSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("already present"))
     assert(probe() == before)
-    assert(Storage.committedRows(path) == embs.count())
+    assert(Storage.committed(path).rows == embs.count())
   }
 
   test("appended vectors are probe-visible; rebuild replaces rather than accumulates") {
@@ -103,7 +104,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // Rebuild over the full corpus: codes row count = |corpus|, not doubled.
     AnnIndex.buildIvfPq(embs, "vec_id", "embedding",
       dim = 64, nCells = 8, m = 4, ksub = 8, iters = 2, indexPath = path)
-    assert(Storage.get(spark, s"$path/codes").count() == embs.count())
+    assert(table(path, "codes").count() == embs.count())
   }
 
   test("tombstone delete: probe never returns deleted ids and deleted docs stop ranking") {

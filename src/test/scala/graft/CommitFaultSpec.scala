@@ -9,14 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{AnnIndex, KmvSketch, NativeFns, SketchStore, TextIndex}
 import graft.sources.Storage
 
-/** Fault injection for the serving stores' commit core: every verb that
-  * takes an input frame is fed one whose column raises for some rows, so the
-  * verb dies inside its own writes. The next probe must then either return
-  * the pre-verb answer bit-exact or refuse the store for its missing commit
-  * manifest — never serve a mix of old and new tables — and a rebuild must
-  * serve the pre-verb answer again. (Copy-on-write versioning, ROADMAP
-  * direction 3, would narrow the first check to "always the pre-verb
-  * answer".)
+/** Fault injection for the stores' commit core: every verb that takes an
+  * input frame is fed one whose column raises for some rows, so the verb
+  * dies inside its own writes; the compactions, which take none, die when
+  * they move their commit pointer, because a directory occupies the next
+  * version's pointer name. A verb only adds the next version's directories
+  * and moves the pointer last, so the next probe must return the pre-verb
+  * answer bit-exact, and a rebuild must serve it again (ROADMAP direction
+  * 1).
   */
 class CommitFaultSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -27,17 +27,42 @@ class CommitFaultSpec extends AnyFunSuite {
     (col("id") / 1000).cast("long").as("seg"),
     NativeFns.hash61(col("id"), KmvSketch.A, KmvSketch.B).as("hv"))
 
+  private val Injected = "injected write fault"
+
   /** `df` with column `c` raising wherever `at` holds. */
   private def faulty(df: DataFrame, c: String, at: Column): DataFrame =
-    df.withColumn(c, when(at, raise_error(lit("injected write fault"))
+    df.withColumn(c, when(at, raise_error(lit(Injected))
       .cast(df.schema(c).dataType)).otherwise(col(c)))
 
+  /** Run `verb` on the store at `p` with a directory occupying the next
+    * version's commit-pointer name, so the verb writes all its data and then
+    * fails to move its pointer into place: that failure, and no other, is
+    * reported as the injected fault. The obstacle is removed afterwards.
+    */
+  private def pointerBlocked(p: String)(verb: => Unit): Unit = {
+    val next = java.nio.file.Paths.get(p, "_commits", (Storage.committed(p).n + 1).toString)
+    java.nio.file.Files.createDirectories(next.resolve("occupied"))
+    try verb
+    catch {
+      case e: java.nio.file.FileSystemException if e.getOtherFile == next.toString =>
+        throw new RuntimeException(Injected, e)
+    } finally Storage.drop(next.toString)
+  }
+
   private def textBuild(d: DataFrame, p: String) = TextIndex.build(d, "doc_id", "text", p)
+  private def textBuildDeleted(p: String) = {
+    textBuild(docs, p)
+    TextIndex.deleteDocs(spark, p, docs.filter(col("doc_id") % 5 === 0).select("doc_id"))
+  }
   private def textProbe(p: String) =
     TextIndex.probeBm25(spark, p, Seq("hash", "join", "stream"), topK = 20).collect().toSeq
 
   private def annBuild(e: DataFrame, p: String) = AnnIndex.buildIvfPq(e, "vec_id", "embedding",
     dim = 64, nCells = 8, m = 4, ksub = 8, iters = 2, indexPath = p)
+  private def annBuildDeleted(p: String) = {
+    annBuild(embs, p)
+    AnnIndex.deleteVecs(spark, p, embs.filter(col("vec_id") % 7 === 0).select("vec_id"))
+  }
   private def annProbe(p: String) =
     AnnIndex.probeIvfPq(spark, p, embs.filter(col("vec_id") < 10), "vec_id", "embedding",
       nProbe = 2, k = 5)
@@ -49,8 +74,8 @@ class CommitFaultSpec extends AnyFunSuite {
   private val odd  = col("doc_id") % 2 === 1
   private val even = col("doc_id") % 2 === 0
 
-  /** (verb, build the committed pre-verb store, run the verb on a faulty
-    * frame, probe) — one row per input-taking write verb.
+  /** (verb, build the committed pre-verb store, run the verb with a fault,
+    * probe) — one row per write verb that changes the store.
     */
   private val cases: Seq[(String, String => Unit, String => Unit, String => Seq[Row])] = Seq(
     ("TextIndex.build", textBuild(docs, _),
@@ -62,6 +87,8 @@ class CommitFaultSpec extends AnyFunSuite {
       p => TextIndex.deleteDocs(spark, p,
         faulty(docs.filter(col("doc_id") % 5 === 0).select("doc_id"), "doc_id",
           col("doc_id") % 10 === 5)), textProbe),
+    ("TextIndex.compact", textBuildDeleted,
+      p => pointerBlocked(p)(assert(TextIndex.compact(spark, p))), textProbe),
     ("AnnIndex.build", annBuild(embs, _),
       p => annBuild(faulty(embs, "embedding", col("vec_id") % 10 === 5), p), annProbe),
     ("AnnIndex.append", annBuild(embs.filter(col("vec_id") % 2 === 0), _),
@@ -72,6 +99,8 @@ class CommitFaultSpec extends AnyFunSuite {
       p => AnnIndex.deleteVecs(spark, p,
         faulty(embs.filter(col("vec_id") % 7 === 0).select("vec_id"), "vec_id",
           col("vec_id") % 14 === 7)), annProbe),
+    ("AnnIndex.compactIvfPq", annBuildDeleted,
+      p => pointerBlocked(p)(assert(AnnIndex.compactIvfPq(spark, p))), annProbe),
     ("SketchStore.build", SketchStore.build(kmvRows, k = 64, _),
       p => SketchStore.build(faulty(kmvRows, "hv", col("seg") === 3), k = 64, p), kmvProbe),
     ("SketchStore.appendSegments", SketchStore.build(kmvRows.filter(col("seg") <= 3), k = 64, _),
@@ -88,17 +117,32 @@ class CommitFaultSpec extends AnyFunSuite {
       assert(before.nonEmpty, s"$verb: the fixture probe must answer something")
       val err = intercept[Exception](failing(path))
       assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
-        .exists(e => String.valueOf(e.getMessage).contains("injected write fault")),
+        .exists(e => String.valueOf(e.getMessage).contains(Injected)),
         s"$verb must die of the injected fault, not of $err")
-      Try(probe(path)) match {
-        case Success(after) =>
-          assert(after == before, s"$verb: a served answer must be the pre-verb one")
-        case Failure(e: IllegalArgumentException) =>
-          assert(e.getMessage.contains("no commit manifest"), s"$verb: ${e.getMessage}")
-        case Failure(e) => fail(s"$verb: the probe neither served nor refused cleanly", e)
-      }
+      assert(probe(path) == before, s"$verb: the store must serve the pre-verb answer bit-exact")
       setup(path)
       assert(probe(path) == before, s"$verb: a rebuild must serve the pre-verb answer bit-exact")
     }
+  }
+
+  test("an uncommitted version left on disk changes no probe, and the next commit removes it") {
+    val path = "/tmp/graft_index/fault_leftover"
+    Storage.drop(path)
+    textBuild(docs.filter(even), path)
+    val before = textProbe(path)
+    val next   = Storage.committed(path).n + 1
+    // an append that writes all its data and dies before its pointer moves
+    intercept[RuntimeException](pointerBlocked(path)(
+      TextIndex.append(docs.filter(odd), "doc_id", "text", path)))
+    val left = Seq("postings", "docs", "stats").map(t => s"$path/$t/$next")
+    assert(left.forall(Storage.exists), "the failed append must leave its directories behind")
+    assert(textProbe(path) == before, "an uncommitted version must not change a probe")
+    val deleted = docs.filter(even && col("doc_id") % 3 === 0).select("doc_id")
+    TextIndex.deleteDocs(spark, path, deleted)
+    assert(!left.exists(Storage.exists), "the next commit must remove what no version names")
+    textBuild(docs.filter(even).join(deleted, Seq("doc_id"), "left_anti"),
+      "/tmp/graft_index/fault_leftover_rb")
+    assert(textProbe(path) == textProbe("/tmp/graft_index/fault_leftover_rb"),
+      "the committed delete serves as a rebuild without the deleted docs")
   }
 }

@@ -115,8 +115,10 @@ class GovernanceSpec extends AnyFunSuite {
   }
 
   test("WAP: published snapshot has no duplicate business keys and no orphans") {
+    import graft.sources.Storage
     val out = Governance.wapPublish.run(spark, sf).collect().head
-    val published = spark.read.parquet("/tmp/graft_gov/wap/published/data")
+    val live = Storage.committed("/tmp/graft_gov/wap/published")
+    val published = spark.read.parquet(live.dirs("data"): _*)
     assert(out.getAs[Long]("n_published") == published.count())
     assert(out.getAs[Long]("n_published") <= out.getAs[Long]("n_staged"))
     val dups = published.groupBy("l_orderkey", "l_linenumber")
@@ -126,8 +128,9 @@ class GovernanceSpec extends AnyFunSuite {
       graft.Tables.orders(spark, sf).select(col("o_orderkey")),
       published("l_orderkey") === col("o_orderkey"), "left_anti").count()
     assert(orphans == 0L, "published data must not contain orphaned lineitems")
-    assert(new java.io.File("/tmp/graft_gov/wap/published/manifest").exists(),
-      "publish must commit a manifest")
+    assert(live.rows == published.count() &&
+      live.dirs("data") == Seq(s"/tmp/graft_gov/wap/published/data/${live.n}"),
+      "publish must commit a pointer to its own data directory")
   }
 
   test("DPP-pruned join returns exactly the plain-join months") {
@@ -147,37 +150,42 @@ class GovernanceSpec extends AnyFunSuite {
     val base = "/tmp/graft_test_vac"
     Storage.drop(base)
     (1 to 5).foreach { v =>
-      spark.range(v * 10).select(col("id")).write.mode("overwrite").parquet(s"$base/snap=$v")
-      if (v <= 4) // snap=5 is an IN-FLIGHT publish: written, manifest not yet flipped
-        spark.range(1).select(lit(v.toLong).as("live"))
-          .write.mode("overwrite").parquet(s"$base/manifest")
+      val at = Storage.head(base)
+      at.write(spark.range(v * 10).select(col("id")), "data")
+      if (v <= 4) // version 5 is an IN-FLIGHT publish: written, pointer not yet moved
+        Storage.publish(at.rebuilt(v * 10L, "data"))
     }
     spark.range(1).write.parquet(s"$base/x.__merge_old")
     spark.range(1).write.parquet(s"$base/y.__append_fresh") // a CONCURRENT writer's staging dir
     Storage.setMtime(s"$base/x.__merge_old", System.currentTimeMillis() - 3600 * 1000L)
-    val (live, removedSnaps, removedStray) = Storage.vacuum(spark, base, keepLast = 2)
+    val (live, removedSnaps, removedStray) = Storage.vacuum(base, keepLast = 2)
     assert(live == 4L && removedSnaps == 2L && removedStray == 1L,
       "aged debris swept; the fresh staging dir (possible in-flight writer) survives")
     assert(Storage.exists(s"$base/y.__append_fresh"),
       "vacuum must not race a concurrent writer: debris younger than the grace window stays")
-    Storage.setMtime(s"$base/y.__append_fresh", System.currentTimeMillis() - 3600 * 1000L)
-    val (_, _, swept2) = Storage.vacuum(spark, base, keepLast = 2)
-    assert(swept2 == 1L, "once past the grace window the abandoned staging dir is debris")
-    val left = Storage.ls(base).filter(_.startsWith("snap=")).sorted
-    assert(left == Seq("snap=3", "snap=4", "snap=5"),
+    assert(Storage.ls(s"$base/data") == Seq("3", "4", "5"),
       "window {3,4} retained, live 4 untouched, in-flight 5 untouched")
+    assert(Storage.history(base).map(v => (v.n, v.rows)) == Seq((3L, 30L), (4L, 40L)),
+      "the expired versions' pointers go with their data")
+    Storage.setMtime(s"$base/y.__append_fresh", System.currentTimeMillis() - 3600 * 1000L)
+    Storage.setMtime(s"$base/data/5", System.currentTimeMillis() - 3600 * 1000L)
+    val (_, _, swept2) = Storage.vacuum(base, keepLast = 2)
+    assert(swept2 == 1L, "once past the grace window the abandoned staging dir is debris")
+    assert(Storage.ls(s"$base/data") == Seq("3", "4"),
+      "once past the grace window the uncommitted version 5 is debris too")
     assert(Storage.ls(base).count(_.contains("__")) == 0, "crash debris must be swept")
-    assert(spark.read.parquet(s"$base/snap=4").count() == 40L, "live data intact")
+    assert(Storage.committed(base).read(spark, "data", spark.range(1).schema).count() == 40L,
+      "live data intact")
 
-    Storage.drop(s"$base/manifest")
-    intercept[IllegalArgumentException](Storage.vacuum(spark, base, keepLast = 2))
+    Storage.drop(s"$base/_commits")
+    intercept[IllegalArgumentException](Storage.vacuum(base, keepLast = 2))
 
-    // Uninitialized store (no snapshots, no manifest): clean debris-only
-    // no-op, not a raw parquet path-not-found error.
+    // Uninitialized store (no versions, no pointer): clean debris-only
+    // no-op, not a raw path-not-found error.
     val empty = "/tmp/graft_test_vac_empty"
     Storage.drop(empty)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(empty))
-    assert(Storage.vacuum(spark, empty, keepLast = 2) == (-1L, 0L, 0L))
+    assert(Storage.vacuum(empty, keepLast = 2) == (-1L, 0L, 0L))
   }
 
   test("observe audit: in-flight counters equal their recomputed aggregates") {

@@ -9,8 +9,8 @@ import graft.streaming.RainStorm
 
 /** A read of a table whose schema graft already knows starts no Spark job:
   * `Tables.table` memoizes the schema per session, path and file set, and
-  * a `TextIndex` probe declares its tables' schemas and lists only its
-  * terms' posting buckets, whose terms a batched probe collects from a
+  * the stores declare their tables' schemas; a `TextIndex` probe lists only
+  * its terms' posting buckets, whose terms a batched probe collects from a
   * local query frame without a job.
   */
 class SchemaReadSpec extends AnyFunSuite {
@@ -21,7 +21,8 @@ class SchemaReadSpec extends AnyFunSuite {
 
   test("a second Tables.table read in one session starts 0 jobs and returns the same schema") {
     Storage.drop(dir)
-    Storage.replace(spark.range(10).select(col("id"), (col("id") * 2).as("v")), s"$dir/t.parquet")
+    spark.range(10).select(col("id"), (col("id") * 2).as("v"))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
     val first = Tables.table(spark, dir, "t").schema
     val (again, n) = jobs(Tables.table(spark, dir, "t").schema)
     assert(n == 0)
@@ -30,9 +31,11 @@ class SchemaReadSpec extends AnyFunSuite {
 
   test("a table rewritten at the same path with other columns is read with its new schema") {
     Storage.drop(dir)
-    Storage.replace(spark.range(10).select(col("id"), (col("id") * 2).as("v")), s"$dir/t.parquet")
+    spark.range(10).select(col("id"), (col("id") * 2).as("v"))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
     Tables.table(spark, dir, "t").schema
-    Storage.replace(spark.range(5).select(col("id").cast("string").as("name")), s"$dir/t.parquet")
+    spark.range(5).select(col("id").cast("string").as("name"))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
     val next = Tables.table(spark, dir, "t")
     assert(next.schema.fieldNames.toSeq == Seq("name"))
     assert(next.collect().map(_.getString(0)).sorted.toSeq == (0 until 5).map(_.toString))
@@ -46,9 +49,8 @@ class SchemaReadSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     TextIndex.build(docs, "doc_id", "text", idx)
     TextIndex.deleteDocs(spark, idx, docs.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
-    // the delete rewrote the tombstone table, so the first read of it infers
-    // its schema once; after that only a rewrite re-infers it
-    TextIndex.probeBm25(spark, idx, Seq("hash"), topK = 5).collect()
+    // every table, the delete's tombstones included, is read with its
+    // declared schema, so even the first probe frame starts no job
     assert(jobs(TextIndex.probeBm25(spark, idx, Seq("join", "stream", "window"), topK = 20))._2 == 0)
   }
 
@@ -58,8 +60,6 @@ class SchemaReadSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     TextIndex.build(docs, "doc_id", "text", idx)
     TextIndex.deleteDocs(spark, idx, docs.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
-    // the first read of the rewritten tombstone table infers its schema once
-    TextIndex.probeBm25(spark, idx, Seq("hash"), topK = 5).collect()
     val queries = Seq((1L, "hash"), (1L, "join"), (2L, "stream")).toDF("query_id", "tok")
     assert(jobs(TextIndex.probeBm25Many(spark, idx, queries, topK = 10))._2 == 0)
   }
@@ -69,7 +69,7 @@ class SchemaReadSpec extends AnyFunSuite {
     SketchStore.build(spark.range(2000).select((col("id") % 4).as("seg"), col("id").as("hv")), k = 64, store)
     SketchStore.probeRange(spark, store, 0, 3)
     val (frame, n) = jobs(SketchStore.probeRange(spark, store, 0, 3))
-    assert(n == 1) // meta's one-row head(); both tables' schemas come from the memo
+    assert(n == 1) // meta's one-row head(); both tables' schemas are declared
     assert(frame.head().getAs[Long]("filled") == 64L)
   }
 

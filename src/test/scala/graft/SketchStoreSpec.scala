@@ -47,14 +47,14 @@ class SketchStoreSpec extends AnyFunSuite {
     SketchStore.build(all.filter(col("seg") <= 3), k = 64, b1)
     SketchStore.appendSegments(all.filter(col("seg") >= 4), b1)
     SketchStore.build(all, k = 64, b2)
-    def segRows(p: String) = spark.read.parquet(s"$p/segments")
+    def segRows(p: String) = SketchStore.segments(spark, p)
       .collect().map(r => (r.getAs[Long]("seg"), r.getAs[Long]("hv"))).sorted.toSeq
     assert(segRows(b1) == segRows(b2),
       "appending new segments must equal rebuilding from scratch, row for row")
 
     intercept[IllegalArgumentException](
       SketchStore.appendSegments(all.filter(col("seg") === 2), b1))
-    Storage.drop(s"$b1/manifest")
+    Storage.drop(s"$b1/_commits")
     intercept[IllegalArgumentException](SketchStore.probeRange(spark, b1, 0, 9))
     intercept[IllegalArgumentException](
       SketchStore.appendSegments(all.filter(col("seg") === 2), b1))

@@ -136,8 +136,8 @@ class StreamingAnnSpec extends AnyFunSuite {
     val attempt = scala.util.Try {
       in.addData((1L, probeVec, ts))
       q.processAllAvailable()
-      // Tombstone the current nearest neighbor and compact (full codes
-      // rewrite under the manifest transaction) while the stream RUNS.
+      // Tombstone the current nearest neighbor and compact (a merged codes
+      // directory, committed as a new version) while the stream RUNS.
       val victim = pre.minBy(_._2)._1
       AnnIndex.deleteVecs(spark, path, Seq(victim).toDF("id"))
       assert(AnnIndex.compactIvfPq(spark, path), "compaction must run (tombstones present)")

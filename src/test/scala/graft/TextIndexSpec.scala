@@ -13,6 +13,10 @@ class TextIndexSpec extends AnyFunSuite {
   private val idx = "/tmp/graft_index/text_spec"
   private val terms = Seq("hash", "join", "stream")
 
+  /** The live corpus row of the index at `p`. */
+  private def corpusRow(p: String) = graft.sources.Storage.committed(p)
+    .read(spark, "corpus", TextIndex.Schemas("corpus")).head()
+
   test("probe-after-reload equals the direct-corpus BM25 ranking") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     TextIndex.build(docs, "doc_id", "text", idx)
@@ -134,7 +138,7 @@ class TextIndexSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("already present"))
     assert(probe() == before)
-    assert(Storage.committedRows(lIdx) == docs.count())
+    assert(Storage.committed(lIdx).rows == docs.count())
   }
 
   test("compaction drops tombstoned state physically and equals a rebuild") {
@@ -152,8 +156,8 @@ class TextIndexSpec extends AnyFunSuite {
     assert(TextIndex.compact(spark, cIdx))
     assert(!Storage.exists(s"$cIdx/tombstones"), "compaction must clear all delete state")
     val live = docs.filter(col("doc_id") % 4 =!= 0).count()
-    assert(Storage.committedRows(cIdx) == live &&
-      spark.read.parquet(s"$cIdx/corpus").head().getAs[Long]("n_docs") == live,
+    assert(Storage.committed(cIdx).rows == live &&
+      corpusRow(cIdx).getAs[Long]("n_docs") == live,
       "after compaction the committed docs rows and the corpus row both count the live docs")
     val viaCompact = TextIndex.probeBm25(spark, cIdx, terms, topK = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -183,11 +187,11 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.build(docs, "doc_id", "text", eIdx)
     TextIndex.deleteDocs(spark, eIdx, docs.select(col("doc_id")))
     assert(TextIndex.compact(spark, eIdx))
-    val corpus = spark.read.parquet(s"$eIdx/corpus").head()
+    val corpus = corpusRow(eIdx)
     assert(corpus.getAs[Long]("n_docs") == 0L && corpus.getAs[Long]("total_dl") == 0L &&
       corpus.getAs[Double]("avgdl") == 0.0,
       s"an emptied index must write avgdl 0.0, not 0/0: $corpus")
-    assert(Storage.committedRows(eIdx) == 0L)
+    assert(Storage.committed(eIdx).rows == 0L)
     TextIndex.append(docs, "doc_id", "text", eIdx)
     val viaReadd = TextIndex.probeBm25(spark, eIdx, terms, topK = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -205,7 +209,7 @@ class TextIndexSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     val eIdx = "/tmp/graft_index/text_spec_empty_build"
     TextIndex.build(docs.filter(lit(false)), "doc_id", "text", eIdx)
-    assert(Storage.committedRows(eIdx) == 0L)
+    assert(Storage.committed(eIdx).rows == 0L)
     assert(TextIndex.probeBm25(spark, eIdx, terms, topK = 20).count() == 0L)
     // the empty postings read keeps the docs' id type: appending into the
     // empty index serves what a build over the same docs serves
@@ -241,7 +245,10 @@ class TextIndexSpec extends AnyFunSuite {
     val absent = (0 until 200).map(i => s"w$i").toDF("tok")
       .select(col("tok"), pmod(xxhash64(col("tok")), lit(TextIndex.PostingBuckets.toLong)))
       .collect().map(r => (r.getString(0), r.getLong(1)))
-      .find { case (_, b) => !graft.sources.Storage.exists(s"$sIdx/postings/bucket=$b") }
+      .find { case (_, b) =>
+        !graft.sources.Storage.committed(sIdx).dirs("postings")
+          .exists(d => graft.sources.Storage.exists(s"$d/bucket=$b"))
+      }
       .get._1
     val ts = Seq("alpha", "gamma", absent)
     val probe = TextIndex.probeBm25(spark, sIdx, ts, topK = 20)
@@ -273,11 +280,11 @@ class TextIndexSpec extends AnyFunSuite {
   }
 
   test("a torn index (missing commit manifest) is refused, not served") {
-    graft.sources.Storage.drop(s"$idx/manifest")
+    graft.sources.Storage.drop(s"$idx/_commits")
     val e = intercept[IllegalArgumentException] {
       TextIndex.probeBm25(spark, idx, terms, topK = 20)
     }
-    assert(e.getMessage.contains("manifest"))
+    assert(e.getMessage.contains("no committed version"))
     // rebuild re-commits and probing works again
     TextIndex.build(Tables.documents(spark, TestSpark.sf0001), "doc_id", "text", idx)
     assert(TextIndex.probeBm25(spark, idx, terms, topK = 20).count() > 0)
@@ -399,7 +406,8 @@ class TextIndexSpec extends AnyFunSuite {
     val wanted = qTerms.toDF("tok")
       .select(pmod(xxhash64(col("tok")), lit(TextIndex.PostingBuckets.toLong)))
       .collect().map(r => s"bucket=${r.getLong(0)}").toSet
-      .filter(b => graft.sources.Storage.exists(s"$idx/postings/$b"))
+      .filter(b => graft.sources.Storage.committed(idx).dirs("postings")
+        .exists(d => graft.sources.Storage.exists(s"$d/$b")))
     assert(listed.nonEmpty && listed == wanted,
       s"postings scan must list only the queried buckets $wanted; listed $listed")
   }
@@ -432,8 +440,8 @@ class TextIndexSpec extends AnyFunSuite {
       in.addData((1L, "hash", ts))
       q.processAllAvailable()
       // Mid-stream lifecycle: tombstone the current top doc, then compact —
-      // a full rename-aside rewrite of postings/docs/stats under the
-      // manifest transaction, while the probe stream is RUNNING.
+      // merged postings/docs/stats directories committed as a new version,
+      // which drops the old ones, while the probe stream is RUNNING.
       val victim = TextIndex
         .probeBm25Many(spark, cIdx, Seq((9L, "hash")).toDF("query_id", "tok"), topK = 1)
         .collect().head.getAs[Long]("doc_id")

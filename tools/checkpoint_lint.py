@@ -29,22 +29,28 @@ child session made per call recompiles every class its plan generates;
 `experimental.extraStrategies` (the per-call patch that only such a
 session needs).
 
-Rule 3 — one commit core. The persisted serving stores (TextIndex,
-AnnIndex, SketchStore) commit through `Storage.commit`, which alone knows
-where a store's manifest lives and what it holds. No main-source file other
-than sources/Storage.scala may build a `.../manifest` path; a store that
-wrote its own would be back to a private manifest schema. Exempt by name:
-queries/Governance.scala, whose write-audit-publish and vacuum stores keep a
-separate `snap=N` parquet manifest that their oracles read.
+Rule 3 — one commit core. The persisted stores (TextIndex, AnnIndex,
+SketchStore, and Governance's published snapshots) commit through
+`Storage.commit` / `Storage.publish`, which alone know where a store's
+commit pointers (`_commits/<version>`) live and what they hold. No
+main-source file other than sources/Storage.scala may build a `_commits`
+or `.../manifest` path; a store that wrote its own would be back to a
+private versioning scheme. And a serving store only adds files: in
+functions/TextIndex.scala, functions/AnnIndex.scala and
+functions/SketchStore.scala no write may use the `"append"` mode, and no
+line may call `Storage.rewrite(`, `Storage.replace(` or `Storage.append(`
+(each rewrites or grows a table a committed version names); a verb writes
+the next version's directories through `Version.write`.
 
-Rule 4 — declared index schemas. A parquet read without a schema starts a
-Spark job to re-read a footer on every call. The text index knows its
-tables' schemas (`TextIndex.Schemas`), and the sketch store, the IVF-PQ
-index and the serving queries read through the memoized `Storage.get`, so
-in functions/TextIndex.scala, functions/SketchStore.scala,
-functions/AnnIndex.scala and queries/Serving.scala every `.read` chain that
+Rule 4 — declared schemas. A parquet read without a schema starts a
+Spark job to re-read a footer on every call. The stores know their
+tables' schemas (`TextIndex.Schemas`, `AnnIndex.Schemas`,
+`SketchStore.Schemas`), so in functions/TextIndex.scala,
+functions/SketchStore.scala, functions/AnnIndex.scala,
+queries/Serving.scala and sources/Storage.scala every `.read` chain that
 reaches `.parquet(` must pass `.schema(` on the way; a table of unknown
-schema goes through `Storage.get`.
+schema goes through `Storage.get`, whose own inferring read (the one that
+fills its schema memo) is exempt by name.
 
 Rule 5 — no forked processes. A child process costs milliseconds (the
 fork, plus Hadoop's stderr reader thread), which is what Hadoop's local
@@ -79,15 +85,27 @@ CHILD_SESSION = re.compile(r"\.\s*newSession\s*\(")
 STRATEGY_ASSIGN = re.compile(r"\bextraStrategies\s*(?:\+\+|:\+|\+)?=(?!=)")
 
 
-MANIFEST_OWNERS = ("graft/sources/Storage.scala", "graft/queries/Governance.scala")
-# A manifest path in code: `s"$p/manifest"`, `".../manifest/..."` or a
-# `"manifest"` path segment. Comment lines are skipped, so prose may name it.
-MANIFEST_PATH = re.compile(r"""/manifest\b|["']manifest["']""")
+MANIFEST_OWNERS = ("graft/sources/Storage.scala",)
+# A commit-pointer or manifest path in code: `s"$p/_commits/..."`,
+# `"_commits"`, `s"$p/manifest"`, `".../manifest/..."` or a `"manifest"`
+# path segment. Comment lines are skipped, so prose may name them.
+MANIFEST_PATH = re.compile(r"""\b_commits\b|/manifest\b|["']manifest["']""")
 COMMENT_LINE = re.compile(r"^\s*(//|/\*|\*)")
+
+APPEND_ONLY_STORES = ("graft/functions/TextIndex.scala", "graft/functions/AnnIndex.scala",
+                      "graft/functions/SketchStore.scala")
+# An append-mode write, or a call that rewrites or grows a committed table.
+IN_PLACE_WRITE = re.compile(
+    r"""["']append["']|\bStorage\s*\.\s*(?:rewrite|replace|append)\s*\(""")
 
 
 SCHEMA_OWNERS = ("graft/functions/TextIndex.scala", "graft/functions/SketchStore.scala",
-                 "graft/functions/AnnIndex.scala", "graft/queries/Serving.scala")
+                 "graft/functions/AnnIndex.scala", "graft/queries/Serving.scala",
+                 "graft/sources/Storage.scala")
+# (file, def) whose schema-less read is the point: Storage.get infers once
+# and memoizes.
+SCHEMA_EXEMPT = (("graft/sources/Storage.scala", "get"),)
+DEF_NAME = re.compile(r"\bdef\s+(\w+)")
 # `.read`, then any calls but `.schema(...)`, then `.parquet(` — across lines.
 UNDECLARED_READ = re.compile(
     r"\.\s*read\b((?:\s*\.\s*(?!schema\b)\w+\s*\((?:[^()]|\([^()]*\))*\))*)"
@@ -131,15 +149,31 @@ def scan_manifests(root: str = "src/main/scala"):
     return bad
 
 
+def scan_in_place_writes(root: str = "src/main/scala"):
+    bad = []
+    for p in scala_files(root):
+        if not p.replace(os.sep, "/").endswith(APPEND_ONLY_STORES):
+            continue
+        for i, line in enumerate(open(p, encoding="utf-8"), 1):
+            if not COMMENT_LINE.match(line) and IN_PLACE_WRITE.search(line):
+                bad.append(f"{p}:{i}: {line.strip()}")
+    return bad
+
+
 def scan_schema_reads(root: str = "src/main/scala"):
     bad = []
     for p in scala_files(root):
-        if not p.replace(os.sep, "/").endswith(SCHEMA_OWNERS):
+        unix = p.replace(os.sep, "/")
+        if not unix.endswith(SCHEMA_OWNERS):
             continue
+        exempt = {d for f, d in SCHEMA_EXEMPT if unix.endswith(f)}
         # blank comment lines, keeping line numbers, so prose may name the call
         text = "".join("\n" if COMMENT_LINE.match(l) else l
                        for l in open(p, encoding="utf-8").readlines())
         for m in UNDECLARED_READ.finditer(text):
+            defs = DEF_NAME.findall(text, 0, m.start())
+            if defs and defs[-1] in exempt:
+                continue
             i = text.count("\n", 0, m.start()) + 1
             bad.append(f"{p}:{i}: {' '.join(m.group(0).split())}")
     return bad
@@ -222,28 +256,47 @@ def selftest():
         bad = scan_sessions(td)
         assert len(bad) == 3 and any("Child.scala:4" in b for b in bad), \
             f"selftest: planted per-call newSession not caught: {bad}"
-        # rule 3: only Storage (and the exempt Governance) build manifest paths
+        # rule 3: only Storage builds commit-pointer or manifest paths
         src = os.path.join(g, "sources")
         os.makedirs(src)
         with open(os.path.join(src, "Storage.scala"), "w") as f:
-            f.write("object Storage { def m(s: String) = Paths.get(s, \"manifest\") }\n")
+            f.write("object Storage { private val Pointers = \"_commits\"\n"
+                    "  def m(s: String) = Paths.get(s, \"manifest\") }\n")
+        with open(os.path.join(d, "LegalStore.scala"), "w") as f:
+            f.write("/** Commits through Storage.commit; its pointer is\n"
+                    "  * Storage's `path/_commits/<v>` file, no `manifest`. */\n"
+                    "object LegalStore { def b(v: Version) = Storage.commit(v) }\n")
+        assert scan_manifests(td) == [], \
+            f"selftest: legal pointer mentions flagged: {scan_manifests(td)}"
         with open(os.path.join(d, "Governance.scala"), "w") as f:
             f.write("object Governance { val m = s\"$base/manifest\" }\n")
-        with open(os.path.join(d, "LegalStore.scala"), "w") as f:
-            f.write("/** Commits through Storage.commit; its `manifest` is\n"
-                    "  * Storage's `path/manifest` file. */\n"
-                    "object LegalStore { def b(p: String) = Storage.commit(p)(0L) }\n")
-        assert scan_manifests(td) == [], \
-            f"selftest: legal manifest mentions flagged: {scan_manifests(td)}"
-        with open(os.path.join(d, "OwnManifest.scala"), "w") as f:
-            f.write("object OwnManifest {\n"
-                    "  private def manifest(p: String) = s\"$p/manifest\" }\n")
+        with open(os.path.join(d, "OwnPointer.scala"), "w") as f:
+            f.write("object OwnPointer {\n"
+                    "  private def live(p: String) = ls(s\"$p/_commits\").max }\n")
         bad = scan_manifests(td)
-        assert len(bad) == 1 and "OwnManifest.scala:2" in bad[0], \
-            f"selftest: planted store-local manifest path not caught: {bad}"
-        # rule 4: TextIndex reads its tables with their declared schemas
+        assert len(bad) == 2 and any("Governance.scala:1" in b for b in bad) \
+            and any("OwnPointer.scala:2" in b for b in bad), \
+            f"selftest: planted manifest / commit-pointer paths not caught: {bad}"
+        # rule 3: the serving stores only add files
         fn = os.path.join(g, "functions")
         os.makedirs(fn)
+        with open(os.path.join(fn, "SketchStore.scala"), "w") as f:
+            f.write("/** Never \"append\" mode or Storage.rewrite(df, p) here. */\n"
+                    "object SketchStore { def a(v: Version, df: DataFrame) =\n"
+                    "  v.write(df, \"segments\")\n  // not Storage.append(df, p)\n}\n")
+        assert scan_in_place_writes(td) == [], \
+            f"selftest: legal store writes flagged: {scan_in_place_writes(td)}"
+        with open(os.path.join(fn, "AnnIndex.scala"), "w") as f:
+            f.write("object AnnIndex {\n"
+                    "  def a(df: DataFrame, p: String) = df.write.mode(\"append\").parquet(p)\n"
+                    "  def c(df: DataFrame, p: String) = Storage.rewrite(df, p)\n"
+                    "  def b(df: DataFrame, p: String) = Storage.replace(df, p) }\n")
+        bad = scan_in_place_writes(td)
+        assert len(bad) == 3 and all(f"AnnIndex.scala:{i}" in b for i, b in zip((2, 3, 4), bad)), \
+            f"selftest: planted in-place store writes not caught: {bad}"
+        os.remove(os.path.join(fn, "AnnIndex.scala"))
+        os.remove(os.path.join(fn, "SketchStore.scala"))
+        # rule 4: TextIndex reads its tables with their declared schemas
         with open(os.path.join(fn, "TextIndex.scala"), "w") as f:
             f.write("/** Never `spark.read.parquet(p)` here. */\n"
                     "object TextIndex {\n"
@@ -284,6 +337,21 @@ def selftest():
         assert len(bad) == 5 and any("AnnIndex.scala:3" in b for b in bad) \
             and any("Serving.scala:3" in b for b in bad), \
             f"selftest: planted schema-less AnnIndex / Serving reads not caught: {bad}"
+        # Storage: get's own inferring read is legal, any other is not
+        with open(os.path.join(src, "Storage.scala"), "w") as f:
+            f.write("object Storage {\n"
+                    "  def get(s: SparkSession, p: String) = {\n"
+                    "    val df = s.read.parquet(p)\n    df }\n"
+                    "  def v(s: SparkSession, d: Seq[String]) = s.read.schema(S).parquet(d: _*)\n"
+                    "}\n")
+        assert len(scan_schema_reads(td)) == 5, \
+            f"selftest: Storage.get's memo read flagged: {scan_schema_reads(td)}"
+        with open(os.path.join(src, "Storage.scala"), "a") as f:
+            f.write("object Planted {\n"
+                    "  def quantify(s: SparkSession, p: String) = s.read.parquet(p).count() }\n")
+        bad = scan_schema_reads(td)
+        assert len(bad) == 6 and any("Storage.scala:8" in b for b in bad), \
+            f"selftest: planted schema-less Storage read not caught: {bad}"
         # rule 5: no process starts; only the factory names the fs impl keys
         assert scan_processes(td) == [], \
             f"selftest: clean tree flagged by rule 5: {scan_processes(td)}"
@@ -332,19 +400,26 @@ def main():
               "main needs; take a child session from GraftSession.child.")
     manifests = scan_manifests(root)
     if manifests:
-        print(f"checkpoint_lint: {len(manifests)} manifest path(s) built "
+        print(f"checkpoint_lint: {len(manifests)} commit-pointer or manifest path(s) built "
               f"outside Storage:")
         for b in manifests:
             print("  " + b)
-        print("Commit through Storage.commit/requireCommitted/committedRows "
-              "instead of a store-local manifest.")
+        print("Commit through Storage.commit/publish and read versions through "
+              "Storage.head/committed instead of a store-local pointer or manifest.")
+    in_place = scan_in_place_writes(root)
+    if in_place:
+        print(f"checkpoint_lint: {len(in_place)} in-place write(s) in a serving store:")
+        for b in in_place:
+            print("  " + b)
+        print("Write the next version's directory through Version.write and "
+              "commit it; never append to or rewrite a committed table.")
     reads = scan_schema_reads(root)
     if reads:
-        print(f"checkpoint_lint: {len(reads)} TextIndex, SketchStore, AnnIndex or "
-              f"Serving parquet read(s) without a declared schema:")
+        print(f"checkpoint_lint: {len(reads)} TextIndex, SketchStore, AnnIndex, "
+              f"Serving or Storage parquet read(s) without a declared schema:")
         for b in reads:
             print("  " + b)
-        print("Read index tables with .schema(TextIndex.Schemas(name)), or a "
+        print("Read store tables with their declared schema (Version.read), or a "
               "table of unknown schema through Storage.get.")
     procs = scan_processes(root)
     if procs:
@@ -354,13 +429,13 @@ def main():
             print("  " + b)
         print("Do the work in-process (java.nio for file metadata), and leave "
               "fs.file.impl / fs.AbstractFileSystem.file.impl to GraftSession.")
-    if bad or sessions or manifests or reads or procs:
+    if bad or sessions or manifests or in_place or reads or procs:
         return 1
     print("checkpoint_lint: clean (all truncation goes through "
           "Layout.truncateLineage; all sessions through GraftSession; all "
-          "manifests through Storage; no schema-less parquet read in TextIndex, "
-          "SketchStore, AnnIndex or Serving; no process starts; only GraftSession sets the "
-          "file-system impl)")
+          "commit pointers through Storage; no in-place write in a serving store; "
+          "no schema-less parquet read in TextIndex, SketchStore, AnnIndex, Serving "
+          "or Storage; no process starts; only GraftSession sets the file-system impl)")
     return 0
 
 

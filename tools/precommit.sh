@@ -100,10 +100,13 @@ fi
 # SCALE.md site audit and the cluster-mode switch. (2) One session factory:
 # only GraftSession may call SparkSession.builder or .newSession(, and
 # nothing may patch experimental.extraStrategies. (3) One commit core: only
-# Storage (and the exempt Governance snapshot stores) may build a store's
-# manifest path. (4) Declared index schemas: no `.read...parquet(` without
-# `.schema(` in functions/TextIndex.scala, functions/SketchStore.scala,
-# functions/AnnIndex.scala or queries/Serving.scala.
+# Storage may build a store's commit-pointer (`_commits`) or manifest path,
+# and TextIndex, AnnIndex and SketchStore never append to or rewrite a
+# committed table (no "append" mode, no Storage.rewrite/replace/append call).
+# (4) Declared schemas: no `.read...parquet(` without `.schema(` in
+# functions/TextIndex.scala, functions/SketchStore.scala,
+# functions/AnnIndex.scala, queries/Serving.scala or sources/Storage.scala
+# (Storage.get's memo read exempt).
 # (5) No forked processes: no ProcessBuilder, scala.sys.process or
 # Runtime.getRuntime.exec in main sources, and only GraftSession may set
 # fs.file.impl / fs.AbstractFileSystem.file.impl.
@@ -117,12 +120,15 @@ python3 tools/checkpoint_lint.py || {
   echo "route checkpointing through Layout.truncateLineage (and SCALE.md's"
   echo "audit), sessions through GraftSession.builder, child sessions"
   echo "through GraftSession.child (rule 2: no .newSession( outside"
-  echo "GraftSession), store commits through Storage.commit (rule 3: no"
-  echo "manifest path outside Storage), TextIndex, SketchStore, AnnIndex"
-  echo "and Serving reads through declared schemas or Storage.get (rule 4:"
-  echo "no .read.parquet( without .schema( in functions/TextIndex.scala,"
-  echo "functions/SketchStore.scala, functions/AnnIndex.scala or"
-  echo "queries/Serving.scala),"
+  echo "GraftSession), store commits through Storage.commit/publish (rule 3:"
+  echo "no commit-pointer or manifest path outside Storage; a serving store"
+  echo "writes only the next version's directories, never an \"append\" mode"
+  echo "or a Storage.rewrite/replace/append of a committed table), TextIndex,"
+  echo "SketchStore, AnnIndex, Serving and Storage reads through declared"
+  echo "schemas or Storage.get (rule 4: no .read.parquet( without .schema( in"
+  echo "functions/TextIndex.scala, functions/SketchStore.scala,"
+  echo "functions/AnnIndex.scala, queries/Serving.scala or"
+  echo "sources/Storage.scala outside Storage.get),"
   echo "and file metadata in-process (rule 5: no ProcessBuilder, sys.process"
   echo "or Runtime.exec in main sources; only GraftSession sets fs.file.impl"
   echo "or fs.AbstractFileSystem.file.impl)."
