@@ -36,7 +36,7 @@ import graft.sources.{NioLocalFileSystem, NioLocalFs}
   *
   * `file:` paths go through graft's fork-free local file system
   * ([[graft.sources.NioRawLocalFileSystem]]): `fs.file.impl` for the
-  * `FileSystem` API (parquet reads and writes, the foreachBatch sink) and
+  * `FileSystem` API (parquet reads and writes, the RainStorm dest's read) and
   * `fs.AbstractFileSystem.file.impl` for `FileContext` (Spark's streaming
   * checkpoint manager and state store). Without the native `libhadoop`,
   * Hadoop's own forks `chmod`, `ls` or `readlink` for its metadata calls,

@@ -109,7 +109,9 @@ object AsOfJoin {
     * left row, the full latest right row with the same key and
     * `rightTime <= leftTime` (left outer; unmatched → null right columns).
     *
-    * Differences from [[lookback]] (kept as the builtin-composed fallback):
+    * Differences from [[lookback]] (kept because it widens mixed numeric
+    * key types, and because `h7_asof_join` runs it as the independent
+    * cross-check of `h7b_asof_join_native` under the same oracle):
     * carries the WHOLE right row (lookback carries one value), needs no
     * union/window carry machinery, and — because the physical operator
     * declares its distribution/ordering requirements instead of encoding

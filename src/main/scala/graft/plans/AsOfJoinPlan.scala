@@ -33,8 +33,11 @@ object AsOfDirection {
   *
   * This is the whole-operator custom-plan path (SURVEY preference (c)): a
   * first-class [[LogicalPlan]] node planned by [[AsOfJoinStrategy]] into
-  * [[AsOfJoinExec]], instead of composing built-ins (the union+window form in
-  * [[graft.operators.AsOfJoin.lookback]] stays as the no-extension fallback).
+  * [[AsOfJoinExec]], instead of composing built-ins. The union+window form in
+  * [[graft.operators.AsOfJoin.lookback]] stays because it widens mixed
+  * numeric key types (`commonKeyType`, pinned by `OperatorSpec`) and because
+  * `h7_asof_join` runs it as the independent cross-check of
+  * `h7b_asof_join_native` under the same oracle.
   * The node is constructed already resolved — keys/times are [[Attribute]]s
   * picked from the children's analyzed outputs — so it passes through the
   * analyzer untouched; [[AsOfJoinRules]] keeps the optimizer's pushdown and

@@ -13,6 +13,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.internal.connector.SupportsStreamingUpdateAsAppend
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,9 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    so a torn append is never half-consumed;
   *  - Spark's offset WAL records each planned `[start, end)` range before
   *    execution; after a mid-batch crash the SAME range replays
-  *    deterministically, which with an idempotent sink
-  *    ([[graft.streaming.RainStorm.idempotentParquetSink]]) is end-to-end
-  *    exactly-once (RainStormStreamingSpec kills mid-offset and resumes);
+  *    deterministically, which with an idempotent sink (this file's own,
+  *    [[CommitLog.commitEpoch]], which RainStorm writes its dest through)
+  *    is end-to-end exactly-once (RainStormStreamingSpec kills mid-offset
+  *    and resumes);
   *  - appends to the SAME file after a restart are picked up from the last
   *    committed offset — seekable replay, not file-level dedup.
   *
@@ -216,6 +218,9 @@ object CommitLog {
 
   /** Sink entry point: exactly-once streaming write of a `value` string
     * column into the commit-log format (see [[CommitLogStreamingWrite]]).
+    * `path` is a driver-visible POSIX path: the driver appends every epoch.
+    * Append and update output modes are both accepted; update mode appends
+    * each epoch's updated rows.
     */
   def writeStream(
       df: DataFrame, path: String, checkpointDir: String
@@ -229,44 +234,40 @@ object CommitLog {
     *
     * The protocol (an intent log, the classic write-ahead trick):
     *  1. `done <epoch>` already in `<path>.epochs` → the epoch fully
-    *     committed earlier; discard staging and return (Spark replays
-    *     epochs after restarts — this is the idempotence path).
+    *     committed earlier; return (Spark replays epochs after restarts —
+    *     this is the idempotence path).
     *  2. Otherwise ensure an `intent <epoch> <startLine> <total>` entry
-    *     (writing it durably BEFORE any data), then append the staged lines
+    *     (writing it durably BEFORE any data), then append the epoch's lines
     *     the previous attempt did NOT finish: the log's current complete
-    *     line count minus startLine lines are already down, and staged
-    *     content is deterministic and ordered (partition id, then file
+    *     line count minus startLine lines are already down, and an epoch's
+    *     content is deterministic and ordered (partition id, then row
     *     order), so the resumed append writes byte-identical content into
     *     the gap — a crash at ANY point replays to exactly-one copy of
     *     every record, which plain append-after-check cannot give (a crash
     *     between data and marker would double-append).
-    *  3. Record `done <epoch>`, then clear staging.
+    *  3. Record `done <epoch>`.
     *
     * Single committer per path (Spark runs one driver commit at a time; the
-    * single-producer contract of [[append]] covers the rest). Staged lines
-    * pass through driver memory one micro-batch at a time — bounded by the
-    * source's admission control; a broker-scale deployment would stream
-    * file-to-file instead.
+    * single-producer contract of [[append]] covers the rest). The tasks
+    * return their rows in their commit messages, so an epoch's rows reach
+    * the driver one micro-batch at a time — bounded by the source's
+    * admission control — and the tasks need no disk the driver can see.
     */
-  private[graft] def commitEpoch(
-      path: String, epochId: Long, staged: Seq[StagedEpochFile]): Unit = {
+  private[graft] def commitEpoch(path: String, epochId: Long, parts: Seq[EpochRows]): Unit = {
     val epochsPath = Paths.get(path + ".epochs")
     val entries: Seq[String] =
       if (Files.exists(epochsPath))
         Files.readAllLines(epochsPath, StandardCharsets.UTF_8).asScala.toSeq
       else Seq.empty
-    def cleanup(): Unit =
-      staged.foreach(m => Files.deleteIfExists(Paths.get(m.file)))
+    if (entries.contains(s"done $epochId")) return
 
-    if (entries.contains(s"done $epochId")) { cleanup(); return }
-
-    val sorted = staged.sortBy(_.partitionId)
-    val total  = sorted.map(_.rows).sum
+    val lines = parts.sortBy(_.partitionId).flatMap(_.rows)
+    val total = lines.size
     val startLine = entries.reverseIterator
       .map(_.trim.split(" "))
       .collectFirst { case Array("intent", e, s, n) if e == epochId.toString =>
         require(n.toLong == total,
-          s"epoch $epochId replayed with different content: staged $total rows, intent $n")
+          s"epoch $epochId replayed with different content: $total rows, intent $n")
         s.toLong
       }
       .getOrElse {
@@ -283,13 +284,6 @@ object CommitLog {
       s"foreign append interleaved with epoch $epochId replay " +
         s"(log at ${already + startLine} lines, intent start $startLine, total $total)")
     if (already < total) {
-      val lines = sorted.iterator.flatMap { m =>
-        val p = Paths.get(m.file)
-        if (Files.exists(p)) Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-        else Seq.empty
-      }.toSeq
-      require(lines.size == total,
-        s"staging lost for epoch $epochId: ${lines.size} of $total staged rows present")
       // Torn-tail repair: a crash mid-append can leave a partial last line
       // that completeLines excludes; appending the gap onto those bytes
       // would merge the torn fragment and the replayed record into one
@@ -302,19 +296,17 @@ object CommitLog {
       }
       append(path, lines.drop(already.toInt))
     }
-    // Forced before staging cleanup, so a committed epoch can never lose its
-    // `done` marker to a crash and re-append from already-deleted staging.
     appendForced(epochsPath, s"done $epochId\n")
-    cleanup()
   }
 }
 
-private[graft] case class StagedEpochFile(file: String, partitionId: Int, rows: Long)
+/** One task's rows of an epoch, returned to the driver in its commit message. */
+private[graft] case class EpochRows(partitionId: Int, rows: Seq[String])
   extends WriterCommitMessage
 
 /** Exactly-once DSv2 streaming SINK for the commit-log format — the write
   * half of the Kafka-shaped story ([[CommitLog]] is the read half): tasks
-  * stage their rows to per-(epoch, partition) files, and the driver commit
+  * return their rows in their commit messages, and the driver commit
   * appends them through the intent-log protocol of [[CommitLog.commitEpoch]],
   * so an epoch replayed after ANY crash point lands exactly once. Expects a
   * `value` string column (the Kafka sink convention).
@@ -323,57 +315,40 @@ private[sources] class CommitLogStreamingWrite(path: String, valueIdx: Int)
   extends StreamingWrite {
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new CommitLogWriterFactory(path, valueIdx)
+    new CommitLogWriterFactory(valueIdx)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    CommitLog.commitEpoch(path, epochId,
-      messages.toSeq.collect { case m: StagedEpochFile => m })
+    CommitLog.commitEpoch(path, epochId, messages.toSeq.collect { case m: EpochRows => m })
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case m: StagedEpochFile => Files.deleteIfExists(Paths.get(m.file))
-      case _                  => ()
-    }
+  // Nothing reached the log before commit, so an aborted epoch leaves nothing.
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-private[sources] class CommitLogWriterFactory(path: String, valueIdx: Int)
+private[sources] class CommitLogWriterFactory(valueIdx: Int)
   extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new CommitLogDataWriter(path, valueIdx, partitionId, epochId)
+    new CommitLogDataWriter(valueIdx, partitionId)
 }
 
-/** Task-side staging writer: rows append to a per-(epoch, partition) file
-  * (TRUNCATE on open, so a retried task simply rewrites its attempt — the
-  * last successful attempt's content is what the commit message references).
+/** Task-side writer: collects the partition's values for its commit message
+  * (a retried task collects afresh; the driver gets the successful attempt's).
   */
-private[sources] class CommitLogDataWriter(
-    path: String, valueIdx: Int, partitionId: Int, epochId: Long)
+private[sources] class CommitLogDataWriter(valueIdx: Int, partitionId: Int)
   extends DataWriter[InternalRow] {
 
-  private val stagingDir = Paths.get(path + ".staging")
-  Files.createDirectories(stagingDir)
-  private val file = stagingDir.resolve(s"epoch-$epochId-part-$partitionId")
-  private val ch = java.nio.channels.FileChannel.open(
-    file, StandardOpenOption.CREATE, StandardOpenOption.WRITE,
-    StandardOpenOption.TRUNCATE_EXISTING)
-  private var rows = 0L
+  private val rows = Vector.newBuilder[String]
 
   override def write(record: InternalRow): Unit = {
     val v = record.getUTF8String(valueIdx).toString
     require(!v.contains("\n"), "commit-log records are single lines")
-    val buf = java.nio.ByteBuffer.wrap((v + "\n").getBytes(StandardCharsets.UTF_8))
-    while (buf.hasRemaining) ch.write(buf)
-    rows += 1
+    rows += v
   }
 
-  override def commit(): WriterCommitMessage = {
-    ch.force(true); ch.close()
-    StagedEpochFile(file.toString, partitionId, rows)
-  }
+  override def commit(): WriterCommitMessage = EpochRows(partitionId, rows.result())
 
-  override def abort(): Unit = { ch.close(); Files.deleteIfExists(file) }
+  override def abort(): Unit = ()
 
-  override def close(): Unit = if (ch.isOpen) ch.close()
+  override def close(): Unit = ()
 }
 
 private[sources] class CommitLogTable(path: String) extends Table with SupportsRead with SupportsWrite {
@@ -384,7 +359,7 @@ private[sources] class CommitLogTable(path: String) extends Table with SupportsR
         schema(schema.fieldIndex("value")).dataType == StringType,
       s"commit-log sink expects a `value` string column, got ${schema.simpleString}")
     val vIdx = schema.fieldIndex("value")
-    new WriteBuilder {
+    new WriteBuilder with SupportsStreamingUpdateAsAppend {
       override def build(): Write = new Write {
         override def toStreaming: StreamingWrite = new CommitLogStreamingWrite(path, vIdx)
       }

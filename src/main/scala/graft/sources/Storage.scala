@@ -260,23 +260,29 @@ object Storage {
     * the directories they name; drops the older pointers and every other
     * version directory numbered at most the live version (superseded, or
     * left by a verb that died after its pointer moved). A directory numbered
-    * above it may be an in-flight verb's, so it goes, like rename-aside and
-    * staged-append debris (`.__merge_tmp` / `.__merge_old` / `.__append_*`),
-    * only once older than `debrisGraceMs`: vacuum never races a live
-    * writer. Refuses version directories without any pointer (nothing says
-    * which is live). Metadata-only: listings and pointer reads, zero data
-    * reads. Returns (live version or -1, versions expired, debris swept).
+    * above it may be an in-flight verb's, so it goes, like debris, only once
+    * older than `debrisGraceMs`: vacuum never races a live writer. Debris is
+    * whatever is not a table or a version: rename-aside and staged-append
+    * sidecars (`.__merge_tmp` / `.__merge_old` / `.__append_*`), a loose
+    * file beside the tables (an old layout's `manifest`), and a
+    * non-numbered entry inside a table directory (an old flat layout's
+    * `bucket=*` or `part-*`), any of which a read of the table directory
+    * would pick up. Refuses version directories without any pointer
+    * (nothing says which is live). Metadata-only: listings and pointer
+    * reads, zero data reads. Returns (live version or -1, versions expired,
+    * debris swept).
     */
   def vacuum(path: String, keepLast: Int, debrisGraceMs: Long = 600000L): (Long, Long, Long) = {
     require(keepLast >= 1, "vacuum must retain at least the live version")
     val base = path.stripSuffix("/")
     val now  = System.currentTimeMillis()
     def aged(p: String) = now - Files.getLastModifiedTime(Paths.get(p)).toMillis >= debrisGraceMs
-    val (debris, tables) = ls(base).filterNot(_ == Pointers).partition(_.contains(".__"))
-    val stray = debris.filter(n => aged(s"$base/$n"))
+    val (tables, loose) = ls(base).filterNot(_ == Pointers)
+      .partition(n => !n.contains(".__") && Files.isDirectory(Paths.get(base, n)))
+    val (versions, foreign) = tables.flatMap(t => ls(s"$base/$t").map(t -> _)).partition(e => isVersion(e._2))
+    val stray = (loose ++ foreign.map { case (t, n) => s"$t/$n" }).filter(n => aged(s"$base/$n"))
     stray.foreach(n => drop(s"$base/$n"))
-    val dirs = tables.filter(t => Files.isDirectory(Paths.get(base, t)))
-      .flatMap(t => ls(s"$base/$t").filter(isVersion).map(v => (t, v.toLong)))
+    val dirs = versions.map { case (t, v) => (t, v.toLong) }
     val all = history(base)
     require(all.nonEmpty || dirs.isEmpty,
       s"store at $base holds version directories but no commit pointer — refusing to vacuum")
@@ -286,7 +292,8 @@ object Storage {
     val named = kept.flatMap(_.tables.toSeq.flatMap { case (t, vs) => vs.map(t -> _) }).toSet
     dirs.filter { case (t, v) => !named((t, v)) && (v <= live || aged(s"$base/$t/$v")) }
       .foreach { case (t, v) => drop(s"$base/$t/$v") }
-    dirs.map(_._1).distinct.filter(t => ls(s"$base/$t").isEmpty).foreach(t => drop(s"$base/$t"))
+    (dirs.map(_._1) ++ foreign.map(_._1)).distinct.filter(t => ls(s"$base/$t").isEmpty)
+      .foreach(t => drop(s"$base/$t"))
     expired.foreach(v => drop(pointer(base, v.n).toString))
     (live, expired.size.toLong, stray.size.toLong)
   }

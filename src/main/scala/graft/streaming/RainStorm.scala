@@ -1,9 +1,13 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.sources.CommitLog
 
 /** The RainStorm engine (MP4) re-expressed as Structured Streaming.
   *
@@ -57,19 +61,33 @@ object RainStorm {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Idempotent micro-batch file sink: each batch overwrites its own
-    * deterministic `batch_id=N` directory, so a batch replayed after a crash
-    * lands in the same place instead of appending a duplicate — exactly-once
-    * output without the reference's ack/journal machinery (`StoreBufferOnHydfs`
-    * + seen-set dedup, `core_process_utils.go:499-517`).
+  /** The commit log every run appends to inside its dest directory. */
+  private[graft] def destLog(destDir: String): String = s"$destDir/dest.log"
+
+  /** The one exactly-once dest writer: each micro-batch's updated rows, as
+    * JSON lines, appended to [[destLog]] through the commit log's sink
+    * ([[CommitLog.writeStream]]), whose intent-log epoch commit lands a batch
+    * replayed after a crash exactly once — the paper's append to a HyDFS
+    * dest file, without the reference's ack/journal machinery
+    * (`StoreBufferOnHydfs` + seen-set dedup, `core_process_utils.go:
+    * 499-517`). `destDir` is a driver-visible POSIX path.
     */
-  def idempotentParquetSink(destDir: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, id: Long) =>
-      batch.write.mode("overwrite").parquet(s"$destDir/batch_id=$id")
+  private def writeDest(
+      rows: DataFrame, checkpointDir: String, destDir: String, trigger: Trigger
+  ): StreamingQuery = {
+    val log = Paths.get(destLog(destDir))
+    Files.createDirectories(log.getParent)
+    // an empty log until the first epoch, so a run without input quantifies to no rows
+    Files.write(log, Array.emptyByteArray, StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    CommitLog.writeStream(rows.select(to_json(struct(col("*"))).as("value")), log.toString, checkpointDir)
+      .outputMode(OutputMode.Update())
+      .trigger(trigger)
+      .start()
+  }
 
   /** The spec's demo pipeline (Source→Split→Count, MP4 spec p.2-3): streaming
     * word count with running emission, checkpointed. Each micro-batch's
-    * updated counts go through the idempotent per-batch sink (F6's dual
+    * updated counts are appended to the dest log ([[writeDest]], F6's dual
     * console+file shape); the final state of a key is the max emitted running
     * count (counts are monotone), which is what `quantify` (F7) reads.
     */
@@ -86,23 +104,17 @@ object RainStorm {
       .filter(col("word") =!= "")
       .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))
-    counts.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(idempotentParquetSink(destDir))
-      .start()
+    writeDest(counts, checkpointDir, destDir, trigger)
   }
 
   /** F7 `quantify` over the streamed dest: final count per key = last (=max)
     * emitted running count (`QuantifyHydfsFile`, `core_process_utils.go:
-    * 164-236` merges buffers and counts unique records). The dest holds what
-    * [[wordCount]] writes, so its schema is declared ([[DestSchema]]; the
-    * `batch_id` partition column still comes from the directory names), and
-    * reading it starts no footer job.
+    * 164-236` merges buffers and counts unique records). The dest log holds
+    * what [[wordCount]] writes, so its schema is declared ([[DestSchema]]),
+    * and reading it starts no inference job.
     */
   def quantify(spark: SparkSession, destDir: String): DataFrame =
-    spark.read.schema(DestSchema).parquet(destDir)
+    spark.read.schema(DestSchema).json(destLog(destDir))
       .groupBy(col("word")).agg(max(col("cnt")).as("cnt"))
 
   /** The rows [[wordCount]] writes to its dest. */
@@ -1761,12 +1773,6 @@ object RainStorm {
       destDir: String,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    val staged = op2(op1(source(spark, srcDir)))
-    staged.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(idempotentParquetSink(destDir))
-      .start()
+    writeDest(op2(op1(source(spark, srcDir))), checkpointDir, destDir, trigger)
   }
 }

@@ -145,4 +145,26 @@ class CommitFaultSpec extends AnyFunSuite {
     assert(textProbe(path) == textProbe("/tmp/graft_index/fault_leftover_rb"),
       "the committed delete serves as a rebuild without the deleted docs")
   }
+
+  test("a commit sweeps an old layout's aged files inside and beside the tables, and spares fresh ones") {
+    val path = "/tmp/graft_index/fault_old_layout"
+    Storage.drop(path)
+    textBuild(docs, path)
+    def plant(rel: String): Unit = {
+      val f = java.nio.file.Paths.get(path, rel)
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.write(f, Array[Byte](1))
+    }
+    Seq("postings/bucket=0/part-x.parquet", "manifest", "postings/bucket=1/part-x.parquet",
+      "manifest.new").foreach(plant)
+    val aged = System.currentTimeMillis() - 3600 * 1000L
+    Seq("postings/bucket=0", "manifest").foreach(e => Storage.setMtime(s"$path/$e", aged))
+    TextIndex.deleteDocs(spark, path, docs.filter(col("doc_id") % 5 === 0).select("doc_id"))
+    assert(!Storage.exists(s"$path/postings/bucket=0") && !Storage.exists(s"$path/manifest"),
+      "aged entries outside the version layout must be swept by the commit's vacuum")
+    assert(Storage.exists(s"$path/postings/bucket=1/part-x.parquet") && Storage.exists(s"$path/manifest.new"),
+      "fresh entries may be an in-flight writer's and must survive")
+    assert(Storage.ls(s"$path/postings").filter(_.forall(_.isDigit)) ==
+      Storage.committed(path).tables("postings").map(_.toString))
+  }
 }

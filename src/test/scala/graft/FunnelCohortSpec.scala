@@ -175,12 +175,12 @@ class FunnelCohortSpec extends AnyFunSuite {
   }
 
   test("funnel over a commit-log topic: crash replay yields exactly-once step completions") {
-    import graft.sources.{CommitLog, CommitLogTopic}
+    import graft.sources.{CommitLog, CommitLogTopic, EpochRows}
     import graft.streaming.RainStorm
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     val dir  = Files.createTempDirectory("funneltopic").toString
-    val dest = Files.createTempDirectory("funneldest").toString
+    val dest = Files.createTempDirectory("funneldest").toString + "/dest.log"
     val ckpt = Files.createTempDirectory("funnelckpt").toString
     // 40 users complete the funnel; records are "user,type,micros" lines.
     // Even users in p0, odd in p1 — a user never spans partitions, so
@@ -192,9 +192,14 @@ class FunnelCohortSpec extends AnyFunSuite {
     CommitLog.append(s"$dir/p0.log", lines(0 until 40 by 2))
     CommitLog.append(s"$dir/p1.log", lines(1 until 40 by 2))
 
+    // Each batch is committed to the dest log as JSON lines through the
+    // epoch commit RainStorm's dest uses; batch 2 throws after its commit
+    // (output landed, offset never committed) and replays as a done epoch.
+    def logSink(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      CommitLog.commitEpoch(dest, id, Seq(EpochRows(0, batch.toJSON.collect().toSeq)))
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     def crashingSink(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
-      RainStorm.idempotentParquetSink(dest)(batch, id)
+      logSink(batch, id)
       if (id == 2 && crashed.compareAndSet(false, true))
         throw new RuntimeException("injected crash after partial write")
     }
@@ -217,10 +222,10 @@ class FunnelCohortSpec extends AnyFunSuite {
     val q1 = start(crashingSink)
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] { q1.awaitTermination() }
     assert(crashed.get, "the injected crash must have fired")
-    val q2 = start(RainStorm.idempotentParquetSink(dest))
+    val q2 = start(logSink)
     q2.awaitTermination(120000)
 
-    val out = spark.read.parquet(dest + "/batch_id=*")
+    val out = spark.read.schema("userId LONG, step INT, tm LONG").json(dest)
       .select("userId", "step", "tm")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(out.length == 120, s"exactly-once: expected 40 users x 3 steps, got ${out.length}")

@@ -3,7 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.streaming.RainStorm
-import java.nio.file.Files
+import graft.sources.{CommitLog, EpochRows}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
 
 /** Streaming parity tests: word-count running aggregate vs the batch oracle,
   * and the reference's `dokill` fault-injection reproduced as kill/restart
@@ -24,6 +27,12 @@ class RainStormStreamingSpec extends AnyFunSuite {
       .write.mode("overwrite").text(dir)
     dir
   }
+
+  /** A foreachBatch sink that commits each batch, as JSON lines, to the
+    * commit log at `log` through the epoch commit RainStorm's dest uses.
+    */
+  private def logSink(log: String)(batch: DataFrame, id: Long): Unit =
+    CommitLog.commitEpoch(log, id, Seq(EpochRows(0, batch.toJSON.collect().toSeq)))
 
   private def batchWordCount(srcDir: String) =
     spark.read.text(srcDir)
@@ -61,21 +70,40 @@ class RainStormStreamingSpec extends AnyFunSuite {
     assert(streamed == batchWordCount(src), "final state after kill/restart must equal batch oracle")
   }
 
+  test("an epoch replayed after its output landed appends nothing to the dest log") {
+    val src  = writeCorpus()
+    val dest = tmpDir("dest")
+    val ckpt = tmpDir("ckpt")
+    RainStorm.wordCount(spark, src, ckpt, dest, maxFilesPerTrigger = Some(1)).awaitTermination(120000)
+    val log = Paths.get(RainStorm.destLog(dest))
+    val landed = Files.readAllLines(log).size
+    // The crash point: the last epoch's output landed, its offset commit did not.
+    val last = new java.io.File(s"$ckpt/commits").list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    Files.delete(Paths.get(s"$ckpt/commits/$last"))
+    Files.delete(Paths.get(s"$ckpt/commits/.$last.crc"))
+    RainStorm.wordCount(spark, src, ckpt, dest, maxFilesPerTrigger = Some(1)).awaitTermination(120000)
+    assert(Files.exists(Paths.get(s"$ckpt/commits/$last")), "the restart must re-run the uncommitted epoch")
+    val streamed = RainStorm.quantify(spark, dest)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(streamed == batchWordCount(src))
+    assert(Files.readAllLines(log).size == landed, "the replayed epoch must not append again")
+    assert(Files.readAllLines(Paths.get(s"$log.epochs")).asScala.count(_ == s"done $last") == 1)
+  }
+
   test("commit-log source: offset-based resume is exactly-once across a mid-batch crash AND same-file appends") {
-    import graft.sources.CommitLog
     import org.apache.spark.sql.streaming.Trigger
     val log  = tmpDir("cl") + "/events.log"
-    val dest = tmpDir("cl_dest")
+    val dest = tmpDir("cl_dest") + "/dest.log"
     val ckpt = tmpDir("cl_ckpt")
     CommitLog.append(log, (0 until 50).map(i => s"rec$i"))
 
-    // Sink that crashes mid-run: batch 2 throws AFTER writing its output —
+    // Sink that crashes mid-run: batch 2 throws AFTER committing its output —
     // the worst case (output landed, offset never committed). On replay the
-    // same [start, end) range re-runs into the same batch_id dir, so the
-    // idempotent sink overwrites rather than duplicates.
+    // same [start, end) range re-runs as the same epoch, which the dest's
+    // intent log already holds as done, so nothing is appended twice.
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     def crashingSink(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
-      RainStorm.idempotentParquetSink(dest)(batch, id)
+      logSink(dest)(batch, id)
       if (id == 2 && crashed.compareAndSet(false, true))
         throw new RuntimeException("injected crash after partial write")
     }
@@ -97,10 +125,10 @@ class RainStormStreamingSpec extends AnyFunSuite {
     // the whole-file source cannot replay from an offset.
     CommitLog.append(log, (50 until 100).map(i => s"rec$i"))
 
-    val q2 = start(RainStorm.idempotentParquetSink(dest))
+    val q2 = start(logSink(dest))
     q2.awaitTermination(120000)
 
-    val out = spark.read.parquet(dest + "/batch_id=*")
+    val out = spark.read.schema("offset LONG, value STRING").json(dest)
       .select(col("offset"), col("value"))
       .collect().map(r => (r.getLong(0), r.getString(1)))
     assert(out.length == 100, s"exactly-once: expected 100 rows, got ${out.length}")
@@ -109,10 +137,10 @@ class RainStormStreamingSpec extends AnyFunSuite {
   }
 
   test("commit-log TOPIC: composite per-partition offsets replay a 2-partition crash gaplessly") {
-    import graft.sources.{CommitLog, CommitLogTopic}
+    import graft.sources.CommitLogTopic
     import org.apache.spark.sql.streaming.Trigger
     val dir  = tmpDir("topic")
-    val dest = tmpDir("topic_dest")
+    val dest = tmpDir("topic_dest") + "/dest.log"
     val ckpt = tmpDir("topic_ckpt")
     CommitLog.append(s"$dir/p0.log", (0 until 30).map(i => s"a$i"))
     CommitLog.append(s"$dir/p1.log", (0 until 20).map(i => s"b$i"))
@@ -121,7 +149,7 @@ class RainStormStreamingSpec extends AnyFunSuite {
     // must re-run the same composite [start, end) per partition file.
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     def crashingSink(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
-      RainStorm.idempotentParquetSink(dest)(batch, id)
+      logSink(dest)(batch, id)
       if (id == 2 && crashed.compareAndSet(false, true))
         throw new RuntimeException("injected crash after partial write")
     }
@@ -145,10 +173,10 @@ class RainStormStreamingSpec extends AnyFunSuite {
     CommitLog.append(s"$dir/p1.log", (20 until 40).map(i => s"b$i"))
     CommitLog.append(s"$dir/p2.log", (0 until 10).map(i => s"c$i"))
 
-    val q2 = start(RainStorm.idempotentParquetSink(dest))
+    val q2 = start(logSink(dest))
     q2.awaitTermination(120000)
 
-    val out = spark.read.parquet(dest + "/batch_id=*")
+    val out = spark.read.schema("partition STRING, offset LONG, value STRING").json(dest)
       .select(col("partition"), col("offset"), col("value"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
     assert(out.length == 95, s"exactly-once: expected 45+40+10 rows, got ${out.length}")
@@ -188,7 +216,6 @@ class RainStormStreamingSpec extends AnyFunSuite {
   }
 
   test("commit-log byte index: seeks equal head-skips; missing/torn sidecar degrades, never corrupts") {
-    import graft.sources.CommitLog
     import org.apache.spark.sql.streaming.Trigger
     def drain(log: String, tag: String): Seq[(Long, String)] = {
       val q = CommitLog.readStream(spark, log, maxLinesPerTrigger = Some(7L))
@@ -346,7 +373,7 @@ class RainStormStreamingSpec extends AnyFunSuite {
     val ckpt = tmpDir("sinkckpt")
     val in   = MemoryStream[String]
     def drain(): Unit = {
-      val q = graft.sources.CommitLog.writeStream(
+      val q = CommitLog.writeStream(
         in.toDF().selectExpr("value"), log, ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination(120000)
@@ -360,7 +387,7 @@ class RainStormStreamingSpec extends AnyFunSuite {
     // reader reproduces the values at their offsets.
     val back = spark.read.parquet {
       val dest = tmpDir("sinkroundtrip")
-      val q = graft.sources.CommitLog.readStream(spark, log)
+      val q = CommitLog.readStream(spark, log)
         .writeStream.outputMode("append")
         .option("checkpointLocation", tmpDir("sinkrtckpt"))
         .trigger(Trigger.AvailableNow())
@@ -372,45 +399,37 @@ class RainStormStreamingSpec extends AnyFunSuite {
     assert(back.orderBy("offset").select("value").as[String].collect().toSeq ==
       Seq("a", "b", "c", "d", "e"))
 
-    // Crash-resume protocol, driven directly: stage an epoch, record its
-    // intent, append only PART of it (the simulated crash window), then
-    // commit — the resume must complete the gap to exactly one copy, and a
-    // replayed commit of the same epoch must be a no-op.
-    val staging = Paths.get(log + ".staging")
-    JFiles.createDirectories(staging)
-    val sf = staging.resolve("epoch-99-part-0")
-    JFiles.write(sf, "f\ng\nh\n".getBytes)
+    // Crash-resume protocol, driven directly: record an epoch's intent,
+    // append only PART of it (the simulated crash window), then commit the
+    // epoch's rows as its tasks' commit messages would carry them — the
+    // resume must complete the gap to exactly one copy, and a replayed
+    // commit of the same epoch must be a no-op.
+    val epoch99 = Seq(EpochRows(1, Seq("h")), EpochRows(0, Seq("f", "g")))
     val startLine = logLines().size
     JFiles.writeString(Paths.get(log + ".epochs"),
       s"intent 99 $startLine 3\n",
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE,
       java.nio.file.StandardOpenOption.APPEND)
-    graft.sources.CommitLog.append(log, Seq("f")) // partial attempt, then "crash"
-    graft.sources.CommitLog.commitEpoch(log, 99L,
-      Seq(graft.sources.StagedEpochFile(sf.toString, 0, 3L)))
+    CommitLog.append(log, Seq("f")) // partial attempt, then "crash"
+    CommitLog.commitEpoch(log, 99L, epoch99)
     assert(logLines() == Seq("a", "b", "c", "d", "e", "f", "g", "h"))
-    // Replay of a done epoch: no-op even with staging re-present.
-    JFiles.write(sf, "f\ng\nh\n".getBytes)
-    graft.sources.CommitLog.commitEpoch(log, 99L,
-      Seq(graft.sources.StagedEpochFile(sf.toString, 0, 3L)))
+    // Replay of a done epoch: no-op.
+    CommitLog.commitEpoch(log, 99L, epoch99)
     assert(logLines() == Seq("a", "b", "c", "d", "e", "f", "g", "h"))
 
     // TORN-LINE crash: the attempt died mid-record, leaving a partial line
     // with no newline. The resume must truncate the torn bytes back to the
     // last complete-line boundary before appending the gap — otherwise the
     // torn fragment and the replayed record merge into one corrupted line.
-    val sf2 = staging.resolve("epoch-100-part-0")
-    JFiles.write(sf2, "i\nj\nk\n".getBytes)
     val startLine2 = logLines().size
     JFiles.writeString(Paths.get(log + ".epochs"),
       s"intent 100 $startLine2 3\n",
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE,
       java.nio.file.StandardOpenOption.APPEND)
-    graft.sources.CommitLog.append(log, Seq("i")) // one complete record...
+    CommitLog.append(log, Seq("i")) // one complete record...
     JFiles.write(Paths.get(log), "j".getBytes,    // ...then a torn partial "j"
       java.nio.file.StandardOpenOption.WRITE, java.nio.file.StandardOpenOption.APPEND)
-    graft.sources.CommitLog.commitEpoch(log, 100L,
-      Seq(graft.sources.StagedEpochFile(sf2.toString, 0, 3L)))
+    CommitLog.commitEpoch(log, 100L, Seq(EpochRows(0, Seq("i", "j", "k"))))
     assert(logLines() == Seq("a", "b", "c", "d", "e", "f", "g", "h", "i", "j", "k"),
       "torn tail must be truncated, not merged with the replayed record")
   }

@@ -4,7 +4,7 @@ import org.apache.spark.JobCount
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{SketchStore, TextIndex}
-import graft.sources.Storage
+import graft.sources.{CommitLog, Storage}
 import graft.streaming.RainStorm
 
 /** A read of a table whose schema graft already knows starts no Spark job:
@@ -77,8 +77,9 @@ class SchemaReadSpec extends AnyFunSuite {
     import spark.implicits._
     val dest = s"$dir/dest"
     Storage.drop(dest)
-    Seq(("a", 1L), ("b", 2L)).toDF("word", "cnt").write.parquet(s"$dest/batch_id=0")
-    Seq(("a", 3L)).toDF("word", "cnt").write.parquet(s"$dest/batch_id=1")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dest))
+    CommitLog.append(RainStorm.destLog(dest), Seq(("a", 1L), ("b", 2L)).toDF("word", "cnt").toJSON.collect().toSeq)
+    CommitLog.append(RainStorm.destLog(dest), Seq(("a", 3L)).toDF("word", "cnt").toJSON.collect().toSeq)
     val (frame, n) = jobs(RainStorm.quantify(spark, dest))
     assert(n == 0)
     assert(frame.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == Map("a" -> 3L, "b" -> 2L))

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Funnel lint: lineage truncation, sessions, store commits, reads, processes.
+"""Funnel lint: lineage truncation, sessions, store commits, reads, processes, sinks.
 
 Rule 1 — lineage truncation (round-16 verdict watch item #3).
 
@@ -61,6 +61,13 @@ and only GraftSession.scala may set `fs.file.impl` or
 `fs.AbstractFileSystem.file.impl`, so every session gets that file system
 and no main swaps it back. Comment lines are skipped.
 
+Rule 6 — one exactly-once dest. RainStorm writes its dest through the
+commit log's sink (`CommitLog.writeStream`, whose intent-log epoch commit
+lands a replayed micro-batch exactly once), not through a per-batch file
+write of its own. No `.write` chain in streaming/RainStorm.scala may reach
+`.parquet(`, and no main-source file other than sources/CommitLog.scala
+may implement `StreamingWrite` or `DataWriter`. Comment lines are skipped.
+
 Usage: python3 tools/checkpoint_lint.py [src_root]
        python3 tools/checkpoint_lint.py --selftest
 Exit 1 on any violation of any rule.
@@ -115,6 +122,14 @@ UNDECLARED_READ = re.compile(
 PROCESS_START = re.compile(
     r"\bProcessBuilder\b|\bsys\s*\.\s*process\b|\bRuntime\s*\.\s*getRuntime\b[\s().]*exec\b")
 FS_IMPL_KEY = re.compile(r"\bfs\.(?:AbstractFileSystem\.)?file\.impl\b")
+
+
+DEST_WRITER = "graft/streaming/RainStorm.scala"
+SINK_OWNER = "graft/sources/CommitLog.scala"
+# `.write`, then any calls, then `.parquet(` — across lines.
+PARQUET_WRITE = re.compile(
+    r"\.\s*write\b((?:\s*\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\))*)\s*\.\s*parquet\s*\(")
+SINK_IMPL = re.compile(r"\b(?:extends|with|new)\s+(?:[\w.]+\.)?(?:StreamingWrite|DataWriter)\b")
 
 
 def scala_files(root: str):
@@ -188,6 +203,22 @@ def scan_processes(root: str = "src/main/scala"):
                 continue
             if PROCESS_START.search(line) or (not factory and FS_IMPL_KEY.search(line)):
                 bad.append(f"{p}:{i}: {line.strip()}")
+    return bad
+
+
+def scan_sinks(root: str = "src/main/scala"):
+    bad = []
+    for p in scala_files(root):
+        unix = p.replace(os.sep, "/")
+        # blank comment lines, keeping line numbers, so prose may name the calls
+        text = "".join("\n" if COMMENT_LINE.match(l) else l
+                       for l in open(p, encoding="utf-8").readlines())
+        hits = list(PARQUET_WRITE.finditer(text)) if unix.endswith(DEST_WRITER) else []
+        if not unix.endswith(SINK_OWNER):
+            hits += SINK_IMPL.finditer(text)
+        for m in sorted(hits, key=lambda m: m.start()):
+            i = text.count("\n", 0, m.start()) + 1
+            bad.append(f"{p}:{i}: {' '.join(m.group(0).split())}")
     return bad
 
 
@@ -374,6 +405,33 @@ def selftest():
                 f.write(f"object Forks {{ {stmt} }}\n")
             assert any("Forks.scala:1" in b for b in scan_processes(td)), \
                 f"selftest: planted `{stmt}` not caught"
+        # rule 6: RainStorm's dest goes through the commit log's sink, the
+        # one StreamingWrite / DataWriter
+        st = os.path.join(g, "streaming")
+        os.makedirs(st)
+        with open(os.path.join(st, "RainStorm.scala"), "w") as f:
+            f.write("/** Never batch.write.parquet(dest) here. */\n"
+                    "object RainStorm { def w(df: DataFrame, d: String, c: String) =\n"
+                    "  CommitLog.writeStream(df, d, c).start()\n"
+                    "  def l(p: Path) = Files.write(p, Array.emptyByteArray) }\n")
+        with open(os.path.join(src, "CommitLog.scala"), "w") as f:
+            f.write("class CommitLogStreamingWrite extends StreamingWrite\n"
+                    "class CommitLogDataWriter extends DataWriter[InternalRow]\n")
+        with open(os.path.join(d, "Other.scala"), "w") as f:
+            f.write("object Other { def w(df: DataFrame) = df.write.parquet(\"x\") }\n")
+        assert scan_sinks(td) == [], f"selftest: legal sink code flagged: {scan_sinks(td)}"
+        with open(os.path.join(st, "RainStorm.scala"), "a") as f:
+            f.write("object Planted { def s(d: String) = (b: DataFrame, id: Long) =>\n"
+                    "  b.write\n    .mode(\"overwrite\")\n    .parquet(s\"$d/batch_id=$id\") }\n")
+        with open(os.path.join(d, "MySink.scala"), "w") as f:
+            f.write("class MyWrite extends org.apache.spark.sql.connector.write.streaming.StreamingWrite\n"
+                    "class MyWriter(p: Int) extends Serializable with DataWriter[InternalRow]\n"
+                    "object Anon { val w = new DataWriter[InternalRow] { } }\n"
+                    "class F extends StreamingDataWriterFactory\n")
+        bad = scan_sinks(td)
+        assert len(bad) == 4 and "RainStorm.scala:6" in bad[0] \
+            and all(f"MySink.scala:{i}" in b for i, b in zip((1, 2, 3), bad[1:])), \
+            f"selftest: planted parquet dest write / foreign sink not caught: {bad}"
     print("checkpoint_lint selftest: OK (planted sites caught)")
     return 0
 
@@ -429,13 +487,22 @@ def main():
             print("  " + b)
         print("Do the work in-process (java.nio for file metadata), and leave "
               "fs.file.impl / fs.AbstractFileSystem.file.impl to GraftSession.")
-    if bad or sessions or manifests or in_place or reads or procs:
+    sinks = scan_sinks(root)
+    if sinks:
+        print(f"checkpoint_lint: {len(sinks)} RainStorm parquet write(s) or streaming "
+              f"writer(s) outside CommitLog:")
+        for b in sinks:
+            print("  " + b)
+        print("Write RainStorm's dest through CommitLog.writeStream; the commit "
+              "log's sink is the one exactly-once StreamingWrite.")
+    if bad or sessions or manifests or in_place or reads or procs or sinks:
         return 1
     print("checkpoint_lint: clean (all truncation goes through "
           "Layout.truncateLineage; all sessions through GraftSession; all "
           "commit pointers through Storage; no in-place write in a serving store; "
           "no schema-less parquet read in TextIndex, SketchStore, AnnIndex, Serving "
-          "or Storage; no process starts; only GraftSession sets the file-system impl)")
+          "or Storage; no process starts; only GraftSession sets the file-system impl; "
+          "RainStorm's dest and every streaming writer go through CommitLog)")
     return 0
 
 
