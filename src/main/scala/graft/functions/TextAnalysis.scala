@@ -14,9 +14,6 @@ object TextAnalysis {
   def tokens(text: Column): Column =
     filter(split(text, " "), w => w =!= "")
 
-  /** Whitespace token count. */
-  def tokenCount(text: Column): Column = size(tokens(text))
-
   /** BPE-ish subword token count: runs of letters, runs of digits, or single
     * non-space symbols — the standard pre-tokenizer shape.
     */

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
@@ -19,26 +19,38 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Offset-replay commit-log source: a DataSourceV2 micro-batch stream over a
-  * single append-only line file, with RECORD offsets (line numbers) as the
-  * streaming offset — the Kafka shape, minus the broker. This is the
-  * offset-based exactly-once story the file source cannot give (it tracks
-  * whole files, so an appended-to file is either re-read entirely or missed):
+  * TOPIC of append-only line files (its partitions), with RECORD offsets
+  * (line numbers) as the streaming offset — the Kafka shape, minus the
+  * broker. This is the offset-based exactly-once story the file source
+  * cannot give (it tracks whole files, so an appended-to file is either
+  * re-read entirely or missed):
   *
+  *  - the load path names the partition set: the entries of its parent
+  *    directory whose names match its last component as a glob. A `*.log`
+  *    glob under a directory is a topic ([[CommitLogTopic.readStream]]); a
+  *    plain file path is a single log, a topic of one partition
+  *    ([[CommitLog.readStream]]);
+  *  - the streaming offset is a `{partitionFile: lineCount}` map, serialized
+  *    with sorted keys so offset equality is textual equality in the WAL;
   *  - `latestOffset` only advances over COMPLETE (newline-terminated) lines,
   *    so a torn append is never half-consumed;
-  *  - Spark's offset WAL records each planned `[start, end)` range before
-  *    execution; after a mid-batch crash the SAME range replays
+  *  - Spark's offset WAL records each planned `[start, end)` range per file
+  *    before execution; after a mid-batch crash the SAME ranges replay
   *    deterministically, which with an idempotent sink (this file's own,
   *    [[CommitLog.commitEpoch]], which RainStorm writes its dest through)
   *    is end-to-end exactly-once (RainStormStreamingSpec kills mid-offset
   *    and resumes);
   *  - appends to the SAME file after a restart are picked up from the last
-  *    committed offset — seekable replay, not file-level dedup.
+  *    committed offset — seekable replay, not file-level dedup — and
+  *    partition files appearing after the stream starts are read from 0.
   *
   * Admission control: `maxLinesPerTrigger` bounds each micro-batch like
-  * Kafka's `maxOffsetsPerTrigger`; Trigger.AvailableNow is supported by
-  * pinning the end offset at query start. Ranges split into up to
-  * `splits` input partitions so a fat batch fans out across executors
+  * Kafka's `maxOffsetsPerTrigger`, split across partitions PROPORTIONALLY to
+  * their lag (floor division, remainder granted in sorted-name order) —
+  * deterministic, and a hot partition cannot starve the others; with one
+  * partition the end is `start + min(lag, budget)`. Trigger.AvailableNow is
+  * supported by pinning the end offset at query start. Ranges split into up
+  * to `splits` input partitions so a fat batch fans out across executors
   * (reference analog: the per-partition reads of
   * `core_process_stream_DS.go:443-721`'s TCP tuple stream, re-expressed as a
   * planned, replayable scan).
@@ -64,6 +76,7 @@ class CommitLog extends TableProvider {
 
 object CommitLog {
   val schema: StructType = StructType(Seq(
+    StructField("partition", StringType, nullable = false),
     StructField("offset", LongType, nullable = false),
     StructField("value", StringType, nullable = false)))
 
@@ -86,42 +99,42 @@ object CommitLog {
     * pre-write size snapshot, so two producers appending to the SAME path
     * concurrently could record an entry whose line count maps to a byte
     * offset preceding interleaved foreign bytes. Multiple producers must
-    * write DIFFERENT partition files (see [[CommitLogTopic]]); the one-sided
-    * "index can only lag" failure mode holds per single-writer file.
+    * write DIFFERENT partition files of a topic; the one-sided "index can
+    * only lag" failure mode holds per single-writer file.
     */
   def append(path: String, values: Seq[String]): Unit = {
-    require(values.forall(!_.contains("\n")), "commit-log records are single lines")
-    if (values.isEmpty) return
     val p       = Paths.get(path)
     val preSize = if (Files.exists(p)) Files.size(p) else 0L
-    val bytes = values.map(_ + "\n").mkString.getBytes(StandardCharsets.UTF_8)
-    val ch = java.nio.channels.FileChannel.open(
-      p, StandardOpenOption.CREATE, StandardOpenOption.WRITE, StandardOpenOption.APPEND)
-    try {
-      val buf = java.nio.ByteBuffer.wrap(bytes)
-      while (buf.hasRemaining) ch.write(buf) // FileChannel.write may be short
-      ch.force(true)
-    } finally ch.close()
-    // Index update: pre-append lines = nearest index point + bounded scan.
-    val (preLines, _) = completePrefix(path, preSize)
+    appendAt(path, values, completePrefix(path, preSize)._1, preSize)
+  }
+
+  /** [[append]] onto a log whose `preBytes` bytes (its size before the
+    * write) hold `preLines` complete lines, so the index entry needs no scan.
+    */
+  private def appendAt(path: String, values: Seq[String], preLines: Long, preBytes: Long): Unit = {
+    require(values.forall(!_.contains("\n")), "commit-log records are single lines")
+    if (values.isEmpty) return
+    val written = appendForced(Paths.get(path), values.map(_ + "\n").mkString)
     Files.writeString(Paths.get(path + ".idx"),
-      s"${preLines + values.size} ${preSize + bytes.length}\n",
+      s"${preLines + values.size} ${preBytes + written}\n",
       StandardOpenOption.CREATE, StandardOpenOption.WRITE, StandardOpenOption.APPEND)
   }
 
-  /** Append one protocol line durably: FileChannel write loop + force(true),
-    * so the marker is on disk BEFORE the caller proceeds. `Files.writeString`
-    * gives no such ordering — after an OS/power crash the later data append
-    * could survive while the marker is lost, inverting the WAL contract.
+  /** Append `text` durably: FileChannel write loop + force(true), so it is
+    * on disk BEFORE the caller proceeds (`Files.writeString` gives no such
+    * ordering — after an OS/power crash a later data append could survive
+    * while an earlier protocol marker is lost, inverting the WAL contract).
+    * Returns the bytes written.
     */
-  private def appendForced(p: java.nio.file.Path, line: String): Unit = {
+  private def appendForced(p: Path, text: String): Int = {
+    val buf = java.nio.ByteBuffer.wrap(text.getBytes(StandardCharsets.UTF_8))
     val ch = java.nio.channels.FileChannel.open(
       p, StandardOpenOption.CREATE, StandardOpenOption.WRITE, StandardOpenOption.APPEND)
     try {
-      val buf = java.nio.ByteBuffer.wrap(line.getBytes(StandardCharsets.UTF_8))
-      while (buf.hasRemaining) ch.write(buf)
+      while (buf.hasRemaining) ch.write(buf) // FileChannel.write may be short
       ch.force(true)
     } finally ch.close()
+    buf.limit()
   }
 
   /** `(completeLines, byteEnd)` of the newline-terminated prefix of
@@ -190,11 +203,52 @@ object CommitLog {
     }
   }
 
-  /** Reader entry point: `(offset long, value string)` micro-batch stream. */
-  def readStream(spark: SparkSession, path: String, maxLinesPerTrigger: Option[Long] = None): DataFrame = {
+  /** Reader entry point for one log file of any name: `(offset long, value
+    * string)` micro-batch stream.
+    */
+  def readStream(spark: SparkSession, path: String, maxLinesPerTrigger: Option[Long] = None): DataFrame =
+    load(spark, path, maxLinesPerTrigger).select("offset", "value")
+
+  /** The `(partition, offset, value)` stream over the partition files `path`
+    * names (see the class scaladoc).
+    */
+  private[sources] def load(spark: SparkSession, path: String, maxLinesPerTrigger: Option[Long]): DataFrame = {
     val r = spark.readStream.format(classOf[CommitLog].getName)
     maxLinesPerTrigger.foreach(n => r.option("maxLinesPerTrigger", n.toString))
     r.load(path)
+  }
+
+  /** The directory holding the partition files `path` names. */
+  private[sources] def partitionDir(path: String): Path =
+    Option(Paths.get(path).getParent).getOrElse(Paths.get(""))
+
+  /** The partition files `path` names: the entries of [[partitionDir]]
+    * whose names match its last component as a glob, sorted by name (the
+    * sort makes every budget split and offset serialization deterministic).
+    */
+  private[sources] def partitionFiles(path: String): Seq[String] = {
+    val dir = partitionDir(path)
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = Files.newDirectoryStream(dir, Paths.get(path).getFileName.toString)
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+      finally s.close()
+    }
+  }
+
+  private[sources] def offsetsToJson(m: Map[String, Long]): String =
+    m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  private val OffsetEntry = "\"([^\"]+)\"\\s*:\\s*(\\d+)"
+  private val OffsetObject = s"\\{\\s*(?:$OffsetEntry\\s*(?:,\\s*$OffsetEntry\\s*)*)?\\}".r
+
+  /** Parses [[offsetsToJson]]'s form and refuses any other: a bare line
+    * number would otherwise parse as no offsets and replay every record.
+    */
+  private[sources] def offsetsFromJson(s: String): Map[String, Long] = {
+    require(OffsetObject.matches(s.trim),
+      s"""commit-log offsets are {"<file>":<line>} objects, got: $s""")
+    OffsetEntry.r.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toLong).toMap
   }
 
   /** Number of COMPLETE (newline-terminated) records in the log — index
@@ -248,10 +302,11 @@ object CommitLog {
     *  3. Record `done <epoch>`.
     *
     * Single committer per path (Spark runs one driver commit at a time; the
-    * single-producer contract of [[append]] covers the rest). The tasks
-    * return their rows in their commit messages, so an epoch's rows reach
-    * the driver one micro-batch at a time — bounded by the source's
-    * admission control — and the tasks need no disk the driver can see.
+    * single-producer contract of [[append]] covers the rest), so the log's
+    * complete prefix is read once per commit. The tasks return their rows
+    * in their commit messages, so an epoch's rows reach the driver one
+    * micro-batch at a time — bounded by the source's admission control —
+    * and the tasks need no disk the driver can see.
     */
   private[graft] def commitEpoch(path: String, epochId: Long, parts: Seq[EpochRows]): Unit = {
     val epochsPath = Paths.get(path + ".epochs")
@@ -263,6 +318,7 @@ object CommitLog {
 
     val lines = parts.sortBy(_.partitionId).flatMap(_.rows)
     val total = lines.size
+    val (logLines, completeBytes) = completePrefix(path, Long.MaxValue)
     val startLine = entries.reverseIterator
       .map(_.trim.split(" "))
       .collectFirst { case Array("intent", e, s, n) if e == epochId.toString =>
@@ -271,33 +327,39 @@ object CommitLog {
         s.toLong
       }
       .getOrElse {
-        val s = completeLines(path)
         // Forced BEFORE any data append — the WAL ordering the protocol
         // depends on (a surviving data append with a lost intent would
         // recompute startLine from the extended log and double-append).
-        appendForced(epochsPath, s"intent $epochId $s $total\n")
-        s
+        appendForced(epochsPath, s"intent $epochId $logLines $total\n")
+        logLines
       }
 
-    val already = completeLines(path) - startLine
+    val already = logLines - startLine
     require(already >= 0 && already <= total,
       s"foreign append interleaved with epoch $epochId replay " +
-        s"(log at ${already + startLine} lines, intent start $startLine, total $total)")
+        s"(log at $logLines lines, intent start $startLine, total $total)")
     if (already < total) {
       // Torn-tail repair: a crash mid-append can leave a partial last line
-      // that completeLines excludes; appending the gap onto those bytes
-      // would merge the torn fragment and the replayed record into one
+      // that the complete prefix excludes; appending the gap onto those
+      // bytes would merge the torn fragment and the replayed record into one
       // corrupted line. Truncate to the last complete-line boundary first.
-      val (_, completeBytes) = completePrefix(path, Long.MaxValue)
       val p = Paths.get(path)
       if (Files.exists(p) && Files.size(p) > completeBytes) {
         val ch = java.nio.channels.FileChannel.open(p, StandardOpenOption.WRITE)
         try { ch.truncate(completeBytes); ch.force(true) } finally ch.close()
       }
-      append(path, lines.drop(already.toInt))
+      appendAt(path, lines.drop(already.toInt), logLines, completeBytes)
     }
     appendForced(epochsPath, s"done $epochId\n")
   }
+}
+
+/** Reader entry point for a topic directory: the `(partition, offset,
+  * value)` stream over its `*.log` partition files.
+  */
+object CommitLogTopic {
+  def readStream(spark: SparkSession, dir: String, maxLinesPerTrigger: Option[Long] = None): DataFrame =
+    CommitLog.load(spark, s"$dir/*.log", maxLinesPerTrigger)
 }
 
 /** One task's rows of an epoch, returned to the driver in its commit message. */
@@ -351,6 +413,9 @@ private[sources] class CommitLogDataWriter(valueIdx: Int, partitionId: Int)
   override def close(): Unit = ()
 }
 
+/** The commit log at `path`: read as the stream over the partition files it
+  * names, written (as a sink) by appending to the one file it is.
+  */
 private[sources] class CommitLogTable(path: String) extends Table with SupportsRead with SupportsWrite {
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -381,214 +446,22 @@ private[sources] class CommitLogTable(path: String) extends Table with SupportsR
   }
 }
 
-private[sources] case class CommitLogOffset(line: Long) extends Offset {
-  override def json(): String = line.toString
+private[sources] case class CommitLogOffset(lines: Map[String, Long]) extends Offset {
+  override def json(): String = CommitLog.offsetsToJson(lines)
 }
 
 private[sources] class CommitLogMicroBatchStream(path: String, maxPerTrigger: Option[Long])
   extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
+  private val dir = CommitLog.partitionDir(path)
+
   // Set once at query start under Trigger.AvailableNow: the stream drains to
   // exactly this point and stops, however many appends race in afterwards.
-  @volatile private var availableNowCap: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(CommitLog.completeLines(path))
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxPerTrigger.map(n => ReadLimit.maxRows(n)).getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[CommitLogOffset].line
-    val avail = availableNowCap.getOrElse(CommitLog.completeLines(path))
-    val end = limit match {
-      case mr: ReadMaxRows => math.min(avail, s + mr.maxRows())
-      case _               => avail
-    }
-    CommitLogOffset(math.max(s, end))
-  }
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException("admission-controlled source: latestOffset(start, limit)")
-
-  override def reportLatestOffset(): Offset = CommitLogOffset(CommitLog.completeLines(path))
-
-  override def initialOffset(): Offset = CommitLogOffset(0L)
-
-  override def deserializeOffset(json: String): Offset = CommitLogOffset(json.trim.toLong)
-
-  // The log is the durable store; nothing to release on commit.
-  override def commit(end: Offset): Unit = ()
-
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    CommitLog.splits(start.asInstanceOf[CommitLogOffset].line, end.asInstanceOf[CommitLogOffset].line)
-      .map { case (a, b) => CommitLogInputPartition(path, a, b): InputPartition }
-      .toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = CommitLogReaderFactory
-}
-
-private[sources] case class CommitLogInputPartition(path: String, start: Long, end: Long)
-  extends InputPartition
-
-/** Shared seek-and-scan over one file's planned `[start, end)` line range —
-  * the reading half of both the single-log and topic partition readers.
-  *
-  * Seeks to the nearest index point at-or-below the start offset, then skips
-  * only the gap — O(gap) per partition open instead of O(offset). A
-  * missing/stale sidecar degrades to the head (floor (0,0)), never to a
-  * wrong position: index entries only ever lag the log. The byte bound is
-  * the CURRENT file size (0 if the log vanished), so an index entry
-  * surviving a truncated/replaced log can't position past EOF and silently
-  * read zero rows — truncation below a planned offset surfaces as the
-  * explicit corruption error in [[next]] instead.
-  */
-private[sources] final class LineRangeReader(path: String, start: Long, end: Long) {
-  private val (idxLines, idxBytes) = CommitLog.indexFloor(
-    path,
-    maxBytes = if (Files.exists(Paths.get(path))) Files.size(Paths.get(path)) else 0L,
-    maxLines = start)
-  private val channel = java.nio.channels.FileChannel.open(
-    Paths.get(path), StandardOpenOption.READ)
-  private val reader = {
-    channel.position(idxBytes)
-    new java.io.BufferedReader(
-      java.nio.channels.Channels.newReader(channel, StandardCharsets.UTF_8))
-  }
-  private var line: Long = idxLines
-  private var current: String = _
-  while (line < start && reader.readLine() != null) line += 1
-
-  def next(): Boolean =
-    if (line >= end) false
-    else {
-      current = reader.readLine()
-      // The planned range only covers lines complete at planning time, so
-      // a null here means the file shrank — corruption, not laziness.
-      if (current == null)
-        throw new IllegalStateException(
-          s"commit log $path truncated below planned offset $end (at $line)")
-      line += 1
-      true
-    }
-
-  def offset: Long = line - 1
-  def value: String = current
-  def close(): Unit = reader.close()
-}
-
-private[sources] object CommitLogReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[CommitLogInputPartition]
-    new PartitionReader[InternalRow] {
-      private val r = new LineRangeReader(p.path, p.start, p.end)
-      override def next(): Boolean = r.next()
-      override def get(): InternalRow = InternalRow(r.offset, UTF8String.fromString(r.value))
-      override def close(): Unit = r.close()
-    }
-  }
-}
-
-/** Multi-partition commit-log TOPIC: N single-writer partition files under
-  * one directory, consumed as ONE stream with a composite per-file offset —
-  * the full Kafka topic shape (a topic is nothing but a set of append-only
-  * partition logs whose record offsets commit together), built on the same
-  * replay guarantees as [[CommitLog]]:
-  *
-  *  - the streaming offset is a `{partitionFile: lineCount}` map, serialized
-  *    with sorted keys so offset equality is textual equality in the WAL;
-  *  - each partition file keeps its own record offsets and byte-index
-  *    sidecar; a planned composite range replays deterministically per file
-  *    after a crash (the single-log argument, applied per partition);
-  *  - admission control splits `maxLinesPerTrigger` across partitions
-  *    PROPORTIONALLY to their lag (floor division, remainder granted in
-  *    sorted-name order) — deterministic, and a hot partition cannot starve
-  *    the others;
-  *  - partition files appearing after the stream starts are picked up at
-  *    offset 0 (the add-partitions case); files named `*.log` in the topic
-  *    directory are the partition set.
-  */
-class CommitLogTopic extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = CommitLogTopic.schema
-
-  override def getTable(
-      schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val dir = Option(properties.get("path")).getOrElse(
-      throw new IllegalArgumentException("commit-log topic source needs a directory: .load(dir)"))
-    new CommitLogTopicTable(dir)
-  }
-}
-
-object CommitLogTopic {
-  val schema: StructType = StructType(Seq(
-    StructField("partition", StringType, nullable = false),
-    StructField("offset", LongType, nullable = false),
-    StructField("value", StringType, nullable = false)))
-
-  /** The topic's partition files: `*.log` directly under `dir`, sorted by
-    * name (the sort makes every budget split and offset serialization
-    * deterministic).
-    */
-  private[sources] def partitionFiles(dir: String): Seq[String] = {
-    val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) Seq.empty
-    else {
-      val s = Files.list(d)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.endsWith(".log"))
-        .toSeq.sorted
-      finally s.close()
-    }
-  }
-
-  private[sources] def offsetsToJson(m: Map[String, Long]): String =
-    m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-
-  private[sources] def offsetsFromJson(s: String): Map[String, Long] =
-    "\"([^\"]+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(s)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-
-  /** Reader entry point: `(partition string, offset long, value string)`. */
-  def readStream(spark: SparkSession, dir: String, maxLinesPerTrigger: Option[Long] = None): DataFrame = {
-    val r = spark.readStream.format(classOf[CommitLogTopic].getName)
-    maxLinesPerTrigger.foreach(n => r.option("maxLinesPerTrigger", n.toString))
-    r.load(dir)
-  }
-}
-
-private[sources] class CommitLogTopicTable(dir: String) extends Table with SupportsRead {
-  override def name(): String = s"commitlogtopic(`$dir`)"
-  override def schema(): StructType = CommitLogTopic.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val maxPerTrigger = Option(options.get("maxLinesPerTrigger")).map(_.toLong)
-    () => new Scan {
-      override def readSchema(): StructType = CommitLogTopic.schema
-      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-        new CommitLogTopicMicroBatchStream(dir, maxPerTrigger)
-    }
-  }
-}
-
-private[sources] case class CommitLogTopicOffset(lines: Map[String, Long]) extends Offset {
-  override def json(): String = CommitLogTopic.offsetsToJson(lines)
-}
-
-private[sources] class CommitLogTopicMicroBatchStream(dir: String, maxPerTrigger: Option[Long])
-  extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
-
   @volatile private var availableNowCap: Option[Map[String, Long]] = None
 
   private def available(): Map[String, Long] =
-    CommitLogTopic.partitionFiles(dir)
-      .map(f => f -> CommitLog.completeLines(s"$dir/$f")).toMap
+    CommitLog.partitionFiles(path)
+      .map(f => f -> CommitLog.completeLines(dir.resolve(f).toString)).toMap
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowCap = Some(available())
@@ -597,7 +470,7 @@ private[sources] class CommitLogTopicMicroBatchStream(dir: String, maxPerTrigger
     maxPerTrigger.map(n => ReadLimit.maxRows(n)).getOrElse(ReadLimit.allAvailable())
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s     = start.asInstanceOf[CommitLogTopicOffset].lines
+    val s     = start.asInstanceOf[CommitLogOffset].lines
     val avail = availableNowCap.getOrElse(available())
     val lags = avail.toSeq.sortBy(_._1).map { case (f, av) =>
       (f, s.getOrElse(f, 0L), math.max(0L, av - s.getOrElse(f, 0L)))
@@ -618,47 +491,86 @@ private[sources] class CommitLogTopicMicroBatchStream(dir: String, maxPerTrigger
     }
     // Keys only ever accumulate: a partition file deleted out-of-band keeps
     // its committed count, so restarts can't re-plan vanished ranges from 0.
-    CommitLogTopicOffset(s ++ end)
+    CommitLogOffset(s ++ end)
   }
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("admission-controlled source: latestOffset(start, limit)")
 
-  override def reportLatestOffset(): Offset = CommitLogTopicOffset(available())
+  override def reportLatestOffset(): Offset = CommitLogOffset(available())
 
-  override def initialOffset(): Offset = CommitLogTopicOffset(Map.empty)
+  override def initialOffset(): Offset = CommitLogOffset(Map.empty)
 
   override def deserializeOffset(json: String): Offset =
-    CommitLogTopicOffset(CommitLogTopic.offsetsFromJson(json))
+    CommitLogOffset(CommitLog.offsetsFromJson(json))
 
+  // The log is the durable store; nothing to release on commit.
   override def commit(end: Offset): Unit = ()
 
   override def stop(): Unit = ()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[CommitLogTopicOffset].lines
-    val e = end.asInstanceOf[CommitLogTopicOffset].lines
+    val s = start.asInstanceOf[CommitLogOffset].lines
+    val e = end.asInstanceOf[CommitLogOffset].lines
     e.toSeq.sortBy(_._1).flatMap { case (f, endLine) =>
       CommitLog.splits(s.getOrElse(f, 0L), endLine)
-        .map { case (a, b) => CommitLogTopicInputPartition(s"$dir/$f", f, a, b): InputPartition }
+        .map { case (a, b) => CommitLogInputPartition(dir.resolve(f).toString, f, a, b): InputPartition }
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = CommitLogTopicReaderFactory
+  override def createReaderFactory(): PartitionReaderFactory = CommitLogReaderFactory
 }
 
-private[sources] case class CommitLogTopicInputPartition(
+private[sources] case class CommitLogInputPartition(
     path: String, part: String, start: Long, end: Long) extends InputPartition
 
-private[sources] object CommitLogTopicReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[CommitLogTopicInputPartition]
-    new PartitionReader[InternalRow] {
-      private val r       = new LineRangeReader(p.path, p.start, p.end)
-      private val partUtf = UTF8String.fromString(p.part)
-      override def next(): Boolean = r.next()
-      override def get(): InternalRow = InternalRow(partUtf, r.offset, UTF8String.fromString(r.value))
-      override def close(): Unit = r.close()
-    }
+/** Seek-and-scan over one file's planned `[start, end)` line range.
+  *
+  * Seeks to the nearest index point at-or-below the start offset, then skips
+  * only the gap — O(gap) per partition open instead of O(offset). A
+  * missing/stale sidecar degrades to the head (floor (0,0)), never to a
+  * wrong position: index entries only ever lag the log. The byte bound is
+  * the CURRENT file size (0 if the log vanished), so an index entry
+  * surviving a truncated/replaced log can't position past EOF and silently
+  * read zero rows — truncation below a planned offset surfaces as the
+  * explicit corruption error in [[next]] instead.
+  */
+private[sources] final class CommitLogPartitionReader(p: CommitLogInputPartition)
+  extends PartitionReader[InternalRow] {
+  private val (idxLines, idxBytes) = CommitLog.indexFloor(
+    p.path,
+    maxBytes = if (Files.exists(Paths.get(p.path))) Files.size(Paths.get(p.path)) else 0L,
+    maxLines = p.start)
+  private val channel = java.nio.channels.FileChannel.open(
+    Paths.get(p.path), StandardOpenOption.READ)
+  private val reader = {
+    channel.position(idxBytes)
+    new java.io.BufferedReader(
+      java.nio.channels.Channels.newReader(channel, StandardCharsets.UTF_8))
   }
+  private val partUtf = UTF8String.fromString(p.part)
+  private var line: Long = idxLines
+  private var current: String = _
+  while (line < p.start && reader.readLine() != null) line += 1
+
+  override def next(): Boolean =
+    if (line >= p.end) false
+    else {
+      current = reader.readLine()
+      // The planned range only covers lines complete at planning time, so
+      // a null here means the file shrank — corruption, not laziness.
+      if (current == null)
+        throw new IllegalStateException(
+          s"commit log ${p.path} truncated below planned offset ${p.end} (at $line)")
+      line += 1
+      true
+    }
+
+  override def get(): InternalRow = InternalRow(partUtf, line - 1, UTF8String.fromString(current))
+  override def close(): Unit = reader.close()
+}
+
+private[sources] object CommitLogReaderFactory extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new CommitLogPartitionReader(partition.asInstanceOf[CommitLogInputPartition])
 }

@@ -190,6 +190,65 @@ class RainStormStreamingSpec extends AnyFunSuite {
       "every (partition, offset) must carry its own record")
   }
 
+  test("commit-log source: a single log of any name streams only its own records") {
+    import org.apache.spark.sql.streaming.Trigger
+    val dir = tmpDir("clsingle")
+    CommitLog.append(s"$dir/events.txt", (0 until 12).map(i => s"e$i"))
+    CommitLog.append(s"$dir/a.log", Seq("a0", "a1"))
+    CommitLog.append(s"$dir/b.log", Seq("b0"))
+    val q = CommitLog.readStream(spark, s"$dir/events.txt", maxLinesPerTrigger = Some(5L))
+      .writeStream.format("memory").queryName("cl_single")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(120000)
+    val out = spark.table("cl_single")
+    assert(out.columns.toSeq == Seq("offset", "value"))
+    assert(out.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq ==
+      (0 until 12).map(i => (i.toLong, s"e$i")), "only events.txt's records, each at its offset")
+  }
+
+  test("commit-log source: a log created after the stream starts is read from offset 0") {
+    import org.apache.spark.sql.streaming.Trigger
+    val log = tmpDir("cllate") + "/late.log"
+    val q = CommitLog.readStream(spark, log)
+      .writeStream.format("memory").queryName("cl_late")
+      .trigger(Trigger.ProcessingTime(100)).start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table("cl_late").count() == 0)
+      CommitLog.append(log, (0 until 5).map(i => s"l$i"))
+      q.processAllAvailable()
+      assert(spark.table("cl_late").collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq ==
+        (0 until 5).map(i => (i.toLong, s"l$i")))
+    } finally q.stop()
+  }
+
+  test("commit-log source: a checkpoint offset that is a bare line number fails loudly") {
+    import org.apache.spark.sql.streaming.Trigger
+    val log  = tmpDir("clbare") + "/events.log"
+    val ckpt = tmpDir("clbare_ckpt")
+    CommitLog.append(log, (0 until 20).map(i => s"r$i"))
+    def start() = CommitLog.readStream(spark, log, maxLinesPerTrigger = Some(10L))
+      .writeStream.format("noop").option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    start().awaitTermination(120000)
+    // Rewrite the last planned offset as a bare line number, which parses as
+    // no offsets at all unless the format is checked: a restart would
+    // silently replay every record from line 0.
+    val last = new java.io.File(s"$ckpt/offsets").list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    val offsets = Paths.get(s"$ckpt/offsets/$last")
+    val lines = Files.readAllLines(offsets).asScala.toSeq
+    assert(lines.last == "{\"events.log\":20}")
+    Files.write(offsets, (lines.init :+ "20").mkString("\n").getBytes)
+    Files.deleteIfExists(Paths.get(s"$ckpt/offsets/.$last.crc"))
+    CommitLog.append(log, Seq("r20"))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      start().awaitTermination(120000)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("{\"<file>\":<line>}")),
+      s"the failure must name the offset format: $e")
+  }
+
   test("upsampleEpochsStream: any micro-batch slicing emits the batch multiset") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -45,12 +45,13 @@ the next version's directories through `Version.write`.
 Rule 4 — declared schemas. A parquet read without a schema starts a
 Spark job to re-read a footer on every call. The stores know their
 tables' schemas (`TextIndex.Schemas`, `AnnIndex.Schemas`,
-`SketchStore.Schemas`), so in functions/TextIndex.scala,
-functions/SketchStore.scala, functions/AnnIndex.scala,
-queries/Serving.scala and sources/Storage.scala every `.read` chain that
+`SketchStore.Schemas`), so in every main source every `.read` chain that
 reaches `.parquet(` must pass `.schema(` on the way; a table of unknown
-schema goes through `Storage.get`, whose own inferring read (the one that
-fills its schema memo) is exempt by name.
+schema goes through `Storage.get`. Two inferring reads are exempt by the
+name of the definition they sit in (the last `def name` or registry query
+`val name = Q(` before them): `Storage.get`'s own read, which fills its
+schema memo, and `Governance.schemaEvolution` (`x_schema_evolution`),
+whose `mergeSchema` inference is what the query checks.
 
 Rule 5 — no forked processes. A child process costs milliseconds (the
 fork, plus Hadoop's stderr reader thread), which is what Hadoop's local
@@ -66,7 +67,10 @@ commit log's sink (`CommitLog.writeStream`, whose intent-log epoch commit
 lands a replayed micro-batch exactly once), not through a per-batch file
 write of its own. No `.write` chain in streaming/RainStorm.scala may reach
 `.parquet(`, and no main-source file other than sources/CommitLog.scala
-may implement `StreamingWrite` or `DataWriter`. Comment lines are skipped.
+may implement `StreamingWrite` or `DataWriter`. The read half is one
+stream too: a single log is a one-partition topic, so
+sources/CommitLog.scala implements `MicroBatchStream` exactly once and no
+other main-source file implements it. Comment lines are skipped.
 
 Usage: python3 tools/checkpoint_lint.py [src_root]
        python3 tools/checkpoint_lint.py --selftest
@@ -106,13 +110,12 @@ IN_PLACE_WRITE = re.compile(
     r"""["']append["']|\bStorage\s*\.\s*(?:rewrite|replace|append)\s*\(""")
 
 
-SCHEMA_OWNERS = ("graft/functions/TextIndex.scala", "graft/functions/SketchStore.scala",
-                 "graft/functions/AnnIndex.scala", "graft/queries/Serving.scala",
-                 "graft/sources/Storage.scala")
-# (file, def) whose schema-less read is the point: Storage.get infers once
-# and memoizes.
-SCHEMA_EXEMPT = (("graft/sources/Storage.scala", "get"),)
-DEF_NAME = re.compile(r"\bdef\s+(\w+)")
+# (file, definition) whose schema-less read is the point: Storage.get infers
+# once and memoizes; x_schema_evolution checks the inferred schema merge.
+SCHEMA_EXEMPT = (("graft/sources/Storage.scala", "get"),
+                 ("graft/queries/Governance.scala", "schemaEvolution"))
+# A `def name`, or a registry query's `val name = Q(` (its body is a lambda).
+DEF_NAME = re.compile(r"\bdef\s+(\w+)|\bval\s+(\w+)\s*=\s*Q\s*\(")
 # `.read`, then any calls but `.schema(...)`, then `.parquet(` — across lines.
 UNDECLARED_READ = re.compile(
     r"\.\s*read\b((?:\s*\.\s*(?!schema\b)\w+\s*\((?:[^()]|\([^()]*\))*\))*)"
@@ -130,6 +133,7 @@ SINK_OWNER = "graft/sources/CommitLog.scala"
 PARQUET_WRITE = re.compile(
     r"\.\s*write\b((?:\s*\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\))*)\s*\.\s*parquet\s*\(")
 SINK_IMPL = re.compile(r"\b(?:extends|with|new)\s+(?:[\w.]+\.)?(?:StreamingWrite|DataWriter)\b")
+STREAM_IMPL = re.compile(r"\b(?:extends|with|new)\s+(?:[\w.]+\.)?MicroBatchStream\b")
 
 
 def scala_files(root: str):
@@ -179,14 +183,12 @@ def scan_schema_reads(root: str = "src/main/scala"):
     bad = []
     for p in scala_files(root):
         unix = p.replace(os.sep, "/")
-        if not unix.endswith(SCHEMA_OWNERS):
-            continue
         exempt = {d for f, d in SCHEMA_EXEMPT if unix.endswith(f)}
         # blank comment lines, keeping line numbers, so prose may name the call
         text = "".join("\n" if COMMENT_LINE.match(l) else l
                        for l in open(p, encoding="utf-8").readlines())
         for m in UNDECLARED_READ.finditer(text):
-            defs = DEF_NAME.findall(text, 0, m.start())
+            defs = [d or v for d, v in DEF_NAME.findall(text, 0, m.start())]
             if defs and defs[-1] in exempt:
                 continue
             i = text.count("\n", 0, m.start()) + 1
@@ -214,8 +216,14 @@ def scan_sinks(root: str = "src/main/scala"):
         text = "".join("\n" if COMMENT_LINE.match(l) else l
                        for l in open(p, encoding="utf-8").readlines())
         hits = list(PARQUET_WRITE.finditer(text)) if unix.endswith(DEST_WRITER) else []
-        if not unix.endswith(SINK_OWNER):
+        streams = list(STREAM_IMPL.finditer(text))
+        if unix.endswith(SINK_OWNER):
+            if not streams:
+                bad.append(f"{p}: no MicroBatchStream (the commit-log source is missing)")
+            hits += streams[1:]  # exactly one stream: a single log is a one-partition topic
+        else:
             hits += SINK_IMPL.finditer(text)
+            hits += streams
         for m in sorted(hits, key=lambda m: m.start()):
             i = text.count("\n", 0, m.start()) + 1
             bad.append(f"{p}:{i}: {' '.join(m.group(0).split())}")
@@ -337,7 +345,7 @@ def selftest():
                     "    s.read.schema(S).option(\"basePath\", b).parquet(d: _*)\n"
                     "  // spark.read.parquet(path) in a comment is prose\n}\n")
         with open(os.path.join(d, "Other.scala"), "w") as f:
-            f.write("object Other { def r(s: SparkSession) = s.read.parquet(\"x\") }\n")
+            f.write("object Other { def r(s: SparkSession) = s.read.schema(S).parquet(\"x\") }\n")
         assert scan_schema_reads(td) == [], \
             f"selftest: declared-schema reads flagged: {scan_schema_reads(td)}"
         with open(os.path.join(fn, "TextIndex.scala"), "a") as f:
@@ -383,6 +391,25 @@ def selftest():
         bad = scan_schema_reads(td)
         assert len(bad) == 6 and any("Storage.scala:8" in b for b in bad), \
             f"selftest: planted schema-less Storage read not caught: {bad}"
+        # rule 4 covers every main source, not only the store files
+        with open(os.path.join(d, "Other.scala"), "w") as f:
+            f.write("object Other { def r(s: SparkSession) = s.read.parquet(\"x\") }\n")
+        bad = scan_schema_reads(td)
+        assert len(bad) == 7 and any("Other.scala:1" in b for b in bad), \
+            f"selftest: planted schema-less read outside the store files not caught: {bad}"
+        # x_schema_evolution's inferring read is exempt by its query val, no
+        # other query's is
+        with open(os.path.join(d, "Governance.scala"), "w") as f:
+            f.write("object Governance {\n"
+                    "  val schemaEvolution = Q(\n"
+                    "    \"x_schema_evolution\",\n"
+                    "    (s, d) => s.read.option(\"mergeSchema\", \"true\")\n"
+                    "      .parquet(a, b))\n"
+                    "  val wapPublish = Q(\"x_wap_publish\", (s, d) => s.read.parquet(p))\n}\n")
+        bad = scan_schema_reads(td)
+        assert len(bad) == 8 and any("Governance.scala:6" in b for b in bad) \
+            and not any("Governance.scala:4" in b for b in bad), \
+            f"selftest: x_schema_evolution flagged or another query's read not caught: {bad}"
         # rule 5: no process starts; only the factory names the fs impl keys
         assert scan_processes(td) == [], \
             f"selftest: clean tree flagged by rule 5: {scan_processes(td)}"
@@ -416,7 +443,9 @@ def selftest():
                     "  def l(p: Path) = Files.write(p, Array.emptyByteArray) }\n")
         with open(os.path.join(src, "CommitLog.scala"), "w") as f:
             f.write("class CommitLogStreamingWrite extends StreamingWrite\n"
-                    "class CommitLogDataWriter extends DataWriter[InternalRow]\n")
+                    "class CommitLogDataWriter extends DataWriter[InternalRow]\n"
+                    "class CommitLogMicroBatchStream(p: String)\n"
+                    "  extends MicroBatchStream with SupportsAdmissionControl\n")
         with open(os.path.join(d, "Other.scala"), "w") as f:
             f.write("object Other { def w(df: DataFrame) = df.write.parquet(\"x\") }\n")
         assert scan_sinks(td) == [], f"selftest: legal sink code flagged: {scan_sinks(td)}"
@@ -432,6 +461,24 @@ def selftest():
         assert len(bad) == 4 and "RainStorm.scala:6" in bad[0] \
             and all(f"MySink.scala:{i}" in b for i, b in zip((1, 2, 3), bad[1:])), \
             f"selftest: planted parquet dest write / foreign sink not caught: {bad}"
+        # one commit-log stream: a second one inside CommitLog.scala, or one
+        # anywhere else, is flagged
+        with open(os.path.join(src, "CommitLog.scala"), "a") as f:
+            f.write("/** A second stream class extends MicroBatchStream. */\n"
+                    "class CommitLogTopicMicroBatchStream(d: String)\n"
+                    "  extends MicroBatchStream with SupportsTriggerAvailableNow\n")
+        with open(os.path.join(d, "MyStream.scala"), "w") as f:
+            f.write("object MyStream { val s = new org.apache.spark.sql.connector.read"
+                    ".streaming.MicroBatchStream { } }\n")
+        bad = scan_sinks(td)
+        assert len(bad) == 6 and any("CommitLog.scala:7" in b for b in bad) \
+            and any("MyStream.scala:1" in b for b in bad), \
+            f"selftest: planted second commit-log stream / foreign stream not caught: {bad}"
+        with open(os.path.join(src, "CommitLog.scala"), "w") as f:
+            f.write("class CommitLogStreamingWrite extends StreamingWrite\n")
+        bad = scan_sinks(td)
+        assert len(bad) == 6 and any(b.endswith("missing)") for b in bad), \
+            f"selftest: a CommitLog.scala without its stream not caught: {bad}"
     print("checkpoint_lint selftest: OK (planted sites caught)")
     return 0
 
@@ -473,8 +520,7 @@ def main():
               "commit it; never append to or rewrite a committed table.")
     reads = scan_schema_reads(root)
     if reads:
-        print(f"checkpoint_lint: {len(reads)} TextIndex, SketchStore, AnnIndex, "
-              f"Serving or Storage parquet read(s) without a declared schema:")
+        print(f"checkpoint_lint: {len(reads)} parquet read(s) without a declared schema:")
         for b in reads:
             print("  " + b)
         print("Read store tables with their declared schema (Version.read), or a "
@@ -489,20 +535,23 @@ def main():
               "fs.file.impl / fs.AbstractFileSystem.file.impl to GraftSession.")
     sinks = scan_sinks(root)
     if sinks:
-        print(f"checkpoint_lint: {len(sinks)} RainStorm parquet write(s) or streaming "
-              f"writer(s) outside CommitLog:")
+        print(f"checkpoint_lint: {len(sinks)} RainStorm parquet write(s), streaming "
+              f"writer(s) outside CommitLog or commit-log stream(s) besides the one:")
         for b in sinks:
             print("  " + b)
         print("Write RainStorm's dest through CommitLog.writeStream; the commit "
-              "log's sink is the one exactly-once StreamingWrite.")
+              "log's sink is the one exactly-once StreamingWrite, and its "
+              "MicroBatchStream the one source stream (a single log is a "
+              "one-partition topic).")
     if bad or sessions or manifests or in_place or reads or procs or sinks:
         return 1
     print("checkpoint_lint: clean (all truncation goes through "
           "Layout.truncateLineage; all sessions through GraftSession; all "
           "commit pointers through Storage; no in-place write in a serving store; "
-          "no schema-less parquet read in TextIndex, SketchStore, AnnIndex, Serving "
-          "or Storage; no process starts; only GraftSession sets the file-system impl; "
-          "RainStorm's dest and every streaming writer go through CommitLog)")
+          "no schema-less parquet read outside Storage.get and x_schema_evolution; "
+          "no process starts; only GraftSession sets the file-system impl; "
+          "RainStorm's dest and every streaming writer go through CommitLog, "
+          "which has the one MicroBatchStream)")
     return 0
 
 

@@ -103,13 +103,15 @@ fi
 # Storage may build a store's commit-pointer (`_commits`) or manifest path,
 # and TextIndex, AnnIndex and SketchStore never append to or rewrite a
 # committed table (no "append" mode, no Storage.rewrite/replace/append call).
-# (4) Declared schemas: no `.read...parquet(` without `.schema(` in
-# functions/TextIndex.scala, functions/SketchStore.scala,
-# functions/AnnIndex.scala, queries/Serving.scala or sources/Storage.scala
-# (Storage.get's memo read exempt).
+# (4) Declared schemas: no `.read...parquet(` without `.schema(` in any
+# main source (Storage.get's memo read and Governance.schemaEvolution's
+# mergeSchema read, x_schema_evolution, exempt by name).
 # (5) No forked processes: no ProcessBuilder, scala.sys.process or
 # Runtime.getRuntime.exec in main sources, and only GraftSession may set
 # fs.file.impl / fs.AbstractFileSystem.file.impl.
+# (6) One exactly-once dest and one commit-log stream: no parquet write in
+# streaming/RainStorm.scala, no StreamingWrite/DataWriter outside
+# sources/CommitLog.scala, and exactly one MicroBatchStream, inside it.
 python3 tools/checkpoint_lint.py --selftest >/dev/null || {
   echo "pre-commit: checkpoint_lint SELFTEST failed — a planted violation"
   echo "no longer fails; fix tools/checkpoint_lint.py."
@@ -123,15 +125,16 @@ python3 tools/checkpoint_lint.py || {
   echo "GraftSession), store commits through Storage.commit/publish (rule 3:"
   echo "no commit-pointer or manifest path outside Storage; a serving store"
   echo "writes only the next version's directories, never an \"append\" mode"
-  echo "or a Storage.rewrite/replace/append of a committed table), TextIndex,"
-  echo "SketchStore, AnnIndex, Serving and Storage reads through declared"
-  echo "schemas or Storage.get (rule 4: no .read.parquet( without .schema( in"
-  echo "functions/TextIndex.scala, functions/SketchStore.scala,"
-  echo "functions/AnnIndex.scala, queries/Serving.scala or"
-  echo "sources/Storage.scala outside Storage.get),"
-  echo "and file metadata in-process (rule 5: no ProcessBuilder, sys.process"
-  echo "or Runtime.exec in main sources; only GraftSession sets fs.file.impl"
-  echo "or fs.AbstractFileSystem.file.impl)."
+  echo "or a Storage.rewrite/replace/append of a committed table),"
+  echo "parquet reads through declared schemas or Storage.get (rule 4: no"
+  echo ".read.parquet( without .schema( in ANY main source, outside Storage.get"
+  echo "and x_schema_evolution's Governance.schemaEvolution), file metadata"
+  echo "in-process (rule 5: no ProcessBuilder, sys.process or Runtime.exec in"
+  echo "main sources; only GraftSession sets fs.file.impl or"
+  echo "fs.AbstractFileSystem.file.impl), and RainStorm's dest through"
+  echo "CommitLog.writeStream (rule 6: no StreamingWrite/DataWriter outside"
+  echo "sources/CommitLog.scala, and exactly one MicroBatchStream, inside it:"
+  echo "a single log is a one-partition topic)."
   exit 1
 }
 exit 0
