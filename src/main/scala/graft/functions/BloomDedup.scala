@@ -91,57 +91,59 @@ object BloomDedup {
       .select(col(idCol))
       .distinct()
 
+  /** A corpus Bloom filter: the persisted DISTINCT corpus keys (one LONG
+    * column, `__ck` — the exact-verify side), the persisted bitset built over
+    * them, and its geometry. Built once per corpus; every batch pays only a
+    * [[maybeContains]] probe plus an exact verify against `keys`.
+    */
+  final case class CorpusFilter(keys: DataFrame, bits: DataFrame, nBits: Long, k: Int)
+
+  /** The corpus pass: distinct keys of the one-LONG-column frame `keys`,
+    * persisted because they feed the geometry count, the filter build and
+    * the callers' exact verify — so the corpus is scanned and hashed once.
+    * The bitset persists lazily: its first probe materializes it.
+    */
+  def corpusFilter(keys: DataFrame, fpp: Double): CorpusFilter = {
+    val ck = keys.toDF("__ck").distinct().persist()
+    val (nBits, k) =
+      try geometry(ck.count(), fpp)
+      catch { case e: Throwable => ck.unpersist(); throw e }
+    CorpusFilter(ck, buildFilter(ck, "__ck", nBits, k).persist(), nBits, k)
+  }
+
+  /** `f` against a [[corpusFilter]] over `keys`, unpersisted afterwards — so
+    * `f` must materialize what it returns (`truncateLineage`).
+    */
+  def withCorpusFilter[A](keys: DataFrame, fpp: Double)(f: CorpusFilter => A): A = {
+    val filt = corpusFilter(keys, fpp)
+    try f(filt) finally { filt.bits.unpersist(); filt.keys.unpersist() }
+  }
+
   /** Batch rows whose `textCol` does NOT already appear in `corpus` — exact
-    * semantics (bloom false positives are removed by the verify join). Set
-    * `exactVerify = false` for the pure at-scale fast path that skips the
-    * corpus re-scan and accepts dropping ~fpp of genuinely-new rows.
+    * semantics (bloom false positives are removed by the verify join).
     */
   def newAgainstCorpus(
       corpus: DataFrame,
       batch: DataFrame,
       idCol: String,
       textCol: String,
-      fpp: Double = 0.01,
-      exactVerify: Boolean = true
-  ): DataFrame = {
-    // ckeys feeds three consumers (geometry count, filter build, the exact-
-    // verify anti-join) — persist so the corpus is scanned and hashed once.
-    val ckeys = corpus.select(xxhash64(col(textCol)).as("__ck")).distinct().persist()
-    try {
-      val (nBits, k) = geometry(ckeys.count(), fpp)
-      val filt = buildFilter(ckeys, "__ck", nBits, k)
-      // Materialize the result before unpersisting the corpus keys the
-      // verify join depends on.
-      newAgainstFilter(batch, idCol, textCol, ckeys, filt, nBits, k, exactVerify)
-        .truncateLineage()
-    } finally ckeys.unpersist()
-  }
+      fpp: Double = 0.01
+  ): DataFrame =
+    withCorpusFilter(corpus.select(xxhash64(col(textCol))), fpp) { filt =>
+      newAgainstFilter(batch, idCol, textCol, filt).truncateLineage()
+    }
 
-  /** The per-batch probe against a PREBUILT (ideally persisted) filter — the
-    * incremental/streaming entry point: the corpus pass behind `ckeys`/`filt`
-    * happens once, every arriving batch pays only this.
+  /** The per-batch probe against a PREBUILT filter — the incremental/
+    * streaming entry point: the corpus pass behind `filt` happens once,
+    * every arriving batch pays only this.
     */
-  def newAgainstFilter(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      ckeys: DataFrame,
-      filt: DataFrame,
-      nBits: Long,
-      k: Int,
-      exactVerify: Boolean = true
-  ): DataFrame = {
+  def newAgainstFilter(batch: DataFrame, idCol: String, textCol: String, filt: CorpusFilter): DataFrame = {
     val keyed = batch.withColumn("__ck", xxhash64(col(textCol)))
-    val maybe = maybeContains(keyed.select(col(idCol), col("__ck")), idCol, "__ck", filt, nBits, k)
-    val miss  = keyed.join(maybe, Seq(idCol), "left_anti")
-    val out =
-      if (!exactVerify) miss
-      else {
-        // False positives: flagged by the filter but absent from the corpus.
-        val fps = keyed.join(maybe.hint("broadcast"), Seq(idCol))
-          .join(ckeys, Seq("__ck"), "left_anti")
-        miss.unionByName(fps)
-      }
-    out.drop("__ck")
+    val maybe = maybeContains(keyed.select(col(idCol), col("__ck")), idCol, "__ck",
+      filt.bits, filt.nBits, filt.k)
+    // False positives: flagged by the filter but absent from the corpus.
+    val fps = keyed.join(maybe.hint("broadcast"), Seq(idCol))
+      .join(filt.keys, Seq("__ck"), "left_anti")
+    keyed.join(maybe, Seq(idCol), "left_anti").unionByName(fps).drop("__ck")
   }
 }

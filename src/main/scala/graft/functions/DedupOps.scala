@@ -73,13 +73,8 @@ object DedupOps {
     * no aggregation buffer ever materializes an unbounded bucket.
     */
   def pairsFromBuckets(banded: DataFrame, idCol: String, maxBucketSize: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bucket"))
-      .orderBy(col("__pid"))
-    banded
-      .select(col("band"), col("bucket"), col(idCol).cast("long").as("__pid"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxBucketSize)
+    capPerGroup(banded.select(col("band"), col("bucket"), col(idCol).cast("long").as("__pid")),
+        Seq("band", "bucket"), "__pid", maxBucketSize)
       .groupBy(col("band"), col("bucket"))
       .agg(sort_array(collect_list(col("__pid"))).as("ids"))
       .filter(size(col("ids")) > 1)
@@ -270,14 +265,15 @@ object DedupOps {
     * duplicated wholesale elsewhere in the corpus loses all its covered
     * lines (clean = "") — exact-dup removal falls out as a special case.
     *
-    * Scale shape: span explode is map-side; the global first-occurrence pass
-    * is ONE hash-partitioned aggregation on the span hash with map-side
-    * partial min/count; only DUPLICATED spans (a tiny fraction of a real
-    * corpus) flow into the occurrence join; line removal is a keyed
-    * anti-join and the rebuild one groupBy(doc). Nothing is quadratic and
-    * nothing collects. Boilerplate spans repeated millions of times make the
-    * occurrence join's hash side skewed — AQE's skew-join splitting handles
-    * that at runtime (enabled in every session here).
+    * Scale shape ([[spanDedup]], shared with [[dedupTokenSpans]]): span
+    * explode is map-side; the global first-occurrence pass is ONE
+    * hash-partitioned aggregation on the span hash with map-side partial
+    * min/count; only DUPLICATED spans (a tiny fraction of a real corpus) flow
+    * into the occurrence join; line removal is a keyed anti-join and the
+    * rebuild one groupBy(doc). Nothing is quadratic and nothing collects.
+    * Boilerplate spans repeated millions of times make the occurrence join's
+    * hash side skewed — AQE's skew-join splitting handles that at runtime
+    * (enabled in every session here).
     *
     * Returns one row per input doc: (idCol, clean, n_kept, n_removed).
     */
@@ -286,43 +282,7 @@ object DedupOps {
       idCol: String,
       textCol: String,
       spanLines: Int = 3
-  ): DataFrame = {
-    val base = docs.select(col(idCol).cast("long").as("__id"), col(textCol).as("__t"))
-    val spans = base.select(col("__id"),
-      posexplode(NativeFns.line_span_hashes(col("__t"), spanLines)).as(Seq("__idx", "__h")))
-    val dupFirst = spans.groupBy("__h")
-      .agg(min(struct(col("__id"), col("__idx"))).as("__first"), count(lit(1)).as("__n"))
-      .filter(col("__n") > 1)
-      .select(col("__h"), col("__first"))
-    // Same shape fixes as [[dedupTokenSpans]]: hash-join past the sort, no
-    // distinct (the rebuild kernel's position set absorbs overlap dups).
-    val removed = spans.join(dupFirst.hint("shuffle_hash"), "__h")
-      .filter(struct(col("__id"), col("__idx")) =!= col("__first"))
-      .select(col("__id"),
-        explode(sequence(col("__idx"), col("__idx") + lit(spanLines - 1))).as("__line"))
-    rebuildWithoutLines(base, removed, idCol)
-  }
-
-  /** Rebuild documents minus a removal set: `base` is (__id, __t), `removed`
-    * is (__id, __line) line indices to drop — the line face of
-    * [[rebuildWithoutTokens]], sharing the one-pass `remove_positions`
-    * kernel (sep = "\n"). Only docs that actually lost lines aggregate and
-    * join back; everything else is a map-side projection. Shared tail of
-    * [[dedupSpans]] and [[dedupSpansAgainstCorpus]].
-    */
-  private def rebuildWithoutLines(base: DataFrame, removed: DataFrame, idCol: String): DataFrame = {
-    val remArr = removed.groupBy("__id")
-      .agg(collect_set(col("__line").cast("int")).as("__rm"))
-    base.join(remArr, Seq("__id"), "left")
-      .select(col("__id"),
-        NativeFns.remove_positions(
-          col("__t"), coalesce(col("__rm"), array().cast("array<int>")), "\n").as("__r"))
-      .select(
-        col("__id").as(idCol),
-        col("__r").getField("clean").as("clean"),
-        col("__r").getField("n_kept").as("n_kept"),
-        col("__r").getField("n_removed").as("n_removed"))
-  }
+  ): DataFrame = spanDedup(docs, idCol, textCol, spanLines, NativeFns.line_span_hashes, "\n")
 
   /** Token-level EXACT-SUBSTRING dedup — Lee et al.'s ExactSubstr rule
     * ("Deduplicating Training Data Makes Language Models Better", ACL
@@ -330,9 +290,8 @@ object DedupOps {
     * once in the corpus keeps only its globally first occurrence (min
     * (doc_id, token_idx)); every token covered by another occurrence is
     * removed and documents are rebuilt from their surviving tokens. The
-    * token-granularity sibling of [[dedupSpans]] (C4's line rule) — same
-    * global first-occurrence aggregation, duplicated-occurrence join, and
-    * anti-join rebuild, driven by the positional codegen'd
+    * token-granularity sibling of [[dedupSpans]] (C4's line rule) — the same
+    * [[spanDedup]] core, driven by the positional codegen'd
     * `token_span_hashes` kernel.
     *
     * The paper's suffix array finds variable-length duplicated substrings
@@ -340,9 +299,7 @@ object DedupOps {
     * the tokens of every duplicated run of length ≥ k (a run of length
     * L ≥ k is covered by its L−k+1 windows), which is the standard
     * distributed reformulation — no corpus-wide suffix array to build or
-    * shard, just one hash-partitioned aggregation. Same scale shape as
-    * [[dedupSpans]]: span explode map-side, only duplicated spans flow into
-    * the occurrence join, AQE skew-join absorbs hot boilerplate spans.
+    * shard, just one hash-partitioned aggregation.
     *
     * Returns one row per input doc: (idCol, clean, n_kept, n_removed),
     * counts in TOKENS.
@@ -352,10 +309,57 @@ object DedupOps {
       idCol: String,
       textCol: String,
       spanTokens: Int = 20
-  ): DataFrame = {
-    val base = docs.select(col(idCol).cast("long").as("__id"), col(textCol).as("__t"))
-    val spans = base.select(col("__id"),
-      posexplode(NativeFns.token_span_hashes(col("__t"), spanTokens)).as(Seq("__idx", "__h")))
+  ): DataFrame = spanDedup(docs, idCol, textCol, spanTokens, NativeFns.token_span_hashes, " ")
+
+  /** INCREMENTAL span dedup — the ingestion-time face of [[dedupSpans]]:
+    * every span of an arriving batch that ALREADY EXISTS anywhere in a
+    * static corpus loses its lines (the corpus copy is the first occurrence
+    * by definition; within-batch repetition is [[dedupSpans]]'s business).
+    * The corpus is paid for ONCE: its distinct span hashes feed the
+    * [[BloomDedup.corpusFilter]] distributed bitset (MBs for billions of
+    * spans, reusable across batches), each batch probes map-side, and only
+    * the maybe-present sliver (true hits + fpp) is exact-verified against
+    * the corpus hash set — the corpus is never re-joined wholesale per
+    * batch, the same shape [[BloomDedup.newAgainstCorpus]] proves for
+    * whole-text dedup. Returns (idCol, clean, n_kept, n_removed) for the
+    * batch.
+    */
+  def dedupSpansAgainstCorpus(
+      corpus: DataFrame,
+      batch: DataFrame,
+      idCol: String,
+      textCol: String,
+      spanLines: Int = 3,
+      fpp: Double = 0.01
+  ): DataFrame =
+    spanDedupAgainstCorpus(corpus, batch, idCol, textCol, spanLines, fpp,
+      NativeFns.line_span_hashes, "\n")
+
+  /** INCREMENTAL token-span dedup — [[dedupTokenSpans]]'s ingestion-time
+    * face: every `spanTokens`-token window of an arriving batch that already
+    * exists in the static corpus loses its tokens (the corpus copy is first
+    * by definition). The same Bloom-bitset core as
+    * [[dedupSpansAgainstCorpus]].
+    */
+  def dedupTokenSpansAgainstCorpus(
+      corpus: DataFrame,
+      batch: DataFrame,
+      idCol: String,
+      textCol: String,
+      spanTokens: Int = 20,
+      fpp: Double = 0.01
+  ): DataFrame =
+    spanDedupAgainstCorpus(corpus, batch, idCol, textCol, spanTokens, fpp,
+      NativeFns.token_span_hashes, " ")
+
+  /** The within-corpus core of [[dedupSpans]] and [[dedupTokenSpans]]:
+    * `kernel` is the positional `line_span_hashes` or `token_span_hashes`,
+    * `sep` the unit separator the rebuild splits on.
+    */
+  private def spanDedup(docs: DataFrame, idCol: String, textCol: String, span: Int,
+      kernel: (Column, Int) => Column, sep: String): DataFrame = {
+    val base  = docs.select(col(idCol).cast("long").as("__id"), col(textCol).as("__t"))
+    val spans = base.select(col("__id"), posexplode(kernel(col("__t"), span)).as(Seq("__idx", "__h")))
     val dupFirst = spans.groupBy("__h")
       .agg(min(struct(col("__id"), col("__idx"))).as("__first"), count(lit(1)).as("__n"))
       .filter(col("__n") > 1)
@@ -367,118 +371,58 @@ object DedupOps {
     // kernel's position set, so the extra corpus-sized shuffle buys nothing.
     val removed = spans.join(dupFirst.hint("shuffle_hash"), "__h")
       .filter(struct(col("__id"), col("__idx")) =!= col("__first"))
-      .select(col("__id"),
-        explode(sequence(col("__idx"), col("__idx") + lit(spanTokens - 1))).as("__pos"))
-    rebuildWithoutTokens(base, removed, idCol)
+    rebuildWithout(base, removed, idCol, span, sep)
   }
 
-  /** Rebuild documents minus a token-position removal set — the
-    * token-granularity sibling of [[rebuildWithoutLines]], but MAP-SIDE:
-    * only the removed positions (docs that actually lost tokens — the
-    * duplicated sliver) are aggregated and joined back; the surviving text
-    * is reconstructed per row with `array_except(sequence, removed)` (hash
-    * set, order-preserving on its left argument) + `transform`/`element_at`
-    * over the re-split token array. A first cut posexploded EVERY token
-    * into an anti-join + per-doc `collect_list` — shuffling the whole
-    * corpus's tokens and spilling the aggregation buffers, measured 13× at
-    * 10× data; this shape moves only removed positions and runs the
-    * rebuild at scan speed. `split(" ", -1)` (keep empties) matches the
-    * `token_span_hashes` kernel's positional tokenization exactly.
+  /** The against-corpus core of [[dedupSpansAgainstCorpus]] and
+    * [[dedupTokenSpansAgainstCorpus]].
     */
-  private def rebuildWithoutTokens(base: DataFrame, removed: DataFrame, idCol: String): DataFrame = {
+  private def spanDedupAgainstCorpus(corpus: DataFrame, batch: DataFrame, idCol: String,
+      textCol: String, span: Int, fpp: Double, kernel: (Column, Int) => Column,
+      sep: String): DataFrame =
+    BloomDedup.withCorpusFilter(corpus.select(explode(kernel(col(textCol), span))), fpp) { filt =>
+      val base  = batch.select(col(idCol).cast("long").as("__id"), col(textCol).as("__t"))
+      val spans = base.select(col("__id"), posexplode(kernel(col("__t"), span)).as(Seq("__idx", "__h")))
+      // Probe DISTINCT batch span hashes (hash doubles as its own id), then
+      // exact-verify the sliver so fpp never removes an innocent unit.
+      val dupHashes = BloomDedup.maybeContains(
+          spans.select(col("__h").as("__mid"), col("__h").as("__mk")),
+          "__mid", "__mk", filt.bits, filt.nBits, filt.k)
+        .select(col("__mid").as("__h"))
+        .join(filt.keys.withColumnRenamed("__ck", "__h"), Seq("__h"), "left_semi")
+      rebuildWithout(base, spans.join(dupHashes, Seq("__h"), "left_semi"), idCol, span, sep)
+        .truncateLineage()
+    }
+
+  /** Rebuild documents minus the units their removed spans cover: `base` is
+    * (__id, __t), `removed` is (__id, __idx) span starts, each covering units
+    * __idx .. __idx + span − 1, and `sep` is the unit separator ("\n" lines,
+    * " " tokens). MAP-SIDE: only the removed positions (docs that actually
+    * lost units — the duplicated sliver) are aggregated and joined back; the
+    * one-pass `remove_positions` kernel rebuilds the surviving text per row.
+    * A first cut posexploded EVERY token into an anti-join + per-doc
+    * `collect_list` — shuffling the whole corpus's tokens and spilling the
+    * aggregation buffers, measured 13× at 10× data; this shape moves only
+    * removed positions and runs the rebuild at scan speed. The kernel splits
+    * on `sep` keeping empties, matching the span kernels' positional units.
+    */
+  private def rebuildWithout(base: DataFrame, removed: DataFrame, idCol: String, span: Int,
+      sep: String): DataFrame = {
     // collect_set: map-side partial dedup of overlapping-window positions —
     // the removal sliver shuffles once, doc-keyed, already deduplicated.
-    val remArr = removed.groupBy("__id")
+    val remArr = removed
+      .select(col("__id"), explode(sequence(col("__idx"), col("__idx") + lit(span - 1))).as("__pos"))
+      .groupBy("__id")
       .agg(collect_set(col("__pos").cast("int")).as("__rm"))
     base.join(remArr, Seq("__id"), "left")
       .select(col("__id"),
         NativeFns.remove_positions(
-          col("__t"), coalesce(col("__rm"), array().cast("array<int>")), " ").as("__r"))
+          col("__t"), coalesce(col("__rm"), array().cast("array<int>")), sep).as("__r"))
       .select(
         col("__id").as(idCol),
         col("__r").getField("clean").as("clean"),
         col("__r").getField("n_kept").as("n_kept"),
         col("__r").getField("n_removed").as("n_removed"))
-  }
-
-  /** INCREMENTAL span dedup — the ingestion-time face of [[dedupSpans]]:
-    * every span of an arriving batch that ALREADY EXISTS anywhere in a
-    * static corpus loses its lines (the corpus copy is the first occurrence
-    * by definition; within-batch repetition is [[dedupSpans]]'s business).
-    * The corpus is paid for ONCE: its distinct span hashes feed the
-    * [[BloomDedup]] distributed bitset (MBs for billions of spans,
-    * reusable across batches), each batch probes map-side, and only the
-    * maybe-present sliver (true hits + fpp) is exact-verified against the
-    * corpus hash set — the corpus is never re-joined wholesale per batch,
-    * the same shape [[BloomDedup.newAgainstCorpus]] proves for whole-text
-    * dedup. Returns (idCol, clean, n_kept, n_removed) for the batch.
-    */
-  def dedupSpansAgainstCorpus(
-      corpus: DataFrame,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      spanLines: Int = 3,
-      fpp: Double = 0.01
-  ): DataFrame = {
-    val ck = corpus
-      .select(explode(NativeFns.line_span_hashes(col(textCol), spanLines)).as("__ck"))
-      .distinct().persist()
-    try {
-      val (nBits, k) = BloomDedup.geometry(ck.count(), fpp)
-      val filt = BloomDedup.buildFilter(ck, "__ck", nBits, k)
-      val base = batch.select(col(idCol).cast("long").as("__id"), col(textCol).as("__t"))
-      val spans = base.select(col("__id"),
-        posexplode(NativeFns.line_span_hashes(col("__t"), spanLines)).as(Seq("__idx", "__h")))
-      // Probe DISTINCT batch span hashes (hash doubles as its own id), then
-      // exact-verify the sliver so fpp never removes an innocent line.
-      val maybe = BloomDedup.maybeContains(
-        spans.select(col("__h").as("__mid"), col("__h").as("__mk")),
-        "__mid", "__mk", filt, nBits, k)
-      val dupHashes = maybe.select(col("__mid").as("__h"))
-        .join(ck.withColumnRenamed("__ck", "__h"), Seq("__h"), "left_semi")
-      val removed = spans.join(dupHashes, Seq("__h"), "left_semi")
-        .select(col("__id"),
-          explode(sequence(col("__idx"), col("__idx") + lit(spanLines - 1))).as("__line"))
-      rebuildWithoutLines(base, removed, idCol).truncateLineage()
-    } finally ck.unpersist()
-  }
-
-  /** INCREMENTAL token-span dedup — [[dedupTokenSpans]]'s ingestion-time
-    * face, completing the family symmetry with [[dedupSpansAgainstCorpus]]:
-    * every `spanTokens`-token window of an arriving batch that already
-    * exists in the static corpus loses its tokens (the corpus copy is first
-    * by definition). Same Bloom-bitset shape: corpus window hashes → filter
-    * once (MBs, reusable across batches), batch probes map-side, the
-    * maybe-present sliver exact-verifies, covered tokens drop, docs rebuild.
-    */
-  def dedupTokenSpansAgainstCorpus(
-      corpus: DataFrame,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      spanTokens: Int = 20,
-      fpp: Double = 0.01
-  ): DataFrame = {
-    val ck = corpus
-      .select(explode(NativeFns.token_span_hashes(col(textCol), spanTokens)).as("__ck"))
-      .distinct().persist()
-    try {
-      val (nBits, k) = BloomDedup.geometry(ck.count(), fpp)
-      val filt = BloomDedup.buildFilter(ck, "__ck", nBits, k)
-      val base = batch.select(col(idCol).cast("long").as("__id"), col(textCol).as("__t"))
-      val spans = base.select(col("__id"),
-        posexplode(NativeFns.token_span_hashes(col("__t"), spanTokens)).as(Seq("__idx", "__h")))
-      val maybe = BloomDedup.maybeContains(
-        spans.select(col("__h").as("__mid"), col("__h").as("__mk")),
-        "__mid", "__mk", filt, nBits, k)
-      val dupHashes = maybe.select(col("__mid").as("__h"))
-        .join(ck.withColumnRenamed("__ck", "__h"), Seq("__h"), "left_semi")
-      val removed = spans.join(dupHashes, Seq("__h"), "left_semi")
-        .select(col("__id"),
-          explode(sequence(col("__idx"), col("__idx") + lit(spanTokens - 1))).as("__pos"))
-      rebuildWithoutTokens(base, removed, idCol).truncateLineage()
-    } finally ck.unpersist()
   }
 
   /** Cross-corpus MinHash near-dup — "dedupe the new crawl against the
@@ -509,44 +453,12 @@ object DedupOps {
       maxBatchPerBucket: Int = 200
   ): DataFrame = {
     val rowsPerBand = k / bands
-    // Skinny (id, band, bucket) frames band the shuffle; shingle arrays
-    // stay OUT of the band join (they would be duplicated per band row)
-    // and ride the two verify joins as hashed-long arrays instead — the
-    // same shape as [[minhashNearDups]].
-    def banded(df: DataFrame, outId: String): DataFrame =
-      df.select(
-        col(idCol).cast("long").as(outId),
-        NativeFns.minhash_sig_long(
-          NativeFns.word_shingle_hashes(col(textCol), shingleN), k).as("__sig"))
-        .select(col(outId),
-          posexplode(
-            transform(
-              sequence(lit(0), lit(bands - 1)),
-              bnd => hash(slice(col("__sig"), bnd * rowsPerBand + 1, lit(rowsPerBand)))
-            )
-          ).as(Seq("band", "bucket")))
-    // Cap the BATCH side per (band, bucket) — a hot bucket (boilerplate-
-    // heavy crawl) otherwise multiplies every matching corpus row.
-    val bw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bucket")).orderBy(col("batch_id"))
-    val b = banded(batch, "batch_id")
-      .withColumn("__rn", row_number().over(bw))
-      .filter(col("__rn") <= maxBatchPerBucket)
-      .drop("__rn")
-    val cands = banded(corpus, "corpus_id")
-      .join(b, Seq("band", "bucket"))
-      .select(col("batch_id"), col("corpus_id"))
-      .distinct()
-    val shB = batch.select(col(idCol).cast("long").as("batch_id"),
-      NativeFns.word_shingle_hashes(col(textCol), shingleN).as("__sh_b"))
-    val shC = corpus.select(col(idCol).cast("long").as("corpus_id"),
-      NativeFns.word_shingle_hashes(col(textCol), shingleN).as("__sh_c"))
-    cands
-      .join(shB.hint("shuffle_hash"), "batch_id")
-      .join(shC.hint("shuffle_hash"), "corpus_id")
-      .select(col("batch_id"), col("corpus_id"),
-        jaccard(col("__sh_b"), col("__sh_c")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    bandJoinAgainstCorpus(corpus, batch, idCol,
+      NativeFns.minhash_sig_long(NativeFns.word_shingle_hashes(col(textCol), shingleN), k),
+      sig => transform(sequence(lit(0), lit(bands - 1)),
+        bnd => hash(slice(sig, bnd * rowsPerBand + 1, lit(rowsPerBand)))),
+      NativeFns.word_shingle_hashes(col(textCol), shingleN),
+      jaccard, "jaccard", threshold, maxBatchPerBucket)
   }
 
   /** Cross-corpus embedding near-dup — "are these new embeddings already in
@@ -571,28 +483,67 @@ object DedupOps {
       maxBatchPerBucket: Int = 2000
   ): DataFrame = {
     val planes = AnnSearch.srpPlanes(tables, nPlanes, dim)
+    bandJoinAgainstCorpus(corpus, batch, idCol, col(vecCol), NativeFns.srp_buckets(_, planes),
+      col(vecCol), NativeFns.cosine_sim, "cos", threshold, maxBatchPerBucket)
+  }
+
+  /** The capped cross-corpus band join under [[minhashNearDupsAgainstCorpus]]
+    * and [[embeddingNearDupsAgainstCorpus]]. Each side bands map-side into
+    * skinny (id, band, bucket) frames — `sig` is a row's signature and
+    * `buckets(sig)` its per-band bucket array. The batch side is capped per
+    * (band, bucket) at its `maxBatchPerBucket` smallest ids (a hot bucket —
+    * a boilerplate-heavy crawl — otherwise multiplies every matching corpus
+    * row; same truncate-don't-drop contract as [[pairsFromBuckets]]); the
+    * one shuffle is the (band, bucket) join, and the corpus is never
+    * self-joined. `feature` (shingle hashes or the vector) stays OUT of the
+    * band join — it would be duplicated per band row — and rides two
+    * shuffle-hash verify joins on the distinct candidates; `score` of
+    * (batch, corpus) features is kept as `scoreName` where ≥ `threshold`.
+    * Returns (batch_id, corpus_id, scoreName).
+    */
+  private def bandJoinAgainstCorpus(corpus: DataFrame, batch: DataFrame, idCol: String,
+      sig: Column, buckets: Column => Column, feature: Column,
+      score: (Column, Column) => Column, scoreName: String, threshold: Double,
+      maxBatchPerBucket: Int): DataFrame = {
     def banded(df: DataFrame, outId: String): DataFrame =
-      df.select(col(idCol).cast("long").as(outId),
-        posexplode(NativeFns.srp_buckets(col(vecCol), planes)).as(Seq("band", "bucket")))
-    val bw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bucket")).orderBy(col("batch_id"))
-    val b = banded(batch, "batch_id")
-      .withColumn("__rn", row_number().over(bw))
-      .filter(col("__rn") <= maxBatchPerBucket)
-      .drop("__rn")
-    val cands = banded(corpus, "corpus_id")
+      df.select(col(idCol).cast("long").as(outId), sig.as("__sig"))
+        .select(col(outId), posexplode(buckets(col("__sig"))).as(Seq("band", "bucket")))
+    def featured(df: DataFrame, outId: String, outF: String): DataFrame =
+      df.select(col(idCol).cast("long").as(outId), feature.as(outF))
+    val b = capPerGroup(banded(batch, "batch_id"), Seq("band", "bucket"), "batch_id", maxBatchPerBucket)
+    banded(corpus, "corpus_id")
       .join(b, Seq("band", "bucket"))
       .select(col("batch_id"), col("corpus_id"))
       .distinct()
-    val vb = batch.select(col(idCol).cast("long").as("batch_id"), col(vecCol).as("__vb"))
-    val vc = corpus.select(col(idCol).cast("long").as("corpus_id"), col(vecCol).as("__vc"))
-    cands
-      .join(vb.hint("shuffle_hash"), "batch_id")
-      .join(vc.hint("shuffle_hash"), "corpus_id")
-      .select(col("batch_id"), col("corpus_id"),
-        NativeFns.cosine_sim(col("__vb"), col("__vc")).as("cos"))
-      .filter(col("cos") >= threshold)
+      .join(featured(batch, "batch_id", "__fb").hint("shuffle_hash"), "batch_id")
+      .join(featured(corpus, "corpus_id", "__fc").hint("shuffle_hash"), "corpus_id")
+      .select(col("batch_id"), col("corpus_id"), score(col("__fb"), col("__fc")).as(scoreName))
+      .filter(col(scoreName) >= threshold)
   }
+
+  /** Rows of `df` truncated to the `cap` smallest `orderCol` values of each
+    * `keys` group — a `row_number` over the grouping keys, so a downstream
+    * aggregation or join on the same keys reuses the window's partitioning
+    * and no extra exchange is introduced.
+    */
+  private def capPerGroup(df: DataFrame, keys: Seq[String], orderCol: String, cap: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*).orderBy(col(orderCol))
+    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= cap).drop("__rn")
+  }
+
+  /** Within-group cosine pairs ≥ `threshold` of (keys…, __id, __vec) rows:
+    * each group capped at `cap` rows ([[capPerGroup]]), its vectors collected
+    * and scored in the codegen'd [[NativeFns.cosine_pairs]] kernel, so
+    * candidate pairs never materialize as rows. Returns the `p` struct
+    * (id_a, id_b, cos), one row per scored pair.
+    */
+  private def cosinePairs(rows: DataFrame, keys: Seq[String], cap: Int, threshold: Double): DataFrame =
+    capPerGroup(rows, keys, "__id", cap)
+      .groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(col("__id").as("id"), col("__vec").as("vec"))).as("items"))
+      .filter(size(col("items")) > 1)
+      .select(explode(NativeFns.cosine_pairs(col("items"), threshold)).as("p"))
 
   /** SimHash near-dup candidates: fingerprint + 4-way band partition of the 64
     * bits; equal band ⇒ candidate; verified by Hamming distance ≤ maxHamming.
@@ -670,22 +621,12 @@ object DedupOps {
     // shuffle of n·tables·occupancy/2 skinny rows PLUS two vector joins —
     // the fused form wins whenever occupancy > ~2, i.e. always. A true
     // near-dup is scored once per co-occurring table (~q·tables times);
-    // `distinct` collapses the bit-identical scores. Row cap before
-    // collect_list identical to [[pairsFromBuckets]] (same window, same
-    // exchange-free partitioning, deterministic truncation).
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bucket"))
-      .orderBy(col("__id"))
-    ids
-      .select(
-        col("__id"), col("__vec"),
-        posexplode(NativeFns.srp_buckets(col("__vec"), planes)).as(Seq("band", "bucket")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxBucketSize)
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(struct(col("__id").as("id"), col("__vec").as("vec"))).as("items"))
-      .filter(size(col("items")) > 1)
-      .select(explode(NativeFns.cosine_pairs(col("items"), threshold)).as("p"))
+    // `distinct` collapses the bit-identical scores. The row cap before
+    // collect_list is [[pairsFromBuckets]]'s ([[capPerGroup]]: same window,
+    // same exchange-free partitioning, deterministic truncation).
+    val banded = ids.select(col("__id"), col("__vec"),
+      posexplode(NativeFns.srp_buckets(col("__vec"), planes)).as(Seq("band", "bucket")))
+    cosinePairs(banded, Seq("band", "bucket"), maxBucketSize, threshold)
       .select(col("p.id_a"), col("p.id_b"), col("p.cos"))
       .distinct()
   }
@@ -738,16 +679,7 @@ object DedupOps {
       .withColumn("__rn", row_number().over(aw))
       .filter(col("__rn") === 1)
       .select(col("__id"), col("__vec"), col("__cid").as("cluster"))
-    val pw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster"))
-      .orderBy(col("__id"))
-    val dropped = assigned
-      .withColumn("__rn", row_number().over(pw))
-      .filter(col("__rn") <= maxBucketSize)
-      .groupBy(col("cluster"))
-      .agg(collect_list(struct(col("__id").as("id"), col("__vec").as("vec"))).as("items"))
-      .filter(size(col("items")) > 1)
-      .select(explode(NativeFns.cosine_pairs(col("items"), threshold)).as("p"))
+    val dropped = cosinePairs(assigned, Seq("cluster"), maxBucketSize, threshold)
       .select(col("p.id_b").as("__id"))
       .distinct()
     assigned

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * deployment reads actual payload bytes and swaps richer codecs behind the
   * same signatures.
   *
-  * All stages run in the batched `mapPartitions` shape (the `mapInPandas`
+  * All stages run in the streamed `mapPartitions` shape (the `mapInPandas`
   * analog documented on [[Multimodal.decodeFrames]]): map-side only, no
   * shuffle until the final presentation sort — the 100 TB cost model is
   * decode CPU, linear in corpus bytes.
@@ -62,15 +62,15 @@ object Audio {
     */
   final case class AudioMeta(doc_id: Long, n_bytes: Long, sample_rate: Int, n_samples: Int, duration_ms: Long)
 
-  def decodeMeta(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], batchSize: Int = 64): Dataset[AudioMeta] = {
+  def decodeMeta(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])]): Dataset[AudioMeta] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.flatMap { case (id, bytes) =>
+      rows.flatMap { case (id, bytes) =>
         AudioCodec.tryDecode(bytes).map { w =>
           AudioMeta(id, bytes.length.toLong, w.sampleRate, w.samples.length,
             w.samples.length.toLong * 1000L / w.sampleRate)
         }
-      })
+      }
     }
   }
 
@@ -82,10 +82,10 @@ object Audio {
   final case class AudioFeatures(
       doc_id: Long, n_frames: Int, energy_sum: Long, zero_cross: Int, peak_abs: Int)
 
-  def extractFeatures(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], frame: Int = 64, batchSize: Int = 64): Dataset[AudioFeatures] = {
+  def extractFeatures(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], frame: Int = 64): Dataset[AudioFeatures] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.flatMap { case (id, bytes) =>
+      rows.flatMap { case (id, bytes) =>
         AudioCodec.tryDecode(bytes).map { w =>
           var energy = 0L; var zc = 0; var peak = 0
           var k = 0
@@ -99,7 +99,7 @@ object Audio {
           }
           AudioFeatures(id, w.samples.length / frame, energy, zc, peak)
         }
-      })
+      }
     }
   }
 
@@ -124,10 +124,10 @@ object Audio {
     * collide; small edits flip few bits (SimHash Hamming banding applies
     * unchanged for near-miss pairs at scale).
     */
-  def fingerprint(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], m: Int = 40, batchSize: Int = 64): Dataset[AudioFingerprint] = {
+  def fingerprint(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], m: Int = 40): Dataset[AudioFingerprint] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.flatMap { case (id, bytes) =>
+      rows.flatMap { case (id, bytes) =>
         AudioCodec.tryDecode(bytes).map { w =>
           val out = AudioCodec.resampleLinear(w.samples, m)
           var fp = 0L
@@ -135,14 +135,14 @@ object Audio {
           while (j < out.length) { if (out(j) >= 0) fp |= 1L << j; j += 1 }
           AudioFingerprint(id, fp)
         }
-      })
+      }
     }
   }
 
-  def resampleClips(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], m: Int = 40, batchSize: Int = 64): Dataset[ResampledAudio] = {
+  def resampleClips(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], m: Int = 40): Dataset[ResampledAudio] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.flatMap { case (id, bytes) =>
+      rows.flatMap { case (id, bytes) =>
         AudioCodec.tryDecode(bytes).map { w =>
           val out = AudioCodec.resampleLinear(w.samples, m)
           var s = 0L; var c = 0L
@@ -150,7 +150,7 @@ object Audio {
           while (j < out.length) { s += out(j); c += out(j).toLong * (j + 1); j += 1 }
           ResampledAudio(id, out.length, s, c)
         }
-      })
+      }
     }
   }
 }

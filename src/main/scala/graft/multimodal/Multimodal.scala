@@ -76,27 +76,25 @@ object Multimodal {
   final case class ResizedMeta(doc_id: Long, out_width: Int, out_height: Int, pixel_sum: Long)
 
   /** Decode → nearest-neighbor resize ([[ImageCodec.resizeNearest]]) via the
-    * same batched `mapPartitions` shape as [[decodeFrames]] — the thumbnail
+    * same streamed `mapPartitions` shape as [[decodeFrames]] — the thumbnail
     * stage of an image-curation pipeline, running the REAL codec both ways
     * (parse then resample). Targets clamp to the source so tiny images pass
     * through unscaled.
     */
   def resizeImages(
       spark: SparkSession, payloads: Dataset[(Long, Array[Byte])],
-      targetW: Int = 16, targetH: Int = 12, batchSize: Int = 64
+      targetW: Int = 16, targetH: Int = 12
   ): Dataset[ResizedMeta] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { chunk =>
-        chunk.flatMap { case (id, bytes) =>
-          ImageCodec.tryDecode(bytes).map { img =>
-            val out = ImageCodec.resizeNearest(img,
-              math.min(targetW, img.width), math.min(targetH, img.height))
-            var s = 0L
-            var i = 0
-            while (i < out.pixels.length) { s += out.pixels(i) & 0xff; i += 1 }
-            ResizedMeta(id, out.width, out.height, s)
-          }
+      rows.flatMap { case (id, bytes) =>
+        ImageCodec.tryDecode(bytes).map { img =>
+          val out = ImageCodec.resizeNearest(img,
+            math.min(targetW, img.width), math.min(targetH, img.height))
+          var s = 0L
+          var i = 0
+          while (i < out.pixels.length) { s += out.pixels(i) & 0xff; i += 1 }
+          ResizedMeta(id, out.width, out.height, s)
         }
       }
     }
@@ -106,20 +104,18 @@ object Multimodal {
   final case class ChannelStats(doc_id: Long, sum_r: Long, sum_g: Long, sum_b: Long)
 
   /** Decode → per-channel statistics ([[ImageCodec.channelSums]]) — the
-    * feature-extraction stage (brightness/color screening), same batched
+    * feature-extraction stage (brightness/color screening), same streamed
     * partition shape.
     */
   def channelStats(
-      spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], batchSize: Int = 64
+      spark: SparkSession, payloads: Dataset[(Long, Array[Byte])]
   ): Dataset[ChannelStats] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { chunk =>
-        chunk.flatMap { case (id, bytes) =>
-          ImageCodec.tryDecode(bytes).map { img =>
-            val (r, g, b) = ImageCodec.channelSums(img)
-            ChannelStats(id, r, g, b)
-          }
+      rows.flatMap { case (id, bytes) =>
+        ImageCodec.tryDecode(bytes).map { img =>
+          val (r, g, b) = ImageCodec.channelSums(img)
+          ChannelStats(id, r, g, b)
         }
       }
     }
@@ -140,61 +136,56 @@ object Multimodal {
     * machinery applies unchanged).
     */
   def averageHash(
-      spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], batchSize: Int = 64
+      spark: SparkSession, payloads: Dataset[(Long, Array[Byte])]
   ): Dataset[AHash] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { chunk =>
-        chunk.flatMap { case (id, bytes) =>
-          ImageCodec.tryDecode(bytes).map { img =>
-            val small = ImageCodec.resizeNearest(img,
-              math.min(8, img.width), math.min(8, img.height))
-            val n   = small.width * small.height
-            val lum = new Array[Long](n)
-            var tot = 0L
-            var i = 0
-            while (i < n) {
-              val o = 3 * i
-              lum(i) = (small.pixels(o) & 0xff).toLong +
-                (small.pixels(o + 1) & 0xff) + (small.pixels(o + 2) & 0xff)
-              tot += lum(i)
-              i += 1
-            }
-            var hi = 0L; var lo = 0L
-            i = 0
-            while (i < n) {
-              // bit set iff pixel luminance strictly above the mean, scaled
-              // to integers: n*lum > tot  <=>  lum > tot/n.
-              if (n * lum(i) > tot) {
-                if (i < 32) lo |= 1L << i else hi |= 1L << (i - 32)
-              }
-              i += 1
-            }
-            AHash(id, hi, lo)
+      rows.flatMap { case (id, bytes) =>
+        ImageCodec.tryDecode(bytes).map { img =>
+          val small = ImageCodec.resizeNearest(img,
+            math.min(8, img.width), math.min(8, img.height))
+          val n   = small.width * small.height
+          val lum = new Array[Long](n)
+          var tot = 0L
+          var i = 0
+          while (i < n) {
+            val o = 3 * i
+            lum(i) = (small.pixels(o) & 0xff).toLong +
+              (small.pixels(o + 1) & 0xff) + (small.pixels(o + 2) & 0xff)
+            tot += lum(i)
+            i += 1
           }
+          var hi = 0L; var lo = 0L
+          i = 0
+          while (i < n) {
+            // bit set iff pixel luminance strictly above the mean, scaled
+            // to integers: n*lum > tot  <=>  lum > tot/n.
+            if (n * lum(i) > tot) {
+              if (i < 32) lo |= 1L << i else hi |= 1L << (i - 32)
+            }
+            i += 1
+          }
+          AHash(id, hi, lo)
         }
       }
     }
   }
 
-  /** Batch decode via typed `mapPartitions` — the Scala analog of a
-    * `mapInPandas` batch UDF: one codec instance per partition, rows streamed
-    * through it, output schema declared by the `MediaMeta` encoder. Corrupt
+  /** Decode via typed `mapPartitions` — the Scala analog of a `mapInPandas`
+    * UDF: one codec instance per partition, rows streamed through it, output
+    * schema declared by the `MediaMeta` encoder. Corrupt
     * payloads are SKIPPED (`tryDecode` → None), the corpus-pipeline
     * convention for undecodable media.
     */
-  def decodeFrames(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], batchSize: Int = 64): Dataset[MediaMeta] = {
+  def decodeFrames(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])]): Dataset[MediaMeta] = {
     import spark.implicits._
     payloads
       .mapPartitions { rows =>
-        // Per-partition codec init happens once here; payloads then flow
-        // through in batches (the `mapInPandas` batch shape) — a real decoder
-        // would amortize GPU/codec dispatch across each chunk.
-        rows.grouped(batchSize).flatMap { chunk =>
-          chunk.flatMap { case (id, bytes) =>
-            ImageCodec.tryDecode(bytes).map { img =>
-              MediaMeta(id, bytes.length.toLong, img.width, img.height, ImageCodec.frameHashes(img))
-            }
+        // Per-partition codec init happens once here; payloads then stream
+        // through one at a time, so a partition holds one payload in memory.
+        rows.flatMap { case (id, bytes) =>
+          ImageCodec.tryDecode(bytes).map { img =>
+            MediaMeta(id, bytes.length.toLong, img.width, img.height, ImageCodec.frameHashes(img))
           }
         }
       }

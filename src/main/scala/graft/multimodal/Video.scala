@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * byte-exact comparison. A real deployment reads actual payload bytes and
   * swaps an H.264/AV1 decoder behind the same signatures.
   *
-  * All stages run in the batched `mapPartitions` shape (the `mapInPandas`
+  * All stages run in the streamed `mapPartitions` shape (the `mapInPandas`
   * analog documented on [[Multimodal.decodeFrames]]): map-side only, no
   * shuffle until the final presentation sort — the 100 TB cost model is
   * decode CPU, linear in corpus bytes; payload bytes never shuffle.
@@ -76,15 +76,15 @@ object Video {
       doc_id: Long, n_bytes: Long, codec: String, width: Int, height: Int,
       n_frames: Int, duration_ms: Long, n_keyframes: Int)
 
-  def decodeMeta(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], batchSize: Int = 64): Dataset[VideoMeta] = {
+  def decodeMeta(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])]): Dataset[VideoMeta] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.flatMap { case (id, bytes) =>
+      rows.flatMap { case (id, bytes) =>
         VideoCodec.tryDecode(bytes).map { v =>
           VideoMeta(id, bytes.length.toLong, v.codec, v.width, v.height,
             v.nFrames, v.durationMs, v.syncSamples.length)
         }
-      })
+      }
     }
   }
 
@@ -97,10 +97,10 @@ object Video {
   final case class KeyframeDigest(
       doc_id: Long, n_sampled: Int, luma_total: Long, luma_checksum: Long)
 
-  def sampleKeyframes(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], batchSize: Int = 64): Dataset[KeyframeDigest] = {
+  def sampleKeyframes(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])]): Dataset[KeyframeDigest] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.flatMap { case (id, bytes) =>
+      rows.flatMap { case (id, bytes) =>
         VideoCodec.tryDecode(bytes).map { v =>
           var total = 0L; var check = 0L
           v.syncSamples.foreach { s =>
@@ -113,7 +113,7 @@ object Video {
           }
           KeyframeDigest(id, v.syncSamples.length, total, check)
         }
-      })
+      }
     }
   }
 
@@ -125,10 +125,10 @@ object Video {
   final case class SceneCuts(
       doc_id: Long, n_cuts: Int, first_cut: Int, total_motion: Long, max_sad: Long)
 
-  def detectSceneCuts(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], threshold: Int = 16, batchSize: Int = 64): Dataset[SceneCuts] = {
+  def detectSceneCuts(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], threshold: Int = 16): Dataset[SceneCuts] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.flatMap { case (id, bytes) =>
+      rows.flatMap { case (id, bytes) =>
         VideoCodec.tryDecode(bytes).map { v =>
           val px = v.width * v.height
           var cuts = 0; var first = -1; var motion = 0L; var maxSad = 0L
@@ -147,7 +147,7 @@ object Video {
           }
           SceneCuts(id, cuts, first, motion, maxSad)
         }
-      })
+      }
     }
   }
 
@@ -170,12 +170,11 @@ object Video {
   def scoreClips(
       spark: SparkSession,
       payloads: Dataset[(Long, Array[Byte])],
-      threshold: Int = 16,
-      batchSize: Int = 64
+      threshold: Int = 16
   ): Dataset[ClipScore] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.flatMap { case (id, bytes) =>
+      rows.flatMap { case (id, bytes) =>
         VideoCodec.tryDecode(bytes).map { v =>
           val px = v.width * v.height
           var cuts = 0; var motion = 0L; var fp = 0L
@@ -198,7 +197,7 @@ object Video {
           }
           ClipScore(id, px, v.nFrames, cuts, motion, fp)
         }
-      })
+      }
     }
   }
 
@@ -245,10 +244,10 @@ object Video {
       }
   }
 
-  def fingerprint(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])], batchSize: Int = 64): Dataset[VideoFingerprint] = {
+  def fingerprint(spark: SparkSession, payloads: Dataset[(Long, Array[Byte])]): Dataset[VideoFingerprint] = {
     import spark.implicits._
     payloads.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap(_.flatMap { case (id, bytes) =>
+      rows.flatMap { case (id, bytes) =>
         VideoCodec.tryDecode(bytes).map { v =>
           val sums = v.frames.map { fr =>
             var s = 0L; var i = 0
@@ -260,7 +259,7 @@ object Video {
           while (f < sums.length) { if (sums(f) >= sums(f - 1)) fp |= 1L << (f - 1); f += 1 }
           VideoFingerprint(id, fp)
         }
-      })
+      }
     }
   }
 }

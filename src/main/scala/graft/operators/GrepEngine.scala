@@ -241,8 +241,9 @@ object GrepEngine {
     * against `dir` (relative names stay inside the logs directory — the
     * reference's "my favorite filename on that VM" case; absolute paths pass
     * through), strips `<filename>` positioning tokens, and loads with line
-    * numbers only when `-n` asks for them (the wholetext line-number scan is
-    * strictly more expensive, so pay it only when the output needs it).
+    * numbers only when `-n`, a context flag (`-A`/`-B`/`-C`) or `-m` needs
+    * them (the wholetext line-number scan is strictly more expensive, so pay
+    * it only then; [[run]] drops `line_no` again without `-n`).
     */
   def runTemplated(spark: SparkSession, dir: String, cmd: String): DataFrame = {
     val (clean, fn) = extractFileTemplate(cmd)
@@ -258,7 +259,10 @@ object GrepEngine {
         resolved.toString
       case None                         => dir
     }
-    val table = if (parseCmd(clean).lineNumbers) logsWithLineNo(spark, path) else logs(spark, path)
+    val c = parseCmd(clean)
+    val numbered = c.lineNumbers ||
+      c.stages.exists(s => s.after > 0 || s.before > 0 || s.maxCount > 0)
+    val table = if (numbered) logsWithLineNo(spark, path) else logs(spark, path)
     run(table, clean)
   }
 

@@ -1678,22 +1678,15 @@ object Extensions {
     (s, d) => {
       val docs   = Tables.documents(s, d)
       val corpus = docs.filter(col("doc_id") % 2 === 0)
-      val ckeys  = corpus.select(xxhash64(col("text")).as("__ck")).distinct().persist()
-      val filtize =
-        try {
-          val (nBits, k) = BloomDedup.geometry(ckeys.count(), 0.01)
-          val filt = BloomDedup.buildFilter(ckeys, "__ck", nBits, k).persist()
-          try {
-            val b1 = docs.filter(pmod(col("doc_id"), lit(4)) === 1)
-            val b2 = docs.filter(pmod(col("doc_id"), lit(4)) === 3)
-            BloomDedup.newAgainstFilter(b1, "doc_id", "text", ckeys, filt, nBits, k)
-              .unionByName(BloomDedup.newAgainstFilter(b2, "doc_id", "text", ckeys, filt, nBits, k))
-              .select(col("doc_id"), col("n_chars"))
-              .orderBy("doc_id")
-              .truncateLineage() // materialize before unpersist
-          } finally filt.unpersist()
-        } finally ckeys.unpersist()
-      filtize
+      BloomDedup.withCorpusFilter(corpus.select(xxhash64(col("text"))), 0.01) { filt =>
+        val b1 = docs.filter(pmod(col("doc_id"), lit(4)) === 1)
+        val b2 = docs.filter(pmod(col("doc_id"), lit(4)) === 3)
+        BloomDedup.newAgainstFilter(b1, "doc_id", "text", filt)
+          .unionByName(BloomDedup.newAgainstFilter(b2, "doc_id", "text", filt))
+          .select(col("doc_id"), col("n_chars"))
+          .orderBy("doc_id")
+          .truncateLineage() // materialize before unpersist
+      }
     },
     Some("""SELECT doc_id, n_chars FROM documents
             WHERE doc_id % 2 = 1

@@ -928,15 +928,13 @@ object RainStorm {
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
     import graft.functions.BloomDedup
-    val ckeys = corpus.select(xxhash64(col(textCol)).as("__ck")).distinct().persist()
-    val (nBits, k) = BloomDedup.geometry(ckeys.count(), fpp)
-    val filt = BloomDedup.buildFilter(ckeys, "__ck", nBits, k).persist()
-    filt.count() // materialize both once, before the first batch arrives
+    val filt = BloomDedup.corpusFilter(corpus.select(xxhash64(col(textCol))), fpp)
+    filt.bits.count() // materialize both once, before the first batch arrives
     stream.writeStream
       .outputMode(OutputMode.Append())
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(BloomDedup.newAgainstFilter(batch, idCol, textCol, ckeys, filt, nBits, k))
+        sink(BloomDedup.newAgainstFilter(batch, idCol, textCol, filt))
       }
       .start()
   }

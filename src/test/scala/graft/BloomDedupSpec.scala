@@ -42,19 +42,6 @@ class BloomDedupSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("fast path (no verify) never passes a true duplicate; fp loss ≈ fpp") {
-    val corpus = docs(0 until 2000, i => s"c$i")
-    val batch  = docs(2000 until 4000, i => if (i % 2 == 0) s"c${i % 2000}" else s"b$i")
-    val got = BloomDedup
-      .newAgainstCorpus(corpus, batch, "doc_id", "text", fpp = 0.01, exactVerify = false)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val dups  = (2000L until 4000L).filter(_ % 2 == 0).toSet
-    val fresh = (2000L until 4000L).filter(_ % 2 != 0).toSet
-    assert((got & dups).isEmpty, "bloom has no false negatives — a true dup can never pass")
-    val lost = fresh -- got
-    assert(lost.size <= 30, s"~1% of 1000 fresh docs may be lost to fps, got ${lost.size}")
-  }
-
   test("incrementalDedupStream: per-batch results equal the batch operator") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -93,6 +80,36 @@ class BloomDedupSpec extends AnyFunSuite {
     assert(got.toSet.intersect(dups).isEmpty,
       "a corpus duplicate must be dropped even when its row is re-delivered")
     assert(got.toSet == (200L until 400L).filter(_ % 5 != 0).toSet)
+  }
+
+  test("empty inputs: an empty corpus keeps every batch doc whole; an empty batch yields no rows") {
+    import graft.functions.DedupOps
+    import org.apache.spark.sql.DataFrame
+    val batch = docs(0 until 20, i => s"line a $i\nline b\nline c\nline d $i")
+    val none  = batch.limit(0)
+    val whole = batch.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    // (name, op(corpus, batch) projected to two columns, its rows when the corpus is empty)
+    val cases: Seq[(String, (DataFrame, DataFrame) => DataFrame, Set[(Long, String)])] = Seq(
+      ("newAgainstCorpus",
+        (c, b) => BloomDedup.newAgainstCorpus(c, b, "doc_id", "text").select("doc_id", "text"),
+        whole),
+      ("dedupSpansAgainstCorpus",
+        (c, b) => DedupOps.dedupSpansAgainstCorpus(c, b, "doc_id", "text", spanLines = 2)
+          .filter(col("n_removed") === 0).select("doc_id", "clean"),
+        whole),
+      ("dedupTokenSpansAgainstCorpus",
+        (c, b) => DedupOps.dedupTokenSpansAgainstCorpus(c, b, "doc_id", "text", spanTokens = 3)
+          .filter(col("n_removed") === 0).select("doc_id", "clean"),
+        whole),
+      ("minhashNearDupsAgainstCorpus",
+        (c, b) => DedupOps.minhashNearDupsAgainstCorpus(c, b, "doc_id", "text", shingleN = 2)
+          .select(col("batch_id"), col("corpus_id").cast("string")),
+        Set.empty))
+    cases.foreach { case (name, op, emptyCorpus) =>
+      assert(rows(op(none, batch)) == emptyCorpus, s"$name: empty corpus")
+      assert(op(batch, none).count() == 0L, s"$name: empty batch")
+    }
   }
 
   test("probe is corpus-free: batch plan broadcasts the bitset words") {

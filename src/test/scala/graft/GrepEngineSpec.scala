@@ -213,6 +213,16 @@ class GrepEngineSpec extends AnyFunSuite {
     assert(n == Seq(1L, 2L))
   }
 
+  test("runTemplated: context flags without -n load line numbers, then drop them") {
+    val dir  = writeLogs(2)
+    val want = GrepEngine.run(GrepEngine.logsWithLineNo(spark, dir), "grep -C 1 'WARNING'")
+    assert(!want.columns.contains("line_no"))
+    val got  = GrepEngine.runTemplated(spark, dir, "grep -C 1 'WARNING'")
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(got.collect().map(_.toString).sorted.toSeq == want.collect().map(_.toString).sorted.toSeq)
+    assert(got.count() == 24L) // WARNING at 11-20 plus lines 10 and 21, in each of 2 files
+  }
+
   test("runTemplated: a relative fnactual cannot escape the logs directory") {
     val dir = writeLogs(1)
     val e = intercept[IllegalArgumentException] {

@@ -11,11 +11,28 @@
 # then commit; the hook audits /tmp/precommit_out if query files changed.
 
 set -e
-QUERY_FILES=$(git diff --cached --name-only | grep -E 'src/main/scala/graft/queries/' || true)
-[ -z "$QUERY_FILES" ] && exit 0
-
 OUT=${GRAFT_PRECOMMIT_OUT:-/tmp/precommit_out}
 SF=${GRAFT_PRECOMMIT_SF:-/root/testdata/sf0.01}
+
+# EXPLAIN.md drift: when per-query plan dumps are given in $OUT/explain,
+# each must match its EXPLAIN.md section modulo expression/plan/RDD ids and
+# lambda names (any main source can move a plan, so this runs first). Dump:
+#   sbt -batch 'runMain graft.Explain <sf0.001 dir> $OUT/explain check <query>...'
+if [ -d "$OUT/explain" ]; then
+  python3 tools/explain_check.py --selftest >/dev/null || {
+    echo "pre-commit: explain_check SELFTEST failed — a planted plan change"
+    echo "no longer fails (or an id-only change does); fix tools/explain_check.py."
+    exit 1
+  }
+  python3 tools/explain_check.py "$OUT/explain" EXPLAIN.md || {
+    echo "pre-commit: EXPLAIN.md sections drifted from the fresh plan dumps in"
+    echo "$OUT/explain — replace those sections with the dumped plans."
+    exit 1
+  }
+fi
+
+QUERY_FILES=$(git diff --cached --name-only | grep -E 'src/main/scala/graft/queries/' || true)
+[ -z "$QUERY_FILES" ] && exit 0
 
 if [ ! -f "$OUT/oracle_sql.json" ]; then
   echo "pre-commit: query files changed ($QUERY_FILES) but no Verify dump at $OUT."
