@@ -20,13 +20,13 @@ import graft.functions.Layout.LineageOps
   * model tables (k·dim longs — broadcast scale) plus the probed cells'
   * code rows.
   *
-  * Artifact tables under `indexPath`, read with their [[Schemas]]: `meta`
-  * (one row: dim, n_cells, m, ksub, iters), `centroids` (coarse cells),
-  * `codebooks` (per-subvector PQ codebooks over cell RESIDUALS) and `codes`
-  * (the encoded corpus, m code labels per vector; one directory per build,
-  * append or compact). Every write verb adds the next version's
-  * directories and ends in one [[Storage.commit]], whose pointer holds the
-  * physical codes row count.
+  * Artifact tables under `indexPath`, read with their [[Schemas]]:
+  * `centroids` (coarse cells), `codebooks` (per-subvector PQ codebooks over
+  * cell RESIDUALS) and `codes` (the encoded corpus, m code labels per
+  * vector; one directory per build, append or compact). Every write verb
+  * adds the next version's directories and ends in one [[Storage.commit]],
+  * whose pointer holds the physical codes row count and the model's `dim`
+  * and `m`, the two scalars a probe or an append reads.
   *
   * All model numbers are the micro-quantized BIGINTs of
   * [[ClusterOps.kMeansModel]], so persistence is exact: longs round-trip
@@ -51,8 +51,6 @@ object AnnIndex {
 
   /** The schema of each index table. */
   val Schemas: Map[String, StructType] = Map(
-    "meta"      -> new StructType().add("dim", IntegerType).add("n_cells", IntegerType)
-      .add("m", IntegerType).add("ksub", IntegerType).add("iters", IntegerType),
     "centroids" -> new StructType().add("cell", LongType).add("cv", LongArray),
     "codebooks" -> new StructType().add("sub", IntegerType).add("code", LongType)
       .add("cv", LongArray),
@@ -182,7 +180,7 @@ object AnnIndex {
   }
 
   /** Train coarse centroids + residual sub-codebooks on `corpus`, encode it,
-    * and persist the four artifact tables under `indexPath` (replacing any
+    * and persist the three artifact tables under `indexPath` (replacing any
     * prior index there).
     */
   def buildIvfPq(
@@ -196,7 +194,6 @@ object AnnIndex {
     val v    = Storage.head(indexPath)
     val (model, codes) = train(corpus, idCol, vecCol, meta,
       ClusterOps.kMeansModel(corpus, idCol, vecCol, nCells, iters))
-    v.write(Seq((dim, nCells, m, ksub, iters)).toDF("dim", "n_cells", "m", "ksub", "iters"), "meta")
     v.write(model.coarse.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cell", "cv"),
       "centroids")
     v.write(model.subs.zipWithIndex.flatMap { case (mod, s) =>
@@ -205,13 +202,13 @@ object AnnIndex {
     val (codesObs, nCodes) = Storage.observedCount(codes)
     v.write(codesObs, "codes")
     // a rebuild drops the prior version's tombstones with the rest of it
-    Storage.commit(v.rebuilt(nCodes(), "meta", "centroids", "codebooks", "codes"))
+    Storage.commit(v.rebuilt(nCodes(), "centroids", "codebooks", "codes")
+      .withScalars("dim" -> dim.toLong, "m" -> m.toLong))
   }
 
   private def readModel(spark: SparkSession, v: Version): IvfPqModel = {
-    val r = table(spark, v, "meta").head()
-    val meta = IvfPqMeta(r.getAs[Int]("dim"), r.getAs[Int]("n_cells"), r.getAs[Int]("m"),
-      r.getAs[Int]("ksub"), r.getAs[Int]("iters"))
+    val dim = v.scalar("dim").toInt
+    val m   = v.scalar("m").toInt
     val coarse = table(spark, v, "centroids")
       .collect()
       .map(r => (r.getAs[Long]("cell"), r.getAs[Seq[Long]]("cv").toArray))
@@ -219,10 +216,10 @@ object AnnIndex {
     val cbRows = table(spark, v, "codebooks")
       .collect()
       .map(r => (r.getAs[Int]("sub"), r.getAs[Long]("code"), r.getAs[Seq[Long]]("cv").toArray))
-    val subs = (0 until meta.m).map { s =>
+    val subs = (0 until m).map { s =>
       cbRows.filter(_._1 == s).map(t => (t._2, t._3)).sortBy(_._1)
     }
-    IvfPqModel(meta.dim / meta.m, coarse, subs)
+    IvfPqModel(dim / m, coarse, subs)
   }
 
   /** Tombstone-delete vectors from a persisted index: ADC scores carry no

@@ -21,10 +21,10 @@ import graft.sources.Storage.Version
   * Artifact tables, read with their [[Schemas]]: `segments` (seg, hv), the
   * ≤ k smallest distinct [[KmvSketch]] hash values per segment, one
   * directory per build or append — plain rows, not an opaque blob, so
-  * probes AND the DuckDB oracle replay the merge in SQL — and `meta`, one
-  * row (k). Every write verb adds the next version's directories and ends
-  * in one [[Storage.commit]] (the [[TextIndex]]/[[AnnIndex]] transaction),
-  * whose pointer holds the segments row count.
+  * probes AND the DuckDB oracle replay the merge in SQL. Every write verb
+  * adds the next version's directories and ends in one [[Storage.commit]]
+  * (the [[TextIndex]]/[[AnnIndex]] transaction), whose pointer holds the
+  * segments row count and the sketch size `k`.
   *
   * Scale: the store is (segments × k) rows — model-sized against the data
   * (256 longs stand for a segment of any row count). A probe reads only the
@@ -36,14 +36,10 @@ object SketchStore {
   val M: Long = KmvSketch.M // 2^61 - 1, the hash universe
 
   val Schemas: Map[String, StructType] = Map(
-    "segments" -> new StructType().add("seg", LongType).add("hv", LongType),
-    "meta"     -> new StructType().add("k", LongType))
+    "segments" -> new StructType().add("seg", LongType).add("hv", LongType))
 
   private def table(spark: SparkSession, v: Version, name: String): DataFrame =
     v.read(spark, name, Schemas(name))
-
-  private def readK(spark: SparkSession, v: Version): Long =
-    table(spark, v, "meta").head().getLong(0)
 
   /** The live segments table of the store at `path`. */
   def segments(spark: SparkSession, path: String): DataFrame =
@@ -86,8 +82,7 @@ object SketchStore {
     val v = Storage.head(path)
     val (sketches, n) = Storage.observedCount(segmentSketches(rows, k))
     v.write(sketches, "segments")
-    v.write(rows.sparkSession.range(1).select(lit(k.toLong).as("k")), "meta")
-    Storage.commit(v.rebuilt(n(), "segments", "meta"))
+    Storage.commit(v.rebuilt(n(), "segments").withScalars("k" -> k.toLong))
   }
 
   /** Append NEW segments' sketches as a new segments directory — O(delta)
@@ -100,7 +95,7 @@ object SketchStore {
   def appendSegments(rows: DataFrame, path: String): Unit = {
     val spark = rows.sparkSession
     val v     = Storage.committed(path)
-    val k     = readK(spark, v).toInt
+    val k     = v.scalar("k").toInt
     // Two delta passes, kept deliberately (r18 A/B): the guard semi-joins the
     // present segments against a broadcast of the delta rows' segs and stops
     // at its first match, and both single-pass replacements measured SLOWER at
@@ -124,7 +119,7 @@ object SketchStore {
     */
   def probeRange(spark: SparkSession, path: String, lo: Long, hi: Long): DataFrame = {
     val v = Storage.committed(path)
-    val k = readK(spark, v)
+    val k = v.scalar("k")
     val merged = table(spark, v, "segments")
       .filter(col("seg").between(lo, hi))
       .select(col("hv")).distinct()

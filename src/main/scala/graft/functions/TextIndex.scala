@@ -2,33 +2,32 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
 /** Persisted inverted-index serving — the text-side build-once/probe-many
   * twin of [[AnnIndex]] (r11 verdict's serving discipline): [[build]] writes
-  * the four index tables as parquet (postings hive-partitioned by TOKEN HASH
+  * the three index tables as parquet (postings hive-partitioned by TOKEN HASH
   * BUCKET so a probe prunes to its terms' bucket directories — directory-
   * level data skipping, the 100 TB serving shape), and every probe scores
-  * strictly FROM THE PERSISTED TABLES — no corpus scan, no re-tokenization,
-  * model scalars (n_docs, avgdl) read from the one-row corpus table of LIVE
-  * totals (maintained by every write verb) so every probe — and the DuckDB
-  * oracle replaying it over `read_parquet` of the same artifacts — sees
-  * bit-equal global statistics. Every write verb adds the next version's
-  * directories and ends in one [[graft.sources.Storage.commit]], whose
-  * pointer holds the physical docs-table row count.
+  * strictly FROM THE PERSISTED TABLES — no corpus scan, no re-tokenization.
+  * Every write verb adds the next version's directories and ends in one
+  * [[graft.sources.Storage.commit]], whose pointer holds the physical
+  * docs-table row count and the LIVE corpus totals `n_docs` and `total_dl`
+  * (kept exact by every verb); a probe divides them on the driver for
+  * avgdl, and both model scalars enter its plan as literals.
   *
   * The three probes ([[probeBm25]], [[probeBm25Many]], [[probeBm25Stream]])
   * share one scoring path, [[scoredPostings]]: the live (tok, doc_id, sq)
   * rows of their terms, tombstone-corrected, so each serves a tombstoned
   * index as a rebuild without the deleted docs would.
   *
-  * The four tables have fixed schemas ([[Schemas]]), declared on every
+  * The three tables have fixed schemas ([[Schemas]]), declared on every
   * read, so no verb or probe starts a Spark job to re-read a parquet
   * footer; `doc_id` is stored as long whatever the input's integral id
   * type.
   *
   * Scale: a batch probe lists and touches only its |terms| posting BUCKETS,
-  * plus a doc-length join keyed on doc_id; df/corpus stats are
+  * plus a doc-length join keyed on doc_id; the df stats are
   * broadcast-sized. The stream probe, whose terms arrive later, reads every
   * bucket. Appending a document batch is the posting-delta merge proven by
   * `x_inverted_index_incremental`.
@@ -79,9 +78,7 @@ object TextIndex {
     "postings" -> new StructType().add("tok", StringType).add("doc_id", LongType)
       .add("tf", LongType).add("bucket", IntegerType),
     "docs"     -> new StructType().add("doc_id", LongType).add("dl", LongType),
-    "stats"    -> new StructType().add("tok", StringType).add("df", LongType),
-    "corpus"   -> new StructType().add("n_docs", LongType).add("total_dl", LongType)
-      .add("avgdl", DoubleType))
+    "stats"    -> new StructType().add("tok", StringType).add("df", LongType))
 
   /** One postings directory (its `bucket=` subdirectories), read with its schema. */
   private def postingsAt(spark: SparkSession, dir: String): DataFrame =
@@ -113,14 +110,14 @@ object TextIndex {
   }
 
   /** Quantized per-(doc, term) BM25 contribution over the `df`, `tf` and `dl`
-    * columns and the corpus row's `n_docs` and `avgdl`.
+    * columns and the corpus's `nDocs` and `avgdl`.
     */
-  private def bm25Sq: Column = floor(
-    log((col("n_docs").cast("double") - col("df").cast("double") + 0.5) /
+  private def bm25Sq(nDocs: Long, avgdl: Double): Column = floor(
+    log((lit(nDocs.toDouble) - col("df").cast("double") + 0.5) /
           (col("df").cast("double") + 0.5) + 1.0) *
       (col("tf").cast("double") * (K1 + 1.0)) /
       (col("tf").cast("double") + lit(K1) *
-        (lit(1.0 - B) + lit(B) * col("dl").cast("double") / col("avgdl"))) *
+        (lit(1.0 - B) + lit(B) * col("dl").cast("double") / lit(avgdl))) *
       1e6 + 0.5
   ).cast("long")
 
@@ -130,8 +127,8 @@ object TextIndex {
     * ([[termPostings]]). On a tombstoned index the live postings come from
     * an anti-join on the broadcast tombstone set and each term's df drops
     * by its tombstoned postings, so scores stay bit-equal to a rebuild
-    * without the deleted docs. Every table comes from the version live when
-    * the frame is built.
+    * without the deleted docs. Every table and both corpus scalars come
+    * from the version live when the frame is built.
     */
   private def scoredPostings(
       spark: SparkSession, indexPath: String, terms: Option[Seq[String]]): DataFrame = {
@@ -153,8 +150,7 @@ object TextIndex {
     postings
       .join(broadcast(stats), "tok")
       .join(table(spark, v, "docs"), "doc_id")
-      .crossJoin(broadcast(table(spark, v, "corpus"))) // one model row
-      .select(col("tok"), col("doc_id"), bm25Sq.as("sq"))
+      .select(col("tok"), col("doc_id"), bm25Sq(v.scalar("n_docs"), avgdl(v)).as("sq"))
   }
 
   /** The one postings writer of [[build]] and [[append]]: tokenize `docs`,
@@ -187,37 +183,36 @@ object TextIndex {
     (obs.get("n").asInstanceOf[Long], obs.get("t").asInstanceOf[Long])
   }
 
-  /** The one corpus-row writer: exact integer totals, and avgdl from the same
-    * sum/count division on every path, 0.0 for an empty corpus (never NaN).
+  /** `v`'s live corpus totals: doc count and summed doc length. */
+  private def totals(v: Version): (Long, Long) = (v.scalar("n_docs"), v.scalar("total_dl"))
+
+  /** `v`'s average doc length: the same sum/count division on every path,
+    * 0.0 for an empty corpus (never NaN).
     */
-  private def writeCorpus(spark: SparkSession, v: Version, nDocs: Long, totalDl: Long): Unit = {
-    import spark.implicits._
-    v.write(Seq((nDocs, totalDl, if (nDocs == 0L) 0.0 else totalDl.toDouble / nDocs.toDouble))
-      .toDF("n_docs", "total_dl", "avgdl"), "corpus")
+  private[graft] def avgdl(v: Version): Double = {
+    val (n, t) = totals(v)
+    if (n == 0L) 0.0 else t.toDouble / n.toDouble
   }
 
-  private def readCorpus(spark: SparkSession, v: Version): (Long, Long) = {
-    val r = table(spark, v, "corpus").select(col("n_docs"), col("total_dl")).head()
-    (r.getLong(0), r.getLong(1))
-  }
+  /** `v` carrying the corpus totals `nDocs` and `totalDl`. */
+  private def withTotals(v: Version, nDocs: Long, totalDl: Long): Version =
+    v.withScalars("n_docs" -> nDocs, "total_dl" -> totalDl)
 
-  /** Tokenize once and write postings/docs/stats/corpus as one new version,
+  /** Tokenize once and write postings/docs/stats as one new version,
     * the same transaction as [[AnnIndex]]; a rebuild drops the prior
     * version's tombstones with the rest of it.
     */
   def build(docs: DataFrame, idCol: String, textCol: String, indexPath: String): Unit = {
-    val spark = docs.sparkSession
     val v     = Storage.head(indexPath)
     val post  = writePostings(docs, idCol, textCol, v)
     val (nDocs, totalDl) = writeDocs(post, v)
     v.write(post.groupBy(col("tok")).agg(count(lit(1)).as("df")), "stats")
-    writeCorpus(spark, v, nDocs, totalDl)
-    Storage.commit(v.rebuilt(nDocs, "postings", "docs", "stats", "corpus"))
+    Storage.commit(withTotals(v.rebuilt(nDocs, "postings", "docs", "stats"), nDocs, totalDl))
   }
 
   /** Delete documents from the persisted index by TOMBSTONE — the lakehouse
     * delete pattern applied to serving: no posting is rewritten; a
-    * tombstone table records the deleted ids and the corpus row subtracts
+    * tombstone table records the deleted ids and the corpus totals subtract
     * their exact integer totals (doc count, total length, computed from the
     * index's own docs table — O(delta)). Probes anti-join the broadcast
     * tombstone set and correct per-term df by counting tombstoned postings
@@ -229,14 +224,14 @@ object TextIndex {
     */
   def deleteDocs(spark: SparkSession, indexPath: String, docIds: DataFrame): Unit = {
     val v     = Storage.committed(indexPath)
+    val (n, t) = totals(v)
     val fresh = Storage.tombstone(v, docIds, "doc_id")
     val dead = table(spark, v, "docs")
       .join(broadcast(fresh), Seq("doc_id"), "left_semi")
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("t")).head()
-    val (n, t) = readCorpus(spark, v)
-    writeCorpus(spark, v, n - dead.getLong(0), t - dead.getLong(1))
     // the docs table is untouched, so the physical row count is too
-    Storage.commit(v.next(v.rows, added = Seq("tombstones"), replaced = Seq("corpus")))
+    Storage.commit(withTotals(v.next(v.rows, added = Seq("tombstones")),
+      n - dead.getLong(0), t - dead.getLong(1)))
   }
 
   /** Batched MULTI-query probe — the offline-serving shape (score thousands
@@ -310,7 +305,7 @@ object TextIndex {
     * applied to the serving tables): the batch's postings and doc lengths
     * are a new directory of each (bucket partitioning routes each delta row
     * to its token-hash directory), per-token df merges old⊕delta into a
-    * new vocab-sized stats directory, and corpus totals add exactly — avgdl
+    * new vocab-sized stats directory, and the corpus totals add exactly — avgdl
     * re-derives from the SAME integer sum/count division as the build path,
     * so append-then-probe is bit-equal to rebuild-then-probe (pinned in
     * TextIndexSpec). Cost is O(delta + vocabulary), never a corpus
@@ -321,6 +316,7 @@ object TextIndex {
   def append(docs: DataFrame, idCol: String, textCol: String, indexPath: String): Unit = {
     val spark = docs.sparkSession
     val v     = Storage.committed(indexPath)
+    val (n, t) = totals(v)
     Storage.requireNewIds(indexPath, table(spark, v, "docs"), "doc_id", docs, idCol)
     val newPost = writePostings(docs, idCol, textCol, v)
     val (deltaN, deltaDl) = writeDocs(newPost, v)
@@ -330,17 +326,15 @@ object TextIndex {
     v.write(table(spark, v, "stats")
       .union(newPost.select(col("tok"), lit(1L).as("df")))
       .groupBy(col("tok")).agg(sum(col("df")).as("df")), "stats")
-    val (n, t) = readCorpus(spark, v)
-    writeCorpus(spark, v, n + deltaN, t + deltaDl)
-    Storage.commit(v.next(v.rows + deltaN,
-      added = Seq("postings", "docs"), replaced = Seq("stats", "corpus")))
+    Storage.commit(withTotals(v.next(v.rows + deltaN,
+      added = Seq("postings", "docs"), replaced = Seq("stats")), n + deltaN, t + deltaDl))
   }
 
   /** COMPACT a tombstoned index: write the surviving postings and doc-length
     * rows once, as one merged directory of each, derive the vocab-sized df
     * table from the written postings (as [[build]] does), and commit a
-    * version without tombstones (the corpus row already holds the live
-    * totals) — after which every probe pays zero anti-join/correction cost
+    * version without tombstones (the pointer's corpus totals are already
+    * the live ones and carry over) — after which every probe pays zero anti-join/correction cost
     * and deleted ids may be re-appended. Until the commit the tombstoned
     * version keeps serving.
     *

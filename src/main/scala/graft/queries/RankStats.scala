@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -437,6 +438,31 @@ object RankStats {
             FROM a""")
   )
 
+  /** The input of the two incremental rank faces: events as
+    * (grp = event_type, di = day number, cents), split at the midpoint of
+    * the day range. The first half becomes the per-group reference value
+    * histogram, bounded by the metric's value cardinality (the same bound
+    * the streaming state carries), never by rows — the one collect here is
+    * model-sized by construction. The second half is the (grp, cents)
+    * arrivals. None on an empty events table, whose NULL min/max bound no
+    * split: the oracles' `WHERE n > 0` face is then the empty frame.
+    */
+  private def halvesByDay(
+      s: SparkSession, d: String): Option[(Map[String, Map[Long, Long]], DataFrame)] = {
+    val ev = Tables.events(s, d).select(col("event_type").as("grp"),
+      unix_date(col("ts").cast("date")).cast("long").as("di"),
+      expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+    val b = ev.agg(min(col("di")).as("d0"), max(col("di")).as("d1")).collect().head
+    Option.when(!b.isNullAt(0)) {
+      val mid = (b.getLong(0) + b.getLong(1)) / 2
+      val ref = ev.filter(col("di") <= mid)
+        .groupBy(col("grp"), col("cents")).agg(count(lit(1)).as("c"))
+        .collect().groupBy(_.getString(0))
+        .map { case (g, rows) => g -> rows.map(r => r.getLong(1) -> r.getLong(2)).toMap }
+      (ref, ev.filter(col("di") > mid).select(col("grp"), col("cents")))
+    }
+  }
+
   /** The incremental/streaming face of `x_ks_drift` — the per-source drift
     * gate a pipeline runs as shards ARRIVE, not after the fact: the
     * first-half-of-log reference CDF per event_type is persisted model state
@@ -455,27 +481,10 @@ object RankStats {
   val ksDriftIncremental = Q(
     "x_ks_drift_incremental",
     (s, d) => {
-      val ev = Tables.events(s, d).select(col("event_type").as("grp"),
-        unix_date(col("ts").cast("date")).cast("long").as("di"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      val b = ev.agg(min(col("di")).as("d0"), max(col("di")).as("d1")).collect().head
-      if (b.isNullAt(0)) {
-        // Empty events table: min/max are NULL — the oracle's `WHERE ns > 0`
-        // face is the empty frame, so emit it (typed) instead of NPE-ing on
-        // the bounds row.
-        import s.implicits._
-        s.emptyDataset[graft.streaming.RainStorm.KsRow].toDF()
-      } else {
-        val mid = (b.getLong(0) + b.getLong(1)) / 2
-        // Reference histogram: bounded by the metric's value cardinality (the
-        // same bound the streaming state carries), never by rows — the one
-        // collect here is model-sized by construction.
-        val ref: Map[String, Map[Long, Long]] = ev.filter(col("di") <= mid)
-          .groupBy(col("grp"), col("cents")).agg(count(lit(1)).as("c"))
-          .collect().groupBy(_.getString(0))
-          .map { case (g, rows) => g -> rows.map(r => r.getLong(1) -> r.getLong(2)).toMap }
-        val arrivals = ev.filter(col("di") > mid).select(col("grp"), col("cents"))
-        graft.streaming.RainStorm.ksStream(s, arrivals, ref).toDF().orderBy("grp")
+      import s.implicits._
+      halvesByDay(s, d).fold(s.emptyDataset[graft.streaming.RainStorm.KsRow].toDF()) {
+        case (ref, arrivals) =>
+          graft.streaming.RainStorm.ksStream(s, arrivals, ref).toDF().orderBy("grp")
       }
     },
     Some("""WITH e AS (
@@ -530,21 +539,10 @@ object RankStats {
   val mannWhitneyIncremental = Q(
     "x_mannwhitney_incremental",
     (s, d) => {
-      val ev = Tables.events(s, d).select(col("event_type").as("grp"),
-        unix_date(col("ts").cast("date")).cast("long").as("di"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      val b = ev.agg(min(col("di")).as("d0"), max(col("di")).as("d1")).collect().head
-      if (b.isNullAt(0)) {
-        import s.implicits._
-        s.emptyDataset[graft.streaming.RainStorm.MwRow].toDF()
-      } else {
-        val mid = (b.getLong(0) + b.getLong(1)) / 2
-        val ref: Map[String, Map[Long, Long]] = ev.filter(col("di") <= mid)
-          .groupBy(col("grp"), col("cents")).agg(count(lit(1)).as("c"))
-          .collect().groupBy(_.getString(0))
-          .map { case (g, rows) => g -> rows.map(r => r.getLong(1) -> r.getLong(2)).toMap }
-        val arrivals = ev.filter(col("di") > mid).select(col("grp"), col("cents"))
-        graft.streaming.RainStorm.mannWhitneyStream(s, arrivals, ref).toDF().orderBy("grp")
+      import s.implicits._
+      halvesByDay(s, d).fold(s.emptyDataset[graft.streaming.RainStorm.MwRow].toDF()) {
+        case (ref, arrivals) =>
+          graft.streaming.RainStorm.mannWhitneyStream(s, arrivals, ref).toDF().orderBy("grp")
       }
     },
     Some(s"""WITH e AS (

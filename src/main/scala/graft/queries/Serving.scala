@@ -229,14 +229,73 @@ object Serving {
 
   private val TextIdx = "/tmp/graft_index/text_main"
 
+  /** The BM25 oracles' live corpus over the text index at `idx`: `tomb`,
+    * its tombstoned doc ids (none unless `tombstoned`), and `c`, the n_docs
+    * and avgdl of its docs rows minus those. The index keeps its totals in
+    * its commit pointer, which SQL cannot read, so a stored total that
+    * drifted from the live docs breaks the hash. Both engines divide the
+    * same two exact integers as doubles (0.0 for an empty corpus), so
+    * avgdl matches bit for bit.
+    */
+  private def bm25Corpus(idx: String, tombstoned: Boolean): String = {
+    val tomb = if (tombstoned) s"SELECT doc_id FROM read_parquet('$idx/tombstones/*/*.parquet')"
+      else "SELECT CAST(NULL AS BIGINT) AS doc_id WHERE false"
+    s"""tomb AS ($tomb),
+            c AS (
+              SELECT count(*) AS n_docs,
+                CASE WHEN count(*) = 0 THEN 0.0
+                  ELSE CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) END AS avgdl
+              FROM read_parquet('$idx/docs/*/*.parquet')
+              WHERE doc_id NOT IN (SELECT doc_id FROM tomb))"""
+  }
+
+  /** [[TextIndex]]'s quantized per-(doc, term) BM25 contribution over
+    * `p.tf`, `st.df`, `d.dl` and [[bm25Corpus]]'s `c`.
+    */
+  private val Bm25Sq = """CAST(floor(
+                  ln((CAST(c.n_docs AS DOUBLE) - CAST(st.df AS DOUBLE) + 0.5)
+                     / (CAST(st.df AS DOUBLE) + 0.5) + 1.0) *
+                  (CAST(p.tf AS DOUBLE) * (1.2 + 1.0)) /
+                  (CAST(p.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(d.dl AS DOUBLE) / c.avgdl)) *
+                  1e6 + 0.5) AS BIGINT) AS sq"""
+
+  /** The oracle of every single-query BM25 probe here: the top 20 docs for
+    * ('hash', 'join', 'stream') over `read_parquet` of the index at `idx`.
+    * As in [[TextIndex]]'s scoring path, the postings drop the tombstoned
+    * docs and each term's df drops by its tombstoned postings.
+    */
+  private def bm25ProbeOracle(idx: String, tombstoned: Boolean): String = {
+    val terms = "tok IN ('hash', 'join', 'stream')"
+    s"""WITH ${bm25Corpus(idx, tombstoned)},
+            postsAll AS (
+              SELECT tok, doc_id, tf
+              FROM read_parquet('$idx/postings/*/*/*.parquet', hive_partitioning=true)
+              WHERE $terms),
+            posts AS (SELECT * FROM postsAll WHERE doc_id NOT IN (SELECT doc_id FROM tomb)),
+            dfc AS (
+              SELECT tok, count(*) AS df_dead
+              FROM postsAll WHERE doc_id IN (SELECT doc_id FROM tomb) GROUP BY tok),
+            st AS (
+              SELECT s.tok, s.df - COALESCE(dfc.df_dead, 0) AS df
+              FROM read_parquet('$idx/stats/*/*.parquet') s
+              LEFT JOIN dfc ON dfc.tok = s.tok WHERE s.$terms),
+            d AS (SELECT doc_id, dl FROM read_parquet('$idx/docs/*/*.parquet')),
+            sq AS (
+              SELECT p.doc_id, $Bm25Sq
+              FROM posts p JOIN st USING (tok) JOIN d USING (doc_id), c)
+            SELECT doc_id, CAST(sum(sq) AS BIGINT) AS score
+            FROM sq GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 20"""
+  }
+
   /** BM25 probe of a PREVIOUSLY WRITTEN inverted index
     * ([[graft.functions.TextIndex]]) — the text-side twin of
     * [[annIndexProbe]]: build persists token-hash-bucketed postings plus
-    * doc-length/df/corpus tables, probe scores strictly from those parquet
+    * doc-length and df tables, probe scores strictly from those parquet
     * artifacts (a `tok IN` filter prunes to the matching posting partition
     * DIRECTORIES — data skipping at the layout level, visible as partition
-    * pruning in the scan). The model scalars (n_docs, avgdl) are read from
-    * the one-row corpus table written at build time, so probe and oracle
+    * pruning in the scan). The model scalars (n_docs, avgdl) come from the
+    * corpus totals in the index's commit pointer as plan literals, and the
+    * oracle derives them from the docs table ([[bm25Corpus]]), so both
     * replay bit-equal statistics; TextIndexSpec pins probe-after-reload ==
     * [[graft.functions.QualityLM.bm25TopK]] over the corpus directly.
     */
@@ -246,25 +305,7 @@ object Serving {
       TextIndex.build(Tables.documents(s, d), "doc_id", "text", TextIdx)
       TextIndex.probeBm25(s, TextIdx, Seq("hash", "join", "stream"), topK = 20)
     },
-    Some(s"""WITH posts AS (
-              SELECT tok, doc_id, tf
-              FROM read_parquet('$TextIdx/postings/*/*/*.parquet', hive_partitioning=true)
-              WHERE tok IN ('hash', 'join', 'stream')),
-            d AS (SELECT doc_id, dl FROM read_parquet('$TextIdx/docs/*/*.parquet')),
-            st AS (SELECT tok, df FROM read_parquet('$TextIdx/stats/*/*.parquet')
-                   WHERE tok IN ('hash', 'join', 'stream')),
-            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextIdx/corpus/*/*.parquet')),
-            sq AS (
-              SELECT p.doc_id,
-                CAST(floor(
-                  ln((CAST(c.n_docs AS DOUBLE) - CAST(st.df AS DOUBLE) + 0.5)
-                     / (CAST(st.df AS DOUBLE) + 0.5) + 1.0) *
-                  (CAST(p.tf AS DOUBLE) * (1.2 + 1.0)) /
-                  (CAST(p.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(d.dl AS DOUBLE) / c.avgdl)) *
-                  1e6 + 0.5) AS BIGINT) AS sq
-              FROM posts p JOIN st USING (tok) JOIN d USING (doc_id), c)
-            SELECT doc_id, CAST(sum(sq) AS BIGINT) AS score
-            FROM sq GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 20""")
+    Some(bm25ProbeOracle(TextIdx, tombstoned = false))
   )
 
   private val BpeIdx = "/tmp/graft_index/bpe_main"
@@ -334,9 +375,10 @@ object Serving {
 
   /** Text-index incremental maintenance at ARTIFACT level
     * ([[TextIndex.append]]): the index is built over the even half of the
-    * corpus, the odd half appends as a posting delta (in-place partitioned
-    * append + vocab-sized stats merge + exact corpus-total addition), and
-    * the BM25 probe runs against the APPENDED artifacts. The oracle replays
+    * corpus, the odd half appends as a posting delta (a new partitioned
+    * postings directory + vocab-sized stats merge + exact addition to the
+    * pointer's corpus totals), and the BM25 probe runs against the APPENDED
+    * artifacts. The oracle replays
     * the probe over `read_parquet` of those artifacts; TextIndexSpec pins
     * append-then-probe == rebuild-then-probe bit-for-bit, which is the
     * incremental-maintenance contract.
@@ -349,25 +391,7 @@ object Serving {
       TextIndex.append(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", TextAppIdx)
       TextIndex.probeBm25(s, TextAppIdx, Seq("hash", "join", "stream"), topK = 20)
     },
-    Some(s"""WITH posts AS (
-              SELECT tok, doc_id, tf
-              FROM read_parquet('$TextAppIdx/postings/*/*/*.parquet', hive_partitioning=true)
-              WHERE tok IN ('hash', 'join', 'stream')),
-            d AS (SELECT doc_id, dl FROM read_parquet('$TextAppIdx/docs/*/*.parquet')),
-            st AS (SELECT tok, df FROM read_parquet('$TextAppIdx/stats/*/*.parquet')
-                   WHERE tok IN ('hash', 'join', 'stream')),
-            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextAppIdx/corpus/*/*.parquet')),
-            sq AS (
-              SELECT p.doc_id,
-                CAST(floor(
-                  ln((CAST(c.n_docs AS DOUBLE) - CAST(st.df AS DOUBLE) + 0.5)
-                     / (CAST(st.df AS DOUBLE) + 0.5) + 1.0) *
-                  (CAST(p.tf AS DOUBLE) * (1.2 + 1.0)) /
-                  (CAST(p.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(d.dl AS DOUBLE) / c.avgdl)) *
-                  1e6 + 0.5) AS BIGINT) AS sq
-              FROM posts p JOIN st USING (tok) JOIN d USING (doc_id), c)
-            SELECT doc_id, CAST(sum(sq) AS BIGINT) AS score
-            FROM sq GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 20""")
+    Some(bm25ProbeOracle(TextAppIdx, tombstoned = false))
   )
 
   /** Batched multi-query BM25 serving ([[TextIndex.probeBm25Many]]): three
@@ -401,15 +425,9 @@ object Serving {
               WHERE tok IN (SELECT tok FROM qs)),
             d AS (SELECT doc_id, dl FROM read_parquet('$TextIdx/docs/*/*.parquet')),
             st AS (SELECT tok, df FROM read_parquet('$TextIdx/stats/*/*.parquet')),
-            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextIdx/corpus/*/*.parquet')),
+            ${bm25Corpus(TextIdx, tombstoned = false)},
             sq AS (
-              SELECT q.query_id, p.doc_id,
-                CAST(floor(
-                  ln((CAST(c.n_docs AS DOUBLE) - CAST(st.df AS DOUBLE) + 0.5)
-                     / (CAST(st.df AS DOUBLE) + 0.5) + 1.0) *
-                  (CAST(p.tf AS DOUBLE) * (1.2 + 1.0)) /
-                  (CAST(p.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(d.dl AS DOUBLE) / c.avgdl)) *
-                  1e6 + 0.5) AS BIGINT) AS sq
+              SELECT q.query_id, p.doc_id, $Bm25Sq
               FROM posts p JOIN qs q USING (tok) JOIN st ON st.tok = p.tok
               JOIN d USING (doc_id), c),
             sc AS (
@@ -427,8 +445,9 @@ object Serving {
 
   /** Tombstone DELETE on the persisted index ([[TextIndex.deleteDocs]]) —
     * the lakehouse delete pattern applied to serving: no posting rewritten,
-    * a tombstone set + exact integer corrections to the corpus row, which
-    * always holds the live totals (O(delta) at delete time), and a probe
+    * a tombstone set + exact integer corrections to the corpus totals in the
+    * commit pointer, which always hold the live totals (O(delta) at delete
+    * time), and a probe
     * whose anti-join and per-term df correction, with those totals, make it
     * bit-equal to a rebuild without the deleted docs (TextIndexSpec pins the
     * equality). Completes the serving lifecycle: build → append → delete →
@@ -443,36 +462,7 @@ object Serving {
         docs.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
       TextIndex.probeBm25(s, TextDelIdx, Seq("hash", "join", "stream"), topK = 20)
     },
-    Some(s"""WITH tomb AS (
-              SELECT doc_id FROM read_parquet('$TextDelIdx/tombstones/*/*.parquet')),
-            postsAll AS (
-              SELECT tok, doc_id, tf
-              FROM read_parquet('$TextDelIdx/postings/*/*/*.parquet', hive_partitioning=true)
-              WHERE tok IN ('hash', 'join', 'stream')),
-            posts AS (
-              SELECT p.* FROM postsAll p LEFT JOIN tomb t USING (doc_id)
-              WHERE t.doc_id IS NULL),
-            dfc AS (
-              SELECT p.tok, count(*) AS df_dead
-              FROM postsAll p JOIN tomb t USING (doc_id) GROUP BY p.tok),
-            st AS (
-              SELECT s.tok, s.df - COALESCE(dfc.df_dead, 0) AS df
-              FROM read_parquet('$TextDelIdx/stats/*/*.parquet') s
-              LEFT JOIN dfc ON dfc.tok = s.tok
-              WHERE s.tok IN ('hash', 'join', 'stream')),
-            d AS (SELECT doc_id, dl FROM read_parquet('$TextDelIdx/docs/*/*.parquet')),
-            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextDelIdx/corpus/*/*.parquet')),
-            sq AS (
-              SELECT p.doc_id,
-                CAST(floor(
-                  ln((CAST(c.n_docs AS DOUBLE) - CAST(st.df AS DOUBLE) + 0.5)
-                     / (CAST(st.df AS DOUBLE) + 0.5) + 1.0) *
-                  (CAST(p.tf AS DOUBLE) * (1.2 + 1.0)) /
-                  (CAST(p.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(d.dl AS DOUBLE) / c.avgdl)) *
-                  1e6 + 0.5) AS BIGINT) AS sq
-              FROM posts p JOIN st USING (tok) JOIN d USING (doc_id), c)
-            SELECT doc_id, CAST(sum(sq) AS BIGINT) AS score
-            FROM sq GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 20""")
+    Some(bm25ProbeOracle(TextDelIdx, tombstoned = true))
   )
 
   private val DelIdx = "/tmp/graft_index/ivfpq_del"
@@ -546,8 +536,8 @@ object Serving {
   /** COMPACTION of a tombstoned text index ([[TextIndex.compact]]) — the
     * verb that closes the delete story: the surviving postings/doc rows are
     * written once as merged directories, df recomputed from the written
-    * postings, delete state cleared (the corpus row already holds the live
-    * totals) — all one new version under [[graft.sources.Storage.commit]],
+    * postings, delete state cleared (the pointer's corpus totals are already
+    * the live ones) — all one new version under [[graft.sources.Storage.commit]],
     * so a crash mid-compaction leaves the tombstoned version serving.
     * The probe after compaction is the PLAIN probe (no anti-join, no df
     * correction — the per-probe delete tax is gone), and the oracle replays
@@ -570,25 +560,7 @@ object Serving {
       TextIndex.compact(s, TextCmpIdx)
       TextIndex.probeBm25(s, TextCmpIdx, Seq("hash", "join", "stream"), topK = 20)
     },
-    Some(s"""WITH posts AS (
-              SELECT tok, doc_id, tf
-              FROM read_parquet('$TextCmpIdx/postings/*/*/*.parquet', hive_partitioning=true)
-              WHERE tok IN ('hash', 'join', 'stream')),
-            d AS (SELECT doc_id, dl FROM read_parquet('$TextCmpIdx/docs/*/*.parquet')),
-            st AS (SELECT tok, df FROM read_parquet('$TextCmpIdx/stats/*/*.parquet')
-                   WHERE tok IN ('hash', 'join', 'stream')),
-            c AS (SELECT n_docs, avgdl FROM read_parquet('$TextCmpIdx/corpus/*/*.parquet')),
-            sq AS (
-              SELECT p.doc_id,
-                CAST(floor(
-                  ln((CAST(c.n_docs AS DOUBLE) - CAST(st.df AS DOUBLE) + 0.5)
-                     / (CAST(st.df AS DOUBLE) + 0.5) + 1.0) *
-                  (CAST(p.tf AS DOUBLE) * (1.2 + 1.0)) /
-                  (CAST(p.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(d.dl AS DOUBLE) / c.avgdl)) *
-                  1e6 + 0.5) AS BIGINT) AS sq
-              FROM posts p JOIN st USING (tok) JOIN d USING (doc_id), c)
-            SELECT doc_id, CAST(sum(sq) AS BIGINT) AS score
-            FROM sq GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 20""")
+    Some(bm25ProbeOracle(TextCmpIdx, tombstoned = false))
   )
 
   private val CmpIdx = "/tmp/graft_index/ivfpq_cmp"

@@ -112,11 +112,14 @@ object Storage {
   // SketchStore, Governance's published snapshots). A store's tables are
   // version directories, `<table>/<v>`, each written by the verb that made
   // version v; one commit pointer per version, `_commits/<v>`, holds the
-  // physical row count and each table's live directories, and the highest
-  // pointer is live. A verb only adds the next version's directories and
-  // moves its pointer into place last, so until then readers see the
-  // previous version whole and a crash at any step leaves the store
-  // serving. Deletes are tombstone directories that probes anti-join until
+  // physical row count, the store's named scalars and each table's live
+  // directories, and the highest pointer is live. The pointer is text: a
+  // first line `rows <n>` followed by one ` <name>=<long>` per scalar, then
+  // one line `<table> <v>...` per table; an older pointer's first line is
+  // `rows <n>` alone, so it carries no scalars. A verb only adds the next
+  // version's directories and moves its pointer into place last, so until
+  // then readers see the previous version whole and a crash at any step
+  // leaves the store serving. Deletes are tombstone directories that probes anti-join until
   // a compaction writes the survivors as one merged directory.
 
   private val Pointers = "_commits"
@@ -125,10 +128,20 @@ object Storage {
 
   private def isVersion(name: String) = name.nonEmpty && name.forall(_.isDigit)
 
-  /** A store's version: number, physical id-table row count, and each
-    * table's live directories, named by the versions that wrote them.
+  /** A store's version: number, physical id-table row count, each table's
+    * live directories, named by the versions that wrote them, and the named
+    * long scalars its verbs read (a text index's corpus totals, an ANN
+    * index's dim and m, a sketch store's k), committed with the tables.
     */
-  final case class Version(store: String, n: Long, rows: Long, tables: Map[String, Seq[Long]]) {
+  final case class Version(store: String, n: Long, rows: Long, tables: Map[String, Seq[Long]],
+      scalars: Map[String, Long]) {
+    /** Scalar `name`; refuses a store whose pointer lacks it (an older layout). */
+    def scalar(name: String): Long = scalars.getOrElse(name, throw new IllegalArgumentException(
+      s"store at $store has no $name in its commit pointer (an older layout) — rebuild it"))
+
+    /** This version with `values` set among its scalars. */
+    def withScalars(values: (String, Long)*): Version = copy(scalars = scalars ++ values)
+
     def dirs(table: String): Seq[String] = tables.getOrElse(table, Nil).map(v => s"$store/$table/$v")
 
     /** `table`'s live directories as one frame, read with its declared
@@ -149,21 +162,24 @@ object Storage {
 
     /** The next version: `rows`, each `added` table with its new directory
       * beside its live ones, each `replaced` table with its new directory
-      * alone, each `dropped` table gone.
+      * alone, each `dropped` table gone, and the scalars carried over.
       */
     def next(rows: Long, added: Seq[String] = Nil, replaced: Seq[String] = Nil,
         dropped: Seq[String] = Nil): Version =
       copy(n = n + 1, rows = rows, tables = tables -- dropped ++
         added.map(t => t -> (tables.getOrElse(t, Nil) :+ (n + 1))) ++ replaced.map(_ -> Seq(n + 1)))
 
-    /** The next version as a rebuild: `tables`, each its new directory, and nothing else. */
+    /** The next version as a rebuild: `tables`, each its new directory, and
+      * nothing else (no scalar either).
+      */
     def rebuilt(rows: Long, tables: String*): Version =
-      copy(tables = Map.empty).next(rows, replaced = tables)
+      copy(tables = Map.empty, scalars = Map.empty).next(rows, replaced = tables)
   }
 
   private def readVersion(store: String, n: Long): Version = {
     val lines = Files.readAllLines(pointer(store, n)).asScala.toSeq.map(_.split(' ').toSeq)
-    Version(store, n, lines.head(1).toLong, lines.tail.map(l => l.head -> l.tail.map(_.toLong)).toMap)
+    Version(store, n, lines.head(1).toLong, lines.tail.map(l => l.head -> l.tail.map(_.toLong)).toMap,
+      lines.head.drop(2).map { kv => val (k, x) = kv.splitAt(kv.indexOf('=')); k -> x.tail.toLong }.toMap)
   }
 
   private def pointers(store: String): Seq[Long] =
@@ -177,7 +193,7 @@ object Storage {
     * when nothing was committed: what a build starts from.
     */
   def head(store: String): Version =
-    pointers(store).lastOption.fold(Version(store, 0L, 0L, Map.empty))(readVersion(store, _))
+    pointers(store).lastOption.fold(Version(store, 0L, 0L, Map.empty, Map.empty))(readVersion(store, _))
 
   /** The live version; refuses a store that was never committed. */
   def committed(store: String): Version = {
@@ -188,12 +204,14 @@ object Storage {
 
   /** Make `v` the live version: its pointer is written under a temporary
     * name and moved into place atomically, so a reader sees the previous
-    * version or this one, whole. Superseded versions stay on disk.
+    * version or this one, whole, tables and scalars together. Superseded
+    * versions stay on disk.
     */
   def publish(v: Version): Unit = {
     val tmp = Paths.get(v.store, Pointers, ".pending")
     Files.createDirectories(tmp.getParent)
-    Files.writeString(tmp, (s"rows ${v.rows}" +: v.tables.toSeq.sortBy(_._1).map { case (t, vs) =>
+    val head = (s"rows ${v.rows}" +: v.scalars.toSeq.sorted.map { case (k, x) => s"$k=$x" }).mkString(" ")
+    Files.writeString(tmp, (head +: v.tables.toSeq.sortBy(_._1).map { case (t, vs) =>
       (t +: vs.map(_.toString)).mkString(" ")
     }).mkString("", "\n", "\n"))
     Files.move(tmp, pointer(v.store, v.n), StandardCopyOption.ATOMIC_MOVE)

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
+  StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.sources.CommitLog
@@ -917,6 +918,9 @@ object RainStorm {
     * is an aggregation append-mode streaming would refuse; per batch it is
     * plain batch algebra. Duplicates WITHIN the stream are upstream's
     * business — chain `dropDuplicatesWithinWatermark` before this stage.
+    * The persisted hashes and bitset are released when the query
+    * terminates (stopped or failed), so a stopped query leaves no cached
+    * frame in the session.
     */
   def incrementalDedupStream(
       stream: DataFrame,
@@ -930,13 +934,29 @@ object RainStorm {
     import graft.functions.BloomDedup
     val filt = BloomDedup.corpusFilter(corpus.select(xxhash64(col(textCol))), fpp)
     filt.bits.count() // materialize both once, before the first batch arrives
-    stream.writeStream
+    val q = stream.writeStream
       .outputMode(OutputMode.Append())
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         sink(BloomDedup.newAgainstFilter(batch, idCol, textCol, filt))
       }
       .start()
+    // a query is inactive before it posts its termination event, so one
+    // that ended before the listener was added is released here at once
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    lazy val listener: StreamingQueryListener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.id == q.id) release()
+    }
+    def release(): Unit = if (done.compareAndSet(false, true)) {
+      q.sparkSession.streams.removeListener(listener)
+      filt.bits.unpersist(); filt.keys.unpersist()
+    }
+    q.sparkSession.streams.addListener(listener)
+    if (!q.isActive) release()
+    q
   }
 
   /** Streaming trending top-k: per-window token counts, then the k heaviest
@@ -1462,19 +1482,6 @@ object RainStorm {
       }
   }
 
-  /** Streaming curation gate with IN-FLIGHT audit counters — the streaming
-    * face of `x_observe_audit`: `observe` rides each micro-batch's existing
-    * pass (CollectMetrics accumulators merged on task completion), and the
-    * per-batch counter row surfaces on
-    * `StreamingQueryProgress.observedMetrics("curation_gate")` — the
-    * engine's own progress channel. No second scan of the batch, no side
-    * sink, no state store entry: at 100 TB/day of stream traffic the audit
-    * is free because it is the same pass that filters. Returns the GATED
-    * stream (append-safe, row-local predicate); callers read the audit from
-    * progress, exactly as a monitoring agent tails the progress JSON.
-    * Counter names and gate thresholds match the batch face so the two are
-    * comparable series.
-    */
   final case class KsState(hist: Map[Long, Long])
   final case class KsRow(grp: String, n_stream: Long, d_ppm: Long, drifted: Long)
 
@@ -1502,15 +1509,45 @@ object RainStorm {
       ref: Map[String, Map[Long, Long]] // per-group reference value histogram
   ): Dataset[KsRow] = {
     import spark.implicits._
-    // The reference histogram is model state (≤ ~49 002 entries/group) but
-    // the MAP across groups can run to ~245k entries; ship it once per
-    // executor as a broadcast, not once per task in the function closure
-    // (the AnnIndex model-state serving pattern).
+    histogramFold(spark, arrivals, ref) { (grp, m, rh, nS, nR) =>
+      if (nS == 0L || nR == 0L) KsRow(grp, nS, 0L, 0L)
+      else {
+        val support = (m.keySet ++ rh.keySet).toArray.sorted
+        var cs = 0L
+        var cr = 0L
+        var dNum = BigInt(0)
+        support.foreach { v =>
+          cs += m.getOrElse(v, 0L)
+          cr += rh.getOrElse(v, 0L)
+          val dev = (BigInt(cs) * nR - BigInt(cr) * nS).abs
+          if (dev > dNum) dNum = dev
+        }
+        val dPpm = (dNum * 1000000 / (BigInt(nS) * nR)).toLong
+        val drifted =
+          if (dNum * dNum * 1000000 > BigInt(1844164) * (nS + nR) * nS * nR) 1L
+          else 0L
+        KsRow(grp, nS, dPpm, drifted)
+      }
+    }
+  }
+
+  /** The fold under [[ksStream]] and [[mannWhitneyStream]]: per group, the
+    * arriving-value histogram kept in state and grown by each micro-batch's
+    * arrivals, then one `readout` row of (group, arrival histogram,
+    * reference histogram, their totals nS and nR). The reference map can
+    * run to ~245k entries across groups (≤ ~49 002 per group), so it ships
+    * once per executor as a broadcast, not once per task in the closure
+    * (the AnnIndex model-state serving pattern).
+    */
+  private def histogramFold[R: Encoder](
+      spark: SparkSession, arrivals: DataFrame, ref: Map[String, Map[Long, Long]])(
+      readout: (String, Map[Long, Long], Map[Long, Long], Long, Long) => R): Dataset[R] = {
+    import spark.implicits._
     val refBc = spark.sparkContext.broadcast(ref)
     arrivals
       .as[(String, Long)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState[KsState, KsRow](
+      .flatMapGroupsWithState[KsState, R](
         OutputMode.Update(),
         GroupStateTimeout.NoTimeout
       ) { (grp: String, rows: Iterator[(String, Long)], state: GroupState[KsState]) =>
@@ -1518,26 +1555,7 @@ object RainStorm {
         rows.foreach { case (_, c) => m = m.updated(c, m.getOrElse(c, 0L) + 1L) }
         state.update(KsState(m))
         val rh = refBc.value.getOrElse(grp, Map.empty[Long, Long])
-        val nS = m.valuesIterator.sum
-        val nR = rh.valuesIterator.sum
-        if (nS == 0L || nR == 0L) Iterator.single(KsRow(grp, nS, 0L, 0L))
-        else {
-          val support = (m.keySet ++ rh.keySet).toArray.sorted
-          var cs = 0L
-          var cr = 0L
-          var dNum = BigInt(0)
-          support.foreach { v =>
-            cs += m.getOrElse(v, 0L)
-            cr += rh.getOrElse(v, 0L)
-            val dev = (BigInt(cs) * nR - BigInt(cr) * nS).abs
-            if (dev > dNum) dNum = dev
-          }
-          val dPpm = (dNum * 1000000 / (BigInt(nS) * nR)).toLong
-          val drifted =
-            if (dNum * dNum * 1000000 > BigInt(1844164) * (nS + nR) * nS * nR) 1L
-            else 0L
-          Iterator.single(KsRow(grp, nS, dPpm, drifted))
-        }
+        Iterator.single(readout(grp, m, rh, m.valuesIterator.sum, rh.valuesIterator.sum))
       }
   }
 
@@ -1572,55 +1590,42 @@ object RainStorm {
       ref: Map[String, Map[Long, Long]] // per-group reference value histogram
   ): Dataset[MwRow] = {
     import spark.implicits._
-    val refBc = spark.sparkContext.broadcast(ref)
-    arrivals
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[KsState, MwRow](
-        OutputMode.Update(),
-        GroupStateTimeout.NoTimeout
-      ) { (grp: String, rows: Iterator[(String, Long)], state: GroupState[KsState]) =>
-        var m = state.getOption.map(_.hist).getOrElse(Map.empty[Long, Long])
-        rows.foreach { case (_, c) => m = m.updated(c, m.getOrElse(c, 0L) + 1L) }
-        state.update(KsState(m))
-        val rh = refBc.value.getOrElse(grp, Map.empty[Long, Long])
-        val nS = m.valuesIterator.sum
-        val nR = rh.valuesIterator.sum
-        // Histogram identity for the stream arm's doubled rank sum; exact
-        // integers (BigInt) until the one IEEE z ratio, whose every double
-        // op mirrors RankStats.zShape term-for-term (IEEE ops are correctly
-        // rounded, so same shape => same bits as the oracle).
-        val support = (m.keySet ++ rh.keySet).toArray.sorted
-        var cb    = 0L
-        var r1x2  = BigInt(0)
-        var ties  = BigInt(0)
-        support.foreach { v =>
-          val sv = m.getOrElse(v, 0L)
-          val rv = rh.getOrElse(v, 0L)
-          val t  = sv + rv
-          r1x2 += BigInt(sv) * (2L * cb + t + 1L)
-          ties += BigInt(t) * t * t - t
-          cb += t
-        }
-        // longValueExact throws ArithmeticException on overflow — loud like
-        // the oracle face's ANSI CAST(... AS BIGINT), never a silent wrap.
-        val u2       = (r1x2 - BigInt(nS) * (nS + 1L)).bigInteger.longValueExact()
-        val tieCubes = ties.bigInteger.longValueExact()
-        val naD = nS.toDouble
-        val nbD = nR.toDouble
-        val nd  = (nS + nR).toDouble
-        val z =
-          if (nS == 0L || nR == 0L || nS + nR < 2L) 0.0
-          else {
-            val den = naD * nbD *
-              ((nd + 1.0) - tieCubes.toDouble / (nd * (nd - 1.0))) / 3.0
-            if (den <= 0.0) 0.0
-            else (u2.toDouble - naD * nbD) / math.sqrt(den)
-          }
-        val zMilli = math.floor(z * 1000 + 0.5).toLong
-        val sig    = if (math.abs(z) > 1.96) 1L else 0L
-        Iterator.single(MwRow(grp, nS, u2, zMilli, sig))
+    histogramFold(spark, arrivals, ref) { (grp, m, rh, nS, nR) =>
+      // Histogram identity for the stream arm's doubled rank sum; exact
+      // integers (BigInt) until the one IEEE z ratio, whose every double
+      // op mirrors RankStats.zShape term-for-term (IEEE ops are correctly
+      // rounded, so same shape => same bits as the oracle).
+      val support = (m.keySet ++ rh.keySet).toArray.sorted
+      var cb    = 0L
+      var r1x2  = BigInt(0)
+      var ties  = BigInt(0)
+      support.foreach { v =>
+        val sv = m.getOrElse(v, 0L)
+        val rv = rh.getOrElse(v, 0L)
+        val t  = sv + rv
+        r1x2 += BigInt(sv) * (2L * cb + t + 1L)
+        ties += BigInt(t) * t * t - t
+        cb += t
       }
+      // longValueExact throws ArithmeticException on overflow — loud like
+      // the oracle face's ANSI CAST(... AS BIGINT), never a silent wrap.
+      val u2       = (r1x2 - BigInt(nS) * (nS + 1L)).bigInteger.longValueExact()
+      val tieCubes = ties.bigInteger.longValueExact()
+      val naD = nS.toDouble
+      val nbD = nR.toDouble
+      val nd  = (nS + nR).toDouble
+      val z =
+        if (nS == 0L || nR == 0L || nS + nR < 2L) 0.0
+        else {
+          val den = naD * nbD *
+            ((nd + 1.0) - tieCubes.toDouble / (nd * (nd - 1.0))) / 3.0
+          if (den <= 0.0) 0.0
+          else (u2.toDouble - naD * nbD) / math.sqrt(den)
+        }
+      val zMilli = math.floor(z * 1000 + 0.5).toLong
+      val sig    = if (math.abs(z) > 1.96) 1L else 0L
+      MwRow(grp, nS, u2, zMilli, sig)
+    }
   }
 
   /** Per-group Poisson-bootstrap state: 64 replicate fold tuples
@@ -1746,6 +1751,19 @@ object RainStorm {
       }
   }
 
+  /** Streaming curation gate with IN-FLIGHT audit counters — the streaming
+    * face of `x_observe_audit`: `observe` rides each micro-batch's existing
+    * pass (CollectMetrics accumulators merged on task completion), and the
+    * per-batch counter row surfaces on
+    * `StreamingQueryProgress.observedMetrics("curation_gate")` — the
+    * engine's own progress channel. No second scan of the batch, no side
+    * sink, no state store entry: at 100 TB/day of stream traffic the audit
+    * is free because it is the same pass that filters. Returns the GATED
+    * stream (append-safe, row-local predicate); callers read the audit from
+    * progress, exactly as a monitoring agent tails the progress JSON.
+    * Counter names and gate thresholds match the batch face so the two are
+    * comparable series.
+    */
   def observeGateStream(docs: DataFrame): DataFrame =
     docs
       .observe("curation_gate",

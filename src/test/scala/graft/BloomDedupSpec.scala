@@ -66,6 +66,29 @@ class BloomDedupSpec extends AnyFunSuite {
     assert(got.sorted.toSeq == want)
   }
 
+  test("incrementalDedupStream: a stopped query leaves neither corpus frame cached") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val sc     = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val in = MemoryStream[(Long, String)]
+    val q = graft.streaming.RainStorm.incrementalDedupStream(
+      in.toDS().toDF("doc_id", "text"), docs(0 until 100, i => s"corpus $i"), "doc_id", "text",
+      _ => (), trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val held = sc.getPersistentRDDs.keySet -- before
+    try {
+      assert(held.size == 2, "the query holds the corpus hashes and the bitset while it runs")
+      in.addData((100L, "corpus 1"), (101L, "new")); q.processAllAvailable()
+    } finally q.stop()
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      assert((sc.getPersistentRDDs.keySet & held).isEmpty,
+        "a stopped query must release its cached corpus frames")
+    }
+  }
+
   test("re-delivered rows (duplicate ids) still caught as corpus duplicates") {
     // At-least-once delivery: the batch contains each row TWICE. A per-id
     // hit-sum would see 2k hits, fail an `=== k` test, and silently pass

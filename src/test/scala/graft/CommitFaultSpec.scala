@@ -167,4 +167,61 @@ class CommitFaultSpec extends AnyFunSuite {
     assert(Storage.ls(s"$path/postings").filter(_.forall(_.isDigit)) ==
       Storage.committed(path).tables("postings").map(_.toString))
   }
+
+  test("no store writes a one-row scalar table: each store's scalars ride its commit pointer") {
+    val stores = Seq(
+      ("/tmp/graft_index/scalars_text", (p: String) => textBuild(docs, p),
+        Map("n_docs" -> docs.count()), TextIndex.Schemas.keySet),
+      ("/tmp/graft_index/scalars_ann", (p: String) => annBuild(embs, p),
+        Map("dim" -> 64L, "m" -> 4L), AnnIndex.Schemas.keySet),
+      ("/tmp/graft_index/scalars_kmv", (p: String) => SketchStore.build(kmvRows, k = 64, p),
+        Map("k" -> 64L), SketchStore.Schemas.keySet))
+    stores.foreach { case (p, build, want, tables) =>
+      Storage.drop(p)
+      build(p)
+      assert(!Storage.exists(s"$p/corpus") && !Storage.exists(s"$p/meta"),
+        s"$p: a build must write no corpus or meta table: ${Storage.ls(p)}")
+      assert(!tables.contains("corpus") && !tables.contains("meta"))
+      val v = Storage.committed(p)
+      assert(want.forall { case (k, x) => v.scalar(k) == x }, s"$p: pointer scalars ${v.scalars}")
+    }
+  }
+
+  test("a store whose commit pointer lacks a scalar it needs is refused with a rebuild message") {
+    def stripScalars(p: String): Unit = {
+      val f = java.nio.file.Paths.get(p, "_commits", Storage.committed(p).n.toString)
+      val lines = java.nio.file.Files.readAllLines(f)
+      lines.set(0, lines.get(0).split(' ').take(2).mkString(" ")) // an older layout: `rows <n>`
+      java.nio.file.Files.write(f, lines)
+    }
+    def refused(what: String)(verb: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](verb)
+      assert(e.getMessage.contains("rebuild it"), s"$what: ${e.getMessage}")
+    }
+    val text = "/tmp/graft_index/scalars_old_text"
+    Storage.drop(text)
+    textBuild(docs.filter(even), text)
+    val before = textProbe(text)
+    stripScalars(text)
+    refused("text probe")(textProbe(text))
+    refused("text append")(TextIndex.append(docs.filter(odd), "doc_id", "text", text))
+    refused("text delete")(TextIndex.deleteDocs(spark, text, docs.filter(even).select("doc_id")))
+    textBuild(docs.filter(even), text)
+    assert(textProbe(text) == before, "a rebuild serves the index again")
+
+    val ann = "/tmp/graft_index/scalars_old_ann"
+    Storage.drop(ann)
+    annBuild(embs, ann)
+    stripScalars(ann)
+    refused("ann probe")(annProbe(ann))
+    refused("ann append")(AnnIndex.appendIvfPq(spark, ann,
+      embs.filter(col("vec_id") < 0), "vec_id", "embedding"))
+
+    val kmv = "/tmp/graft_index/scalars_old_kmv"
+    Storage.drop(kmv)
+    SketchStore.build(kmvRows.filter(col("seg") <= 3), k = 64, kmv)
+    stripScalars(kmv)
+    refused("sketch probe")(kmvProbe(kmv))
+    refused("sketch append")(SketchStore.appendSegments(kmvRows.filter(col("seg") >= 4), kmv))
+  }
 }

@@ -13,9 +13,8 @@ class TextIndexSpec extends AnyFunSuite {
   private val idx = "/tmp/graft_index/text_spec"
   private val terms = Seq("hash", "join", "stream")
 
-  /** The live corpus row of the index at `p`. */
-  private def corpusRow(p: String) = graft.sources.Storage.committed(p)
-    .read(spark, "corpus", TextIndex.Schemas("corpus")).head()
+  /** The live version of the index at `p`, whose pointer holds the corpus totals. */
+  private def version(p: String) = graft.sources.Storage.committed(p)
 
   test("probe-after-reload equals the direct-corpus BM25 ranking") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
@@ -157,8 +156,8 @@ class TextIndexSpec extends AnyFunSuite {
     assert(!Storage.exists(s"$cIdx/tombstones"), "compaction must clear all delete state")
     val live = docs.filter(col("doc_id") % 4 =!= 0).count()
     assert(Storage.committed(cIdx).rows == live &&
-      corpusRow(cIdx).getAs[Long]("n_docs") == live,
-      "after compaction the committed docs rows and the corpus row both count the live docs")
+      version(cIdx).scalar("n_docs") == live,
+      "after compaction the committed docs rows and the corpus totals both count the live docs")
     val viaCompact = TextIndex.probeBm25(spark, cIdx, terms, topK = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val rbIdx = "/tmp/graft_index/text_spec_cmp_rb"
@@ -187,10 +186,10 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.build(docs, "doc_id", "text", eIdx)
     TextIndex.deleteDocs(spark, eIdx, docs.select(col("doc_id")))
     assert(TextIndex.compact(spark, eIdx))
-    val corpus = corpusRow(eIdx)
-    assert(corpus.getAs[Long]("n_docs") == 0L && corpus.getAs[Long]("total_dl") == 0L &&
-      corpus.getAs[Double]("avgdl") == 0.0,
-      s"an emptied index must write avgdl 0.0, not 0/0: $corpus")
+    val corpus = version(eIdx)
+    assert(corpus.scalar("n_docs") == 0L && corpus.scalar("total_dl") == 0L &&
+      TextIndex.avgdl(corpus) == 0.0,
+      s"an emptied index must derive avgdl 0.0, not 0/0: ${corpus.scalars}")
     assert(Storage.committed(eIdx).rows == 0L)
     TextIndex.append(docs, "doc_id", "text", eIdx)
     val viaReadd = TextIndex.probeBm25(spark, eIdx, terms, topK = 20)

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Funnel lint: lineage truncation, sessions, store commits, reads, processes, sinks.
+"""Funnel lint: lineage truncation, sessions, store commits, reads, processes, sinks,
+and the lineage-truncation audit's citations.
 
 Rule 1 — lineage truncation (round-16 verdict watch item #3).
 
@@ -72,6 +73,11 @@ stream too: a single log is a one-partition topic, so
 sources/CommitLog.scala implements `MicroBatchStream` exactly once and no
 other main-source file implements it. Comment lines are skipped.
 
+Rule 7 — the audit cites live sites. Every `File.scala:N` citation in
+SCALE.md's lineage-truncation table must name a line of that main source
+that holds a `.truncateLineage(` call. Line numbers drift with every edit
+above a site, and a stale row points the audit at the wrong frame.
+
 Usage: python3 tools/checkpoint_lint.py [src_root]
        python3 tools/checkpoint_lint.py --selftest
 Exit 1 on any violation of any rule.
@@ -134,6 +140,12 @@ PARQUET_WRITE = re.compile(
     r"\.\s*write\b((?:\s*\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\))*)\s*\.\s*parquet\s*\(")
 SINK_IMPL = re.compile(r"\b(?:extends|with|new)\s+(?:[\w.]+\.)?(?:StreamingWrite|DataWriter)\b")
 STREAM_IMPL = re.compile(r"\b(?:extends|with|new)\s+(?:[\w.]+\.)?MicroBatchStream\b")
+
+
+AUDIT_DOC = "SCALE.md"
+AUDIT_HEADING = re.compile(r"^## Lineage-truncation audit\b.*$", re.M)
+CITATION = re.compile(r"\b(\w+\.scala):(\d+(?:,\d+)*)")
+TRUNCATE_CALL = re.compile(r"\.\s*truncateLineage\s*\(")
 
 
 def scala_files(root: str):
@@ -227,6 +239,31 @@ def scan_sinks(root: str = "src/main/scala"):
         for m in sorted(hits, key=lambda m: m.start()):
             i = text.count("\n", 0, m.start()) + 1
             bad.append(f"{p}:{i}: {' '.join(m.group(0).split())}")
+    return bad
+
+
+def scan_citations(root: str = "src/main/scala", doc: str = AUDIT_DOC):
+    text = open(doc, encoding="utf-8").read()
+    head = AUDIT_HEADING.search(text)
+    if not head:
+        return [f"{doc}: no lineage-truncation audit section"]
+    section = text[head.end():]
+    end = re.search(r"^## ", section, re.M)
+    rows = [l for l in section[:end.start() if end else None].splitlines() if l.startswith("|")]
+    sources = {}
+    for p in scala_files(root):
+        sources.setdefault(os.path.basename(p), []).append(p)
+    bad = []
+    for row in rows:
+        for c in CITATION.finditer(row):
+            paths = sources.get(c.group(1), [])
+            if len(paths) != 1:
+                bad.append(f"{doc}: {c.group(0)}: {len(paths)} main sources named {c.group(1)}")
+                continue
+            lines = open(paths[0], encoding="utf-8").read().splitlines()
+            for n in map(int, c.group(2).split(",")):
+                if not (1 <= n <= len(lines) and TRUNCATE_CALL.search(lines[n - 1])):
+                    bad.append(f"{doc}: {c.group(1)}:{n} holds no truncateLineage call")
     return bad
 
 
@@ -479,6 +516,23 @@ def selftest():
         bad = scan_sinks(td)
         assert len(bad) == 6 and any(b.endswith("missing)") for b in bad), \
             f"selftest: a CommitLog.scala without its stream not caught: {bad}"
+        # rule 7: each audit citation names a line holding a truncateLineage call
+        with open(os.path.join(fn, "Pins.scala"), "w") as f:
+            f.write("object Pins {\n  def a(df: DataFrame) = df\n    .truncateLineage()\n"
+                    "  // a comment\n  def b(df: DataFrame) = df.truncateLineage() }\n")
+        doc = os.path.join(td, "SCALE.md")
+        with open(doc, "w") as f:
+            f.write("## Lineage-truncation audit (r17)\n\n| Site(s) | Frame |\n|---|---|\n"
+                    "| `Pins.scala:3,5` | pins |\n\n## Next\n\n`Pins.scala:4` is outside the table\n")
+        assert scan_citations(td, doc) == [], \
+            f"selftest: correct citations flagged: {scan_citations(td, doc)}"
+        text = open(doc).read().replace("| `Pins.scala:3,5` | pins |",
+                                        "| `Pins.scala:3,5` | pins |\n| `Pins.scala:4` | drifted |")
+        with open(doc, "w") as f:
+            f.write(text)
+        bad = scan_citations(td, doc)
+        assert bad == [f"{doc}: Pins.scala:4 holds no truncateLineage call"], \
+            f"selftest: drifted citation not caught: {bad}"
     print("checkpoint_lint selftest: OK (planted sites caught)")
     return 0
 
@@ -543,7 +597,15 @@ def main():
               "log's sink is the one exactly-once StreamingWrite, and its "
               "MicroBatchStream the one source stream (a single log is a "
               "one-partition topic).")
-    if bad or sessions or manifests or in_place or reads or procs or sinks:
+    citations = scan_citations(root)
+    if citations:
+        print(f"checkpoint_lint: {len(citations)} stale lineage-audit citation(s) in "
+              f"{AUDIT_DOC}:")
+        for b in citations:
+            print("  " + b)
+        print("Re-point each row of SCALE.md's lineage-truncation table at the line "
+              "that holds its truncateLineage call.")
+    if bad or sessions or manifests or in_place or reads or procs or sinks or citations:
         return 1
     print("checkpoint_lint: clean (all truncation goes through "
           "Layout.truncateLineage; all sessions through GraftSession; all "
@@ -551,7 +613,8 @@ def main():
           "no schema-less parquet read outside Storage.get and x_schema_evolution; "
           "no process starts; only GraftSession sets the file-system impl; "
           "RainStorm's dest and every streaming writer go through CommitLog, "
-          "which has the one MicroBatchStream)")
+          "which has the one MicroBatchStream; every SCALE.md lineage-audit "
+          "citation names a truncateLineage call)")
     return 0
 
 

@@ -15,7 +15,10 @@ of EXPLAIN.md, modulo what differs on every run of the same plan:
     wire the same attributes differently);
   - exchange ids `plan_id=123` and RDD ids `RDD[123]`;
   - JVM lambda names `Lambda$123/0x00007f...@1a2b3c` and array identity
-    hashes `[[[D@75ecbcb4`.
+    hashes `[[[D@75ecbcb4`;
+  - a store's version directories in a scan's `Location:` line
+    (`codes/3`, `postings/5/bucket=8`): the number counts the commits the
+    store on disk has seen, so it grows with every rebuild.
 
 Anything else that differs — an operator, a join strategy, a column, a
 pushed filter — fails the check, and the first differing line is printed.
@@ -39,6 +42,7 @@ RDD_ID = re.compile(r"RDD\[\d+\]")
 LAMBDA = re.compile(r"Lambda\$[\w$]*/0x[0-9a-f]+@[0-9a-f]+")
 LAMBDA_VAR = re.compile(r"lambda ([A-Za-z]+)_\d+")
 ARRAY_HASH = re.compile(r"(\[+(?:[BCDFIJSZ]|L[\w.$]+;))@[0-9a-f]+")
+STORE_VERSION = re.compile(r"(?<=/)\d+(?=[/,\]])")
 
 
 def normalize(plan: str) -> list:
@@ -57,7 +61,8 @@ def normalize(plan: str) -> list:
     plan = RDD_ID.sub("RDD[?]", plan)
     plan = LAMBDA_VAR.sub(rename, plan)
     plan = EXPR_ID.sub(renumber, plan)
-    return [line.rstrip() for line in plan.strip("\n").split("\n")]
+    return [STORE_VERSION.sub("<v>", line.rstrip()) if line.startswith("Location:")
+            else line.rstrip() for line in plan.strip("\n").split("\n")]
 
 
 def sections(explain_md: str) -> dict:
@@ -106,27 +111,31 @@ Left keys [1]: [doc_id#{a}L]
 Right keys [1]: [doc_id#{b}L]
 Arguments: [plan_id={p}], MapPartitionsRDD[{r}] at map, {lam}
 Arguments: posexplode(srpbucketsexpr(v#{a}, [[[D@{r}af, 1)), lambdafunction(lambda x_{p}#{b}, lambda x_{p}#{b})
+Location: InMemoryFileIndex [file:/tmp/graft_index/{store}/{r}/bucket=8, ... 2 entries]
 """
 
 
 def selftest() -> int:
-    section = PLAN.format(join="SortMergeJoin", a=11, b=12, p=7, r=3,
+    section = PLAN.format(store="text_main", join="SortMergeJoin", a=11, b=12, p=7, r=3,
                           lam="Lambda$6788/0x00007f4f2d769df0@1678dda4")
     md = f"# EXPLAIN\n\n## x_q\n\n```\n{section}```\n\n## x_q_two\n\n```\n{section}```\n"
     cases = [
         # (name, dump file, dump body, must pass)
-        ("ids and lambdas only", "x_q_new.txt",
-         PLAN.format(join="SortMergeJoin", a=901, b=902, p=55, r=1417,
+        ("ids, lambdas and store versions only", "x_q_new.txt",
+         PLAN.format(store="text_main", join="SortMergeJoin", a=901, b=902, p=55, r=1417,
                      lam="Lambda$7017/0x00007f4f2d7ce000@b219dfb"), True),
         ("changed join strategy", "x_q_new.txt",
-         PLAN.format(join="ShuffledHashJoin", a=901, b=902, p=55, r=1417,
+         PLAN.format(store="text_main", join="ShuffledHashJoin", a=901, b=902, p=55, r=1417,
                      lam="Lambda$7017/0x00007f4f2d7ce000@b219dfb"), False),
         ("attributes wired differently", "x_q_new.txt",
-         PLAN.format(join="SortMergeJoin", a=901, b=901, p=55, r=1417,
+         PLAN.format(store="text_main", join="SortMergeJoin", a=901, b=901, p=55, r=1417,
                      lam="Lambda$7017/0x00007f4f2d7ce000@b219dfb"), False),
         ("longest section name wins", "x_q_two_new.txt",
-         PLAN.format(join="SortMergeJoin", a=5, b=6, p=1, r=2,
+         PLAN.format(store="text_main", join="SortMergeJoin", a=5, b=6, p=1, r=2,
                      lam="Lambda$1/0x00007f4f2d7ce000@b219dfb"), True),
+        ("a scan of another store", "x_q_new.txt",
+         PLAN.format(store="text_app", join="SortMergeJoin", a=901, b=902, p=55, r=1417,
+                     lam="Lambda$7017/0x00007f4f2d7ce000@b219dfb"), False),
         ("dump with no section", "x_other_new.txt", section, False),
     ]
     failed = 0

@@ -129,6 +129,8 @@ fi
 # (6) One exactly-once dest and one commit-log stream: no parquet write in
 # streaming/RainStorm.scala, no StreamingWrite/DataWriter outside
 # sources/CommitLog.scala, and exactly one MicroBatchStream, inside it.
+# (7) Live audit citations: every `File.scala:N` in SCALE.md's
+# lineage-truncation table names a line holding a truncateLineage call.
 python3 tools/checkpoint_lint.py --selftest >/dev/null || {
   echo "pre-commit: checkpoint_lint SELFTEST failed — a planted violation"
   echo "no longer fails; fix tools/checkpoint_lint.py."
@@ -151,7 +153,9 @@ python3 tools/checkpoint_lint.py || {
   echo "fs.AbstractFileSystem.file.impl), and RainStorm's dest through"
   echo "CommitLog.writeStream (rule 6: no StreamingWrite/DataWriter outside"
   echo "sources/CommitLog.scala, and exactly one MicroBatchStream, inside it:"
-  echo "a single log is a one-partition topic)."
+  echo "a single log is a one-partition topic), and SCALE.md's lineage audit"
+  echo "current (rule 7: every File.scala:N citation in its table names a line"
+  echo "that holds a truncateLineage call — re-point the drifted rows)."
   exit 1
 }
 exit 0
